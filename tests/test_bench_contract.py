@@ -97,3 +97,21 @@ def test_bench_only_subset_cannot_clobber_full_detail(
     assert subset.exists()
     with open(subset) as f:
         assert set(json.load(f)["queries"]) == {"q01_parquet_scan_count"}
+
+
+def test_bench_headline_names_registered_queries(monkeypatch):
+    """Every HEADLINE qid is a registered query.  main() checks this
+    against the full REGISTRY before any subset applies, so a renamed
+    query raises even in a SPARK_GRAFT_BENCH_ONLY run instead of
+    silently shrinking the summary."""
+    import pytest
+
+    import bench
+    from tidb_gateway_spark.queries import REGISTRY
+
+    assert set(bench.HEADLINE) <= set(REGISTRY)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "q01")
+    monkeypatch.setattr(bench, "HEADLINE",
+                        bench.HEADLINE + ("q999_unregistered",))
+    with pytest.raises(KeyError, match="q999_unregistered"):
+        bench.main()

@@ -1544,3 +1544,52 @@ def test_ctas_insert_select_roundtrip(gateway):
         await c.quit()
 
     run_with_gateway(gateway, scenario)
+
+
+def test_prepared_zero_column_statement_answers_ok(gateway):
+    """A prepared statement without result columns (DDL) answers
+    COM_STMT_EXECUTE with one OK packet, plain and in cursor mode, as
+    COM_QUERY does: MySQL has no zero-column result set, and a stray
+    column block would be read as the reply to the next command."""
+    async def scenario(gw):
+        c = MiniClient("127.0.0.1", gw.bound_port)
+        await c.connect("sf001.alice")
+        for n, cursor in enumerate((False, True)):
+            sid, _ = await c.stmt_prepare(
+                f"CREATE OR REPLACE TEMPORARY VIEW v AS SELECT {n} AS a")
+            await c.command(C.COM_STMT_EXECUTE,
+                            c._encode_execute_body(sid, [], cursor=cursor))
+            ok = await c.pio.read_packet()
+            assert ok[0] == 0x00 and len(ok) == 7, ok
+            status = int.from_bytes(ok[3:5], "little")
+            assert not status & C.SERVER_STATUS_CURSOR_EXISTS, hex(status)
+            # still in sync: the next reply belongs to the next command
+            assert (await c.query("SELECT a FROM v"))[0] == (["a"], [[str(n)]])
+        await c.quit()
+
+    run_with_gateway(gateway, scenario)
+
+
+def test_deprecate_eof_is_negotiated_not_assumed(gateway):
+    """The greeting does not offer CLIENT_DEPRECATE_EOF, so a client
+    that sets it anyway still gets the classic framing: an EOF after the
+    column definitions and an EOF (not an OK) as the terminator."""
+    async def scenario(gw):
+        c = MiniClient("127.0.0.1", gw.bound_port)
+        c.capability = CLIENT_CAPS | C.CLIENT_DEPRECATE_EOF
+        await c.connect("sf001.alice")
+        assert not c.server_capability & C.CLIENT_DEPRECATE_EOF
+        await c.command(C.COM_QUERY, b"SELECT 1 AS a")
+        assert Buffer(await c.pio.read_packet()).read_lenenc_int() == 1
+        await c.pio.read_packet()  # column definition
+        eof = await c.pio.read_packet()
+        assert eof[0] == 0xFE and len(eof) == 5, eof
+        assert await c.pio.read_packet() == b"\x011"
+        eof = await c.pio.read_packet()
+        assert eof[0] == 0xFE and len(eof) == 5, eof
+        # the binary protocol frames the same way
+        sid, _ = await c.stmt_prepare("SELECT 2 AS b")
+        assert await c.stmt_execute(sid, []) == (["b"], [[2]])
+        await c.quit()
+
+    run_with_gateway(gateway, scenario)

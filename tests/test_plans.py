@@ -775,7 +775,7 @@ def test_q232_profile_two_pass_no_expanded_sort(spark, sf_dir):
     joined and unpivoted.  Pinned against both regressions: the r13
     per-column union (six scans) and the r14 single fat aggregate
     whose string min/max buffers forced the 7x-expanded stream through
-    two SortAggregate sorts (3.46 vs 2.00 s at sf1).  At most one Sort
+    two SortAggregate sorts (2.35 vs 2.02 s at sf1).  At most one Sort
     may appear (the final 6-row orderBy).  When ensure_min_partitions
     inserts a repartition, the min/max branch rides a ReusedExchange
     of it (one scan total); when it is a no-op the branch scans

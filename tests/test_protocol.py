@@ -438,3 +438,71 @@ def test_date_rewrites_execute_in_spark(spark):
     assert str(r["b"]) == "2024-02-29"  # month-end clamp, MySQL-equal
     assert str(r["c"]) == "2024-05-01"
     assert str(r["d"]) == "2024-01-31"
+
+
+# ---- result-set framing (packet identity) ----
+
+def test_resultset_packets_are_golden(spark):
+    """Every result-set framing the gateway emits, pinned byte for byte
+    by digests recorded from the per-protocol encoders the shared
+    framing replaced: the text and binary result sets of a frame holding
+    every mapped Spark type plus an array and a map (all-NULL row,
+    datetimes with and without microseconds, a negative decimal), a
+    SHOW-style result set of string columns, and the
+    COM_STMT_PREPARE_OK column block."""
+    import datetime as dt
+    import hashlib
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from tidb_gateway_spark.gateway import packets, prepared, result_encoder
+
+    types = [T.ByteType(), T.ShortType(), T.IntegerType(), T.LongType(),
+             T.FloatType(), T.DoubleType(), T.DecimalType(12, 2),
+             T.BooleanType(), T.DateType(), T.TimestampType(),
+             T.TimestampNTZType(), T.BinaryType(), T.StringType(),
+             T.ArrayType(T.IntegerType()), T.MapType(T.StringType(), T.LongType())]
+    schema = T.StructType([T.StructField(f"c{i}", t) for i, t in enumerate(types)])
+    df = spark.createDataFrame([
+        (-8, 300, -70000, 2**40, 1.5, -0.1, Decimal("-1234.56"), True,
+         dt.date(1998, 12, 1), dt.datetime(2024, 2, 29, 23, 59, 58, 123456),
+         dt.datetime(2020, 6, 15, 8, 30), b"\x00\xff", "héllo",
+         [1, None, 3], {"k": 7}),
+        (127, -1, 0, -1, -2.25, 1e300, Decimal("0.05"), False,
+         dt.date(2000, 1, 31), dt.datetime(2001, 9, 9, 1, 46, 40),
+         dt.datetime(2024, 1, 1, 12, 0, 0, 5), b"", "", [], {}),
+        (None,) * len(types),
+    ], schema)
+    cap = C.DEFAULT_CAPABILITY
+    in_trans = C.SERVER_STATUS_AUTOCOMMIT | C.SERVER_STATUS_IN_TRANS
+
+    assert [result_encoder.mysql_type_name(t) for t in types] == [
+        "tinyint(4)", "smallint(6)", "int(11)", "bigint(20)", "float",
+        "double", "decimal(12,2)", "tinyint(1)", "date", "timestamp(6)",
+        "datetime(6)", "blob", "varchar(1024)", "text", "text"]
+
+    simple = result_encoder.resultset(
+        packets.string_columns(["Collation", "Id", "Default"]),
+        lambda: [["utf8mb4_bin", 46, "Yes"], ["binary", 63, None]],
+        result_encoder.encode_text_row, cap, in_trans)
+    stmt = prepared.PreparedStatement(
+        stmt_id=3, sql="SELECT * FROM t WHERE a = ? AND b = ?", num_params=2,
+        columns=result_encoder.columns_of(schema))
+    got = {}
+    for name, payloads in [
+            ("text", result_encoder.resultset_payloads(df, cap, status=in_trans)),
+            ("binary", result_encoder.binary_resultset_payloads(df, cap)),
+            ("simple", simple),
+            ("prepare_ok", prepared.prepare_ok_payloads(stmt, cap))]:
+        payloads = list(payloads)
+        h = hashlib.sha256()
+        for p in payloads:
+            h.update(len(p).to_bytes(4, "little") + p)
+        got[name] = (len(payloads), h.hexdigest())
+    assert got == {
+        "text": (21, "dcc99878dfaccb881f8eb3e00cae02a36aecaf77e98596632b29beccb10e006c"),
+        "binary": (21, "bb0fb5993d1b33eaff0eea096c19d2feed8385ad548b1c1e199802ad9388966c"),
+        "simple": (8, "e8bf59b935d91abd30777fd9ef341e416c2ea15857121cc81e8b0d4319de7fca"),
+        "prepare_ok": (20, "b392ef18f0af8c3f9fae5eaaf4381cffc4166be241d38f9fc16d38a3c6b706d4"),
+    }

@@ -209,9 +209,9 @@ def err_packet(capability: int, code: int = C.ER_UNKNOWN, message: str = "",
 
 
 def ok_packet(capability: int, affected: int = 0, last_insert_id: int = 0,
-              status: int = C.SERVER_STATUS_AUTOCOMMIT, header: int = 0x00) -> bytes:
+              status: int = C.SERVER_STATUS_AUTOCOMMIT) -> bytes:
     b = Buffer()
-    b.write_byte(header)
+    b.write_byte(0x00)
     b.write_lenenc_int(affected)
     b.write_lenenc_int(last_insert_id)
     if capability & C.CLIENT_PROTOCOL_41:
@@ -248,6 +248,24 @@ def column_definition(name: str, type_code: int, charset: int = C.DEFAULT_COLLAT
     b.write_byte(decimals)
     b.write_uint(0, 2)                   # filler
     return b.getvalue()
+
+
+def string_columns(names) -> list[tuple[str, int, int, int]]:
+    """VAR_STRING column specs for :func:`column_block` (SHOW output,
+    statement parameters)."""
+    return [(name, C.MYSQL_TYPE_VAR_STRING, C.DEFAULT_COLLATION_ID, 255)
+            for name in names]
+
+
+def column_block(columns, capability: int,
+                 status: int = C.SERVER_STATUS_AUTOCOMMIT) -> list[bytes]:
+    """One column definition per ``(name, type code, charset, display
+    length)``, then EOF: the block result sets and COM_STMT_PREPARE_OK
+    share."""
+    out = [column_definition(name, code, charset=charset, column_length=length)
+           for name, code, charset, length in columns]
+    out.append(eof_packet(capability, status))
+    return out
 
 
 def text_row(values: list[bytes | None]) -> bytes:

@@ -92,14 +92,11 @@ def prepare_ok_payloads(stmt: PreparedStatement, capability: int) -> list[bytes]
     b.write_uint(0, 2)  # warning count
     out = [b.getvalue()]
     if stmt.num_params:
-        for i in range(stmt.num_params):
-            out.append(packets.column_definition(f"?{i}", C.MYSQL_TYPE_VAR_STRING))
-        out.append(packets.eof_packet(capability))
+        out += packets.column_block(
+            packets.string_columns(f"?{i}" for i in range(stmt.num_params)),
+            capability)
     if num_columns:
-        for name, code, charset, length in stmt.columns:
-            out.append(packets.column_definition(name, code, charset=charset,
-                                                 column_length=length))
-        out.append(packets.eof_packet(capability))
+        out += packets.column_block(stmt.columns, capability)
     return out
 
 

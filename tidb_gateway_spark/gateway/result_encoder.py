@@ -1,12 +1,23 @@
-"""DataFrame → MySQL text-protocol result set.
+"""DataFrame → MySQL result set: one framing for both protocols.
 
-The inverse of SURVEY.md §1.3's type mapping: Spark types → MySQL column
-definition type codes (charset 46), then one lenenc text row per record.
+Every gateway reply that carries columns comes from :func:`resultset`:
+the column count, the column block (one ColumnDefinition41 per column,
+then EOF), one payload per row, then an EOF carrying the final status
+word.  The text protocol (COM_QUERY) and the binary protocol
+(COM_STMT_EXECUTE) differ only in the row encoder: lenenc text cells
+(:func:`encode_text_row`) or ``prepared.encode_binary_row``.  A
+statement without columns (a Spark DDL ack) is answered with OK, since
+MySQL has no zero-column result set.  The gateway never offers
+CLIENT_DEPRECATE_EOF, so both EOF packets are always sent.
 
-Flush discipline mirrors the reference's relay batching: bytes are
-buffered and the transport flushed only at result-set boundaries —
-column-count, rows streamed, then EOF/OK/ERR triggers the drain
-(/root/reference/gateway/relay.go:85-93).
+Spark types map to MySQL through one table, ``_TYPE_MAP``: type code,
+display length and charset for the column definition, and the
+column-type name DESCRIBE and SHOW CREATE print (the inverse of
+SURVEY.md §1.3's type mapping).
+
+Flush discipline mirrors the reference's relay batching: payloads are
+buffered and the transport flushed only at result-set boundaries
+(the reference gateway's relay.go:85-93).
 
 Scale note: rows stream through ``toLocalIterator`` (one partition in
 flight on the driver) rather than ``collect`` — a 10 GB result set never
@@ -17,65 +28,63 @@ from __future__ import annotations
 
 import datetime as dt
 from decimal import Decimal
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from tidb_gateway_spark.gateway import constants as C
 from tidb_gateway_spark.gateway import packets
+from tidb_gateway_spark.gateway.prepared import encode_binary_row
 
 _BINARY_CHARSET = 63
 
-_TYPE_MAP: list[tuple[type, tuple[int, int, int]]] = [
-    # SparkType → (mysql type code, display length, charset)
-    (T.ByteType, (C.MYSQL_TYPE_TINY, 4, _BINARY_CHARSET)),
-    (T.ShortType, (C.MYSQL_TYPE_SHORT, 6, _BINARY_CHARSET)),
-    (T.IntegerType, (C.MYSQL_TYPE_LONG, 11, _BINARY_CHARSET)),
-    (T.LongType, (C.MYSQL_TYPE_LONGLONG, 20, _BINARY_CHARSET)),
-    (T.FloatType, (C.MYSQL_TYPE_FLOAT, 12, _BINARY_CHARSET)),
-    (T.DoubleType, (C.MYSQL_TYPE_DOUBLE, 22, _BINARY_CHARSET)),
-    (T.DecimalType, (C.MYSQL_TYPE_NEWDECIMAL, 40, _BINARY_CHARSET)),
-    (T.BooleanType, (C.MYSQL_TYPE_TINY, 1, _BINARY_CHARSET)),
-    (T.DateType, (C.MYSQL_TYPE_DATE, 10, _BINARY_CHARSET)),
-    (T.TimestampType, (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET)),
-    (T.TimestampNTZType, (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET)),
-    (T.BinaryType, (C.MYSQL_TYPE_BLOB, 65535, _BINARY_CHARSET)),
-    (T.StringType, (C.MYSQL_TYPE_VAR_STRING, 1024, C.DEFAULT_COLLATION_ID)),
+_TYPE_MAP: list[tuple[type, tuple[int, int, int, str]]] = [
+    # SparkType → (mysql type code, display length, charset, type name);
+    # the name is formatted with the Spark type (DECIMAL precision/scale)
+    (T.ByteType, (C.MYSQL_TYPE_TINY, 4, _BINARY_CHARSET, "tinyint(4)")),
+    (T.ShortType, (C.MYSQL_TYPE_SHORT, 6, _BINARY_CHARSET, "smallint(6)")),
+    (T.IntegerType, (C.MYSQL_TYPE_LONG, 11, _BINARY_CHARSET, "int(11)")),
+    (T.LongType, (C.MYSQL_TYPE_LONGLONG, 20, _BINARY_CHARSET, "bigint(20)")),
+    (T.FloatType, (C.MYSQL_TYPE_FLOAT, 12, _BINARY_CHARSET, "float")),
+    (T.DoubleType, (C.MYSQL_TYPE_DOUBLE, 22, _BINARY_CHARSET, "double")),
+    (T.DecimalType, (C.MYSQL_TYPE_NEWDECIMAL, 40, _BINARY_CHARSET,
+                     "decimal({0.precision},{0.scale})")),
+    (T.BooleanType, (C.MYSQL_TYPE_TINY, 1, _BINARY_CHARSET, "tinyint(1)")),
+    (T.DateType, (C.MYSQL_TYPE_DATE, 10, _BINARY_CHARSET, "date")),
+    (T.TimestampType, (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET, "timestamp(6)")),
+    (T.TimestampNTZType, (C.MYSQL_TYPE_TIMESTAMP, 26, _BINARY_CHARSET, "datetime(6)")),
+    (T.BinaryType, (C.MYSQL_TYPE_BLOB, 65535, _BINARY_CHARSET, "blob")),
+    (T.StringType, (C.MYSQL_TYPE_VAR_STRING, 1024, C.DEFAULT_COLLATION_ID, "varchar(1024)")),
 ]
+# arrays / maps / structs serialize as JSON-ish strings
+_OTHER_TYPE = (C.MYSQL_TYPE_VAR_STRING, 4096, C.DEFAULT_COLLATION_ID, "text")
 
 
-def mysql_type_for(dt_: T.DataType) -> tuple[int, int, int]:
+def _mysql_type(dt_: T.DataType) -> tuple[int, int, int, str]:
     for klass, spec in _TYPE_MAP:
         if isinstance(dt_, klass):
             return spec
-    # arrays / maps / structs serialize as JSON-ish strings
-    return (C.MYSQL_TYPE_VAR_STRING, 4096, C.DEFAULT_COLLATION_ID)
+    return _OTHER_TYPE
 
 
-_TYPE_NAMES: list[tuple[type, str]] = [
-    (T.ByteType, "tinyint(4)"),
-    (T.ShortType, "smallint(6)"),
-    (T.IntegerType, "int(11)"),
-    (T.LongType, "bigint(20)"),
-    (T.FloatType, "float"),
-    (T.DoubleType, "double"),
-    (T.BooleanType, "tinyint(1)"),
-    (T.DateType, "date"),
-    (T.TimestampType, "timestamp(6)"),
-    (T.TimestampNTZType, "datetime(6)"),
-    (T.BinaryType, "blob"),
-    (T.StringType, "varchar(1024)"),
-]
+def mysql_type_for(dt_: T.DataType) -> tuple[int, int, int]:
+    """Spark type → (type code, display length, charset)."""
+    return _mysql_type(dt_)[:3]
 
 
 def mysql_type_name(dt_: T.DataType) -> str:
     """Spark type → MySQL column-type string (DESCRIBE / SHOW CREATE)."""
-    if isinstance(dt_, T.DecimalType):
-        return f"decimal({dt_.precision},{dt_.scale})"
-    for klass, name in _TYPE_NAMES:
-        if isinstance(dt_, klass):
-            return name
-    return "text"  # arrays/maps/structs serialize as JSON-ish text
+    return _mysql_type(dt_)[3].format(dt_)
+
+
+def columns_of(schema: T.StructType) -> list[tuple[str, int, int, int]]:
+    """(name, type code, charset, display length) per field."""
+    out = []
+    for f in schema.fields:
+        code, length, charset = mysql_type_for(f.dataType)
+        out.append((f.name, code, charset, length))
+    return out
 
 
 def encode_value(v: object) -> bytes | None:
@@ -101,74 +110,46 @@ def encode_value(v: object) -> bytes | None:
     return str(v).encode()
 
 
-def resultset_payloads(df: DataFrame, capability: int,
-                       status: int = C.SERVER_STATUS_AUTOCOMMIT,
-                       more_results: bool = False):
-    """Yield the packet payloads of a text result set, lazily.
+def encode_text_row(row) -> bytes:
+    return packets.text_row([encode_value(v) for v in row])
 
-    Row production (``toLocalIterator``) happens wherever the generator
-    is driven — the server advances it on an executor thread in chunks
-    and writes the payloads from the event-loop thread, keeping the
-    asyncio transport single-threaded.
+
+def resultset(columns: list[tuple[str, int, int, int]], rows, encode_row,
+              capability: int, status: int):
+    """Yield the packet payloads of one result set, lazily.
+
+    ``columns`` holds (name, type code, charset, display length) tuples;
+    ``rows`` is called for the row iterable once the column block is
+    out, so row production (``toLocalIterator``) happens wherever the
+    generator is driven — the server advances it on an executor thread
+    in chunks and writes the payloads from the event-loop thread,
+    keeping the asyncio transport single-threaded.  Without columns
+    the reply is a lone OK.
     """
-    if more_results:
-        status |= C.SERVER_MORE_RESULTS_EXISTS
-    schema = df.schema
+    if not columns:
+        yield packets.ok_packet(capability, status=status)
+        return
     b = packets.Buffer()
-    b.write_lenenc_int(len(schema.fields))
+    b.write_lenenc_int(len(columns))
     yield b.getvalue()
-    for f in schema.fields:
-        code, length, charset = mysql_type_for(f.dataType)
-        yield packets.column_definition(f.name, code, charset=charset, column_length=length)
-    if not capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.eof_packet(capability, status)
-    for row in df.toLocalIterator():
-        yield packets.text_row([encode_value(v) for v in row])
-    if capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.ok_packet(capability, status=status, header=0xFE)
-    else:
-        yield packets.eof_packet(capability, status)
+    yield from packets.column_block(columns, capability, status)
+    for row in rows():
+        yield encode_row(row)
+    yield packets.eof_packet(capability, status)
+
+
+def resultset_payloads(df: DataFrame, capability: int,
+                       status: int = C.SERVER_STATUS_AUTOCOMMIT):
+    """Text-protocol result set of ``df`` (COM_QUERY)."""
+    yield from resultset(columns_of(df.schema), df.toLocalIterator,
+                         encode_text_row, capability, status)
 
 
 def binary_resultset_payloads(df: DataFrame, capability: int,
                               status: int = C.SERVER_STATUS_AUTOCOMMIT):
-    """Binary-protocol result set (COM_STMT_EXECUTE responses)."""
-    from tidb_gateway_spark.gateway.prepared import encode_binary_row
-
-    schema = df.schema
-    type_codes = [mysql_type_for(f.dataType)[0] for f in schema.fields]
-    b = packets.Buffer()
-    b.write_lenenc_int(len(schema.fields))
-    yield b.getvalue()
-    for f in schema.fields:
-        code, length, charset = mysql_type_for(f.dataType)
-        yield packets.column_definition(f.name, code, charset=charset, column_length=length)
-    if not capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.eof_packet(capability, status)
-    for row in df.toLocalIterator():
-        yield encode_binary_row(list(row), type_codes)
-    if capability & C.CLIENT_DEPRECATE_EOF:
-        yield packets.ok_packet(capability, status=status, header=0xFE)
-    else:
-        yield packets.eof_packet(capability, status)
-
-
-def write_simple_resultset(pio, columns: list[str], rows: list[list[object]],
-                           capability: int, status: int = C.SERVER_STATUS_AUTOCOMMIT,
-                           more_results: bool = False) -> None:
-    """Locally synthesized result set (SHOW ..., SELECT @@var, ...)."""
-    if more_results:
-        status |= C.SERVER_MORE_RESULTS_EXISTS
-    b = packets.Buffer()
-    b.write_lenenc_int(len(columns))
-    pio.write_packet(b.getvalue())
-    for name in columns:
-        pio.write_packet(packets.column_definition(name, C.MYSQL_TYPE_VAR_STRING))
-    if not capability & C.CLIENT_DEPRECATE_EOF:
-        pio.write_packet(packets.eof_packet(capability, status))
-    for row in rows:
-        pio.write_packet(packets.text_row([encode_value(v) for v in row]))
-    if capability & C.CLIENT_DEPRECATE_EOF:
-        pio.write_packet(packets.ok_packet(capability, status=status, header=0xFE))
-    else:
-        pio.write_packet(packets.eof_packet(capability, status))
+    """Binary-protocol result set of ``df`` (COM_STMT_EXECUTE)."""
+    columns = columns_of(df.schema)
+    encode_row = partial(encode_binary_row,
+                         type_codes=[code for _, code, _, _ in columns])
+    yield from resultset(columns, df.toLocalIterator, encode_row,
+                         capability, status)

@@ -174,6 +174,9 @@ class Gateway:
                 pass
 
         session = _Session(self, route, res)
+        # negotiated once: only the flags the greeting offered count (a
+        # client setting CLIENT_DEPRECATE_EOF unasked still gets EOFs)
+        session.capability = res.capability & cap
         session.nonce = nonce
         session.conn_id = conn_id
         session.client_writer = writer
@@ -247,9 +250,7 @@ class Gateway:
                 # OK/resultset framing) — mysqladmin status parses it
                 pio.write_packet(self._statistics_line().encode())
             elif cmd == C.COM_PROCESS_INFO:
-                cols, rows = self._processlist()
-                result_encoder.write_simple_resultset(
-                    pio, cols, rows, cap, status=session.status)
+                await self._run_statement(pio, session, "SHOW PROCESSLIST", False)
             elif cmd == C.COM_PROCESS_KILL:
                 kid = int.from_bytes(payload[:4], "little")
                 if self._kill(kid, "connection"):
@@ -346,10 +347,7 @@ class Gateway:
             try:
                 await self._run_statement(pio, session, stmt, more)
             except Exception as e:  # Spark analysis/execution errors → ERR
-                msg = str(e).split("\n")[0][:480]
-                code, state = _map_error(e)
-                pio.write_packet(packets.err_packet(cap, code=code, message=msg,
-                                                    sqlstate=state))
+                _write_error(pio, cap, e)
                 return
             finally:
                 session.current_query = None
@@ -369,31 +367,29 @@ class Gateway:
             session.apply_txn(detail)
             pio.write_packet(packets.ok_packet(cap, status=session.status
                                                | (C.SERVER_MORE_RESULTS_EXISTS if more else 0)))
-        elif kind == "sysvar":
-            cols = [alias for _, alias in detail]
-            row = [session.sysvar(name) for name, _ in detail]
-            result_encoder.write_simple_resultset(pio, cols, [row], cap,
-                                                 status=session.status, more_results=more)
-        elif kind == "show":
-            cols, rows = session.show(detail)
-            result_encoder.write_simple_resultset(pio, cols, rows, cap,
-                                                  status=session.status, more_results=more)
-        elif kind in ("describe", "show_create"):
-            loop = asyncio.get_running_loop()
-            cols, rows = await loop.run_in_executor(
-                self.executor,
-                (session.describe if kind == "describe" else session.show_create),
-                detail,
-            )
-            result_encoder.write_simple_resultset(pio, cols, rows, cap,
-                                                  status=session.status, more_results=more)
+        elif kind in ("sysvar", "show", "describe", "show_create"):
+            if kind == "sysvar":
+                cols = [alias for _, alias in detail]
+                rows = [[session.sysvar(name) for name, _ in detail]]
+            elif kind == "show":
+                cols, rows = session.show(detail)
+            else:
+                loop = asyncio.get_running_loop()
+                cols, rows = await loop.run_in_executor(
+                    self.executor,
+                    (session.describe if kind == "describe" else session.show_create),
+                    detail,
+                )
+            await self._pump(pio, session, result_encoder.resultset(
+                packets.string_columns(cols), lambda: rows,
+                result_encoder.encode_text_row, cap, status))
         elif kind == "analyze":
             loop = asyncio.get_running_loop()
             await loop.run_in_executor(self.executor, session.analyze_table,
                                        detail)
             pio.write_packet(packets.ok_packet(cap, status=status))
         elif kind == "load_data":
-            await self._load_data_local(pio, session, detail, more)
+            await self._load_data_local(pio, session, detail, status)
         elif kind == "kill":
             if self._kill(detail["id"], detail["what"]):
                 pio.write_packet(packets.ok_packet(cap, status=status))
@@ -404,32 +400,21 @@ class Gateway:
                     sqlstate="HY000"))
         else:
             df = await self._sql_async(session, dialect.to_spark_sql(stmt))
-            if df is None or not df.columns:
-                # Zero-column frames are Spark DDL acks (CACHE TABLE,
-                # CREATE VIEW, REFRESH TABLE, ...) — the MySQL protocol
-                # has no 0-column resultset; answer OK like mysqld does
-                # for DDL.
-                pio.write_packet(packets.ok_packet(cap, status=status))
-                return
-            gen = result_encoder.resultset_payloads(
-                df, cap, status=session.status, more_results=more
-            )
-            loop = asyncio.get_running_loop()
-            while True:
-                # advance the generator (and Spark's toLocalIterator) off
-                # the event loop; write from the loop thread — tagged so
-                # the jobs the iterator triggers are KILL QUERY-able
-                chunk = await loop.run_in_executor(
-                    self.executor,
-                    self._tagged(session,
-                                 lambda: list(itertools.islice(gen, 512))),
-                )
-                if not chunk:
-                    break
-                for payload in chunk:
-                    pio.write_packet(payload)
+            await self._pump(pio, session, result_encoder.resultset_payloads(
+                df, cap, status=status))
 
-    async def _load_data_local(self, pio, session, detail: dict, more: bool) -> None:
+    async def _pump(self, pio, session, payloads) -> None:
+        """Write a result set's payloads.  The generator (and Spark's
+        toLocalIterator behind it) advances off the event loop in
+        512-payload chunks, tagged so the jobs it triggers are KILL
+        QUERY-able; the loop thread does every write."""
+        loop = asyncio.get_running_loop()
+        take = self._tagged(session, lambda: list(itertools.islice(payloads, 512)))
+        while chunk := await loop.run_in_executor(self.executor, take):
+            for payload in chunk:
+                pio.write_packet(payload)
+
+    async def _load_data_local(self, pio, session, detail: dict, status: int) -> None:
         """LOAD DATA LOCAL INFILE (ClientLocalFiles, constants.go:10):
         server requests the named file with a 0xFB packet; the client
         streams its content as packets, terminated by an empty packet;
@@ -449,7 +434,6 @@ class Gateway:
         n = await loop.run_in_executor(
             self.executor, lambda: session.ingest_csv(bytes(data), detail)
         )
-        status = session.status | (C.SERVER_MORE_RESULTS_EXISTS if more else 0)
         pio.write_packet(packets.ok_packet(cap, affected=n, status=status))
 
     async def _drain_and_read(self, pio):
@@ -485,13 +469,7 @@ class Gateway:
         try:
             probe_sql = prepared.bind(stmt.sql, [None] * stmt.num_params)
             df = await self._sql_async(session, dialect.to_spark_sql(probe_sql))
-            if df is None:
-                return None
-            cols = []
-            for f in df.schema.fields:
-                code, length, charset = result_encoder.mysql_type_for(f.dataType)
-                cols.append((f.name, code, charset, length))
-            return cols
+            return result_encoder.columns_of(df.schema)
         except Exception:
             return None
 
@@ -524,60 +502,37 @@ class Gateway:
                 stmt.param_types = types
             sql = prepared.bind(stmt.sql, values)
             df = await self._sql_async(session, dialect.to_spark_sql(sql))
-        except Exception as e:
-            code, state = _map_error(e)
-            pio.write_packet(packets.err_packet(cap, code=code,
-                                                message=str(e).split("\n")[0][:480],
-                                                sqlstate=state))
-            return
-        if flags & C.CURSOR_TYPE_READ_ONLY and df is not None:
-            await self._open_cursor(pio, session, stmt, df)
-            return
-        gen = result_encoder.binary_resultset_payloads(df, cap, status=session.status)
-        loop = asyncio.get_running_loop()
-        try:
-            while True:
-                chunk = await loop.run_in_executor(
-                    self.executor,
-                    self._tagged(session,
-                                 lambda: list(itertools.islice(gen, 512))),
-                )
-                if not chunk:
-                    break
-                for p in chunk:
-                    pio.write_packet(p)
+            # a cursor needs a result set; zero-column statements (DDL)
+            # answer OK through the plain path
+            if flags & C.CURSOR_TYPE_READ_ONLY and df.columns:
+                await self._open_cursor(pio, session, stmt, df)
+            else:
+                await self._pump(pio, session, result_encoder.binary_resultset_payloads(
+                    df, cap, status=session.status))
         except Exception as e:
             # Spark evaluation is lazy: execution errors surface during
             # iteration — answer with ERR instead of dropping the
             # connection (mid-result-set errors still tear down, as the
             # wire format has no row-stream abort marker)
-            code, state = _map_error(e)
-            pio.write_packet(packets.err_packet(cap, code=code,
-                                                message=str(e).split("\n")[0][:480],
-                                                sqlstate=state))
+            _write_error(pio, cap, e)
 
     async def _open_cursor(self, pio, session, stmt, df) -> None:
         """CURSOR_TYPE_READ_ONLY EXECUTE: answer with column definitions
         only (status carries SERVER_STATUS_CURSOR_EXISTS,
         constants.go:23-37); rows are drained by COM_STMT_FETCH."""
-        cap = session.capability
-        schema = df.schema
-        type_codes = [result_encoder.mysql_type_for(f.dataType)[0]
-                      for f in schema.fields]
+        columns = result_encoder.columns_of(df.schema)
         loop = asyncio.get_running_loop()
         # toLocalIterator() triggers planning; keep it off the event loop.
         row_iter = await loop.run_in_executor(
             self.executor, self._tagged(session, df.toLocalIterator))
-        stmt.cursor = {"iter": row_iter, "type_codes": type_codes}
-        status = session.status | C.SERVER_STATUS_CURSOR_EXISTS
+        stmt.cursor = {"iter": row_iter,
+                       "type_codes": [code for _, code, _, _ in columns]}
         b = packets.Buffer()
-        b.write_lenenc_int(len(schema.fields))
+        b.write_lenenc_int(len(columns))
         pio.write_packet(b.getvalue())
-        for f in schema.fields:
-            code, length, charset = result_encoder.mysql_type_for(f.dataType)
-            pio.write_packet(packets.column_definition(
-                f.name, code, charset=charset, column_length=length))
-        pio.write_packet(packets.eof_packet(cap, status))
+        for p in packets.column_block(columns, session.capability,
+                                      session.status | C.SERVER_STATUS_CURSOR_EXISTS):
+            pio.write_packet(p)
 
     async def _stmt_fetch(self, pio, session, payload: bytes) -> None:
         """COM_STMT_FETCH: stream up to num_rows binary rows from the
@@ -611,10 +566,7 @@ class Gateway:
                     prepared.encode_binary_row(list(row), cur["type_codes"])
                 )
         except Exception as e:
-            code, state = _map_error(e)
-            pio.write_packet(packets.err_packet(cap, code=code,
-                                                message=str(e).split("\n")[0][:480],
-                                                sqlstate=state))
+            _write_error(pio, cap, e)
             stmt.cursor = None
             return
         exhausted = len(rows) < max(1, want)
@@ -751,6 +703,15 @@ def _map_error(e: Exception) -> tuple[int, str]:
         # job-group cancellation from KILL QUERY (MySQL 1317/70100)
         return C.ER_QUERY_INTERRUPTED, "70100"
     return C.ER_UNKNOWN, C.SQLSTATE_UNKNOWN
+
+
+def _write_error(pio, capability: int, e: Exception) -> None:
+    """Answer a failed command: ERR with the mapped code and SQLSTATE
+    and the first line of the exception's message."""
+    code, state = _map_error(e)
+    pio.write_packet(packets.err_packet(capability, code=code,
+                                        message=str(e).split("\n")[0][:480],
+                                        sqlstate=state))
 
 
 class _Session:

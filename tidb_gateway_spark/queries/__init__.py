@@ -13,26 +13,23 @@ from tidb_gateway_spark.queries import (  # noqa: F401, E402
     streaming_batch,
     llm_pipeline,
     subqueries,
+    # extended ops (Q72+)
+    llm_extended,
+    analytics_extended,
+    corpus_shaping,
+    multimodal_pipeline,
+    sources_queries,
+    governance,
+    statistics_extended,
+    layout_quality,
+    curation_extended,
+    pipeline_audit,
+    retrieval_curation,
+    affinity_integrity,
+    profiling_mixture,
+    quality_eval,
+    streaming_retrieval,
+    distribution_quality,
+    drift_monitoring,
+    ann_compression,
 )
-
-try:  # extended ops (Q72+) — registered when present
-    from tidb_gateway_spark.queries import llm_extended  # noqa: F401
-    from tidb_gateway_spark.queries import analytics_extended  # noqa: F401
-    from tidb_gateway_spark.queries import corpus_shaping  # noqa: F401
-    from tidb_gateway_spark.queries import multimodal_pipeline  # noqa: F401
-    from tidb_gateway_spark.queries import sources_queries  # noqa: F401
-    from tidb_gateway_spark.queries import governance  # noqa: F401
-    from tidb_gateway_spark.queries import statistics_extended  # noqa: F401
-    from tidb_gateway_spark.queries import layout_quality  # noqa: F401
-    from tidb_gateway_spark.queries import curation_extended  # noqa: F401
-    from tidb_gateway_spark.queries import pipeline_audit  # noqa: F401
-    from tidb_gateway_spark.queries import retrieval_curation  # noqa: F401
-    from tidb_gateway_spark.queries import affinity_integrity  # noqa: F401
-    from tidb_gateway_spark.queries import profiling_mixture  # noqa: F401
-    from tidb_gateway_spark.queries import quality_eval  # noqa: F401
-    from tidb_gateway_spark.queries import streaming_retrieval  # noqa: F401
-    from tidb_gateway_spark.queries import distribution_quality  # noqa: F401
-    from tidb_gateway_spark.queries import drift_monitoring  # noqa: F401
-    from tidb_gateway_spark.queries import ann_compression  # noqa: F401
-except ImportError:
-    pass

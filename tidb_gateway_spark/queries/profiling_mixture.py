@@ -78,7 +78,7 @@ _Q232_ORACLE = (
         "cross-joined 1-row × 1-row and unpivoted via a literal "
         "struct array.  Replaces the r14 single fat aggregate whose "
         "string min/max buffers forced the 7×-expanded stream through "
-        "two SortAggregate sorts (3.46 → 2.00 s at sf1), itself a "
+        "two SortAggregate sorts (2.35 → 2.02 s at sf1), itself a "
         "rework of the r13 six-scan union.  Table profiling must "
         "neither scan per column nor sort an expanded table at "
         "100 TB.",
@@ -99,7 +99,7 @@ def q232(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan+agg subtrees) and not one fat one (the r14.0 single
     # aggregate: the string min/max buffers disqualify HashAggregate,
     # so the whole Expand-multiplied stream — rows ×7 — ran through
-    # TWO SortAggregate sorts; measured 3.46 s vs 2.00 s at sf1,
+    # TWO SortAggregate sorts; measured 2.35 s vs 2.02 s at sf1,
     # identical output).  Pass 1 keeps the multi-distinct Expand but
     # with all-bigint buffers (null counts + COUNT DISTINCT), so the
     # expanded stream HASH-aggregates map-side and the exchange
