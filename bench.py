@@ -14,13 +14,13 @@ The complete per-query map is printed on an earlier line and written to
 exceeds the driver's stdout tail capture, which left `parsed: null` in
 five straight BENCH_r*.json files.
 
-Timing = best of $SPARK_GRAFT_BENCH_RUNS (default 2) warm executions per
-query, after a JVM/codegen warm-up pass.  The DuckDB oracle twin runs
-by DEFAULT (opt out with SPARK_GRAFT_BENCH_DUCKDB=0) so every recorded
+Timing = best of $SPARK_GRAFT_BENCH_RUNS (default 3) warm executions per
+query, after a JVM/codegen warm-up pass, each query's runs started on a
+settled host (``settled_probe``).  The DuckDB oracle twin runs by
+DEFAULT (opt out with SPARK_GRAFT_BENCH_DUCKDB=0) so every recorded
 sweep carries its own same-process yardstick — engine-only absolutes
 across host epochs are uninterpretable.  Spark's cache is cleared
-between queries (SPARK_GRAFT_BENCH_CLEARCACHE=0 opts out) so suite
-order cannot tax tail queries.
+between queries so suite order cannot tax tail queries.
 
 Results are materialized over Arrow (``df.toArrow()`` ↔ DuckDB
 ``.arrow()``) so both engines pay a comparable column-batch transfer
@@ -35,18 +35,37 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+from tidb_gateway_spark.catalog import TABLES, register_duckdb_views  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # best-of-3: this host shows ±40% run-to-run noise (shared-VM
 # neighbors); the minimum of three warm runs is the stable statistic
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 # Long-run guard: a single execution (engine or oracle) that exceeds
 # this many seconds is recorded best-of-1 instead of best-of-N —
 # run-to-run noise is a sub-second phenomenon, and repeating q197's
 # 812 s recursive-CTE DuckDB oracle N× would triple the sweep's cost
 # for zero statistical value.  Applies symmetrically to both engines.
-LONG_RUN_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_LONGRUN_SEC", "60"))
+LONG_RUN_SEC = 60.0
+# Settle gate (see settled_probe): a probe above SETTLE_THRESH seconds
+# marks a contended host; re-probe up to SETTLE_TRIES times, 0.5 s apart.
+SETTLE_THRESH = 0.15
+SETTLE_TRIES = 6
+# Wall-clock cap on one child-process oracle: spill-grinders become
+# explicit timeout failures.
+ORACLE_TIMEOUT_SEC = 420.0
+# Fixtures of at least this many parquet bytes run each DuckDB oracle
+# in its own child process; smaller ones share one in-process
+# connection.  With a shared connection one oracle that dies at the
+# memory cap leaves DuckDB's process-global allocator poisoned, and
+# every later oracle fails on 2 KB allocations (37/56 sf10 'failures',
+# half of them trivial queries that pass in isolation; q197's oracle
+# OOMs the shared connection already at sf1, BASELINE.md round 6).
+# sf0.1 is 17 MB and never spills; sf1 is ~10× that.
+ORACLE_CHILD_MIN_BYTES = 64 << 20
 
 
 # The data-path queries the final summary line reports (main() raises
@@ -89,6 +108,45 @@ def contention_probe() -> float:
     return time.perf_counter() - t0
 
 
+def settled_probe() -> float:
+    """Probe until the host is quiet or the retries run out; return
+    the last probe.
+
+    This host has brief windows — right after JVM boot, a heavy
+    query's toArrow(), or clearCache — where even a no-allocation numpy
+    pass over a resident buffer runs 100-500x slower while fully on-CPU
+    (thread CPU time ≈ wall, zero page faults; an external-process probe
+    slows too, so it is host-level vCPU/bandwidth contention, not GC or
+    the GIL).  The window dissipates within seconds.  Timed runs that
+    start inside one record garbage (the BENCH_r12 q152 7.1x
+    'regression' was exactly this).  The returned probe is the recorded
+    sentinel, so a high value means the query was measured contended
+    despite the wait.
+    """
+    t = contention_probe()
+    for _ in range(SETTLE_TRIES):
+        if t <= SETTLE_THRESH:
+            break
+        time.sleep(0.5)
+        t = contention_probe()
+    return t
+
+
+def best_of(fn, runs: int) -> tuple[float, int]:
+    """Best wall time of ``runs`` calls of ``fn``, and the number of
+    calls made: once the best exceeds LONG_RUN_SEC the loop stops."""
+    best = float("inf")
+    n_runs = 0
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+        n_runs += 1
+        if best > LONG_RUN_SEC:
+            break
+    return best, n_runs
+
+
 def sf_label(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -97,7 +155,72 @@ def sf_label(sf_dir: str) -> float:
         return -1.0
 
 
+def duckdb_connect(sf_dir: str):
+    """A DuckDB connection over the fixture views.  Resource guards for
+    big-SF sweeps (the r6 sf10 sweep lost a DuckDB oracle to disk-full
+    after ~80 GB of spill): SPARK_GRAFT_BENCH_DUCKDB_MEM and
+    SPARK_GRAFT_BENCH_DUCKDB_TEMPLIMIT cap the oracle's memory and
+    spill so an oversized query fails as a recorded per-query oracle
+    failure instead of taking the host down.  Unset by default —
+    sf0.1/sf1 sweeps never spill."""
+    import duckdb
+
+    con = duckdb.connect()
+    mem = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_MEM")
+    tmp_lim = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_TEMPLIMIT")
+    if mem:
+        con.execute(f"SET memory_limit='{mem}'")
+    if tmp_lim:
+        con.execute("SET temp_directory='.duckdb_bench_tmp'")
+        con.execute(f"SET max_temp_directory_size='{tmp_lim}'")
+    return register_duckdb_views(con, sf_dir)
+
+
+def oracle_best_of(con, sql: str, runs: int) -> tuple[float, int]:
+    """Time one oracle on ``con``: the first of runs+1 executions warms."""
+    return best_of(lambda: con.execute(sql).arrow(), runs + 1)
+
+
+def oracle_child() -> None:
+    """Body of the per-oracle child process: time the oracle named on
+    stdin on a fresh connection and print the result as JSON."""
+    p = json.load(sys.stdin)
+    best, n_runs = oracle_best_of(duckdb_connect(p["sf_dir"]), p["sql"],
+                                  p["runs"])
+    print(json.dumps({"best": best, "n_runs": n_runs}))
+
+
+def oracle_in_child(sql: str) -> tuple[float, int]:
+    """``oracle_best_of`` in a child process, so an oracle that dies at
+    the memory cap takes no later oracle with it."""
+    import subprocess
+
+    # the wall-clock cap must bound the WORST case the child can
+    # attempt: runs+1 executions of up to LONG_RUN_SEC each (short
+    # queries), or one execution of up to ORACLE_TIMEOUT_SEC (long
+    # queries break after their first run) — r10 ADVICE
+    budget = max(ORACLE_TIMEOUT_SEC, (RUNS + 1) * LONG_RUN_SEC + 30)
+    payload = json.dumps({"sql": sql, "sf_dir": SF_DIR, "runs": RUNS})
+    code = f"import sys; sys.path.insert(0, {REPO!r}); import bench; " \
+        "bench.oracle_child()"
+    try:
+        p = subprocess.run([sys.executable, "-c", code], input=payload,
+                           capture_output=True, text=True, timeout=budget)
+    except subprocess.TimeoutExpired:
+        raise RuntimeError(f"oracle timeout after {budget:.0f}s") from None
+    if p.returncode != 0:
+        raise RuntimeError(
+            (p.stderr.strip().splitlines() or ["child died"])[-1])
+    out = json.loads(p.stdout.strip().splitlines()[-1])
+    return float(out["best"]), int(out["n_runs"])
+
+
+def _first_line(exc: Exception) -> str:
+    return (str(exc).splitlines() or [type(exc).__name__])[0][:200]
+
+
 def main() -> None:
+    from tidb_gateway_spark.operators import cache as opcache
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
 
@@ -131,54 +254,7 @@ def main() -> None:
             next(iter(REGISTRY.values())).spark(spark, SF_DIR).toArrow()
             break
 
-    # Clear Spark's cache (and the tracked_persist LRU) BETWEEN queries
-    # (not between the best-of-N runs of one query — those stay warm by
-    # design) so one query's leftover cache pressure cannot tax the
-    # next: the r8 sweep read q114 at 8.86 s mid-suite vs 1.25 s clean
-    # on identical code (BASELINE.md suite-order A/B).  Default ON;
-    # SPARK_GRAFT_BENCH_CLEARCACHE=0 reproduces the shared-cache sweep.
-    clear_cache = os.environ.get("SPARK_GRAFT_BENCH_CLEARCACHE", "1") != "0"
-    from tidb_gateway_spark.operators import cache as opcache
-
-    # Warm column (r10 verdict What's-wrong #4): queries whose
-    # mid-pipeline persisted tables never warm under a RUNS=1 cold
-    # sweep systematically read worse in-sweep than isolated.  With
-    # SPARK_GRAFT_BENCH_WARMCOL=1, any query that registered tracked
-    # persists during its timed runs gets ONE extra warm execution
-    # recorded in `warm_queries` — beside, never instead of, the cold
-    # protocol number.
-    warm_col = os.environ.get("SPARK_GRAFT_BENCH_WARMCOL", "0") == "1"
-
-    # Settle gate: the probe revealed (r13 diagnosis) that this host has
-    # brief windows — right after JVM boot, a heavy query's toArrow(),
-    # or clearCache — where even a no-allocation numpy pass over a
-    # resident buffer runs 100-500x slower while fully on-CPU (thread
-    # CPU time ≈ wall, zero page faults; an external-process probe slows
-    # too, so it is host-level vCPU/bandwidth contention, not GC or the
-    # GIL).  The window dissipates within seconds.  Timed runs that
-    # start inside one record garbage (the BENCH_r12 q152 7.1x
-    # 'regression' was exactly this), so before each query we re-probe
-    # until the host is clean or the retry budget runs out; the FINAL
-    # probe is the recorded sentinel, so a high value means the query
-    # was measured contended despite the wait.
-    settle = os.environ.get("SPARK_GRAFT_BENCH_SETTLE", "1") != "0"
-    settle_thresh = float(os.environ.get(
-        "SPARK_GRAFT_BENCH_SETTLE_THRESH", "0.15"))
-    settle_tries = int(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_TRIES", "6"))
-
-    def settled_probe() -> float:
-        t = contention_probe()
-        if not settle:
-            return t
-        for _ in range(settle_tries):
-            if t <= settle_thresh:
-                break
-            time.sleep(0.5)
-            t = contention_probe()
-        return t
-
     per_query: dict[str, float] = {}
-    warm_queries: dict[str, float] = {}
     sentinel: dict[str, float] = {}
     resettled: list[str] = []
     long_cold: list[str] = []
@@ -186,20 +262,21 @@ def main() -> None:
     contention_probe()  # first call pays the buffer allocation
     for qid in sorted(REGISTRY):
         spec = REGISTRY[qid]
-        if clear_cache:
-            opcache.clear_tracked()
-            spark.catalog.clearCache()
+        # Clear Spark's cache (and the tracked_persist LRU) BETWEEN
+        # queries (not between the best-of-N runs of one query — those
+        # stay warm by design) so one query's leftover cache pressure
+        # cannot tax the next: the r8 sweep read q114 at 8.86 s
+        # mid-suite vs 1.25 s clean on identical code (BASELINE.md
+        # suite-order A/B).
+        opcache.clear_tracked()
+        spark.catalog.clearCache()
         sentinel[qid] = round(settled_probe(), 4)
-        best = float("inf")
-        n_runs = 0
+
+        def run():
+            spec.spark(spark, SF_DIR).toArrow()
+
         try:
-            for _ in range(max(1, RUNS)):
-                t0 = time.perf_counter()
-                spec.spark(spark, SF_DIR).toArrow()
-                best = min(best, time.perf_counter() - t0)
-                n_runs += 1
-                if best > LONG_RUN_SEC:
-                    break  # best-of-1 for long runs (see LONG_RUN_SEC)
+            best, n_runs = best_of(run, RUNS)
             # Post-run guard: the pre-probe only proves the window was
             # clean when the runs STARTED — the r13 sf3 sweep recorded
             # 10-35x phantoms on three consecutive queries because a
@@ -207,22 +284,15 @@ def main() -> None:
             # the next pre-probe.  If the probe is dirty immediately
             # after the timed runs, the readings are suspect: settle,
             # re-run once, keep the min, and flag the qid.
-            if settle and best <= LONG_RUN_SEC \
-                    and contention_probe() > settle_thresh:
+            if best <= LONG_RUN_SEC and contention_probe() > SETTLE_THRESH:
                 settled_probe()
-                t0 = time.perf_counter()
-                spec.spark(spark, SF_DIR).toArrow()
-                best = min(best, time.perf_counter() - t0)
+                best = min(best, best_of(run, 1)[0])
                 resettled.append(qid)
-            if warm_col and opcache._tracked:
-                t0 = time.perf_counter()
-                spec.spark(spark, SF_DIR).toArrow()
-                warm_queries[qid] = round(time.perf_counter() - t0, 4)
         except Exception as exc:  # noqa: BLE001 - one query must not kill the sweep
-            failed[qid] = str(exc).splitlines()[0][:200]
+            failed[qid] = _first_line(exc)
             continue
         per_query[qid] = round(best, 4)
-        if n_runs == 1 and max(1, RUNS) > 1:
+        if n_runs == 1 and RUNS > 1:
             # single-execution (cold) record in a best-of-N sweep —
             # flagged so long-run entries are statistically
             # distinguishable from warm best-of-N ones (r10 ADVICE)
@@ -235,8 +305,6 @@ def main() -> None:
         "queries": per_query,
         "sf": sf_label(SF_DIR),
     }
-    if warm_queries:
-        result["warm_queries"] = warm_queries
     if sentinel:
         vals = sorted(sentinel.values())
         result["sentinel_queries"] = sentinel
@@ -249,113 +317,23 @@ def main() -> None:
     # cross-round comparisons of engine-only absolutes across host
     # epochs are uninterpretable (BASELINE.md:53-59 — the r8 52→134 s
     # scare was pure epoch noise).  SPARK_GRAFT_BENCH_DUCKDB=0 opts out.
-    run_duckdb = ("--duckdb" in sys.argv
-                  or os.environ.get("SPARK_GRAFT_BENCH_DUCKDB", "1") != "0")
+    run_duckdb = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB", "1") != "0"
     if run_duckdb:
         # duckdb is baked into the dev container but must not be a hard
         # dependency of the sweep itself (r9 ADVICE): on a host without
         # it, record engine-only timings instead of crashing.
         try:
-            import duckdb
+            import duckdb  # noqa: F401
         except ImportError as exc:
             print(f"WARNING: duckdb unavailable ({exc}); engine-only "
                   "sweep (set SPARK_GRAFT_BENCH_DUCKDB=0 to silence)",
                   file=sys.stderr)
             run_duckdb = False
     if run_duckdb:
-        # Resource guards for big-SF sweeps (the r6 sf10 sweep lost a
-        # DuckDB oracle to disk-full after ~80 GB of spill): cap the
-        # oracle's memory and spill so an oversized query fails as a
-        # recorded per-query oracle failure instead of taking the host
-        # down.  Unset by default — sf0.1/sf1 sweeps never spill.
-        mem = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_MEM")
-        tmp_lim = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_TEMPLIMIT")
-        # Connection scope: "shared" (default — one warm connection,
-        # the r9 protocol) or "fresh" (one SUBPROCESS per query).
-        # Subprocess-per-query is the honest survivorship protocol at
-        # big SF: with a shared connection, one oracle that dies at the
-        # memory cap leaves the allocator poisoned and every later
-        # oracle — however small — fails on 2 KB allocations (observed:
-        # 37/56 sf10 'failures' of which ~half were q226-class trivia
-        # that run fine in isolation).  An in-process fresh connection
-        # does NOT isolate either — DuckDB's allocator is
-        # process-global, and after one capped-query death even
-        # duckdb.connect() itself OOMs — so "fresh" forks a child per
-        # oracle; a death is the child's alone.  A per-oracle
-        # wall-clock cap (SPARK_GRAFT_BENCH_DUCKDB_TIMEOUT, default
-        # 420 s) records spill-grinders as explicit timeout failures.
-        con_scope = os.environ.get("SPARK_GRAFT_BENCH_DUCKDB_CON",
-                                   "shared")
-        oracle_timeout = float(os.environ.get(
-            "SPARK_GRAFT_BENCH_DUCKDB_TIMEOUT", "420"))
-
-        def _connect():
-            c = duckdb.connect()
-            if mem:
-                c.execute(f"SET memory_limit='{mem}'")
-            if tmp_lim:
-                c.execute("SET temp_directory='.duckdb_bench_tmp'")
-                c.execute(f"SET max_temp_directory_size='{tmp_lim}'")
-            for t in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings".split()
-            ):
-                c.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{SF_DIR}/{t}.parquet')"
-                )
-            return c
-
-        _CHILD_SRC = r"""
-import json, sys, time
-import duckdb
-p = json.load(sys.stdin)
-c = duckdb.connect()
-if p["mem"]:
-    c.execute("SET memory_limit='%s'" % p["mem"])
-if p["tmp"]:
-    c.execute("SET temp_directory='.duckdb_bench_tmp'")
-    c.execute("SET max_temp_directory_size='%s'" % p["tmp"])
-for t in ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split():
-    c.execute("CREATE VIEW %s AS SELECT * FROM read_parquet('%s/%s.parquet')"
-              % (t, p["sf_dir"], t))
-best = float("inf")
-n_runs = 0
-for _ in range(p["runs"] + 1):
-    t0 = time.perf_counter()
-    c.execute(p["sql"]).arrow()
-    best = min(best, time.perf_counter() - t0)
-    n_runs += 1
-    if best > p["long"]:
-        break
-print(json.dumps({"best": best, "n_runs": n_runs}))
-"""
-
-        def _run_oracle_subprocess(sql: str) -> tuple[float, int]:
-            import subprocess
-
-            payload = json.dumps({
-                "sql": sql, "sf_dir": SF_DIR, "runs": max(1, RUNS),
-                "mem": mem, "tmp": tmp_lim, "long": LONG_RUN_SEC,
-            })
-            # the wall-clock cap must bound the WORST case the child
-            # can attempt: runs+1 executions of up to LONG_RUN_SEC each
-            # (short queries), or one execution of up to oracle_timeout
-            # (long queries break after their first run) — r10 ADVICE
-            budget = max(oracle_timeout,
-                         (max(1, RUNS) + 1) * LONG_RUN_SEC + 30)
-            p = subprocess.run(
-                [sys.executable, "-c", _CHILD_SRC], input=payload,
-                capture_output=True, text=True, timeout=budget,
-            )
-            if p.returncode != 0:
-                err = (p.stderr.strip().splitlines() or ["child died"])[-1]
-                raise RuntimeError(err)
-            out = json.loads(p.stdout.strip().splitlines()[-1])
-            return float(out["best"]), int(out.get("n_runs", 0))
-
-        con = _connect() if con_scope != "fresh" else None
+        fixture_bytes = sum(os.path.getsize(f"{SF_DIR}/{t}.parquet")
+                            for t in TABLES)
+        con = (None if fixture_bytes >= ORACLE_CHILD_MIN_BYTES
+               else duckdb_connect(SF_DIR))
         ddb: dict[str, float] = {}
         ddb_sentinel: dict[str, float] = {}
         for qid in sorted(REGISTRY):
@@ -364,24 +342,12 @@ print(json.dumps({"best": best, "n_runs": n_runs}))
                 continue
             ddb_sentinel[qid] = round(settled_probe(), 4)
             try:
-                if con_scope == "fresh":
-                    best, n_runs = _run_oracle_subprocess(spec.oracle)
+                if con is None:
+                    best, n_runs = oracle_in_child(spec.oracle)
                 else:
-                    best = float("inf")
-                    n_runs = 0
-                    for _ in range(max(1, RUNS) + 1):  # first run warms
-                        t0 = time.perf_counter()
-                        con.execute(spec.oracle).arrow()
-                        best = min(best, time.perf_counter() - t0)
-                        n_runs += 1
-                        if best > LONG_RUN_SEC:
-                            break  # best-of-1 for long runs
+                    best, n_runs = oracle_best_of(con, spec.oracle, RUNS)
             except Exception as exc:  # noqa: BLE001 - keep sweeping
-                msg = str(exc).splitlines()[0][:200] if str(exc) else (
-                    f"timeout after {oracle_timeout:.0f}s")
-                if "TimeoutExpired" in type(exc).__name__:
-                    msg = f"oracle timeout after {oracle_timeout:.0f}s"
-                failed[f"{qid}:duckdb"] = msg
+                failed[f"{qid}:duckdb"] = _first_line(exc)
                 continue
             ddb[qid] = round(best, 4)
             if n_runs == 1:
@@ -390,6 +356,8 @@ print(json.dumps({"best": best, "n_runs": n_runs}))
                 # detail JSON distinguishes cold one-shots from warm
                 # best-of-N entries (r10 ADVICE)
                 long_cold.append(f"{qid}:duckdb")
+        if con is not None:
+            con.close()
         result["duckdb_queries"] = ddb
         result["duckdb_total"] = round(sum(ddb.values()), 4)
         result["duckdb_sentinel_queries"] = ddb_sentinel
@@ -417,8 +385,7 @@ print(json.dumps({"best": best, "n_runs": n_runs}))
     detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
     if not detail_path:
         detail_name = "bench_detail_subset.json" if only else "bench_detail.json"
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), detail_name)
+        detail_path = os.path.join(REPO, detail_name)
     with open(detail_path, "w") as f:
         json.dump(result, f)
     print(json.dumps(result))  # full map, early line (may be truncated)

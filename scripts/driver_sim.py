@@ -1,18 +1,21 @@
-"""Simulate the correctness driver: import __spark_entry__ from /root/repo,
-build a VANILLA SparkSession (none of the repo's tuned configs), run
-entry(), then run every queries() entry at sf0.01 against oracle_sql()
+"""Simulate the correctness driver: import __spark_entry__ from this
+checkout, build a VANILLA SparkSession (none of the repo's tuned configs),
+run entry(), then run every queries() entry at sf0.01 against oracle_sql()
 via DuckDB with an order-insensitive value-hash compare."""
-import hashlib
-import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 import duckdb
+from oracle_diff import driver_hash
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as mod
+from tidb_gateway_spark.catalog import register_duckdb_views
 
 spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
@@ -25,27 +28,7 @@ print(f"entry(): {len(rows)} rows, schema={edf.schema.simpleString()}, {time.tim
 assert len(rows) >= 0
 
 SF_DIR = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-
-def vhash(pdf):
-    # DRIVER-FAITHFUL canonicalization (CORRECTNESS_r07 q190 lesson):
-    # the real driver sorts the pandas frame over all columns via
-    # sort_values, which raises on unhashable cells (numpy arrays,
-    # dicts).  Reproduce that failure mode here — do NOT str() cells
-    # before sorting, or array-typed outputs sail through the sim and
-    # red-flag only in the real driver.
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols].sort_values(by=cols, kind="mergesort").reset_index(drop=True)
-    def cell(v):
-        if v is None: return "NULL"
-        if isinstance(v, float):
-            if math.isnan(v): return "NULL"
-            return repr(v)
-        return str(v)
-    rows = [tuple(cell(v) for v in r) for r in pdf.itertuples(index=False, name=None)]
-    return hashlib.sha256("\n".join(",".join(r) for r in rows).encode()).hexdigest()
+con = register_duckdb_views(duckdb.connect(), SF_DIR)
 
 qs = mod.queries()
 oracles = mod.oracle_sql()
@@ -68,7 +51,7 @@ for qid, fn in sorted(qs.items()):
             print(f"  {qid}: rows-only ({len(spdf)} rows) {el:.1f}s")
             continue
         dpdf = con.execute(oracles[qid]).fetchdf()
-        ok = len(spdf) == len(dpdf) and vhash(spdf) == vhash(dpdf)
+        ok = len(spdf) == len(dpdf) and driver_hash(spdf) == driver_hash(dpdf)
     except Exception as exc:  # noqa: BLE001
         print(f"  {qid}: ERR {type(exc).__name__}: {exc}")
         fails.append(qid)

@@ -101,6 +101,7 @@ def bounded_q266_oracle() -> str:
 def main() -> None:
     from q267_sf10_cert import bounded_oracle as bounded_q265_oracle
 
+    from tidb_gateway_spark.catalog import register_duckdb_views
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
 
@@ -139,9 +140,7 @@ def main() -> None:
     mem = os.environ.get("Q265_DUCKDB_MEM")
     if mem:
         con.execute(f"SET memory_limit='{mem}'")
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/documents.parquet')")
+    register_duckdb_views(con, SF_DIR, ("documents",))
 
     t0 = time.perf_counter()
     ora265 = [tuple(map(int, r))

@@ -74,6 +74,7 @@ def bounded_oracle() -> str:
 
 
 def main() -> None:
+    from tidb_gateway_spark.catalog import register_duckdb_views
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
 
@@ -99,9 +100,7 @@ def main() -> None:
     mem = os.environ.get("Q267_DUCKDB_MEM")
     if mem:
         con.execute(f"SET memory_limit='{mem}'")
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/documents.parquet')")
+    register_duckdb_views(con, SF_DIR, ("documents",))
     t0 = time.perf_counter()
     ora = [tuple(map(int, r))
            for r in con.execute(bounded_oracle()).fetchall()]

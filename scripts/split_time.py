@@ -14,20 +14,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import contention_probe  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-
-def settled() -> float:
-    t = contention_probe()
-    for _ in range(8):
-        if t <= 0.15:
-            break
-        time.sleep(0.5)
-        t = contention_probe()
-    return t
+from bench import RUNS, SF_DIR, best_of, settled_probe  # noqa: E402
 
 
 def main() -> None:
@@ -49,22 +36,23 @@ def main() -> None:
         opcache.clear_tracked()
         spark.catalog.clearCache()
         spec = REGISTRY[qid]
-        best_c = best_e = best_t = float("inf")
-        sent = settled()
-        for _ in range(max(1, RUNS)):
+        construct, execute = [], []
+
+        def run():
             t0 = time.perf_counter()
             df = spec.spark(spark, SF_DIR)
             t1 = time.perf_counter()
             df.toArrow()
-            t2 = time.perf_counter()
-            best_c = min(best_c, t1 - t0)
-            best_e = min(best_e, t2 - t1)
-            best_t = min(best_t, t2 - t0)
+            construct.append(t1 - t0)
+            execute.append(time.perf_counter() - t1)
+
+        sent = settled_probe()
+        total, _ = best_of(run, RUNS)
         print(json.dumps({
             "qid": qid, "sentinel": round(sent, 4),
-            "construct_s": round(best_c, 4),
-            "exec_s": round(best_e, 4),
-            "total_s": round(best_t, 4),
+            "construct_s": round(min(construct), 4),
+            "exec_s": round(min(execute), 4),
+            "total_s": round(total, 4),
         }), flush=True)
 
 

@@ -5,7 +5,7 @@ import os
 import duckdb
 import pytest
 
-from tidb_gateway_spark.catalog import TABLES
+from tidb_gateway_spark.catalog import register_duckdb_views
 from tidb_gateway_spark.session import get_spark
 
 SMOKE_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -21,11 +21,7 @@ def spark():
 def ddb():
     """DuckDB oracle connection with fixture views registered (mirrors the
     correctness driver's setup)."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SMOKE_SF_DIR}/{t}.parquet')"
-        )
+    con = register_duckdb_views(duckdb.connect(), SMOKE_SF_DIR)
     yield con
     con.close()
 

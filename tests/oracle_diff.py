@@ -3,6 +3,7 @@ row-count + schema + order-insensitive value-hash check)."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import pandas as pd
@@ -28,6 +29,19 @@ def canonical_rows(pdf: pd.DataFrame) -> list[tuple[str, ...]]:
         for row in pdf.itertuples(index=False, name=None)
     ]
     return sorted(rows)
+
+
+def driver_hash(pdf: pd.DataFrame) -> str:
+    """The correctness driver's value hash: columns by name, rows sorted
+    with pandas ``sort_values`` over all columns (which raises on
+    unhashable cells, as the driver does — never ``str()`` cells before
+    sorting, or array-typed outputs pass here and fail only in the
+    driver), each cell canonicalized, sha256 over the joined rows."""
+    cols = sorted(pdf.columns)
+    pdf = pdf[cols].sort_values(by=cols, kind="mergesort")
+    rows = (",".join(canonical_cell(v) for v in r)
+            for r in pdf.itertuples(index=False, name=None))
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
 
 def driver_sortability_problems(pdf: pd.DataFrame, qid: str, side: str) -> list[str]:

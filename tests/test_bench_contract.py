@@ -115,3 +115,59 @@ def test_bench_headline_names_registered_queries(monkeypatch):
                         bench.HEADLINE + ("q999_unregistered",))
     with pytest.raises(KeyError, match="q999_unregistered"):
         bench.main()
+
+
+def test_bench_oracle_child_process_path(spark, sf_dir, monkeypatch,
+                                         tmp_path):
+    """Fixtures at or above ORACLE_CHILD_MIN_BYTES time each DuckDB
+    oracle in its own child process (the sf1+ protocol).  Force that
+    path on the small test fixture by lowering the threshold below its
+    size."""
+    detail = tmp_path / "bench_detail.json"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "q01")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_RUNS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(detail))
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_DUCKDB", raising=False)
+
+    import bench
+    importlib.reload(bench)  # re-read env-derived module globals
+    monkeypatch.setattr(bench, "ORACLE_CHILD_MIN_BYTES", 1)
+
+    with redirect_stdout(io.StringIO()):
+        bench.main()
+
+    with open(detail) as f:
+        d = json.load(f)
+    assert "q01_parquet_scan_count" in d["duckdb_queries"]
+    assert not d.get("failed"), d.get("failed")
+
+
+def test_driver_hash_is_the_benchmark_hash():
+    """The driver sim and the tests hash with ``oracle_diff.driver_hash``;
+    the benchmark checks results with ``perfbench/declared.py``'s
+    ``canonical_hash``.  Both must give the same digest on every frame
+    shape the registry produces."""
+    import importlib.util
+    import math
+
+    import pandas as pd
+
+    from tests.oracle_diff import driver_hash
+
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_declared", os.path.join(REPO, "perfbench", "declared.py"))
+    declared = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(declared)
+
+    frames = [
+        pd.DataFrame({"b": [2.5, math.nan, 1.0], "a": ["x", None, "z"]}),
+        pd.DataFrame({"v": [-0.1, 3.0, -2.0, 1e-17, -0.0]}),
+        pd.DataFrame({"s": ["a,b", "c", ",", ""], "n": [1, 2, 3, 4]}),
+        pd.DataFrame({"i": [3, 1, 2], "f": [0.5, 2.0, -1.0]}),
+        pd.DataFrame({"m": pd.Series([1, 2.5, 3], dtype=object)}),
+        pd.DataFrame({"a": pd.Series([], dtype="int64"),
+                      "b": pd.Series([], dtype=object)}),
+    ]
+    for pdf in frames:
+        assert driver_hash(pdf) == declared.canonical_hash(pdf), pdf

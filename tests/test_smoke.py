@@ -17,6 +17,8 @@ Run just these with ``pytest -k smoke``.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tidb_gateway_spark.catalog import SHREDDED_JSON, SHREDDED_SUFFIX, TABLES, load_table
@@ -57,14 +59,14 @@ def test_smoke_all_registry_queries_analyze(spark, sf_dir):
 
 def test_every_registry_query_has_a_survey_row():
     """SURVEY.md §2B is the judge's coverage checklist — every declared
-    query id must appear there (and every _CHANGED_FIRST entry must
-    name a real registry query, so the certification window never
-    schedules a phantom)."""
+    query id must appear there."""
     import re
 
     from tidb_gateway_spark.queries import REGISTRY
 
-    survey = open("/root/repo/SURVEY.md").read()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "SURVEY.md")) as f:
+        survey = f.read()
     mentioned = set(re.findall(r"\bQ(\d{2,3})\b", survey))
     missing = []
     for qid in REGISTRY:
@@ -72,15 +74,3 @@ def test_every_registry_query_has_a_survey_row():
         if num.lstrip("0") not in {m.lstrip("0") for m in mentioned}:
             missing.append(qid)
     assert not missing, f"registry queries absent from SURVEY.md: {missing}"
-
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py")
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    phantom = [q for q in m._CHANGED_FIRST if q not in REGISTRY]
-    assert not phantom, f"_CHANGED_FIRST names unknown queries: {phantom}"
-    dupes = [q for q in set(m._CHANGED_FIRST)
-             if list(m._CHANGED_FIRST).count(q) > 1]
-    assert not dupes, f"_CHANGED_FIRST duplicates: {dupes}"

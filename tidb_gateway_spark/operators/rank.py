@@ -435,6 +435,11 @@ def grouped_weighted_percentiles(df: DataFrame, group_col: str,
     r13 form runs instead).  100 TB shape: both scans are map-side
     column-pruned passes; nothing corpus-sized ever shuffles, the
     driver only ever sees (group, bucket) partials.
+
+    Reserved names: the plan adds the intermediate columns ``_w``,
+    ``_bucket``, ``_wn``, ``_off``, ``_tot``, ``_wv``, ``_cumw``,
+    ``_tg`` and ``_tb`` beside ``group_col`` and ``value_col``, so
+    neither of those two may carry one of these names.
     """
     wtype = dict(df.dtypes)[weight_col]
     if wtype not in ("boolean", "tinyint", "smallint", "int", "bigint"):

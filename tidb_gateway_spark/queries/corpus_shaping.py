@@ -647,7 +647,7 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split via codegen subexpression elimination, so it is ~free on
     # top of tw/dw — r8 sweep: the previous translate(text,' ','')
     # re-scanned the raw text for +0.47 s of the 1.75 s total at sf1
-    # (best-of-5 idle, scripts/floor_sweep.py), and translate is only
+    # (best-of-5 idle, BASELINE.md "Skeleton floors"), and translate is only
     # Σ-word-lengths when spaces are the sole separator; concat_ws is
     # the definition itself.  1.75 s → 0.97 s = 1.17× DuckDB.
     d = d.filter(F.trim(F.col("text")) != "").select(
