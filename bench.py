@@ -38,8 +38,6 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from tidb_gateway_spark.catalog import TABLES, register_duckdb_views  # noqa: E402
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # best-of-3: this host shows ±40% run-to-run noise (shared-VM
 # neighbors); the minimum of three warm runs is the stable statistic
@@ -54,18 +52,22 @@ LONG_RUN_SEC = 60.0
 # marks a contended host; re-probe up to SETTLE_TRIES times, 0.5 s apart.
 SETTLE_THRESH = 0.15
 SETTLE_TRIES = 6
-# Wall-clock cap on one child-process oracle: spill-grinders become
-# explicit timeout failures.
-ORACLE_TIMEOUT_SEC = 420.0
 # Fixtures of at least this many parquet bytes run each DuckDB oracle
 # in its own child process; smaller ones share one in-process
 # connection.  With a shared connection one oracle that dies at the
 # memory cap leaves DuckDB's process-global allocator poisoned, and
 # every later oracle fails on 2 KB allocations (37/56 sf10 'failures',
-# half of them trivial queries that pass in isolation; q197's oracle
-# OOMs the shared connection already at sf1, BASELINE.md round 6).
-# sf0.1 is 17 MB and never spills; sf1 is ~10× that.
-ORACLE_CHILD_MIN_BYTES = 64 << 20
+# half of them trivial queries that pass in isolation).  Measured
+# fixture sizes: sf0.1 17 MiB, sf1 231 MiB, sf3 692 MiB
+# (scripts/make_scale_data.py).  sf1 stays on the shared connection,
+# where every recorded sf1 sweep ran it (q197's oracle finished there in
+# 370-812 s, BASELINE.md round 9, scripts/sf1_detail_r1*.json); the
+# recorded sf3 and sf10 sweeps all used one child per oracle.
+ORACLE_CHILD_MIN_BYTES = 512 << 20
+# Wall-clock cap on one child-process oracle: spill-grinders become
+# explicit timeout failures.  The recorded sf3 sweep (cap 600 s)
+# finished no oracle above 290 s; the sf10 one capped at 300 s.
+ORACLE_TIMEOUT_SEC = 420.0
 
 
 # The data-path queries the final summary line reports (main() raises
@@ -155,14 +157,16 @@ def sf_label(sf_dir: str) -> float:
         return -1.0
 
 
-def duckdb_connect(sf_dir: str):
-    """A DuckDB connection over the fixture views.  Resource guards for
-    big-SF sweeps (the r6 sf10 sweep lost a DuckDB oracle to disk-full
-    after ~80 GB of spill): SPARK_GRAFT_BENCH_DUCKDB_MEM and
-    SPARK_GRAFT_BENCH_DUCKDB_TEMPLIMIT cap the oracle's memory and
-    spill so an oversized query fails as a recorded per-query oracle
-    failure instead of taking the host down.  Unset by default —
-    sf0.1/sf1 sweeps never spill."""
+def duckdb_connect(sf_dir: str, tables):
+    """A DuckDB connection with each of ``tables`` registered as a view
+    over its parquet file in ``sf_dir`` — the correctness driver's
+    oracle setup.  Resource guards for big-SF runs (the r6 sf10 sweep
+    lost a DuckDB oracle to disk-full after ~80 GB of spill):
+    SPARK_GRAFT_BENCH_DUCKDB_MEM and SPARK_GRAFT_BENCH_DUCKDB_TEMPLIMIT
+    cap the connection's memory and spill so an oversized query fails
+    as a recorded per-query oracle failure instead of taking the host
+    down.  Unset by default — sf0.1/sf1 sweeps never spill.  This module
+    imports no pyspark, so a per-oracle child loads only DuckDB."""
     import duckdb
 
     con = duckdb.connect()
@@ -173,7 +177,10 @@ def duckdb_connect(sf_dir: str):
     if tmp_lim:
         con.execute("SET temp_directory='.duckdb_bench_tmp'")
         con.execute(f"SET max_temp_directory_size='{tmp_lim}'")
-    return register_duckdb_views(con, sf_dir)
+    for t in tables:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf_dir}/{t}.parquet')")
+    return con
 
 
 def oracle_best_of(con, sql: str, runs: int) -> tuple[float, int]:
@@ -185,12 +192,12 @@ def oracle_child() -> None:
     """Body of the per-oracle child process: time the oracle named on
     stdin on a fresh connection and print the result as JSON."""
     p = json.load(sys.stdin)
-    best, n_runs = oracle_best_of(duckdb_connect(p["sf_dir"]), p["sql"],
-                                  p["runs"])
+    con = duckdb_connect(p["sf_dir"], p["tables"])
+    best, n_runs = oracle_best_of(con, p["sql"], p["runs"])
     print(json.dumps({"best": best, "n_runs": n_runs}))
 
 
-def oracle_in_child(sql: str) -> tuple[float, int]:
+def oracle_in_child(sql: str, tables) -> tuple[float, int]:
     """``oracle_best_of`` in a child process, so an oracle that dies at
     the memory cap takes no later oracle with it."""
     import subprocess
@@ -200,7 +207,8 @@ def oracle_in_child(sql: str) -> tuple[float, int]:
     # queries), or one execution of up to ORACLE_TIMEOUT_SEC (long
     # queries break after their first run) — r10 ADVICE
     budget = max(ORACLE_TIMEOUT_SEC, (RUNS + 1) * LONG_RUN_SEC + 30)
-    payload = json.dumps({"sql": sql, "sf_dir": SF_DIR, "runs": RUNS})
+    payload = json.dumps({"sql": sql, "sf_dir": SF_DIR, "runs": RUNS,
+                          "tables": list(tables)})
     code = f"import sys; sys.path.insert(0, {REPO!r}); import bench; " \
         "bench.oracle_child()"
     try:
@@ -220,6 +228,7 @@ def _first_line(exc: Exception) -> str:
 
 
 def main() -> None:
+    from tidb_gateway_spark.catalog import TABLES
     from tidb_gateway_spark.operators import cache as opcache
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
@@ -333,7 +342,7 @@ def main() -> None:
         fixture_bytes = sum(os.path.getsize(f"{SF_DIR}/{t}.parquet")
                             for t in TABLES)
         con = (None if fixture_bytes >= ORACLE_CHILD_MIN_BYTES
-               else duckdb_connect(SF_DIR))
+               else duckdb_connect(SF_DIR, TABLES))
         ddb: dict[str, float] = {}
         ddb_sentinel: dict[str, float] = {}
         for qid in sorted(REGISTRY):
@@ -343,7 +352,7 @@ def main() -> None:
             ddb_sentinel[qid] = round(settled_probe(), 4)
             try:
                 if con is None:
-                    best, n_runs = oracle_in_child(spec.oracle)
+                    best, n_runs = oracle_in_child(spec.oracle, TABLES)
                 else:
                     best, n_runs = oracle_best_of(con, spec.oracle, RUNS)
             except Exception as exc:  # noqa: BLE001 - keep sweeping

@@ -10,12 +10,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
-import duckdb
 from oracle_diff import driver_hash
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as mod
-from tidb_gateway_spark.catalog import register_duckdb_views
+from bench import duckdb_connect
+from tidb_gateway_spark.catalog import TABLES
 
 spark = SparkSession.builder.master("local[8]").appName("driver-sim").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
@@ -28,7 +28,7 @@ print(f"entry(): {len(rows)} rows, schema={edf.schema.simpleString()}, {time.tim
 assert len(rows) >= 0
 
 SF_DIR = "/root/testdata/sf0.01"
-con = register_duckdb_views(duckdb.connect(), SF_DIR)
+con = duckdb_connect(SF_DIR, TABLES)
 
 qs = mod.queries()
 oracles = mod.oracle_sql()

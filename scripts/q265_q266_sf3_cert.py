@@ -32,7 +32,7 @@ q266 (gate precision audit):
 
 Prints one JSON line with timings + verdicts for BASELINE.md.
 
-Usage: Q265_SF_DIR=/root/repo/.benchdata/sf3 python scripts/q265_q266_sf3_cert.py
+Usage: Q265_SF_DIR=.benchdata/sf3 python scripts/q265_q266_sf3_cert.py
 """
 
 from __future__ import annotations
@@ -42,9 +42,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("Q265_SF_DIR", "/root/repo/.benchdata/sf3")
+SF_DIR = os.environ.get("Q265_SF_DIR", os.path.join(REPO, ".benchdata", "sf3"))
 
 
 def bounded_q266_oracle() -> str:
@@ -101,7 +102,7 @@ def bounded_q266_oracle() -> str:
 def main() -> None:
     from q267_sf10_cert import bounded_oracle as bounded_q265_oracle
 
-    from tidb_gateway_spark.catalog import register_duckdb_views
+    from bench import duckdb_connect
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
 
@@ -134,13 +135,7 @@ def main() -> None:
     out["q266_population_matches_q265_all_epochs"] = bool(
         q265_nq == q266_nq and q265_nq)
 
-    import duckdb
-
-    con = duckdb.connect()
-    mem = os.environ.get("Q265_DUCKDB_MEM")
-    if mem:
-        con.execute(f"SET memory_limit='{mem}'")
-    register_duckdb_views(con, SF_DIR, ("documents",))
+    con = duckdb_connect(SF_DIR, ("documents",))
 
     t0 = time.perf_counter()
     ora265 = [tuple(map(int, r))

@@ -30,9 +30,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("Q267_SF_DIR", "/root/repo/.benchdata/sf10")
+SF_DIR = os.environ.get("Q267_SF_DIR", os.path.join(REPO, ".benchdata", "sf10"))
 
 
 def bounded_oracle() -> str:
@@ -74,7 +75,7 @@ def bounded_oracle() -> str:
 
 
 def main() -> None:
-    from tidb_gateway_spark.catalog import register_duckdb_views
+    from bench import duckdb_connect
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
 
@@ -94,13 +95,7 @@ def main() -> None:
     out["decision_equality"] = bool(flat == lsm and flat)
     out["epochs"] = len(lsm)
 
-    import duckdb
-
-    con = duckdb.connect()
-    mem = os.environ.get("Q267_DUCKDB_MEM")
-    if mem:
-        con.execute(f"SET memory_limit='{mem}'")
-    register_duckdb_views(con, SF_DIR, ("documents",))
+    con = duckdb_connect(SF_DIR, ("documents",))
     t0 = time.perf_counter()
     ora = [tuple(map(int, r))
            for r in con.execute(bounded_oracle()).fetchall()]

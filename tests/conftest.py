@@ -2,10 +2,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from tidb_gateway_spark.catalog import register_duckdb_views
+from bench import duckdb_connect
+from tidb_gateway_spark.catalog import TABLES
 from tidb_gateway_spark.session import get_spark
 
 SMOKE_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -21,7 +21,7 @@ def spark():
 def ddb():
     """DuckDB oracle connection with fixture views registered (mirrors the
     correctness driver's setup)."""
-    con = register_duckdb_views(duckdb.connect(), SMOKE_SF_DIR)
+    con = duckdb_connect(SMOKE_SF_DIR, TABLES)
     yield con
     con.close()
 

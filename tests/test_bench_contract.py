@@ -120,7 +120,7 @@ def test_bench_headline_names_registered_queries(monkeypatch):
 def test_bench_oracle_child_process_path(spark, sf_dir, monkeypatch,
                                          tmp_path):
     """Fixtures at or above ORACLE_CHILD_MIN_BYTES time each DuckDB
-    oracle in its own child process (the sf1+ protocol).  Force that
+    oracle in its own child process (the sf3+ protocol).  Force that
     path on the small test fixture by lowering the threshold below its
     size."""
     detail = tmp_path / "bench_detail.json"

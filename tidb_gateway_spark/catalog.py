@@ -36,16 +36,6 @@ TABLES = (
     "embeddings",
 )
 
-
-def register_duckdb_views(con, sf_dir: str, tables=TABLES):
-    """Register each fixture table as a DuckDB view over its parquet
-    file, the correctness driver's oracle setup; returns ``con``."""
-    for t in tables:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{t}.parquet')")
-    return con
-
-
 # Dimension tables small enough to broadcast at any realistic scale factor
 # (region=5 rows, nation=25 rows regardless of sf; supplier/part grow
 # slowly). Queries join these with an explicit broadcast hint.
