@@ -2,13 +2,14 @@
 """Dump .explain("formatted") for registry queries into plans/<round>/.
 
 Usage:
-    PLANS_OUT=/root/repo/plans/r14 PLANS_SUFFIX=after \
-        python scripts/dump_plans.py q240 q205 q272 ...
+    PLANS_OUT=plans/pr5 PLANS_SUFFIX=after python scripts/dump_plans.py q72 q74
+
+``PLANS_OUT`` is required (there is no default round directory).
 
 Each qid prefix resolves against the registry; the output file is
 ``<PLANS_OUT>/<full_qid>_<PLANS_SUFFIX>.txt``.  Run from the repo
-whose plan shape should be captured (a git worktree of an older commit
-gives the "before" form).  The explain string is the final physical
+whose plan shape should be captured (a clone of an older commit gives
+the "before" form).  The explain string is the final physical
 plan of the DataFrame the query function returns — for queries whose
 construction runs eager metadata jobs (driver folds, index builds)
 those jobs execute first, exactly as in the timed path.
@@ -28,7 +29,9 @@ def main() -> None:
     from tidb_gateway_spark.queries import REGISTRY
     from tidb_gateway_spark.session import get_spark
 
-    out_dir = os.environ.get("PLANS_OUT", "plans/r14")
+    out_dir = os.environ.get("PLANS_OUT")
+    if not out_dir:
+        sys.exit(__doc__)
     suffix = os.environ.get("PLANS_SUFFIX", "after")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)

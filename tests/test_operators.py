@@ -108,6 +108,24 @@ def test_minhash_lsh_finds_exact_duplicates(spark, sf_dir):
     assert not missing
 
 
+def test_lsh_band_rows_match_oracle(spark, sf_dir, ddb):
+    """The (doc_id, band, bv) rows themselves — not only the candidate
+    pairs they induce — equal the DuckDB oracle chain's: persisted band
+    indexes (q262/q265/q267) are joined on these exact values."""
+    from tidb_gateway_spark.queries.llm_extended import (
+        _DDB_BANDS, _DDB_SHINGLES, _DDB_SIGS,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    bl = dedup.lsh_bands(
+        dedup.minhash_signatures(dedup.doc_shingles(d, distinct=False)))
+    got = {(r["doc_id"], r["band"], r["bv"]) for r in bl.collect()}
+    want = set(ddb.execute(
+        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS} "
+        "SELECT doc_id, band, bv FROM bands").fetchall())
+    assert got and got == want
+
+
 def test_lsh_ann_is_exact_within_bucket(spark, sf_dir):
     """The fixture embeddings are random (no cluster structure), so the
     meaningful ANN invariant is: bucket-restricted top-k == brute-force
@@ -301,7 +319,7 @@ def test_ensure_min_partitions_connect_rebalances(spark, sf_dir):
 
 def test_simhash_identical_docs_collide(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash(dedup.doc_words(d))
+    sh = dedup.simhash(dedup.doc_word_sets(d))
     pair = (
         d.alias("x")
         .join(d.alias("y"), (F.expr("md5(x.text) = md5(y.text)"))
@@ -910,7 +928,7 @@ def test_jaccard_pairs_arrays_matches_explode_join_form(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(d, k=6, bands=3, shingles=shingles)
+    cand = dedup.minhash_lsh_candidates(d)
     old = {
         (r.a, r.b): round(r.jac, 9)
         for r in dedup.jaccard_pairs(cand, shingles).collect()
@@ -946,7 +964,7 @@ def test_q209_distributed_path_matches_driver(spark, sf_dir):
     from tidb_gateway_spark.queries import llm_extended as lx
 
     d = load_table(spark, sf_dir, "documents")
-    cand = dedup.minhash_lsh_candidates(d, k=lx._K, bands=lx._BANDS)
+    cand = dedup.minhash_lsh_candidates(d)
     edges = cand.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(

@@ -907,3 +907,20 @@ def test_q261_gram_exchanges_carry_digests_only(spark, sf_dir):
     # exactly one Generate: the gram stream is evaluated once (the
     # groupBy+join-back alternative re-shingles per consumer)
     assert tree.count("Generate") == 1, tree
+
+
+def test_minhash_lsh_signature_pipeline_planned_once(spark, sf_dir):
+    """q72/q74: the bands come from ONE inline over the signature, so
+    the plan has no Union and exactly one partial signature aggregate;
+    the band self-join's other side reads it through ReusedExchange,
+    whichever join strategy is picked.  The per-band union form pruned
+    each branch to its own slices and planned the shingle → md5 →
+    partial-min chain once per band."""
+    for qid in ("q72_minhash_lsh_candidates", "q74_jaccard_verify"):
+        text = inspect.explain_formatted(REGISTRY[qid].spark(spark, sf_dir))
+        assert "Union" not in _plan_tree(text), text
+        partial_sig_aggs = [
+            ln for ln in text.splitlines()
+            if ln.startswith("Functions") and "partial_min(substring(md5(" in ln
+        ]
+        assert len(partial_sig_aggs) == 1, (qid, partial_sig_aggs)

@@ -147,7 +147,6 @@ def test_q262_stream_maintained_lsh_equals_batch_bands(spark, sf_dir):
 
     from tidb_gateway_spark.operators import dedup
     from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.queries.llm_extended import _BANDS, _K
     from tidb_gateway_spark.queries.streaming_retrieval import (
         _Q262_SPLITS,
         _q262_index,
@@ -162,8 +161,8 @@ def test_q262_stream_maintained_lsh_equals_batch_bands(spark, sf_dir):
     }
     d = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(
-        dedup.doc_shingles(d, distinct=False), k=_K)
-    bl = dedup.lsh_bands(sigs, _BANDS, _K // _BANDS).withColumn(
+        dedup.doc_shingles(d, distinct=False))
+    bl = dedup.lsh_bands(sigs).withColumn(
         "ep",
         (hash_bps(F2.col("doc_id"), "q262") % _Q262_SPLITS).cast("int"))
     want = {

@@ -50,7 +50,7 @@ def test_q267_fold_ran_and_bounded_file_count(spark, sf_dir):
     16 hex chars), and the live delta holds epoch 3 only.  The flat
     gate's admitted dir, by contrast, accumulates one file per leaf
     PER BATCH — the unbounded growth the fold removes."""
-    from tidb_gateway_spark.queries.llm_extended import _BANDS
+    from tidb_gateway_spark.operators.dedup import BANDS
 
     flat, lsm = _gate_paths(spark, sf_dir)
     meta = json.load(open(os.path.join(lsm, "meta.json")))
@@ -59,12 +59,12 @@ def test_q267_fold_ran_and_bounded_file_count(spark, sf_dir):
     assert st == {"base_gen": 1, "delta_epoch": 2}, st
     base_files = glob.glob(os.path.join(
         lsm, "base", "gen-000001", "*", "*", "*.parquet"))
-    assert 0 < len(base_files) <= _BANDS * 16, len(base_files)
+    assert 0 < len(base_files) <= BANDS * 16, len(base_files)
     # superseded delta epoch GC'd after the flip
     assert not os.path.exists(os.path.join(lsm, "delta", "epoch-000001"))
     delta_files = glob.glob(os.path.join(
         lsm, "delta", "epoch-000002", "*", "*", "*.parquet"))
-    assert 0 < len(delta_files) <= _BANDS * 16, len(delta_files)
+    assert 0 < len(delta_files) <= BANDS * 16, len(delta_files)
     # the flat layout pays per-batch segment accumulation: strictly
     # more files than the folded base for the same admitted rows
     flat_files = glob.glob(os.path.join(

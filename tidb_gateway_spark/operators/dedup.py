@@ -4,15 +4,16 @@ Tiers (all pure DataFrame transforms, no driver-side loops):
 
 * exact — hash-groupBy on md5(text): the shuffle carries 32-char hashes,
   never document bodies.  O(n) one shuffle.
-* MinHash + LSH — per-doc signature of k minimum keyed hashes over the
-  word set, banded so that documents sharing any band collide; candidate
-  pairs come from an equi-join on (band, band_value).  This is the
+* MinHash + LSH — per-doc signature of K minimum keyed hashes over the
+  shingle set, banded so that documents sharing any band collide;
+  candidate pairs come from an equi-join on (band, band_value).  This is the
   100 TB near-dup path: the band join is a plain shuffle join whose key
   cardinality grows with the corpus, so it parallelizes; no pairwise
   O(n²) stage ever materializes.
 * SimHash — per-doc b-bit signature from signed sums of word-hash bits;
   equal signatures ⇒ near-identical token multisets.
-* exact Jaccard verification — computed only on the LSH candidate set.
+* exact Jaccard verification — computed only on the LSH candidate set;
+  :func:`near_dup_pairs` is the whole candidate→verify pipeline.
 
 Determinism: hashes are md5 hex strings (lexicographic min), reproducible
 in any engine — the DuckDB oracles in queries/llm_extended.py recompute
@@ -29,43 +30,32 @@ from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 
 HEX_HIGH = tuple("89abcdef")  # hex digits with the top bit set
 
+# The one MinHash-LSH operating point: K single-digest slices per
+# signature (K <= 6: 32 hex chars / 5 per slice), split into BANDS
+# bands of K // BANDS slices.  Persisted band indexes (q262/q265/q267)
+# and every DuckDB oracle chain are built from these two numbers.
+K = 6
+BANDS = 3
 
-def doc_words(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, word) pairs (unigram sets — SimHash features).
 
-    No parallelism guard here (contrast doc_shingles): consumers that
-    JOIN on this relation (q74's Jaccard verify) hash AFTER the
-    distinct's exchange, which already spreads the work.  Consumers
-    that only AGGREGATE per doc should use :func:`doc_word_sets`
-    instead — it replaces the corpus-wide distinct shuffle with a
-    row-local ``array_distinct``.
+def doc_word_sets(documents: DataFrame) -> DataFrame:
+    """Distinct (doc_id, word) pairs (unigram sets — SimHash features)
+    via ROW-LOCAL dedup: ``array_distinct`` inside each row replaces a
+    corpus-wide ``.distinct()`` exchange, so per-doc aggregating
+    consumers (SimHash signatures) reach their groupBy with map-side
+    partial aggregation and ONE narrow shuffle instead of a full
+    exploded-corpus wide shuffle.  The parallelism guard repartitions
+    the RAW documents (50 k rows ≪ the 5 M exploded pairs a distinct
+    would have shuffled) because a compact parquet source can be a
+    single input split, which would serialize the per-word hashing
+    onto one task.  Measured (sf1, r6): q73 1.9 s → 0.65 s.
     """
     return (
-        documents.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-
-
-def doc_word_sets(documents: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, word) pairs via ROW-LOCAL dedup — same set as
-    :func:`doc_words`, different plan: ``array_distinct`` inside each
-    row replaces the corpus-wide ``.distinct()`` exchange, so per-doc
-    aggregating consumers (SimHash signatures) reach their groupBy with
-    map-side partial aggregation and ONE narrow shuffle instead of a
-    full exploded-corpus wide shuffle.  The parallelism guard
-    repartitions the RAW documents (50 k rows ≪ the 5 M exploded pairs
-    the distinct would have shuffled) because a compact parquet source
-    can be a single input split, which would serialize the per-word
-    hashing onto one task.  Measured (sf1, r6): q73 1.9 s → 0.65 s.
-    """
-    return (
-        ensure_min_partitions(documents.select(id_col, text_col))
+        ensure_min_partitions(documents.select("doc_id", "text"))
         .select(
-            id_col,
+            "doc_id",
             F.explode(
-                F.array_distinct(F.split(F.col(text_col), " "))
+                F.array_distinct(F.split(F.col("text"), " "))
             ).alias("w"),
         )
         .filter(F.col("w") != "")
@@ -83,8 +73,8 @@ def _shingle_array_sql(n: int) -> str:
     )
 
 
-def doc_shingles(documents: DataFrame, n: int = 3, id_col: str = "doc_id",
-                 text_col: str = "text", distinct: bool = True) -> DataFrame:
+def doc_shingles(documents: DataFrame, n: int = 3,
+                 distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) pairs with n-word shingles (exploded form).
 
     Shingle choice is load-bearing: unigram sets collapse when the corpus
@@ -95,10 +85,10 @@ def doc_shingles(documents: DataFrame, n: int = 3, id_col: str = "doc_id",
 
     ``distinct=True`` dedups through a shuffle — deliberately: the
     exchange it creates is a plan-level REUSE POINT, so consumers that
-    fan out (q91's benchmark/probe sides, band unions) evaluate the
-    shingling once.  Measured at sf0.1, replacing this with map-side
-    ``array_distinct`` made q91 18× slower because every fan-out branch
-    re-ran the shingle transform against the scan.
+    fan out (q91's benchmark/probe sides) evaluate the shingling once.
+    Measured at sf0.1, replacing this with map-side ``array_distinct``
+    made q91 18× slower because every fan-out branch re-ran the
+    shingle transform against the scan.
     """
     # HOF-free tokens (text.nonempty_words): split(trim, ' +') ≡
     # filter(split(text,' '), x -> x != '') but whole-stage-codegen'd
@@ -108,91 +98,75 @@ def doc_shingles(documents: DataFrame, n: int = 3, id_col: str = "doc_id",
     # shingle per blank doc, exactly what the old filter form produced
     # (behavior-identical; blank docs can only band-match each other
     # and are rejected by the Jaccard verify downstream).
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("text"))
     out = (
         ensure_min_partitions(documents)
         .select(
-            id_col,
+            "doc_id",
             F.when(t != "", F.split(t, " +"))
             .otherwise(F.expr("CAST(array() AS array<string>)"))
             .alias("wlist"),
         )
-        .select(id_col, F.explode(F.expr(_shingle_array_sql(n))).alias("w"))
+        .select("doc_id", F.explode(F.expr(_shingle_array_sql(n))).alias("w"))
     )
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(words: DataFrame, k: int = 6, id_col: str = "doc_id") -> DataFrame:
-    """k-column MinHash signature per document (columns h0..h{k-1}) from
+def minhash_signatures(words: DataFrame) -> DataFrame:
+    """K-column MinHash signature per document (columns h0..h{K-1}) from
     an exploded (doc_id, w) frame.
 
     Single-digest MinHash: ONE md5 per shingle, with the j-th hash
     function taken as the j-th 5-hex-digit (20-bit) slice of the digest —
     slices of a cryptographic digest are independent, the standard
     one-hash-plus-derivation construction (datasketch does the same with
-    one base hash and k permutations).  Versus k independent salted md5s
-    this cuts the dominant cost (digesting every shingle k times) by k×,
+    one base hash and k permutations).  Versus K independent salted md5s
+    this cuts the dominant cost (digesting every shingle K times) by K×,
     and the values stay engine-reproducible: the DuckDB oracle computes
     the identical substrings.
 
     Plan shape: groupBy partial-aggregates map-side, so the shuffle
-    carries per-partition minima (≤ k slices per doc per partition),
+    carries per-partition minima (≤ K slices per doc per partition),
     never the shingle text; this codegen'd hash-aggregate measured ~6×
     faster at sf0.1 than evaluating the same hashes through interpreted
-    higher-order ``transform`` lambdas over per-doc shingle arrays, and
-    the aggregate's exchange is a reuse point for the band-union fan-out.
-
-    k ≤ 6 (32 hex chars / 5 per slice).
+    higher-order ``transform`` lambdas over per-doc shingle arrays.
+    Min is multiset-invariant, so distinct and non-distinct shingle
+    frames give identical signatures.
     """
-    if k > 6:
-        raise ValueError("single-digest MinHash supports k <= 6 slices")
     h = F.md5(F.col("w"))
-    aggs = [
+    return words.groupBy("doc_id").agg(*[
         F.min(F.substring(h, 1 + 5 * j, 5)).alias(f"h{j}")
-        for j in range(k)
-    ]
-    return words.groupBy(id_col).agg(*aggs)
+        for j in range(K)
+    ])
 
 
-def lsh_bands(signatures: DataFrame, bands: int, rows_per_band: int,
-              id_col: str = "doc_id") -> DataFrame:
-    """Explode signatures into (doc_id, band, band_value) rows."""
-    parts = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        parts.append(
-            signatures.select(
-                F.col(id_col), F.lit(b).alias("band"), F.concat(*cols).alias("bv")
+def lsh_bands(signatures: DataFrame) -> DataFrame:
+    """(doc_id, band, bv) rows: band b's value is the concatenation of
+    its K // BANDS signature slices.  ONE inline over an array of band
+    structs, so the signature pipeline is planned once for all bands
+    (a per-band projection union pruned each branch to its own slices
+    and re-planned the whole aggregate once per band)."""
+    rows = K // BANDS
+    return signatures.select(
+        "doc_id",
+        F.inline(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.concat(*[F.col(f"h{b * rows + r}") for r in range(rows)])
+                .alias("bv"),
             )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-def minhash_lsh_candidates(documents: DataFrame, k: int = 6, bands: int = 3,
-                           shingles: DataFrame | None = None) -> DataFrame:
-    """Candidate near-dup pairs (a < b) via MinHash banding.
-
-    Two shuffles total: the signature aggregate (partial-aggregated
-    map-side, shuffle carries minima only) and the band equi-join.  The
-    join key (band, bv) is high-cardinality so it spreads evenly, and
-    identical documents (the common hot case) collapse into per-bucket
-    groups that AQE's skew handling splits if one bucket explodes.
-
-    Pass a precomputed ``shingles`` frame (doc_shingles) to share the
-    shingling across pipeline stages; multiset (distinct=False) input
-    gives identical signatures since min is multiset-invariant.
-    """
-    rows_per_band = k // bands
-    sigs = minhash_signatures(
-        shingles if shingles is not None else doc_shingles(documents, distinct=False),
-        k=k,
+            for b in range(BANDS)
+        ])),
     )
-    bl = lsh_bands(sigs, bands, rows_per_band)
-    x = bl.alias("x")
-    y = bl.alias("y")
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (a, b) doc pairs, a < b, that share any (band, bv)
+    bucket — the band equi-join.  Its key is high-cardinality so it
+    spreads evenly, and identical documents (the common hot case)
+    collapse into per-bucket groups that AQE's skew handling splits if
+    one bucket explodes."""
+    x, y = bands.alias("x"), bands.alias("y")
     return (
         x.join(
             y,
@@ -205,7 +179,28 @@ def minhash_lsh_candidates(documents: DataFrame, k: int = 6, bands: int = 3,
     )
 
 
-def simhash(words: DataFrame, bits: int = 16, id_col: str = "doc_id") -> DataFrame:
+def minhash_lsh_candidates(documents: DataFrame) -> DataFrame:
+    """Candidate near-dup pairs (a < b) via MinHash banding.
+
+    Two shuffles total: the signature aggregate (partial-aggregated
+    map-side, shuffle carries minima only) and the band equi-join.
+    """
+    return band_pairs(lsh_bands(minhash_signatures(
+        doc_shingles(documents, distinct=False))))
+
+
+def near_dup_pairs(documents: DataFrame) -> DataFrame:
+    """Verified near-dup pairs (a, b, jac): the LSH candidates whose
+    exact shingle-set Jaccard is ≥ 0.5 — the candidate→verify pipeline
+    (cost ∝ candidates, never corpus²)."""
+    return (
+        jaccard_pairs_arrays(minhash_lsh_candidates(documents),
+                             doc_shingle_arrays(documents))
+        .filter(F.col("jac") >= 0.5)
+    )
+
+
+def simhash(words: DataFrame, bits: int = 16) -> DataFrame:
     """(doc_id, sh) where sh is a {bits}-char '0'/'1' SimHash signature.
 
     Bit j is the sign of the sum over words of ±1 — +1 when hex digit j
@@ -228,7 +223,7 @@ def simhash(words: DataFrame, bits: int = 16, id_col: str = "doc_id") -> DataFra
         raise ValueError("simhash supports at most 16 bits (two conv halves)")
     h = F.md5("w")
     hashed = words.select(
-        id_col,
+        "doc_id",
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("_ha"),
         F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("_hb"),
     )
@@ -239,16 +234,14 @@ def simhash(words: DataFrame, bits: int = 16, id_col: str = "doc_id") -> DataFra
         bit_aggs.append(
             F.sum(F.when(digit >= 8, 1).otherwise(-1)).alias(f"b{j}")
         )
-    per_doc = hashed.groupBy(id_col).agg(*bit_aggs)
+    per_doc = hashed.groupBy("doc_id").agg(*bit_aggs)
     sig = F.concat(
         *[F.when(F.col(f"b{j}") > 0, F.lit("1")).otherwise(F.lit("0")) for j in range(bits)]
     )
-    return per_doc.select(F.col(id_col), sig.alias("sh"))
+    return per_doc.select("doc_id", sig.alias("sh"))
 
 
-def doc_shingle_arrays(documents: DataFrame, n: int = 3,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def doc_shingle_arrays(documents: DataFrame, n: int = 3) -> DataFrame:
     """Per-document DISTINCT shingle set as one ARRAY column, computed
     row-locally — no explode, no shuffle.  Same set per doc as
     ``doc_shingles(distinct=True)`` (array_distinct replaces the
@@ -256,17 +249,17 @@ def doc_shingle_arrays(documents: DataFrame, n: int = 3,
     set algebra per ROW (array_intersect Jaccard) instead of per
     exploded pair.  ~115 shingles ≈ 1.5 kB per doc ride the verify
     joins as a payload column."""
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("text"))
     return (
-        ensure_min_partitions(documents.select(id_col, text_col))
+        ensure_min_partitions(documents.select("doc_id", "text"))
         .select(
-            id_col,
+            "doc_id",
             F.when(t != "", F.split(t, " +"))
             .otherwise(F.expr("CAST(array() AS array<string>)"))
             .alias("wlist"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.array_distinct(F.expr(_shingle_array_sql(n))).alias("sharr"),
         )
     )
@@ -301,14 +294,11 @@ def jaccard_pairs_arrays(candidates: DataFrame,
 
 
 def jaccard_pairs(candidates: DataFrame, words: DataFrame) -> DataFrame:
-    """Exact word-set Jaccard for candidate pairs (a, b) → (a, b, jac).
+    """Exact word-set Jaccard for candidate pairs (a, b) → (a, b, jac)
+    over an exploded DISTINCT (doc_id, w) frame.
 
-    Joins the candidate list back to the word sets — cost is proportional
-    to the candidate count, not the corpus size squared.  All three uses
-    of ``words`` (both join sides and the size aggregate) reuse the same
-    exchange when the caller passes the distinct shingle frame that the
-    signature stage consumed, so the whole candidate→verify pipeline
-    reads the corpus exactly once.
+    The explode-join form of :func:`jaccard_pairs_arrays`, kept as its
+    reference: tests assert both give the same (a, b, jac) set.
     """
     sizes = words.groupBy("doc_id").agg(F.count("*").alias("sz"))
     wa = words.select(F.col("doc_id").alias("a"), "w")

@@ -241,17 +241,16 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (a 100-word doc fully embedded in a 1000-word doc has J ≈ 0.1 but
 # containment 1.0).
 _Q229_TAU = 0.6
-_Q229_K, _Q229_BANDS = 6, 3
 
 # Reuse q72's LSH candidate SQL chain (same signature family).
 from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _DDB_BANDS as _Q229_DDB_BANDS,
-    _DDB_SHINGLES as _Q229_DDB_SHINGLES,
-    _DDB_SIGS as _Q229_DDB_SIGS,
+    _DDB_BANDS,
+    _DDB_SHINGLES,
+    _DDB_SIGS,
 )
 
 _Q229_ORACLE = (
-    f"WITH {_Q229_DDB_SHINGLES}, {_Q229_DDB_SIGS}, {_Q229_DDB_BANDS}, "
+    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
     "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x "
     "JOIN bands y ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id), "
     "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
@@ -283,9 +282,7 @@ _Q229_ORACLE = (
 )
 def q229(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(
-        d, k=_Q229_K, bands=_Q229_BANDS, shingles=shingles)
+    cand = dedup.minhash_lsh_candidates(d)
     arrs = dedup.doc_shingle_arrays(d)
     a_arr = arrs.select(F.col("doc_id").alias("a"), F.col("sharr").alias("sa"))
     b_arr = arrs.select(F.col("doc_id").alias("b"), F.col("sharr").alias("sb"))

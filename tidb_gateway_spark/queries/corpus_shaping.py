@@ -1051,7 +1051,7 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q197
 from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _BANDS, _DDB_BANDS, _DDB_CAND_CHAIN, _DDB_SHINGLES, _DDB_SIGS, _K,
+    _DDB_BANDS, _DDB_CAND_CHAIN, _DDB_SHINGLES, _DDB_SIGS,
 )
 
 _Q197_SPLIT_BPS = 9_000  # train share (basis points of the hash space)
@@ -1121,14 +1121,7 @@ def q197(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators import sampling
 
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(
-        d, k=_K, bands=_BANDS, shingles=shingles)
-    ver = (
-        dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-        .filter(F.col("jac") >= 0.5)
-        .select("a", "b")
-    )
+    ver = dedup.near_dup_pairs(d).select("a", "b")
     cc = dedup.connected_components(ver).select(
         "doc_id", F.col("cluster_id").alias("cluster"))
     cmap = (

@@ -280,17 +280,15 @@ def q247(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reuse q72/q74's EXACT candidate/verify definitions so the matrix is
 # an aggregation of the certified pair list, not a re-derivation.
 from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _BANDS as _Q248_BANDS,
-    _DDB_BANDS as _Q248_DDB_BANDS,
-    _DDB_CAND_CHAIN as _Q248_DDB_CAND,
-    _DDB_SHINGLES as _Q248_DDB_SHINGLES,
-    _DDB_SIGS as _Q248_DDB_SIGS,
-    _K as _Q248_K,
+    _DDB_BANDS,
+    _DDB_CAND_CHAIN,
+    _DDB_SHINGLES,
+    _DDB_SIGS,
 )
 
 _Q248_ORACLE = (
-    f"WITH {_Q248_DDB_SHINGLES}, {_Q248_DDB_SIGS}, {_Q248_DDB_BANDS}, "
-    f"{_Q248_DDB_CAND} , "
+    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+    f"{_DDB_CAND_CHAIN} , "
     "ver AS (SELECT t.a, t.b FROM inter t "
     "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
     "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -321,11 +319,7 @@ _Q248_ORACLE = (
 )
 def q248(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(
-        d, k=_Q248_K, bands=_Q248_BANDS, shingles=shingles)
-    jp = dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-    ver = jp.filter(F.col("jac") >= 0.5).select("a", "b")
+    ver = dedup.near_dup_pairs(d).select("a", "b")
     src = d.select("doc_id", "source")
     lab = (
         ver.join(src.withColumnRenamed("doc_id", "a")

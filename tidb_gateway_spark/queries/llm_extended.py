@@ -21,9 +21,6 @@ from tidb_gateway_spark.operators.similarity import cosine_nn_arrow, hyperplanes
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q72
-# Shared signature definitions (see operators/dedup.py).
-_K, _BANDS = 6, 3
-
 _DDB_WORDS = (
     "words AS (SELECT DISTINCT doc_id, w FROM "
     "(SELECT doc_id, UNNEST(string_split(text,' ')) AS w FROM documents) "
@@ -44,14 +41,18 @@ _DDB_SHINGLES = (
 # operators/dedup.py:minhash_signatures (one digest, k slices).
 _DDB_SIGS = (
     "sigs AS (SELECT doc_id, "
-    + ", ".join(f"MIN(substr(md5(w), {1 + 5 * j}, 5)) AS h{j}" for j in range(_K))
+    + ", ".join(f"MIN(substr(md5(w), {1 + 5 * j}, 5)) AS h{j}"
+                for j in range(dedup.K))
     + " FROM shingles GROUP BY doc_id)"
 )
+_DDB_ROWS = dedup.K // dedup.BANDS
 _DDB_BANDS = (
     "bands AS ("
     + " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, h{2*b} || h{2*b+1} AS bv FROM sigs"
-        for b in range(_BANDS)
+        f"SELECT doc_id, {b} AS band, "
+        + " || ".join(f"h{_DDB_ROWS * b + r}" for r in range(_DDB_ROWS))
+        + " AS bv FROM sigs"
+        for b in range(dedup.BANDS)
     )
     + ")"
 )
@@ -72,7 +73,7 @@ _Q72_ORACLE = (
 )
 def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_candidates(d, k=_K, bands=_BANDS).orderBy("a", "b")
+    return dedup.minhash_lsh_candidates(d).orderBy("a", "b")
 
 
 # ---------------------------------------------------------------- Q73
@@ -134,22 +135,14 @@ _Q74_ORACLE = (
     "q74_jaccard_verify",
     _Q74_ORACLE,
     doc="Exact shingle-set Jaccard ≥ 0.5 on the q72 LSH candidates "
-        "(operators/dedup.py:jaccard_pairs) — verify stage of the "
+        "(operators/dedup.py:near_dup_pairs) — verify stage of the "
         "candidate→verify near-dup pipeline; cost ∝ candidates.",
     tags=("dedup", "llm", "minhash"),
 )
 def q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # candidates from the exploded-shingle LSH path; verification via
-    # row-local array_intersect over per-doc shingle ARRAYS
-    # (jaccard_pairs_arrays) — the explode-join verify shuffled
-    # |cand|×|shingles/doc| rows into a per-pair groupBy, the array
-    # form shuffles |cand| + 2·|docs| rows (5.5 s → 2.0 s at sf1).
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(d, k=_K, bands=_BANDS, shingles=shingles)
-    jp = dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
     return (
-        jp.filter(F.col("jac") >= 0.5)
+        dedup.near_dup_pairs(d)
         .select("a", "b", stable_round(F.col("jac"), 4).alias("jac"))
         .orderBy("a", "b")
     )
@@ -1056,13 +1049,7 @@ _Q101_ORACLE = (
 )
 def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(d, k=_K, bands=_BANDS, shingles=shingles)
-    ver = (
-        dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-        .filter(F.col("jac") >= 0.5)
-        .select("a", "b")
-    )
+    ver = dedup.near_dup_pairs(d).select("a", "b")
     return dedup.connected_components(ver).orderBy("doc_id")
 
 
@@ -1599,8 +1586,7 @@ def q209(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect, or both union branches of the distributed loop) now
     # reads the cache (the q114 diamond lesson; DuckDB needed the same
     # via AS MATERIALIZED).
-    cand = tracked_persist(
-        dedup.minhash_lsh_candidates(d, k=_K, bands=_BANDS))
+    cand = tracked_persist(dedup.minhash_lsh_candidates(d))
 
     if cand.count() * 2 <= _Q209_DRIVER_EDGES:
         # symmetrize driver-side: the pair list is already collected

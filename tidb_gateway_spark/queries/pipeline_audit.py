@@ -233,10 +233,9 @@ def q211(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q212
-_K, _BANDS = 6, 3  # must match q72's operating point (llm_extended)
-
 _Q212_MATCHES = " + ".join(
-    f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)" for j in range(_K)
+    f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)"
+    for j in range(dedup.K)
 )
 
 _Q212_ORACLE = (
@@ -252,7 +251,7 @@ _Q212_ORACLE = (
     "FROM cand c JOIN sigs sa ON sa.doc_id = c.a "
     "JOIN sigs sb ON sb.doc_id = c.b), "
     "j AS (SELECT m.matches, "
-    f"CAST(FLOOR(m.matches * 10000.0 / {_K}) AS BIGINT) AS est_bps, "
+    f"CAST(FLOOR(m.matches * 10000.0 / {dedup.K}) AS BIGINT) AS est_bps, "
     "CAST(FLOOR(COALESCE(i.i, 0) * 10000.0 / "
     "(sa.sz + sb.sz - COALESCE(i.i, 0))) AS BIGINT) AS jac_bps "
     "FROM m LEFT JOIN inter i ON i.a = m.a AND i.b = m.b "
@@ -283,34 +282,22 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.cache import tracked_persist
 
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
     # sigs feeds FOUR consumers (both band self-join branches, sa, sb)
     # and arrs two (aa, ab): column pruning specializes each subtree
     # copy, so unpersisted they each re-ran the shingle→minhash
     # pipeline (the q100/q214 diamond lesson).  Both are |docs|-sized
     # (k ints / shingle-digest arrays), never corpus-sized.
-    sigs = tracked_persist(dedup.minhash_signatures(shingles, k=_K))
-    bl = dedup.lsh_bands(sigs, _BANDS, _K // _BANDS)
-    x, y = bl.alias("x"), bl.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bv") == F.col("y.bv"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-    )
+    sigs = tracked_persist(dedup.minhash_signatures(dedup.doc_shingles(d)))
+    cand = dedup.band_pairs(dedup.lsh_bands(sigs))
     sa = sigs.select(
         F.col("doc_id").alias("a"),
-        *[F.col(f"h{j}").alias(f"a{j}") for j in range(_K)])
+        *[F.col(f"h{j}").alias(f"a{j}") for j in range(dedup.K)])
     sb = sigs.select(
         F.col("doc_id").alias("b"),
-        *[F.col(f"h{j}").alias(f"b{j}") for j in range(_K)])
+        *[F.col(f"h{j}").alias(f"b{j}") for j in range(dedup.K)])
     matches = sum(
         F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-        for j in range(_K)
+        for j in range(dedup.K)
     )
     arrs = tracked_persist(dedup.doc_shingle_arrays(d))
     aa = arrs.select(F.col("doc_id").alias("a"), F.col("sharr").alias("sa"))
@@ -323,7 +310,7 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(aa, "a").join(ab, "b")
         .select(
             "matches",
-            F.floor(F.col("matches") * 10000.0 / _K)
+            F.floor(F.col("matches") * 10000.0 / dedup.K)
             .cast("bigint").alias("est_bps"),
             F.floor(i * 10000.0 / u).cast("bigint").alias("jac_bps"),
         )
@@ -370,13 +357,7 @@ _Q213_ORACLE = (
 )
 def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(d, k=_K, bands=_BANDS,
-                                        shingles=shingles)
-    ver = (
-        dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-        .filter(F.col("jac") >= 0.5)
-    )
+    ver = dedup.near_dup_pairs(d)
     src = d.select("doc_id", "source")
     lab = (
         ver.join(src.select(F.col("doc_id").alias("a"),
@@ -451,14 +432,7 @@ def _q234_oracle() -> str:
 )
 def q234(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(
-        d, k=_llm._K, bands=_llm._BANDS, shingles=shingles)
-    truth = (
-        dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-        .filter(F.col("jac") >= 0.5)
-        .select("a", "b")
-    )
+    truth = dedup.near_dup_pairs(d).select("a", "b")
     pred = dedup.simhash_multiprobe_pairs(d, bits=16).select("a", "b")
     # ONE full-outer join + ONE aggregate computes all three counts —
     # the three-aggregate form (n_truth, n_pred, tp as separate
@@ -544,14 +518,7 @@ def q235(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id", F.lit(1).alias("ex_keep"))
     )
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(
-        d, k=_llm._K, bands=_llm._BANDS, shingles=shingles)
-    ver = (
-        dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-        .filter(F.col("jac") >= 0.5)
-        .select("a", "b")
-    )
+    ver = dedup.near_dup_pairs(d).select("a", "b")
     cl = dedup.connected_components(ver)
     flags = (
         d.select("doc_id", "source")

@@ -500,11 +500,9 @@ def _q217_oracle() -> str:
 def q217(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators import dedup
     from tidb_gateway_spark.operators.cache import tracked_persist
-    from tidb_gateway_spark.queries.llm_extended import _BANDS, _K
 
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    cand = tracked_persist(
-        dedup.minhash_lsh_candidates(d, k=_K, bands=_BANDS))
+    cand = tracked_persist(dedup.minhash_lsh_candidates(d))
 
     deg = (
         cand.select(F.col("a").alias("d"))
@@ -960,17 +958,9 @@ def q224(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators import dedup
     from tidb_gateway_spark.operators.cache import tracked_persist
     from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.queries.llm_extended import _BANDS, _K
 
     d = load_table(spark, sf_dir, "documents")
-    shingles = dedup.doc_shingles(d)
-    cand = dedup.minhash_lsh_candidates(
-        d, k=_K, bands=_BANDS, shingles=shingles)
-    ver = tracked_persist(
-        dedup.jaccard_pairs_arrays(cand, dedup.doc_shingle_arrays(d))
-        .filter(F.col("jac") >= 0.5)
-        .select("a", "b")
-    )
+    ver = tracked_persist(dedup.near_dup_pairs(d).select("a", "b"))
     cc_full = dedup.connected_components(ver).select(
         "doc_id", F.col("cluster_id").alias("cid"))
     in_base = lambda c: hash_bps(F.col(c), "ivmbase") < _Q224_BASE_BPS  # noqa: E731

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tidb_gateway_spark.catalog import load_table
+from tidb_gateway_spark.operators import dedup
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.queries.llm_extended import (
@@ -893,14 +894,12 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
     """
     import json
 
-    from tidb_gateway_spark.operators import dedup
     from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.queries.llm_extended import _BANDS, _K
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     key = hashlib.md5(
-        f"lshband-stream-v1|{src}|{_K}|{_BANDS}|{_Q262_SPLITS}"
+        f"lshband-stream-v1|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}"
         .encode()).hexdigest()[:16]
     path = derived.derived_path("lsh_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
@@ -924,8 +923,7 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
                 # the append is the only index write
                 sh = dedup.doc_shingles(
                     ensure_min_partitions(batch), distinct=False)
-                sigs = dedup.minhash_signatures(sh, k=_K)
-                bl = dedup.lsh_bands(sigs, _BANDS, _K // _BANDS)
+                bl = dedup.lsh_bands(dedup.minhash_signatures(sh))
                 ep = (hash_bps(F.col("doc_id"), "q262")
                       % _Q262_SPLITS).cast("int")
                 (bl.withColumn("ep", ep)
@@ -945,7 +943,7 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
             q.awaitTermination()
             with open(os.path.join(tmp, "meta.json"), "w") as f:
                 json.dump({"n_batches": len(counts),
-                           "bands": _BANDS, "k": _K}, f)
+                           "bands": dedup.BANDS, "k": dedup.K}, f)
 
         derived.build_atomic(path, build)
     return path
@@ -979,18 +977,7 @@ def _q262_oracle() -> str:
 def q262(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _q262_index(spark, sf_dir)
     bl = spark.read.parquet(os.path.join(path, "bands"))
-    x, y = bl.alias("x"), bl.alias("y")
-    return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bv") == F.col("y.bv"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-        .orderBy("a", "b")
-    )
+    return dedup.band_pairs(bl).orderBy("a", "b")
 
 
 # ---------------------------------------------------------------- Q263
@@ -1157,20 +1144,18 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
     import json
     import shutil
 
-    from tidb_gateway_spark.operators import dedup
     from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.queries.llm_extended import _BANDS, _K
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     if fold_every is None:
         key = hashlib.md5(
-            f"lshgate-stream-v3|{src}|{_K}|{_BANDS}|{_Q262_SPLITS}"
+            f"lshgate-stream-v3|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}"
             .encode()).hexdigest()[:16]
         path = derived.derived_path("lsh_gate", key)
     else:
         key = hashlib.md5(
-            f"lshgate-lsm-v1|{src}|{_K}|{_BANDS}|{_Q262_SPLITS}|"
+            f"lshgate-lsm-v1|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}|"
             f"{fold_every}".encode()).hexdigest()[:16]
         path = derived.derived_path("lsh_gate_lsm", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
@@ -1260,11 +1245,10 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
             def gate(batch: DataFrame, batch_id: int) -> None:
                 sh = dedup.doc_shingles(
                     ensure_min_partitions(batch), distinct=False)
-                sigs = dedup.minhash_signatures(sh, k=_K)
                 ep_col = (hash_bps(F.col("doc_id"), "q262")
                           % _Q262_SPLITS).cast("int")
                 bl = (
-                    dedup.lsh_bands(sigs, _BANDS, _K // _BANDS)
+                    dedup.lsh_bands(dedup.minhash_signatures(sh))
                     .withColumn("ep", ep_col)
                     .withColumn("bvp", F.substring("bv", -1, 1))
                     .persist()
@@ -1601,7 +1585,6 @@ def _q266_oracle() -> str:
     tags=("llm", "dedup", "minhash", "streaming", "governance"),
 )
 def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators import dedup
     from tidb_gateway_spark.operators.sampling import hash_bps
 
     path = _q265_gate(spark, sf_dir)
@@ -1620,14 +1603,12 @@ def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # band rows for the quarantined docs (the gate never indexed them)
     # — recomputed from text, then matched against the admitted index
-    from tidb_gateway_spark.queries.llm_extended import _BANDS, _K
-
     qdocs = d.join(quar.select(F.col("b").alias("doc_id"), "epb"),
                    "doc_id", "inner")
     qsigs = dedup.minhash_signatures(
-        dedup.doc_shingles(qdocs, distinct=False), k=_K)
+        dedup.doc_shingles(qdocs, distinct=False))
     qbands = (
-        dedup.lsh_bands(qsigs, _BANDS, _K // _BANDS)
+        dedup.lsh_bands(qsigs)
         .join(quar.select(F.col("b").alias("doc_id"), "epb"), "doc_id")
         .select(F.col("doc_id").alias("b"), "epb", "band", "bv")
     )
