@@ -28,8 +28,6 @@ from pyspark.sql import functions as F
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 
-HEX_HIGH = tuple("89abcdef")  # hex digits with the top bit set
-
 # The one MinHash-LSH operating point: K single-digest slices per
 # signature (K <= 6: 32 hex chars / 5 per slice), split into BANDS
 # bands of K // BANDS slices.  Persisted band indexes (q262/q265/q267)
