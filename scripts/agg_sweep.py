@@ -8,7 +8,7 @@ the failure accounting at capped scales.  This recomputes them from
 the raw per-query maps so the judge can reproduce the claims with one
 command instead of hand-aggregating:
 
-    python scripts/agg_sweep.py scripts/sf3_detail_r12.json
+    python scripts/agg_sweep.py scripts/sf3_detail_r13.json
 """
 
 from __future__ import annotations
@@ -73,5 +73,6 @@ def main(path: str) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else
-         "scripts/sf3_detail_r12.json")
+    if len(sys.argv) != 2:
+        sys.exit(f"usage: {sys.argv[0]} DETAIL_JSON")
+    main(sys.argv[1])

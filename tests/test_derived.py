@@ -119,3 +119,66 @@ def test_q225_compaction_file_counts(spark, sf_dir):
     a = spark.read.parquet(os.path.join(path, "small")).count()
     b = spark.read.parquet(os.path.join(path, "compacted")).count()
     assert a == b
+
+
+def test_memo_recomputes_only_when_source_changes(tmp_path):
+    src = str(tmp_path / "src.parquet")
+    now = time.time()
+    _touch(src, now - 100)
+    calls = []
+
+    def compute():
+        calls.append(None)
+        return len(calls)
+
+    assert derived.memo("t", src, compute) == 1
+    assert derived.memo("t", src, compute) == 1    # hit: mtime unchanged
+    os.utime(src, (now, now))                      # source rewritten
+    assert derived.memo("t", src, compute) == 2
+    assert derived.memo("t", src, compute) == 2
+    # the recompute replaced the slot instead of adding a second one
+    assert [k for k in derived._memo if k[1] == os.path.abspath(src)] == [
+        ("t", os.path.abspath(src))]
+
+
+def test_int8_index_rebuilds_only_when_source_is_newer(
+        spark, sf_dir, tmp_path, monkeypatch):
+    import shutil
+
+    from tidb_gateway_spark.operators.similarity import int8_index
+
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path / "derived"))
+    src = str(tmp_path / "embeddings.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "embeddings.parquet"), src)
+    now = int(time.time())  # whole seconds: exact through utime/getmtime
+    os.utime(src, (now - 200, now - 200))
+    n = int8_index(spark, src).count()
+    marker = next(
+        os.path.join(r, f) for r, _, fs in os.walk(tmp_path / "derived")
+        for f in fs if f == "_SUCCESS"
+    )
+    os.utime(marker, (now - 100, now - 100))
+    assert int8_index(spark, src).count() == n
+    assert os.path.getmtime(marker) == now - 100   # reused
+    os.utime(src, (now, now))                      # source rewritten
+    assert int8_index(spark, src).count() == n
+    assert os.path.getmtime(marker) >= now         # rebuilt
+    assert derived.is_fresh(os.path.dirname(marker), src)
+
+
+def test_mtime_rule_lives_only_in_derived():
+    """Every mtime-keyed cache goes through sources/derived.py: no
+    other module reads a source's mtime or keeps a private index
+    root."""
+    import pathlib
+
+    home = pathlib.Path(derived.__file__)
+    # the env var name is split so a grep of the tree for it finds none
+    banned = ("os.path.getmtime", "SPARK_GRAFT_" "INDEX_DIR")
+    offenders = [
+        f"{p.relative_to(home.parents[1])}:{i}"
+        for p in home.parents[1].rglob("*.py") if p != home
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if any(b in line for b in banned)
+    ]
+    assert offenders == []

@@ -1593,3 +1593,39 @@ def test_deprecate_eof_is_negotiated_not_assumed(gateway):
         await c.quit()
 
     run_with_gateway(gateway, scenario)
+
+
+def test_closed_connection_leaves_no_catalog_entries(gateway):
+    """Each connection's newSession() gets its own catalog frames and
+    view record (keyed by id(spark)); closing the connection, or
+    COM_CHANGE_USER replacing the session, must drop them — otherwise
+    every closed connection pins its session's frames forever."""
+    from tidb_gateway_spark import catalog
+
+    async def scenario(gw):
+        closed = []  # the sessions themselves, so no id can be reused
+        for i in range(4):
+            c = MiniClient("127.0.0.1", gw.bound_port)
+            await c.connect("sf001.alice")
+            (_, rows), = await c.query("SELECT COUNT(*) AS n FROM nation")
+            assert rows == [["25"]]
+            (session,) = gw._procs.values()
+            assert any(k[0] == id(session.spark) for k in catalog._table_cache)
+            if i == 0:
+                before = session.spark
+                assert (await c.change_user("sf001.bob"))[0] == 0x00
+                closed.append(before)
+                (_, rows), = await c.query("SELECT COUNT(*) AS n FROM region")
+                assert rows == [["5"]]
+            closed.append(session.spark)
+            await c.quit()
+            for _ in range(200):
+                if not gw._procs:
+                    break
+                await asyncio.sleep(0.05)
+            assert not gw._procs
+        ids = {id(s) for s in closed}
+        assert not [k for k in catalog._table_cache if k[0] in ids]
+        assert not ids & set(catalog._views_registered)
+
+    run_with_gateway(gateway, scenario)

@@ -158,7 +158,8 @@ def test_arrow_bucketing_matches_hof_bucketing(spark, sf_dir):
     assert hof == arrow
 
 
-def test_ann_index_query_matches_inline_lsh(spark, sf_dir, tmp_path):
+def test_ann_index_query_matches_inline_lsh(spark, sf_dir, tmp_path,
+                                            monkeypatch):
     """A query against the materialized bucketed index returns exactly
     what the index-less inline bucketing path returns, and the index is
     reused (not rebuilt) on the second call."""
@@ -169,71 +170,64 @@ def test_ann_index_query_matches_inline_lsh(spark, sf_dir, tmp_path):
     query = e.filter(F.col("vec_id") == 0)
     inline = similarity.lsh_bucket_topk(corpus, query, k=10, n_planes=4).collect()
 
-    os.environ["SPARK_GRAFT_INDEX_DIR"] = str(tmp_path)
-    try:
-        idx = similarity.ann_index(spark, f"{sf_dir}/embeddings.parquet",
-                                   n_planes=4, dim=64)
-        qrow = (idx.filter(F.col("vec_id") == 0)
-                .select("embedding", "bucket").head())
-        got = similarity.ann_query(
-            idx, qrow["bucket"], list(qrow["embedding"]), k=10, exclude_id=0
-        ).collect()
-        assert [(r["vec_id"], r["dp"]) for r in got] == [
-            (r["vec_id"], r["dp"]) for r in inline
-        ]
-        # second call must reuse, not rebuild: _SUCCESS mtime unchanged
-        marker = next(
-            os.path.join(r, f) for r, _, fs in os.walk(tmp_path)
-            for f in fs if f == "_SUCCESS"
-        )
-        mt = os.path.getmtime(marker)
-        similarity.ann_index(spark, f"{sf_dir}/embeddings.parquet",
-                             n_planes=4, dim=64)
-        assert os.path.getmtime(marker) == mt
-    finally:
-        del os.environ["SPARK_GRAFT_INDEX_DIR"]
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path))
+    idx = similarity.ann_index(spark, f"{sf_dir}/embeddings.parquet",
+                               n_planes=4, dim=64)
+    qrow = (idx.filter(F.col("vec_id") == 0)
+            .select("embedding", "bucket").head())
+    got = similarity.ann_query(
+        idx, qrow["bucket"], list(qrow["embedding"]), k=10, exclude_id=0
+    ).collect()
+    assert [(r["vec_id"], r["dp"]) for r in got] == [
+        (r["vec_id"], r["dp"]) for r in inline
+    ]
+    # second call must reuse, not rebuild: _SUCCESS mtime unchanged
+    marker = next(
+        os.path.join(r, f) for r, _, fs in os.walk(tmp_path)
+        for f in fs if f == "_SUCCESS"
+    )
+    mt = os.path.getmtime(marker)
+    similarity.ann_index(spark, f"{sf_dir}/embeddings.parquet",
+                         n_planes=4, dim=64)
+    assert os.path.getmtime(marker) == mt
 
 
-def test_ivf_query_is_exact_within_probed_cells(spark, sf_dir, tmp_path):
+def test_ivf_query_is_exact_within_probed_cells(spark, sf_dir, tmp_path,
+                                                monkeypatch):
     """IVF top-k == brute-force top-k over the vectors assigned to the
     probe's nprobe cells, and never beats the global optimum."""
-    import os
-
     import numpy as np
 
     e = load_table(spark, sf_dir, "embeddings")
-    os.environ["SPARK_GRAFT_INDEX_DIR"] = str(tmp_path)
-    try:
-        path = f"{sf_dir}/embeddings.parquet"
-        cents = similarity.ivf_centroids(spark, path, 8)
-        idx = similarity.ivf_index(spark, path, n_cells=8)
-        got = similarity.ivf_query(idx, cents, cents[0], k=10, nprobe=2,
-                                   exclude_id=0).collect()
-        # expected: assign cells with the same argmax rule, brute-force
-        # within the probed cells
-        C = np.array(cents, dtype=np.float64)
-        q = np.array(cents[0], dtype=np.float64)
-        order = sorted(range(len(C)), key=lambda j: (-(C[j] @ q), j))
-        probe = set(order[:2])
-        rows = e.collect()
-        def sr4(x):  # stable_round: FLOOR(x*1e4 + 0.5)/1e4, not banker's
-            return math.floor(x * 10000 + 0.5) / 10000
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path))
+    path = f"{sf_dir}/embeddings.parquet"
+    cents = similarity.ivf_centroids(spark, path, 8)
+    idx = similarity.ivf_index(spark, path, n_cells=8)
+    got = similarity.ivf_query(idx, cents, cents[0], k=10, nprobe=2,
+                               exclude_id=0).collect()
+    # expected: assign cells with the same argmax rule, brute-force
+    # within the probed cells
+    C = np.array(cents, dtype=np.float64)
+    q = np.array(cents[0], dtype=np.float64)
+    order = sorted(range(len(C)), key=lambda j: (-(C[j] @ q), j))
+    probe = set(order[:2])
+    rows = e.collect()
+    def sr4(x):  # stable_round: FLOOR(x*1e4 + 0.5)/1e4, not banker's
+        return math.floor(x * 10000 + 0.5) / 10000
 
-        cand = []
-        for r in rows:
-            v = np.array(list(r["embedding"]), dtype=np.float64)
-            cell = int((C @ v).argmax())
-            if cell in probe and r["vec_id"] != 0:
-                cand.append((r["vec_id"], sr4(float(v @ q))))
-        expected = sorted(cand, key=lambda t: (-t[1], t[0]))[:10]
-        assert [(r["vec_id"], r["dp"]) for r in got] == expected
-        global_best = similarity.brute_force_topk(
-            e.filter(F.col("vec_id") != 0),
-            e.filter(F.col("vec_id") == 0), k=1,
-        ).collect()[0]["dp"]
-        assert all(r["dp"] <= global_best for r in got)
-    finally:
-        del os.environ["SPARK_GRAFT_INDEX_DIR"]
+    cand = []
+    for r in rows:
+        v = np.array(list(r["embedding"]), dtype=np.float64)
+        cell = int((C @ v).argmax())
+        if cell in probe and r["vec_id"] != 0:
+            cand.append((r["vec_id"], sr4(float(v @ q))))
+    expected = sorted(cand, key=lambda t: (-t[1], t[0]))[:10]
+    assert [(r["vec_id"], r["dp"]) for r in got] == expected
+    global_best = similarity.brute_force_topk(
+        e.filter(F.col("vec_id") != 0),
+        e.filter(F.col("vec_id") == 0), k=1,
+    ).collect()[0]["dp"]
+    assert all(r["dp"] <= global_best for r in got)
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

@@ -68,13 +68,27 @@ _table_cache: dict[tuple[int, str, str], DataFrame] = {}
 _views_registered: dict[int, str] = {}
 
 
-def flush() -> None:
-    """Drop ALL memoized table frames and view registrations, for every
-    live session (COM_REFRESH / FLUSH TABLES semantics — the flush is
-    server-wide, not per-connection).  The next query on any session
-    re-reads parquet footers and re-registers its views."""
-    _table_cache.clear()
-    _views_registered.clear()
+def flush(spark: SparkSession | None = None) -> None:
+    """Drop memoized table frames and view registrations.
+
+    With no argument: ALL of them, for every live session (COM_REFRESH
+    / FLUSH TABLES semantics — the flush is server-wide, not
+    per-connection); the next query on any session re-reads parquet
+    footers and re-registers its views.  With ``spark``: only that
+    session's entries — the gateway calls this when a connection ends
+    or COM_CHANGE_USER replaces its session, so closed connections do
+    not pin their sessions' frames."""
+    if spark is None:
+        _table_cache.clear()
+        _views_registered.clear()
+        return
+    sid = id(spark)
+    # list() snapshots the keys in one step: executor threads of other
+    # connections may insert while this loop runs
+    for key in list(_table_cache):
+        if key[0] == sid:
+            _table_cache.pop(key, None)
+    _views_registered.pop(sid, None)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -273,7 +287,7 @@ def shredded_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     to parse once.  So the shredded projection is written to parquet
     (typed, pruned columns) the first time a (source, spec) pair is
     seen and read back from disk afterwards; mtime staleness triggers a
-    rebuild, exactly like the ANN index (operators/similarity.py).
+    rebuild, per the sources/derived.py contract.
     """
     import hashlib
 

@@ -28,7 +28,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
-from tidb_gateway_spark.catalog import TABLES, load_table
+from tidb_gateway_spark.catalog import TABLES, flush, load_table
 from tidb_gateway_spark.gateway import constants as C
 from tidb_gateway_spark.gateway import dialect, packets, result_encoder
 from tidb_gateway_spark.gateway.auth import Authenticator
@@ -186,6 +186,9 @@ class Gateway:
             await self._command_loop(pio, drain, reset_extra, session)
         finally:
             self._procs.pop(conn_id, None)
+            # the catalog keys frames by id(spark): drop this
+            # connection's so a closed connection pins nothing
+            flush(session.spark)
 
     async def _command_loop(self, pio, drain, reset_extra, session) -> None:
         cap = session.capability
@@ -265,13 +268,11 @@ class Gateway:
                 # frames so the next query re-reads footers/files, then
                 # OK.  The reference relays it to its backend opaquely
                 # (relay.go:47-66); here the engine IS the backend.
-                from tidb_gateway_spark import catalog as _catalog
-
                 # server-wide flush: every session's cached frames AND
                 # view registrations (a partial flush left other live
                 # sessions with stale view registrations pointing at
                 # dropped frames)
-                _catalog.flush()
+                flush()
                 pio.write_packet(packets.ok_packet(cap, status=session.status))
             elif cmd == C.COM_DEBUG:
                 # mysqld dumps debug info server-side and answers EOF
@@ -322,6 +323,7 @@ class Gateway:
         session.reset_state()
         session.promoted = set()
         session.promoted_db = None
+        flush(session.spark)
         session.attach_spark(self.spark.newSession())
         pio.write_packet(packets.ok_packet(cap, status=session.status))
 

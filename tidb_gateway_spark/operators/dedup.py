@@ -28,10 +28,13 @@ from pyspark.sql import functions as F
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 
-# The one MinHash-LSH operating point: K single-digest slices per
-# signature (K <= 6: 32 hex chars / 5 per slice), split into BANDS
-# bands of K // BANDS slices.  Persisted band indexes (q262/q265/q267)
-# and every DuckDB oracle chain are built from these two numbers.
+# The one MinHash-LSH operating point: SHINGLE_N-word shingles, K
+# single-digest slices per signature (K <= 6: 32 hex chars / 5 per
+# slice), split into BANDS bands of K // BANDS slices.  Persisted band
+# indexes (q262/q265/q267) and every DuckDB oracle chain are built from
+# these three numbers; the Jaccard verify is exact only on the same
+# shingles the signatures hashed.
+SHINGLE_N = 3
 K = 6
 BANDS = 3
 
@@ -71,7 +74,7 @@ def _shingle_array_sql(n: int) -> str:
     )
 
 
-def doc_shingles(documents: DataFrame, n: int = 3,
+def doc_shingles(documents: DataFrame, n: int = SHINGLE_N,
                  distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) pairs with n-word shingles (exploded form).
 
@@ -239,10 +242,10 @@ def simhash(words: DataFrame, bits: int = 16) -> DataFrame:
     return per_doc.select("doc_id", sig.alias("sh"))
 
 
-def doc_shingle_arrays(documents: DataFrame, n: int = 3) -> DataFrame:
-    """Per-document DISTINCT shingle set as one ARRAY column, computed
-    row-locally — no explode, no shuffle.  Same set per doc as
-    ``doc_shingles(distinct=True)`` (array_distinct replaces the
+def doc_shingle_arrays(documents: DataFrame) -> DataFrame:
+    """Per-document DISTINCT SHINGLE_N-word shingle set as one ARRAY
+    column, computed row-locally — no explode, no shuffle.  Same set per
+    doc as ``doc_shingles(distinct=True)`` (array_distinct replaces the
     corpus-wide distinct exchange), packaged for consumers that want
     set algebra per ROW (array_intersect Jaccard) instead of per
     exploded pair.  ~115 shingles ≈ 1.5 kB per doc ride the verify
@@ -258,7 +261,8 @@ def doc_shingle_arrays(documents: DataFrame, n: int = 3) -> DataFrame:
         )
         .select(
             "doc_id",
-            F.array_distinct(F.expr(_shingle_array_sql(n))).alias("sharr"),
+            F.array_distinct(F.expr(_shingle_array_sql(SHINGLE_N)))
+            .alias("sharr"),
         )
     )
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -332,13 +333,19 @@ def build_ann_index(df: DataFrame, path: str, n_planes: int = 8,
     write_parquet_table(bucketed, path, partition_by=["bucket"])
 
 
-def _index_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, ".benchdata", "ann_index")
+def _read_index(spark: SparkSession, key: str, src: str,
+                build: Callable[[str], None]) -> DataFrame:
+    """Read the vector index ``key`` derived from ``src``, first running
+    ``build(path)`` if it is absent or older than ``src``
+    (sources/derived.py contract, kind ``ann_index``)."""
+    from tidb_gateway_spark.session import ensure_session_confs
+    from tidb_gateway_spark.sources import derived
+
+    path = derived.derived_path("ann_index", key)
+    ensure_session_confs(spark)
+    if not derived.is_fresh(path, src):
+        build(path)
+    return spark.read.parquet(path)
 
 
 def ann_index(spark: SparkSession, embeddings_path: str, n_planes: int = 8,
@@ -353,20 +360,8 @@ def ann_index(spark: SparkSession, embeddings_path: str, n_planes: int = 8,
     """
     src = os.path.abspath(embeddings_path)
     key = hashlib.md5(f"{src}|{n_planes}|{dim}".encode()).hexdigest()[:16]
-    path = os.path.join(_index_root(), key)
-    marker = os.path.join(path, "_SUCCESS")
-    src_mtime = max(
-        (os.path.getmtime(os.path.join(r, f))
-         for r, _, fs in os.walk(src) for f in fs),
-        default=os.path.getmtime(src),
-    ) if os.path.isdir(src) else os.path.getmtime(src)
-    from tidb_gateway_spark.session import ensure_session_confs
-
-    ensure_session_confs(spark)
-    if not os.path.exists(marker) or os.path.getmtime(marker) < src_mtime:
-        corpus = spark.read.parquet(src)
-        build_ann_index(corpus, path, n_planes=n_planes, dim=dim)
-    return spark.read.parquet(path)
+    return _read_index(spark, key, src, lambda path: build_ann_index(
+        spark.read.parquet(src), path, n_planes=n_planes, dim=dim))
 
 
 # ------------------------------------------------------- int8 quantization
@@ -420,16 +415,12 @@ def int8_index(spark: SparkSession, embeddings_path: str,
     exact dot products.  At 100 TB this IS the embedding store; the
     float column is the cold archival copy.
     """
-    from tidb_gateway_spark.session import ensure_session_confs
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
     key = hashlib.md5(f"int8|{src}".encode()).hexdigest()[:16]
-    path = os.path.join(_index_root(), key)
-    marker = os.path.join(path, "_SUCCESS")
-    ensure_session_confs(spark)
-    if (not os.path.exists(marker)
-            or os.path.getmtime(marker) < os.path.getmtime(src)):
+
+    def build(path: str) -> None:
         corpus = spark.read.parquet(src)
         codes = with_int8_quantized(corpus, vec_col=vec_col).select(
             id_col,
@@ -438,7 +429,8 @@ def int8_index(spark: SparkSession, embeddings_path: str,
             F.expr("transform(qvec, x -> CAST(x AS TINYINT))").alias("qvec"),
         )
         write_parquet_table(codes, path)
-    return spark.read.parquet(path)
+
+    return _read_index(spark, key, src, build)
 
 
 # ------------------------------------------------------------------ IVF
@@ -493,18 +485,14 @@ def ivf_index(spark: SparkSession, embeddings_path: str,
 
     src = os.path.abspath(embeddings_path)
     key = hashlib.md5(f"ivf|{src}|{n_cells}".encode()).hexdigest()[:16]
-    path = os.path.join(_index_root(), key)
-    marker = os.path.join(path, "_SUCCESS")
-    from tidb_gateway_spark.session import ensure_session_confs
 
-    ensure_session_confs(spark)
-    if (not os.path.exists(marker)
-            or os.path.getmtime(marker) < os.path.getmtime(src)):
+    def build(path: str) -> None:
         corpus = spark.read.parquet(src)
         cents = ivf_centroids(spark, embeddings_path, n_cells)
         write_parquet_table(with_ivf_cell_arrow(corpus, cents), path,
                             partition_by=["cell"])
-    return spark.read.parquet(path)
+
+    return _read_index(spark, key, src, build)
 
 
 def ivf_centroids(spark: SparkSession, embeddings_path: str,
@@ -1129,25 +1117,22 @@ def ivfadc_index(spark: SparkSession, embeddings_path: str,
     256-byte vectors — the scan a probe pays is nprobe/n_cells of the
     CODES, a ~64× byte reduction over scanning raw vectors; same
     materialization/staleness contract as :func:`ivf_index`."""
-    from tidb_gateway_spark.session import ensure_session_confs
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
     key = hashlib.md5(
         f"ivfadc|{src}|{n_cells}|{n_codes}|{n_sub}|{scale}".encode()
     ).hexdigest()[:16]
-    path = os.path.join(_index_root(), key)
-    marker = os.path.join(path, "_SUCCESS")
-    ensure_session_confs(spark)
-    if (not os.path.exists(marker)
-            or os.path.getmtime(marker) < os.path.getmtime(src)):
+
+    def build(path: str) -> None:
         corpus = spark.read.parquet(src)
         cents, W = ivfadc_meta(spark, embeddings_path, n_cells, n_codes,
                                scale)
         write_parquet_table(
             with_ivfadc_codes_arrow(corpus, cents, W, n_sub, scale),
             path, partition_by=["cell"])
-    return spark.read.parquet(path)
+
+    return _read_index(spark, key, src, build)
 
 
 def ivfadc_query(index: DataFrame, centroids: list[list[float]],

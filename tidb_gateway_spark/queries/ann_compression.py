@@ -29,13 +29,12 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.queries.registry import register
+from tidb_gateway_spark.sources import derived
 
 # ---------------------------------------------------------------- Q269
 _Q269_K = 16          # codewords per subspace (codebook = vec_id < 16)
@@ -43,11 +42,6 @@ _Q269_M = 8           # subspaces over 64 dims -> 8-dim subvectors
 _Q269_DSUB = 8
 _Q269_SCALE = 256     # power of two: float32 * 256 is exact
 _Q269_PROBES = (20, 30)
-
-# metadata cache: (sf_dir, mtime) -> (probes, codebook) — keyed on data
-# only, never on the session (id(spark) can be reused after GC; r7
-# ADVICE precedent from llm_extended._probe_cache)
-_meta_cache: dict = {}
 
 
 def _q269_oracle() -> str:
@@ -145,13 +139,7 @@ def q269(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/embeddings.parquet"
     e = load_table(spark, sf_dir, "embeddings")
 
-    pk = ("q269", sf_dir, os.path.getmtime(path))
-    meta = _meta_cache.get(pk)
-    if meta is None:
-        # evict stale-mtime entries for the same sf_dir so fixture
-        # regeneration can't accumulate dead 26-vector payloads
-        for k in [k for k in _meta_cache if k[:2] == pk[:2]]:
-            del _meta_cache[k]
+    def meta():
         rows = (
             e.filter(
                 (F.col("vec_id") < _Q269_K)
@@ -164,9 +152,9 @@ def q269(spark: SparkSession, sf_dir: str) -> DataFrame:
         codebook = [by_id[k] for k in range(_Q269_K)]
         probes = [(q, by_id[q])
                   for q in range(_Q269_PROBES[0], _Q269_PROBES[1])]
-        meta = (probes, codebook)
-        _meta_cache[pk] = meta
-    probes, codebook = meta
+        return probes, codebook
+
+    probes, codebook = derived.memo("q269", path, meta)
 
     per = pq_adc_eval(
         e, probes, codebook,
@@ -294,11 +282,8 @@ def q271(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ivfadc_index(spark, path, n_cells=_Q271_CELLS,
                        n_codes=_Q269_K, n_sub=_Q269_M,
                        scale=_Q269_SCALE)
-    pk = ("q271", sf_dir, os.path.getmtime(path))
-    meta = _meta_cache.get(pk)
-    if meta is None:
-        for k in [k for k in _meta_cache if k[:2] == pk[:2]]:
-            del _meta_cache[k]
+
+    def meta():
         cents, W = ivfadc_meta(spark, path, _Q271_CELLS, _Q269_K,
                                _Q269_SCALE)
         lo, hi = _Q271_PROBES
@@ -307,9 +292,9 @@ def q271(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("vec_id", "embedding").collect())
         probes = sorted((int(r["vec_id"]), list(r["embedding"]))
                         for r in rows)
-        meta = (cents, W, probes)
-        _meta_cache[pk] = meta
-    cents, W, probes = meta
+        return cents, W, probes
+
+    cents, W, probes = derived.memo("q271", path, meta)
 
     per = None
     for qid, qvec in probes:

@@ -19,6 +19,7 @@ from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.similarity import cosine_nn_arrow, hyperplanes
 from tidb_gateway_spark.queries.registry import register
+from tidb_gateway_spark.sources import derived
 
 # ---------------------------------------------------------------- Q72
 _DDB_WORDS = (
@@ -26,13 +27,16 @@ _DDB_WORDS = (
     "(SELECT doc_id, UNNEST(string_split(text,' ')) AS w FROM documents) "
     "WHERE w <> '')"
 )
-# 3-word shingles (see operators/dedup.py:doc_shingles for why unigrams
-# are the wrong feature for MinHash on a small-vocabulary corpus).
+# dedup.SHINGLE_N-word shingles (see operators/dedup.py:doc_shingles
+# for why unigrams are the wrong feature for MinHash on a
+# small-vocabulary corpus).
 _DDB_SHINGLES = (
     "shingles AS (SELECT DISTINCT doc_id, w FROM ("
-    "SELECT doc_id, UNNEST(CASE WHEN len(wl) >= 3 THEN "
-    "list_transform(range(1, len(wl) - 1), i -> wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2]) "
-    "ELSE [array_to_string(wl, ' ')] END) AS w FROM "
+    f"SELECT doc_id, UNNEST(CASE WHEN len(wl) >= {dedup.SHINGLE_N} THEN "
+    f"list_transform(range(1, len(wl) - {dedup.SHINGLE_N - 2}), i -> "
+    + " || ' ' || ".join(
+        ["wl[i]"] + [f"wl[i+{k}]" for k in range(1, dedup.SHINGLE_N)])
+    + ") ELSE [array_to_string(wl, ' ')] END) AS w FROM "
     "(SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS wl "
     "FROM documents)))"
 )
@@ -172,24 +176,16 @@ _Q75_ORACLE = (
     tags=("similarity", "llm"),
 )
 def q75(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     e = load_table(spark, sf_dir, "embeddings")
     # The probe set is metadata-sized (20 rows) — collected into the task
     # closure like rank.py's bucket boundaries, never row data.  Memoized
-    # per (corpus file, mtime) so repeat queries skip the probe job; a
-    # rewritten corpus invalidates via the mtime key (data-derived
-    # values only — no session in the key, r7 ADVICE).
-    pk = ("q75", sf_dir,
-          os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    probes = _probe_cache.get(pk)
-    if probes is None:
-        probes = [
-            (r["vec_id"], list(r["embedding"]))
-            for r in e.filter(F.col("vec_id") < 20)
-                      .select("vec_id", "embedding").collect()
-        ]
-        _probe_cache[pk] = probes
+    # on the corpus file (derived.memo) so repeat queries skip the probe
+    # job; a rewritten corpus recomputes.
+    probes = derived.memo("q75", f"{sf_dir}/embeddings.parquet", lambda: [
+        (r["vec_id"], list(r["embedding"]))
+        for r in e.filter(F.col("vec_id") < 20)
+                  .select("vec_id", "embedding").collect()
+    ])
     corpus = e.select(F.col("vec_id").alias("nn"),
                       F.col("embedding").alias("ce"))
     # Arrow-batched numpy scan with per-batch partial argmax (see
@@ -230,10 +226,6 @@ def _q76_oracle() -> str:
     )
 
 
-# Memoized metadata-sized probe sets (bounded: fixture/session keyed).
-_probe_cache: dict[tuple, object] = {}
-
-
 @register(
     "q76_ann_lsh_bucket",
     _q76_oracle(),
@@ -256,20 +248,17 @@ def q76(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n_planes=_PLANES, dim=_DIM)
     # The probe is one indexed row here only because the fixture has no
     # external caller — a real deployment receives the query vector with
-    # the request and runs zero probe jobs.  Fetch once per (session,
-    # corpus) and memoize: 1-row metadata, same sanction as rank.py's
-    # boundary scalars.
-    import os
-
-    pk = ("q76", sf_dir, _PLANES, _DIM,
-          os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    probe = _probe_cache.get(pk)
-    if probe is None:
+    # the request and runs zero probe jobs.  Fetch once per corpus and
+    # memoize: 1-row metadata, same sanction as rank.py's boundary
+    # scalars.
+    def probe_row():
         qrow = (idx.filter(F.col("vec_id") == 0)
                 .select("embedding", "bucket").head())
-        probe = (qrow["bucket"], list(qrow["embedding"]))
-        _probe_cache[pk] = probe
-    return ann_query(idx, probe[0], probe[1], k=3, exclude_id=0)
+        return qrow["bucket"], list(qrow["embedding"])
+
+    bucket, qvec = derived.memo("q76", f"{sf_dir}/embeddings.parquet",
+                                probe_row)
+    return ann_query(idx, bucket, qvec, k=3, exclude_id=0)
 
 
 # ---------------------------------------------------------------- Q94
@@ -309,8 +298,6 @@ _Q94_ORACLE = (
     tags=("similarity", "llm", "ann"),
 )
 def q94(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from tidb_gateway_spark.operators.similarity import (
         ivf_centroids,
         ivf_index,
@@ -319,11 +306,8 @@ def q94(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/embeddings.parquet"
     idx = ivf_index(spark, path, n_cells=_IVF_CELLS)
-    pk = ("q94", sf_dir, os.path.getmtime(path))
-    cents = _probe_cache.get(pk)
-    if cents is None:
-        cents = ivf_centroids(spark, path, _IVF_CELLS)
-        _probe_cache[pk] = cents
+    cents = derived.memo(
+        "q94", path, lambda: ivf_centroids(spark, path, _IVF_CELLS))
     # the probe is vec_id 0, which IS centroid 0 — no extra fetch
     return ivf_query(idx, cents, cents[0], k=3, nprobe=_IVF_NPROBE,
                      exclude_id=0)
@@ -368,16 +352,15 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_vector,
     )
 
+    path = os.path.join(sf_dir, "embeddings.parquet")
     e = load_table(spark, sf_dir, "embeddings")
-    pk = ("q95", sf_dir,
-          os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    probe = _probe_cache.get(pk)
-    if probe is None:
+
+    def probe():
         row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-        probe = quantize_vector(list(row["embedding"]))
-        _probe_cache[pk] = probe
-    psc, pq = probe
-    qdf = int8_index(spark, os.path.join(sf_dir, "embeddings.parquet"))
+        return quantize_vector(list(row["embedding"]))
+
+    psc, pq = derived.memo("q95", path, probe)
+    qdf = int8_index(spark, path)
     parr = "array(" + ",".join(f"CAST({int(x)} AS DOUBLE)" for x in pq) + ")"
     idot = F.expr(
         f"aggregate(zip_with(qvec, {parr}, (x, y) -> CAST(x AS DOUBLE) * y), "
@@ -1370,8 +1353,6 @@ _Q208_ORACLE = (
     tags=("similarity", "llm", "ann", "governance"),
 )
 def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     import numpy as np
 
     from tidb_gateway_spark.operators.similarity import (
@@ -1383,11 +1364,7 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     idx = ivf_index(spark, path, n_cells=8)
 
-    # purely data-derived cache value — no session in the key (id(spark)
-    # can be reused by CPython after a session is GC'd; r7 ADVICE)
-    pk = ("q208", sf_dir, os.path.getmtime(path))
-    meta = _probe_cache.get(pk)
-    if meta is None:
+    def probe_meta():
         cents = ivf_centroids(spark, path, 8)
         probes = [
             (r["vec_id"], [float(x) for x in r["embedding"]])
@@ -1403,9 +1380,9 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
             order = sorted(range(len(s)), key=lambda j: (-s[j], j))
             for cid in order[:_Q208_NPROBE]:
                 qcells.append((qid, int(cid)))
-        meta = (probes, qcells)
-        _probe_cache[pk] = meta
-    probes, qcells = meta
+        return probes, qcells
+
+    probes, qcells = derived.memo("q208", path, probe_meta)
 
     # Both argmaxes ride the q75 Arrow path (metric="dot": IVF's inner
     # product): one BLAS matmul per Arrow batch, ≤|probes| rows out per

@@ -46,6 +46,7 @@ from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.queries.registry import register
+from tidb_gateway_spark.sources import derived
 
 _TOK_SQL_DDB = (
     "SELECT doc_id, UNNEST(list_filter(string_split(trim(text), ' '), "
@@ -732,8 +733,6 @@ def _q220_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import json
     import os
 
-    from tidb_gateway_spark.sources import derived
-
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     # v2: dictionary prefix-partitioned (layout change ⇒ key bump)
     key = hashlib.md5(f"invidx-v2|{src}".encode()).hexdigest()[:16]
@@ -1010,8 +1009,6 @@ def _q225_compacted(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import os
 
-    from tidb_gateway_spark.sources import derived
-
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     key = hashlib.md5(f"compact|{src}".encode()).hexdigest()[:16]
     path = derived.derived_path("compact", key)
@@ -1139,10 +1136,6 @@ def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q272_RRF_K = 60       # the standard RRF damping constant
 _Q272_LEG_K = 10       # depth of each leg's ranked list
 
-# metadata-sized probe vectors, keyed on (qid, corpus file, mtime) —
-# the llm_extended._probe_cache pattern (data-derived key, no session)
-_probe_cache: dict = {}
-
 _Q272_ORACLE = (
     # lexical leg = q214's certified BM25 top-10, re-ranked 1..10 on
     # its ROUNDED score (determinism borrows q214's certified rounding)
@@ -1197,21 +1190,18 @@ _Q272_ORACLE = (
     tags=("llm", "retrieval", "similarity"),
 )
 def q272(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     lex = q214(spark, sf_dir)
     wl = Window.orderBy(F.desc("score"), "doc_id")
     lexr = lex.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
 
     e = load_table(spark, sf_dir, "embeddings")
-    pk = ("q272", sf_dir,
-          _os.path.getmtime(_os.path.join(sf_dir, "embeddings.parquet")))
-    probe = _probe_cache.get(pk)
-    if probe is None:
-        probe = [float(x) for x in
-                 e.filter(F.col("vec_id") == 0)
-                 .select("embedding").first()["embedding"]]
-        _probe_cache[pk] = probe
+
+    def probe_vector():
+        row = e.filter(F.col("vec_id") == 0).select("embedding").first()
+        return [float(x) for x in row["embedding"]]
+
+    probe = derived.memo("q272", f"{sf_dir}/embeddings.parquet",
+                         probe_vector)
     pv = F.array(*[F.lit(x) for x in probe])
     ce = F.col("embedding").cast("array<double>")
     dot = F.aggregate(
