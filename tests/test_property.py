@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import asyncio
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tidb_gateway_spark.gateway import dialect
@@ -214,7 +214,7 @@ def test_zbucket_candidates_never_prune_a_matching_point(
     st.sampled_from([1000, 2500, 3500, 5000, 9900]),
 )
 def test_quantized_cosine_predicate_matches_rational_form(qa, qb, tau_bps):
-    """The gcd-reduced integer test in similarity.semantic_neardup_pairs
+    """The gcd-reduced integer test in similarity._make_cell_blocks
     (dot²·lhs ≥ rhs·na·nb with lhs/rhs = 10⁸/g, τ²/g) must equal the
     exact rational comparison dot²·10⁸ ≥ τ_bps²·na·nb — unbounded-int
     mirror, catching any bad reduction or overflow-prone scaling."""
@@ -237,18 +237,28 @@ def test_quantized_cosine_predicate_matches_rational_form(qa, qb, tau_bps):
     st.lists(st.integers(-120, 120), min_size=4, max_size=16),
     st.sampled_from([1000, 2500, 3333, 3500, 5000, 9900]),
     st.sampled_from([1, 10 ** 5]),  # magnitude multiplier: 10^5 forces
-                                    # the int64 guard's object-int path
+                                    # the object-int tier
 )
+# one explicit case per exactness tier of the flag (bound = nmax²·
+# max(lhs, rhs)): 5000 bps reduces to lhs=4, rhs=1, so the bound stays
+# under 2^53 (float64); 3333 bps keeps lhs=10⁸, and |q|² = 57600 puts
+# the bound between 2^53 and 2^63 (int64); ×10⁵ passes 2^63 (object ints)
+@example([120, -7, 33, 50], [110, -5, 30, 60], 5000, 1)
+@example([120, 120, 120, 120], [120, 119, -3, 100], 3333, 1)
+@example([120, -120, 5, 7], [118, -119, 9, 2], 3500, 10 ** 5)
 def test_neardup_keep_never_wraps_int64(qa, qb, tau_bps, mult):
-    """similarity._neardup_keep must equal the unbounded-int rational
-    comparison for BOTH its numpy-int64 fast path and its object-int
-    fallback (r7 ADVICE: tau_bps=3333 gives lhs_scale=10⁸ and large
-    vectors wrapped int64 silently)."""
+    """The SemDeDup flag kernel q211 runs, ``_make_blocked_upper_keep``,
+    must equal the unbounded-int rational comparison in all three of
+    its exactness tiers — float64 BLAS, numpy int64 and object ints
+    (r7 ADVICE: tau_bps=3333 gives lhs_scale=10⁸ and large vectors
+    wrapped int64 silently)."""
     import math
 
     import numpy as np
 
-    from tidb_gateway_spark.operators.similarity import _make_neardup_keep
+    from tidb_gateway_spark.operators.similarity import (
+        _make_blocked_upper_keep,
+    )
 
     m = min(len(qa), len(qb))
     qa = [a * mult for a in qa[:m]]
@@ -261,8 +271,8 @@ def test_neardup_keep_never_wraps_int64(qa, qb, tau_bps, mult):
     lhs, rhs = (10 ** 8) // g, t2 // g
     exact = dot > 0 and dot * dot * 10 ** 8 >= t2 * na * nb
 
-    d = np.array([dot], dtype=np.int64)
-    n = np.array([na, nb], dtype=np.int64)
-    iu = np.array([0]); ju = np.array([1])
-    got = _make_neardup_keep(lhs, rhs)(d, n, iu, ju)
-    assert bool(got[0]) == exact, (qa, qb, tau_bps, mult)
+    Q = np.array([qa, qb], dtype=np.int64)
+    n = (Q * Q).sum(axis=1)
+    (s, keep), = _make_blocked_upper_keep(lhs, rhs)(Q, n)
+    assert s == 0 and not keep[0, 0] and not keep[1, 0] and not keep[1, 1]
+    assert bool(keep[0, 1]) == exact, (qa, qb, tau_bps, mult)

@@ -16,9 +16,8 @@ is bit-identical to aggregating the raw events in any engine — a double
 SUM would drift in the last bits between grouping orders and break the
 cross-engine value-hash.  Averages derive as sum/count at query time.
 
-Freshness: mtime-staleness rebuild, the same contract as the ANN/IVF
-indexes and the shredded-JSON companion (operators/similarity.py,
-catalog.py).  In production this materialization is the foreachBatch
+Freshness: mtime-staleness rebuild under the shared derived-artifact
+contract of sources/derived.py (kind ``rollup``).  In production this materialization is the foreachBatch
 sink of a streaming job (streaming/jobs.py:tumbling_counts is the
 per-window shape); here the batch build stands in for the backfill.
 """
@@ -52,23 +51,16 @@ def build_hourly_rollup(events: DataFrame, path: str) -> None:
     write_parquet_table(hourly, path, partition_by=["day"])
 
 
-def _rollup_root() -> str:
-    from tidb_gateway_spark.sources.derived import derived_root
-
-    return derived_root("rollup")
-
-
 def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read (building if absent or stale) the hourly events rollup."""
     from tidb_gateway_spark.catalog import load_table
     from tidb_gateway_spark.session import ensure_session_confs
+    from tidb_gateway_spark.sources import derived
 
     ensure_session_confs(spark)
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     key = hashlib.md5(f"{src}|hourly-v1".encode()).hexdigest()[:16]
-    from tidb_gateway_spark.sources.derived import is_fresh
-
-    path = os.path.join(_rollup_root(), key)
-    if not is_fresh(path, src):
+    path = derived.derived_path("rollup", key)
+    if not derived.is_fresh(path, src):
         build_hourly_rollup(load_table(spark, sf_dir, "events"), path)
     return spark.read.parquet(path)

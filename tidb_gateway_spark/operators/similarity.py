@@ -1,19 +1,31 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two tiers, mirroring what a 100 TB corpus needs:
+The vector family, each member an exact baseline or an index plus the
+query that serves from it:
 
-* :func:`brute_force_topk` — exact scan: broadcast the query vector(s),
-  compute dot/cosine with JVM-side higher-order functions (``zip_with`` +
-  ``aggregate`` — no Python in the loop), TakeOrdered for top-k.  Cost is
-  one full scan per query batch; the correct *baseline* and fine when
-  queries are few.
-* :func:`lsh_bucket_topk` — random-hyperplane LSH: each vector gets a
-  signed bucket id from ``n_planes`` fixed hyperplanes; candidates are
-  restricted to the query's bucket before exact rerank.  The hyperplanes
-  are deterministic (seeded from md5, see :func:`hyperplanes`) so results
-  are reproducible across engines and runs.  At scale the bucket id
-  becomes the partition key — the index is a bucketed table and a query
-  touches one partition instead of the whole corpus.
+* exact scans — :func:`brute_force_topk` (JVM higher-order functions,
+  no Python in the loop) and :func:`cosine_nn_arrow` /
+  :func:`matryoshka_nn_pairs` (per-batch BLAS argmax);
+* LSH — random-hyperplane sign buckets (:func:`hyperplanes` are seeded
+  from md5, so every engine derives the same planes):
+  :func:`lsh_bucket_topk` buckets inline, :func:`ann_index` stores the
+  corpus partitioned by bucket and :func:`ann_query` serves one
+  partition; :func:`embedding_neardup_pairs` pairs within buckets;
+* IVF — argmax-centroid cells (:func:`ivf_index`, :func:`ivf_query`);
+* int8 — per-vector quantized codes with integer-exact dots
+  (:func:`int8_index`);
+* PQ / IVFADC — product-quantization codes and asymmetric distance
+  lookup tables (:func:`pq_adc_eval`, :func:`ivfadc_index`,
+  :func:`ivfadc_query`);
+* SemDeDup — integer-quantized within-cell near-duplicate flags
+  (:func:`semantic_cells`, :func:`semantic_neardup_pairs`,
+  :func:`semantic_dedup_report`).
+
+They share three helpers: :func:`vector_batches`, the one
+``mapInPandas`` boundary that hands a Python kernel each batch as a float64 matrix;
+:func:`probe_dot` and :func:`topk`, the JVM rerank of candidates
+against a literal probe vector and its rounded, id-tie-broken top-k
+tail; and :func:`top_cells`, the nprobe cell choice.
 
 Design note: embeddings are cast to double before multiply so both this
 engine and external oracles accumulate identical IEEE sums left-to-right.
@@ -49,6 +61,64 @@ def norm_expr(a: str) -> Column:
     )
 
 
+def probe_dot(vec_col: str, qvec) -> Column:
+    """Exact dot product of ``vec_col`` with the probe ``qvec`` inlined
+    as double literals, accumulated left-to-right in double —
+    bit-identical to the oracle's ``list_dot_product`` on doubles."""
+    qarr = "array(" + ",".join(f"{float(v)!r}D" for v in qvec) + ")"
+    return F.expr(
+        f"aggregate(zip_with({vec_col}, {qarr}, "
+        "(x, y) -> CAST(x AS DOUBLE) * y), "
+        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
+def topk(cand: DataFrame, id_col: str, score: Column, k: int,
+         exclude_id: int | None = None, name: str = "dp") -> DataFrame:
+    """The rerank tail: drop the probe's own ``exclude_id``, round
+    ``score`` to 4 places (``stable_round``) as column ``name``, and keep
+    the ``k`` best, ties toward the lower id (TakeOrderedAndProject)."""
+    if exclude_id is not None:
+        cand = cand.filter(F.col(id_col) != exclude_id)
+    return (
+        cand.select(id_col, stable_round(score, 4).alias(name))
+        .orderBy(F.desc(name), F.asc(id_col))
+        .limit(k)
+    )
+
+
+def top_cells(scores, nprobe: int) -> list[int]:
+    """Indexes of the ``nprobe`` best ``scores``, ties toward the lower
+    index — the oracle's ROW_NUMBER (s DESC, cid)."""
+    return sorted(range(len(scores)), key=lambda j: (-scores[j], j))[:nprobe]
+
+
+def vector_batches(df: DataFrame, vec_col: str, kernel, schema) -> DataFrame:
+    """The Arrow-batch boundary of the vector family: ``mapInPandas``
+    over ``df``, skipping empty batches, calling ``kernel(pdf, M)`` with
+    ``M`` the batch's ``vec_col`` as a B×D float64 matrix; the kernel
+    returns the batch's output pandas frame (``schema``).
+
+    The pickling rule: code shipped to Python workers must not reference
+    a module-level function of this package.  cloudpickle pickles such a
+    function by reference, so a worker that cannot import the package —
+    any driver started from a foreign working directory — fails to load
+    it.  Nested functions and closed-over data (arrays, constants,
+    modules outside the package) pickle by value.  Hence the generator
+    stays nested here and every kernel is a closure defined in its
+    caller."""
+
+    def batches(it):
+        import numpy as np
+
+        for pdf in it:
+            if len(pdf):
+                yield kernel(
+                    pdf, np.vstack(pdf[vec_col].to_numpy()).astype(np.float64))
+
+    return df.mapInPandas(batches, schema=schema)
+
+
 def brute_force_topk(
     corpus: DataFrame, query: DataFrame, k: int = 5, metric: str = "dot"
 ) -> DataFrame:
@@ -58,15 +128,10 @@ def brute_force_topk(
     Returns (vec_id, dp) — dp rounded to 4 for cross-engine declaration.
     """
     q = F.broadcast(query.select(F.col("embedding").alias("qe")))
-    joined = corpus.crossJoin(q)
     score = dot_expr("embedding", "qe")
     if metric == "cosine":
         score = score / (norm_expr("embedding") * norm_expr("qe"))
-    return (
-        joined.select("vec_id", stable_round(score, 4).alias("dp"))
-        .orderBy(F.desc("dp"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return topk(corpus.crossJoin(q), "vec_id", score, k)
 
 
 def cosine_nn_arrow(corpus: DataFrame, probes: list[tuple[int, list[float]]],
@@ -123,35 +188,30 @@ def cosine_nn_arrow(corpus: DataFrame, probes: list[tuple[int, list[float]]],
                 f"every probe needs a candidate-cell list when masking "
                 f"is enabled")
 
-    def partial_nn(batches):
+    def partial_nn(pdf, M):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
+        ids = pdf[id_col].to_numpy()
+        cells = pdf[cell_col].to_numpy() if cells_of is not None else None
+        S = M @ P
+        if use_cosine:
+            c_norm = np.sqrt((M * M).sum(axis=1))
+            S = S / (c_norm[:, None] * p_norm[None, :])
+        rows = []
+        for j, qid in enumerate(qids):
+            col = S[:, j].copy()
+            col[ids == qid] = -np.inf  # exclude self-match
+            if cells is not None:
+                col[~np.isin(cells, cells_of[qid])] = -np.inf
+            mx = col.max()
+            if mx == -np.inf:
                 continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            cells = pdf[cell_col].to_numpy() if cells_of is not None else None
-            S = M @ P
-            if use_cosine:
-                c_norm = np.sqrt((M * M).sum(axis=1))
-                S = S / (c_norm[:, None] * p_norm[None, :])
-            rows = []
-            for j, qid in enumerate(qids):
-                col = S[:, j].copy()
-                col[ids == qid] = -np.inf  # exclude self-match
-                if cells is not None:
-                    col[~np.isin(cells, cells_of[qid])] = -np.inf
-                mx = col.max()
-                if mx == -np.inf:
-                    continue
-                rows.append((qid, int(ids[col == mx].min()), float(mx)))
-            yield pd.DataFrame(rows, columns=["qid", "nn", "cs"])
+            rows.append((qid, int(ids[col == mx].min()), float(mx)))
+        return pd.DataFrame(rows, columns=["qid", "nn", "cs"])
 
     proj = [id_col, vec_col] + ([cell_col] if cell_col else [])
-    partials = corpus.select(*proj).mapInPandas(
-        partial_nn, schema="qid long, nn long, cs double"
-    )
+    partials = vector_batches(corpus.select(*proj), vec_col, partial_nn,
+                              "qid long, nn long, cs double")
     best = partials.groupBy("qid").agg(
         F.max(F.struct(F.col("cs"), (-F.col("nn")).alias("neg_nn"))).alias("b")
     )
@@ -235,14 +295,9 @@ def with_lsh_bucket(df: DataFrame, n_planes: int = 8, dim: int = 64,
     At 100 TB this column is the bucketing/partition key of the stored
     index table; similar vectors collide with high probability.
     """
-    planes = hyperplanes(n_planes, dim)
     bucket = F.lit(0)
-    for p, plane in enumerate(planes):
-        arr = "array(" + ",".join(f"CAST({v} AS DOUBLE)" for v in plane) + ")"
-        proj = F.expr(
-            f"aggregate(zip_with({col}, {arr}, (x, y) -> CAST(x AS DOUBLE) * y), "
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
+    for p, plane in enumerate(hyperplanes(n_planes, dim)):
+        proj = probe_dot(col, plane)
         bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return df.withColumn("bucket", bucket.cast("int"))
 
@@ -268,12 +323,8 @@ def lsh_bucket_topk(
         with_lsh_bucket(query, n_planes, dim)
         .select(F.col("embedding").alias("qe"), F.col("bucket").alias("qbucket"))
     )
-    cand = cb.join(qb, cb.bucket == qb.qbucket)
-    return (
-        cand.select("vec_id", stable_round(dot_expr("embedding", "qe"), 4).alias("dp"))
-        .orderBy(F.desc("dp"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return topk(cb.join(qb, cb.bucket == qb.qbucket), "vec_id",
+                dot_expr("embedding", "qe"), k)
 
 
 # ------------------------------------------------------------------ ANN index
@@ -309,16 +360,12 @@ def with_lsh_bucket_arrow(df: DataFrame, n_planes: int = 8, dim: int = 64,
         + [T.StructField("bucket", T.IntegerType(), False)]
     )
 
-    def bucketize(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            pdf = pdf.copy()
-            pdf["bucket"] = ((M @ P >= 0) @ weights).astype("int32")
-            yield pdf
+    def bucketize(pdf, M):
+        pdf = pdf.copy()
+        pdf["bucket"] = ((M @ P >= 0) @ weights).astype("int32")
+        return pdf
 
-    return narrow.mapInPandas(bucketize, schema=out_schema)
+    return vector_batches(narrow, vec_col, bucketize, out_schema)
 
 
 def build_ann_index(df: DataFrame, path: str, n_planes: int = 8,
@@ -461,18 +508,14 @@ def with_ivf_cell_arrow(df: DataFrame, centroids: list[list[float]],
         + [T.StructField("cell", T.IntegerType(), False)]
     )
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            pdf = pdf.copy()
-            # np.argmax returns the FIRST maximal index — the tie rule
-            # the oracle's (s DESC, cid ASC) row_number reproduces
-            pdf["cell"] = (M @ C).argmax(axis=1).astype("int32")
-            yield pdf
+    def assign(pdf, M):
+        pdf = pdf.copy()
+        # np.argmax returns the FIRST maximal index — the tie rule
+        # the oracle's (s DESC, cid ASC) row_number reproduces
+        pdf["cell"] = (M @ C).argmax(axis=1).astype("int32")
+        return pdf
 
-    return narrow.mapInPandas(assign, schema=out_schema)
+    return vector_batches(narrow, vec_col, assign, out_schema)
 
 
 def ivf_index(spark: SparkSession, embeddings_path: str,
@@ -518,26 +561,9 @@ def ivf_query(index: DataFrame, centroids: list[list[float]],
     import numpy as np
 
     C = np.array(centroids, dtype=np.float64)
-    q = np.array(qvec, dtype=np.float64)
-    scores = C @ q
-    # top-nprobe cells, ties toward the lower cell id (stable sort on
-    # (-score, cid))
-    order = sorted(range(len(scores)), key=lambda j: (-scores[j], j))
-    probe_cells = [int(j) for j in order[:nprobe]]
-    qarr = "array(" + ",".join(f"{float(v)!r}D" for v in qvec) + ")"
-    dp = F.expr(
-        f"aggregate(zip_with({vec_col}, {qarr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cand = index.filter(F.col("cell").isin(probe_cells))
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    return (
-        cand.select(id_col, stable_round(dp, 4).alias("dp"))
-        .orderBy(F.desc("dp"), F.asc(id_col))
-        .limit(k)
-    )
+    probe_cells = top_cells(C @ np.array(qvec, dtype=np.float64), nprobe)
+    return topk(index.filter(F.col("cell").isin(probe_cells)), id_col,
+                probe_dot(vec_col, qvec), k, exclude_id)
 
 
 def ann_query(index: DataFrame, bucket: int, qvec: list[float], k: int = 5,
@@ -552,20 +578,8 @@ def ann_query(index: DataFrame, bucket: int, qvec: list[float], k: int = 5,
     left-to-right in the JVM, bit-identical to the oracle's
     ``list_dot_product`` on doubles.
     """
-    qarr = "array(" + ",".join(f"{float(v)!r}D" for v in qvec) + ")"
-    dp = F.expr(
-        f"aggregate(zip_with({vec_col}, {qarr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    cand = index.filter(F.col("bucket") == F.lit(int(bucket)))
-    if exclude_id is not None:
-        cand = cand.filter(F.col(id_col) != exclude_id)
-    return (
-        cand.select(id_col, stable_round(dp, 4).alias("dp"))
-        .orderBy(F.desc("dp"), F.asc(id_col))
-        .limit(k)
-    )
+    return topk(index.filter(F.col("bucket") == F.lit(int(bucket))), id_col,
+                probe_dot(vec_col, qvec), k, exclude_id)
 
 
 def matryoshka_nn_pairs(corpus: DataFrame, probes: list[tuple[int, list[float]]],
@@ -588,30 +602,26 @@ def matryoshka_nn_pairs(corpus: DataFrame, probes: list[tuple[int, list[float]]]
     Pt = P[:trunc_dims, :]
     qids = [int(q) for q, _ in probes]
 
-    def partial(batches):
+    def partial(pdf, M):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            Sf = M @ P
-            St = M[:, :trunc_dims] @ Pt
-            rows = []
-            for j, qid in enumerate(qids):
-                for tag, S in (("f", Sf), ("t", St)):
-                    col = S[:, j].copy()
-                    col[ids == qid] = -np.inf
-                    mx = col.max()
-                    if mx == -np.inf:
-                        continue
-                    rows.append((qid, tag, int(ids[col == mx].min()),
-                                 float(mx)))
-            yield pd.DataFrame(rows, columns=["qid", "m", "nn", "dp"])
+        ids = pdf[id_col].to_numpy()
+        Sf = M @ P
+        St = M[:, :trunc_dims] @ Pt
+        rows = []
+        for j, qid in enumerate(qids):
+            for tag, S in (("f", Sf), ("t", St)):
+                col = S[:, j].copy()
+                col[ids == qid] = -np.inf
+                mx = col.max()
+                if mx == -np.inf:
+                    continue
+                rows.append((qid, tag, int(ids[col == mx].min()),
+                             float(mx)))
+        return pd.DataFrame(rows, columns=["qid", "m", "nn", "dp"])
 
-    partials = corpus.select(id_col, vec_col).mapInPandas(
-        partial, schema="qid long, m string, nn long, dp double")
+    partials = vector_batches(corpus.select(id_col, vec_col), vec_col,
+                              partial, "qid long, m string, nn long, dp double")
     best = partials.groupBy("qid", "m").agg(
         F.max(F.struct(F.col("dp"), (-F.col("nn")).alias("neg"))).alias("b"))
     per = best.select("qid", "m", (-F.col("b.neg")).alias("nn"))
@@ -655,50 +665,16 @@ def semantic_cells(vectors: DataFrame,
         + [T.StructField("cell", T.LongType(), False)]
     )
 
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.floor(
-                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64) * 100
-            ).astype(np.int64)
-            pdf = pdf.copy()
-            # seed ids ascend with the column index, so argmax's
-            # first-max tie rule IS "lowest seed id" — the oracle's
-            # ROW_NUMBER (dot DESC, sid ASC)
-            pdf["cell"] = sid[(Q @ S).argmax(axis=1)]
-            yield pdf
+    def assign(pdf, M):
+        Q = np.floor(M * 100).astype(np.int64)
+        pdf = pdf.copy()
+        # seed ids ascend with the column index, so argmax's
+        # first-max tie rule IS "lowest seed id" — the oracle's
+        # ROW_NUMBER (dot DESC, sid ASC)
+        pdf["cell"] = sid[(Q @ S).argmax(axis=1)]
+        return pdf
 
-    return narrow.mapInPandas(assign, schema=out_schema)
-
-
-def _make_neardup_keep(lhs_scale: int, rhs_scale: int):
-    """Build the quantized-cosine flag fn  d > 0 AND d²·lhs ≥ rhs·na·nb.
-
-    Products are evaluated in numpy int64 on the fast path; when the
-    worst case  (max n)²·max(lhs, rhs)  could exceed int64 (open
-    tau_bps values make lhs_scale up to 10⁸; high-dim or non-unit-scale
-    embeddings inflate n), fall back to object-dtype Python ints —
-    unbounded, so never a silent wraparound (r7 ADVICE).
-
-    Returned as a NESTED function so cloudpickle serializes it by
-    value into the applyInPandas closures — a module-level helper would
-    pickle by reference and fail on workers that can't import the
-    package (the driver runs from a foreign cwd)."""
-
-    def keep_flags(d, n, iu, ju):
-        import numpy as np
-
-        nmax = int(n.max()) if len(n) else 0
-        if nmax * nmax * max(lhs_scale, rhs_scale) <= np.iinfo(np.int64).max:
-            return (d > 0) & (d * d * lhs_scale >= rhs_scale * n[iu] * n[ju])
-        d_o = d.astype(object)
-        n_o = n.astype(object)
-        keep = (d_o > 0) & (
-            d_o * d_o * lhs_scale >= rhs_scale * n_o[iu] * n_o[ju])
-        return keep.astype(bool)
-
-    return keep_flags
+    return vector_batches(narrow, vec_col, assign, out_schema)
 
 
 def _make_blocked_upper_keep(lhs_scale: int, rhs_scale: int,
@@ -710,9 +686,8 @@ def _make_blocked_upper_keep(lhs_scale: int, rhs_scale: int,
     the m×m gram matrix (≈80 GB) nor triu index arrays (5·10⁹
     entries); peak memory is one B×m block (B = target_elems/m rows ≈
     256 MB).  Returned as a NESTED function so cloudpickle serializes
-    it by value into the applyInPandas closures (the
-    _make_neardup_keep contract — a module-level helper pickles by
-    reference and fails on workers that can't import the package).
+    it by value into the applyInPandas closures (the pickling rule, see
+    :func:`vector_batches`).
 
     EXACTNESS TIERS: |d| ≤ nmax (Cauchy-Schwarz), so every flag term
     is bounded by nmax²·max(scale).  Under 2^53 all values are exactly
@@ -760,6 +735,35 @@ def _make_blocked_upper_keep(lhs_scale: int, rhs_scale: int,
     return blocked_upper_keep
 
 
+def _make_cell_blocks(tau_bps: int, id_col: str, vec_col: str):
+    """Build ``cell_blocks(pdf) -> (ids, blocks)``, the per-cell prep
+    both SemDeDup outputs share: the cell's ids sorted ascending, and
+    :func:`_make_blocked_upper_keep`'s flag blocks over its quantized
+    vectors q = floor(100·x) (rows in id order, n = |q|²).
+
+    cos_q ≥ tau_bps/10⁴ is  dot > 0  AND  dot²·10⁸ ≥ tau_bps²·na·nb;
+    both scales are divided by g = gcd(tau_bps², 10⁸) so the integer
+    products stay as small as the threshold allows.  Nested for the
+    pickling rule (see :func:`vector_batches`)."""
+    import math
+
+    t2 = tau_bps * tau_bps
+    g = math.gcd(t2, 10 ** 8)
+    blocked_keep = _make_blocked_upper_keep((10 ** 8) // g, t2 // g)
+
+    def cell_blocks(pdf):
+        import numpy as np
+
+        ids = pdf[id_col].to_numpy()
+        order = np.argsort(ids)
+        Q = np.floor(
+            np.vstack(pdf[vec_col].to_numpy()[order]).astype(np.float64) * 100
+        ).astype(np.int64)
+        return ids[order], blocked_keep(Q, (Q * Q).sum(axis=1))
+
+    return cell_blocks
+
+
 def semantic_neardup_pairs(assigned: DataFrame, tau_bps: int = 3500,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding") -> DataFrame:
@@ -773,22 +777,10 @@ def semantic_neardup_pairs(assigned: DataFrame, tau_bps: int = 3500,
     same shape).  Magnitudes: |q_i| ≤ 100·|x| keeps dot²·10⁴ and
     1225-style right sides far inside int64 for unit-scale embeddings.
     """
-    import numpy as np
-
-    # tau_bps² / 10⁴ reduced to integers: dot²·10⁴ ≥ (tau_bps²/10⁴)·na·nb
-    # holds iff dot²·10⁴·10⁴ ≥ tau_bps²·na·nb; divide both sides by 10⁴
-    # exactly when tau_bps² is a multiple of 10⁴ — keep the general
-    # exact form dot²·10⁸ ≥ tau_bps²·na·nb out of int64 range instead:
-    # compare via Python ints in the numpy object fallback?  No: use the
-    # reduced form with g = gcd(tau_bps², 10⁸).
-    import math
-    t2 = tau_bps * tau_bps
-    g = math.gcd(t2, 10 ** 8)
-    lhs_scale = (10 ** 8) // g   # multiplies dot²
-    rhs_scale = t2 // g          # multiplies na·nb
-    blocked_keep = _make_blocked_upper_keep(lhs_scale, rhs_scale)
+    cell_blocks = _make_cell_blocks(tau_bps, id_col, vec_col)
 
     def cell_pairs(pdf):
+        import numpy as np
         import pandas as pd
 
         empty = pd.DataFrame({
@@ -798,15 +790,9 @@ def semantic_neardup_pairs(assigned: DataFrame, tau_bps: int = 3500,
         })
         if len(pdf) < 2:
             return empty
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        Q = np.floor(
-            np.vstack(pdf[vec_col].to_numpy()[order]).astype(np.float64) * 100
-        ).astype(np.int64)
-        n = (Q * Q).sum(axis=1)
+        ids, blocks = cell_blocks(pdf)
         outs_a, outs_b = [], []
-        for s, keep in blocked_keep(Q, n):
+        for s, keep in blocks:
             if keep.any():
                 vr, vc = np.nonzero(keep)  # surviving pairs only
                 outs_a.append(ids[vr + s])
@@ -838,17 +824,10 @@ def semantic_dedup_report(assigned: DataFrame, tau_bps: int = 3500,
     :func:`semantic_neardup_pairs` (kept for pipelines that need the
     pairs themselves); n_dropped counts the distinct higher-id members
     a keep-lowest-id policy would remove."""
-    import math
-
-    import numpy as np
-
-    t2 = tau_bps * tau_bps
-    g = math.gcd(t2, 10 ** 8)
-    lhs_scale = (10 ** 8) // g
-    rhs_scale = t2 // g
-    blocked_keep = _make_blocked_upper_keep(lhs_scale, rhs_scale)
+    cell_blocks = _make_cell_blocks(tau_bps, id_col, vec_col)
 
     def cell_report(pdf):
+        import numpy as np
         import pandas as pd
 
         cell = int(pdf["cell"].iloc[0])
@@ -856,16 +835,10 @@ def semantic_dedup_report(assigned: DataFrame, tau_bps: int = 3500,
             return pd.DataFrame(
                 {"cell": [cell], "n_vecs": [len(pdf)],
                  "n_pairs": [0], "n_dropped": [0]})
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        Q = np.floor(
-            np.vstack(pdf[vec_col].to_numpy()[order]).astype(np.float64) * 100
-        ).astype(np.int64)
-        n = (Q * Q).sum(axis=1)
+        ids, blocks = cell_blocks(pdf)
         n_pairs = 0
         dropped = np.zeros(len(ids), dtype=bool)
-        for s, keep in blocked_keep(Q, n):
+        for _, keep in blocks:
             n_pairs += int(keep.sum())
             dropped |= keep.any(axis=0)
         return pd.DataFrame({
@@ -952,43 +925,41 @@ def pq_adc_eval(corpus: DataFrame,
         LT[:, m, :] = (diff * diff).sum(axis=-1)
     SENT = np.iinfo(np.int64).max
 
-    def partial(batches):
+    marange = np.arange(n_sub)
+
+    def partial(pdf, M):
         import pandas as pd
 
-        marange = np.arange(n_sub)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = _q(np.vstack(pdf[vec_col].to_numpy()))  # B × D
-            ids = pdf[id_col].to_numpy()
-            B = len(ids)
-            # PQ encode: codes[b, m] = argmin_k d²(sub, codeword) —
-            # np.argmin takes the FIRST minimum, i.e. ties break
-            # k-ascending, matching ROW_NUMBER (d2, k)
-            codes = np.empty((B, n_sub), dtype=np.int64)
-            for m in range(n_sub):
-                sl = slice(m * d, (m + 1) * d)
-                diff = X[:, None, sl] - CB[None, :, sl]  # B × K × d
-                codes[:, m] = (diff * diff).sum(axis=-1).argmin(axis=1)
-            rows = []
-            for j, qid in enumerate(qids):
-                ex = ((X - QP[j]) ** 2).sum(axis=1)      # B exact d²
-                ex[ids == qid] = SENT                    # exclude self
-                mn = ex.min()
-                if mn != SENT:
-                    rows.append((qid, "x", int(mn),
-                                 int(ids[ex == mn].min())))
-                adc = LT[j][marange[None, :], codes].sum(axis=1)
-                adc[ids == qid] = SENT
-                # batch-partial top-10 under the global (d2, nn)
-                # lexicographic order — every row that could survive
-                # the final rank-10 cut must be emitted
-                order = np.lexsort((ids, adc))[:10]
-                for i in order:
-                    if adc[i] == SENT:
-                        break
-                    rows.append((qid, "a", int(adc[i]), int(ids[i])))
-            yield pd.DataFrame(rows, columns=["qid", "s", "d2", "nn"])
+        X = _q(M)  # B × D
+        ids = pdf[id_col].to_numpy()
+        B = len(ids)
+        # PQ encode: codes[b, m] = argmin_k d²(sub, codeword) —
+        # np.argmin takes the FIRST minimum, i.e. ties break
+        # k-ascending, matching ROW_NUMBER (d2, k)
+        codes = np.empty((B, n_sub), dtype=np.int64)
+        for m in range(n_sub):
+            sl = slice(m * d, (m + 1) * d)
+            diff = X[:, None, sl] - CB[None, :, sl]  # B × K × d
+            codes[:, m] = (diff * diff).sum(axis=-1).argmin(axis=1)
+        rows = []
+        for j, qid in enumerate(qids):
+            ex = ((X - QP[j]) ** 2).sum(axis=1)      # B exact d²
+            ex[ids == qid] = SENT                    # exclude self
+            mn = ex.min()
+            if mn != SENT:
+                rows.append((qid, "x", int(mn),
+                             int(ids[ex == mn].min())))
+            adc = LT[j][marange[None, :], codes].sum(axis=1)
+            adc[ids == qid] = SENT
+            # batch-partial top-10 under the global (d2, nn)
+            # lexicographic order — every row that could survive
+            # the final rank-10 cut must be emitted
+            order = np.lexsort((ids, adc))[:10]
+            for i in order:
+                if adc[i] == SENT:
+                    break
+                rows.append((qid, "a", int(adc[i]), int(ids[i])))
+        return pd.DataFrame(rows, columns=["qid", "s", "d2", "nn"])
 
     from pyspark.sql.window import Window
 
@@ -998,8 +969,9 @@ def pq_adc_eval(corpus: DataFrame,
     # recall@10 membership) would otherwise re-run the corpus Arrow
     # kernel three times — the frame is O(batches × probes) rows, so
     # the persist is metadata-sized while the saved work is corpus-sized
-    partials = tracked_persist(corpus.select(id_col, vec_col).mapInPandas(
-        partial, schema="qid long, s string, d2 long, nn long"))
+    partials = tracked_persist(vector_batches(
+        corpus.select(id_col, vec_col), vec_col, partial,
+        "qid long, s string, d2 long, nn long"))
     # O(batches × probes) rows from here down — driver-small plans
     ex = (partials.filter(F.col("s") == "x")
           .groupBy("qid")
@@ -1077,36 +1049,26 @@ def with_ivfadc_codes_arrow(df: DataFrame, centroids: list[list[float]],
         T.StructField("cell", T.IntegerType(), False),
     ])
 
-    def encode(batches):
+    def encode(pdf, M):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cells = (M @ C.T).argmax(axis=1)
-            # _quant_int inlined: a worker-shipped closure must not
-            # reference module-level FUNCTIONS — cloudpickle serializes
-            # them by module reference, and the executor's Python
-            # worker only has the driver's sys.path additions when the
-            # driver happens to run from the repo root (the real
-            # correctness driver does; a foreign-cwd caller does not —
-            # caught by scripts/driver_sim.py run from /tmp).  Data
-            # closed over (C, QC, W) pickles by value and is safe.
-            RES = np.floor(M * scale).astype(np.int64) - QC[cells]
-            B = len(RES)
-            codes = np.empty((B, n_sub), dtype=np.int32)
-            for m in range(n_sub):
-                sl = slice(m * d, (m + 1) * d)
-                diff = RES[:, None, sl] - W[None, :, sl]
-                codes[:, m] = (diff * diff).sum(axis=-1).argmin(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "code": list(codes),
-                "cell": cells.astype("int32"),
-            })
+        cells = (M @ C.T).argmax(axis=1)
+        # _quant_int inlined (the pickling rule, see vector_batches)
+        RES = np.floor(M * scale).astype(np.int64) - QC[cells]
+        B = len(RES)
+        codes = np.empty((B, n_sub), dtype=np.int32)
+        for m in range(n_sub):
+            sl = slice(m * d, (m + 1) * d)
+            diff = RES[:, None, sl] - W[None, :, sl]
+            codes[:, m] = (diff * diff).sum(axis=-1).argmin(axis=1)
+        return pd.DataFrame({
+            id_col: pdf[id_col].to_numpy(),
+            "code": list(codes),
+            "cell": cells.astype("int32"),
+        })
 
-    return df.select(id_col, vec_col).mapInPandas(encode, schema=out_schema)
+    return vector_batches(df.select(id_col, vec_col), vec_col, encode,
+                          out_schema)
 
 
 def ivfadc_index(spark: SparkSession, embeddings_path: str,
@@ -1158,9 +1120,7 @@ def ivfadc_query(index: DataFrame, centroids: list[list[float]],
     K, D = W.shape
     d = D // n_sub
     q = np.asarray(qvec, dtype=np.float64)
-    scores = C @ q
-    order = sorted(range(len(scores)), key=lambda j: (-scores[j], j))
-    probe_cells = [int(j) for j in order[:nprobe]]
+    probe_cells = top_cells(C @ q, nprobe)
     qi = _quant_int(q, scale)
     luts: dict[int, list[int]] = {}
     for c in probe_cells:

@@ -276,7 +276,10 @@ def q111(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # q111 oracle: reuses q78's exact quality-score SQL so the two share one
 # definition of "quality" (a drifting pair would silently diverge).
-from tidb_gateway_spark.queries.llm_extended import _DDB_QSCORE  # noqa: E402
+from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
+    _DDB_QSCORE,
+    _DDB_SHINGLES,
+)
 from tidb_gateway_spark.queries.registry import REGISTRY as _REG  # noqa: E402
 import dataclasses as _dc  # noqa: E402
 
@@ -519,30 +522,24 @@ _REG["q115_distribution_drift_psi"] = _dc.replace(
 # ---------------------------------------------------------------- Q116
 # The full pre-training data recipe as ONE declared query, composed
 # from the operator library: quality filter → exact dedup (keep lowest
-# doc_id per content hash) → 3-word-shingle decontamination against the
-# benchmark set → per-language mixture resampling.  Demonstrates that
+# doc_id per content hash) → dedup.SHINGLE_N-word shingle
+# decontamination against the benchmark set (the oracle shares the
+# MinHash family's shingle CTE) → per-language mixture resampling.
+# Demonstrates that
 # the stages compose as lazy DataFrame transforms — Catalyst plans the
 # whole recipe as one job graph (shared scans, pushed filters), which
 # is how a real pipeline runs it: one pass over the corpus per shuffle
 # stage, not one pass per tool.
 _RECIPE_RATES = {"en": 5000}  # en halved; other languages kept in full
-_DDB_RECIPE_SH = (
-    "rsh AS (SELECT DISTINCT doc_id, w FROM ("
-    "SELECT doc_id, UNNEST(CASE WHEN len(wl) >= 3 THEN "
-    "list_transform(range(1, len(wl) - 1), i -> wl[i] || ' ' || wl[i+1] || ' ' || wl[i+2]) "
-    "ELSE [array_to_string(wl, ' ')] END) AS w FROM ("
-    "SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS wl "
-    "FROM documents)))"
-)
 _Q116_ORACLE = (
     "WITH "
     f"q AS (SELECT *, ({_DDB_QSCORE}) AS qs FROM documents), "
     "kept AS (SELECT * FROM q WHERE qs >= 0.5), "
     "uniq AS (SELECT * FROM kept WHERE doc_id IN ("
     "SELECT MIN(doc_id) FROM kept GROUP BY md5(text))), "
-    f"{_DDB_RECIPE_SH}, "
-    "bench AS (SELECT DISTINCT w FROM rsh WHERE doc_id < 10), "
-    "contaminated AS (SELECT DISTINCT s.doc_id FROM rsh s "
+    f"{_DDB_SHINGLES}, "
+    "bench AS (SELECT DISTINCT w FROM shingles WHERE doc_id < 10), "
+    "contaminated AS (SELECT DISTINCT s.doc_id FROM shingles s "
     "JOIN bench b ON s.w = b.w WHERE s.doc_id >= 10), "
     "clean AS (SELECT * FROM uniq WHERE doc_id >= 10 AND doc_id NOT IN "
     "(SELECT doc_id FROM contaminated)), "
@@ -1051,7 +1048,7 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q197
 from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _DDB_BANDS, _DDB_CAND_CHAIN, _DDB_SHINGLES, _DDB_SIGS,
+    _DDB_BANDS, _DDB_CAND_CHAIN, _DDB_SIGS,
 )
 
 _Q197_SPLIT_BPS = 9_000  # train share (basis points of the hash space)

@@ -606,35 +606,30 @@ _Q252_ORACLE = (
     tags=("similarity", "llm", "statistics"),
 )
 def q252(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from tidb_gateway_spark.operators.cache import tracked_persist
+    from tidb_gateway_spark.operators.similarity import vector_batches
 
     e = ensure_min_partitions(load_table(spark, sf_dir, "embeddings"))
 
-    def gram(batches):
+    def gram(pdf, M):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.vstack(pdf["embedding"].to_numpy()).astype(
-                np.float64)[:, :_Q252_D]
-            G = M.T @ M
-            s = M.sum(axis=0)
-            rows = [
-                (i + 1, j + 1, float(G[i, j]))
-                for i in range(_Q252_D) for j in range(i, _Q252_D)
-            ]
-            rows += [(i + 1, 0, float(s[i])) for i in range(_Q252_D)]
-            rows.append((0, 0, float(len(M))))
-            yield pd.DataFrame(rows, columns=["i", "j", "v"])
+        M = M[:, :_Q252_D]
+        G = M.T @ M
+        s = M.sum(axis=0)
+        rows = [
+            (i + 1, j + 1, float(G[i, j]))
+            for i in range(_Q252_D) for j in range(i, _Q252_D)
+        ]
+        rows += [(i + 1, 0, float(s[i])) for i in range(_Q252_D)]
+        rows.append((0, 0, float(len(M))))
+        return pd.DataFrame(rows, columns=["i", "j", "v"])
 
     # the aggregated partial table feeds three consumers (count, sums,
     # gram) — persist it or each consumer re-runs the corpus pass
     agg = tracked_persist(
-        e.select("embedding")
-        .mapInPandas(gram, schema="i int, j int, v double")
+        vector_batches(e.select("embedding"), "embedding", gram,
+                       "i int, j int, v double")
         .groupBy("i", "j").agg(F.sum("v").alias("v"))
     )
     n = agg.filter((F.col("i") == 0) & (F.col("j") == 0)).select(

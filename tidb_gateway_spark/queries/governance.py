@@ -692,6 +692,8 @@ _Q185_ORACLE = (
 def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
+    from tidb_gateway_spark.operators.similarity import vector_batches
+
     e = ensure_min_partitions(load_table(spark, sf_dir, "embeddings"))
     # r12 floor note (VERDICT r11 item 4): the sf1 ratio (~4x on a
     # 0.4-0.8 s DuckDB side) was re-measured isolated and profiled —
@@ -716,41 +718,37 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2 = (C * C).sum(axis=1)
     labels_arr = np.array(labels)
 
-    def partials(batches):
+    def partials(pdf, M):
         import pandas as pd
 
-        for pdf in batches:
-            if not len(pdf):
+        lab = pdf["label"].to_numpy()
+        D2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
+        col = np.searchsorted(labels_arr, lab)
+        own = D2[np.arange(len(lab)), col]
+        D2[np.arange(len(lab)), col] = np.inf
+        other = D2.min(axis=1)  # inf when only one label exists
+        margin = other - own
+        finite = np.isfinite(margin)
+        mq = np.floor(np.where(finite, margin, 0.0) * 1e6 + 0.5)
+        out = []
+        for j, lbl in enumerate(labels):
+            m = col == j
+            if not m.any():
                 continue
-            M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            lab = pdf["label"].to_numpy()
-            D2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
-            col = np.searchsorted(labels_arr, lab)
-            own = D2[np.arange(len(lab)), col]
-            D2[np.arange(len(lab)), col] = np.inf
-            other = D2.min(axis=1)  # inf when only one label exists
-            margin = other - own
-            finite = np.isfinite(margin)
-            mq = np.floor(np.where(finite, margin, 0.0) * 1e6 + 0.5)
-            out = []
-            for j, lbl in enumerate(labels):
-                m = col == j
-                if not m.any():
-                    continue
-                fin = m & finite
-                out.append((
-                    int(lbl), int(m.sum()),
-                    int(((mq < 0) & fin).sum()),
-                    float(own[m].sum()),
-                    float(margin[fin].sum()), int(fin.sum()),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "label", "n", "flagged", "sum_own", "sum_margin", "n_m"])
+            fin = m & finite
+            out.append((
+                int(lbl), int(m.sum()),
+                int(((mq < 0) & fin).sum()),
+                float(own[m].sum()),
+                float(margin[fin].sum()), int(fin.sum()),
+            ))
+        return pd.DataFrame(out, columns=[
+            "label", "n", "flagged", "sum_own", "sum_margin", "n_m"])
 
-    p = e.select("label", "embedding").mapInPandas(
-        partials,
-        schema="label int, n long, flagged long, sum_own double, "
-               "sum_margin double, n_m long",
+    p = vector_batches(
+        e.select("label", "embedding"), "embedding", partials,
+        "label int, n long, flagged long, sum_own double, "
+        "sum_margin double, n_m long",
     )
     g = p.groupBy("label").agg(
         F.sum("n").cast("bigint").alias("n"),

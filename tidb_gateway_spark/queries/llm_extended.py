@@ -349,7 +349,9 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tidb_gateway_spark.operators.similarity import (
         int8_index,
+        probe_dot,
         quantize_vector,
+        topk,
     )
 
     path = os.path.join(sf_dir, "embeddings.parquet")
@@ -361,18 +363,8 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     psc, pq = derived.memo("q95", path, probe)
     qdf = int8_index(spark, path)
-    parr = "array(" + ",".join(f"CAST({int(x)} AS DOUBLE)" for x in pq) + ")"
-    idot = F.expr(
-        f"aggregate(zip_with(qvec, {parr}, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    adp = idot * F.col("qscale") * F.lit(float(psc))
-    return (
-        qdf.filter(F.col("vec_id") != 0)
-        .select("vec_id", stable_round(adp, 4).alias("adp"))
-        .orderBy(F.desc("adp"), F.asc("vec_id"))
-        .limit(5)
-    )
+    adp = probe_dot("qvec", pq) * F.col("qscale") * F.lit(float(psc))
+    return topk(qdf, "vec_id", adp, 5, exclude_id=0, name="adp")
 
 
 # ---------------------------------------------------------------- Q77
@@ -1358,6 +1350,7 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.similarity import (
         ivf_centroids,
         ivf_index,
+        top_cells,
     )
 
     path = f"{sf_dir}/embeddings.parquet"
@@ -1377,9 +1370,8 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
         qcells = []
         for qid, qe in probes:
             s = C @ np.array(qe, dtype=np.float64)
-            order = sorted(range(len(s)), key=lambda j: (-s[j], j))
-            for cid in order[:_Q208_NPROBE]:
-                qcells.append((qid, int(cid)))
+            for cid in top_cells(s, _Q208_NPROBE):
+                qcells.append((qid, cid))
         return probes, qcells
 
     probes, qcells = derived.memo("q208", path, probe_meta)

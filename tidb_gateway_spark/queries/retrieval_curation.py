@@ -1190,6 +1190,12 @@ _Q272_ORACLE = (
     tags=("llm", "retrieval", "similarity"),
 )
 def q272(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from tidb_gateway_spark.operators.similarity import (
+        norm_expr,
+        probe_dot,
+        topk,
+    )
+
     lex = q214(spark, sf_dir)
     wl = Window.orderBy(F.desc("score"), "doc_id")
     lexr = lex.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
@@ -1202,22 +1208,9 @@ def q272(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     probe = derived.memo("q272", f"{sf_dir}/embeddings.parquet",
                          probe_vector)
-    pv = F.array(*[F.lit(x) for x in probe])
-    ce = F.col("embedding").cast("array<double>")
-    dot = F.aggregate(
-        F.zip_with(ce, pv, lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x)
-    nrm = F.sqrt(F.aggregate(
-        F.zip_with(ce, ce, lambda a, b: a * b),
-        F.lit(0.0), lambda acc, x: acc + x))
     pn = float(sum(x * x for x in probe)) ** 0.5
-    cs = stable_round(dot / (nrm * F.lit(pn)), 4)
-    dtop = (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", cs.alias("cs"))
-        .orderBy(F.desc("cs"), "vec_id")
-        .limit(_Q272_LEG_K)
-    )
+    cs = probe_dot("embedding", probe) / (norm_expr("embedding") * F.lit(pn))
+    dtop = topk(e, "vec_id", cs, _Q272_LEG_K, exclude_id=0, name="cs")
     wd = Window.orderBy(F.desc("cs"), "vec_id")
     dr = dtop.select("vec_id", F.row_number().over(wd).alias("dense_rank"))
 

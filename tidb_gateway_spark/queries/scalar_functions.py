@@ -248,19 +248,12 @@ _Q55_ORACLE = (
     tags=("scalar", "array", "similarity"),
 )
 def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from tidb_gateway_spark.operators.similarity import dot_expr, topk
+
     e = load_table(spark, sf_dir, "embeddings")
     q = F.broadcast(e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe")))
-    dp = F.expr(
-        "aggregate(zip_with(embedding, qe, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(q)
-        .select("vec_id", stable_round(dp, 4).alias("dp"))
-        .orderBy(F.desc("dp"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return topk(e.crossJoin(q), "vec_id", dot_expr("embedding", "qe"), 5,
+                exclude_id=0)
 
 
 @register(

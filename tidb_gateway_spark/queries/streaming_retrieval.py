@@ -392,7 +392,10 @@ def _q257_index(spark: SparkSession, sf_dir: str):
 
     import numpy as np
 
-    from tidb_gateway_spark.operators.similarity import ivf_centroids
+    from tidb_gateway_spark.operators.similarity import (
+        ivf_centroids,
+        vector_batches,
+    )
     from tidb_gateway_spark.sources import derived
 
     stream_path = _q254_index(spark, sf_dir)
@@ -452,25 +455,17 @@ def _q257_index(spark: SparkSession, sf_dir: str):
             cells_arr = np.array(present, dtype="int32")
             scale = float(_Q257_SCALE)
 
-            def reassign(batches):
-                # free variables only (Ct, cells_arr, scale, np) — a
-                # module-level helper here would pickle by REFERENCE
-                # and fail on workers without the repo on sys.path
-                # (driver-sim's foreign-cwd contract)
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    E = np.vstack(pdf["embedding"].to_numpy())
-                    Q = np.floor(E.astype(np.float64) * scale + 0.5)
-                    pdf = pdf.copy()
-                    # exact integer dots in float64; argmax takes the
-                    # FIRST maximal row = smallest cell id among ties =
-                    # the oracle's (s DESC, cell)
-                    pdf["cell"] = cells_arr[(Q @ Ct).argmax(axis=1)]
-                    yield pdf
+            def reassign(pdf, M):
+                Q = np.floor(M * scale + 0.5)
+                pdf = pdf.copy()
+                # exact integer dots in float64; argmax takes the
+                # FIRST maximal row = smallest cell id among ties =
+                # the oracle's (s DESC, cell)
+                pdf["cell"] = cells_arr[(Q @ Ct).argmax(axis=1)]
+                return pdf
 
-            (ensure_min_partitions(narrow)
-             .mapInPandas(reassign, schema=out_schema)
+            (vector_batches(ensure_min_partitions(narrow), "embedding",
+                            reassign, out_schema)
              .write.mode("overwrite").partitionBy("cell")
              .parquet(os.path.join(tmp, "cells")))
             # the refreshed centroid matrix is integer-valued and
@@ -515,31 +510,22 @@ def _q257_index(spark: SparkSession, sf_dir: str):
 def q257(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
+    from tidb_gateway_spark.operators.similarity import (
+        probe_dot,
+        top_cells,
+        topk,
+    )
+
     path, M, present, q0 = _q257_index(spark, sf_dir)
     idx = spark.read.parquet(os.path.join(path, "cells"))
     # cell selection by exact integer dot (driver-side, |present| x dim)
     # over NON-EMPTY cells only — `present` is ascending, so index-order
     # tie-break = the oracle's (s DESC, cell)
     q0q = _quantize_rows(np.array([q0]))[0]
-    scores = M @ q0q
-    order = sorted(range(len(scores)), key=lambda j: (-scores[j], j))
-    probes = [present[j] for j in order[:_IVF_NPROBE]]
+    probes = [present[j] for j in top_cells(M @ q0q, _IVF_NPROBE)]
     # exact rerank against the RAW probe vector within pruned cells
-    qarr = "array(" + ",".join(f"{float(v)!r}D" for v in q0) + ")"
-    dp = F.expr(
-        f"aggregate(zip_with(embedding, {qarr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    return (
-        idx.filter(F.col("cell").isin(probes) & (F.col("vec_id") != 0))
-        .select(
-            "vec_id",
-            (F.floor(dp * 10000 + 0.5) / 10000).alias("dp"),
-        )
-        .orderBy(F.desc("dp"), "vec_id")
-        .limit(3)
-    )
+    return topk(idx.filter(F.col("cell").isin(probes)), "vec_id",
+                probe_dot("embedding", q0), 3, exclude_id=0)
 
 
 # ---------------------------------------------------------------- Q259
