@@ -56,13 +56,11 @@ def bounded_q266_oracle() -> str:
         _DDB_BANDS,
         _DDB_SHINGLES,
         _DDB_SIGS,
-        _ddb_hex_to_int,
     )
-    from tidb_gateway_spark.queries.streaming_retrieval import _Q262_SPLITS
+    from tidb_gateway_spark.queries.streaming_retrieval import (
+        _DDB_ARRIVAL_EPOCH as ep,
+    )
 
-    ep = ("(" + _ddb_hex_to_int(
-        "md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
-        + f" % 10000) % {_Q262_SPLITS}")
     return (
         f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
         f"e AS (SELECT doc_id, CAST({ep} AS INT) AS ep FROM documents "

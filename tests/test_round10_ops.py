@@ -337,17 +337,14 @@ def test_q260_lifecycle_reaches_mixed_generation_steady_state(spark, sf_dir):
     fixture that ends fully compacted, or never compacts, certifies
     only half the lifecycle)."""
     from tidb_gateway_spark.queries.streaming_retrieval import _q260_index
-
-    from tidb_gateway_spark.queries.streaming_retrieval import (
-        _q260_live_roots,
-    )
+    from tidb_gateway_spark.sources import derived
 
     path = _q260_index(spark, sf_dir)
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     assert meta["n_folds"] >= 1, meta
     assert meta["deltas_live"] >= 1, meta
-    roots = _q260_live_roots(path)
+    roots = derived.lsm_live_roots(path)
     # manifest must name BOTH a folded base generation and a live
     # delta epoch, each with a dictionary
     assert len(roots) == 2, roots

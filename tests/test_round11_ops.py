@@ -90,10 +90,7 @@ def test_q260_crash_window_serves_old_consistent_index(spark, sf_dir):
     serve must ignore it entirely and return the same answer."""
     import shutil
 
-    from tidb_gateway_spark.queries.streaming_retrieval import (
-        _q260_index,
-        _q260_live_roots,
-    )
+    from tidb_gateway_spark.queries.streaming_retrieval import _q260_index
 
     want = [r["doc_id"] for r in REGISTRY[
         "q260_streaming_lsm_index_lifecycle"].spark(spark, sf_dir)
@@ -108,7 +105,7 @@ def test_q260_crash_window_serves_old_consistent_index(spark, sf_dir):
               "wb") as f:
         f.write(b"\x00not parquet - crashed fold leftovers")
     try:
-        assert garbage not in _q260_live_roots(path)
+        assert garbage not in derived.lsm_live_roots(path)
         got = [r["doc_id"] for r in REGISTRY[
             "q260_streaming_lsm_index_lifecycle"].spark(spark, sf_dir)
             .collect()]

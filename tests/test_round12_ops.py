@@ -77,10 +77,6 @@ def test_q267_crash_window_unreachable(spark, sf_dir, tmp_path):
     unreachable: live roots name only what the manifest points at."""
     import shutil
 
-    from tidb_gateway_spark.queries.streaming_retrieval import (
-        _q267_live_roots,
-    )
-
     _, lsm = _gate_paths(spark, sf_dir)
     crash = str(tmp_path / "gate_crash")
     shutil.copytree(lsm, crash)
@@ -89,7 +85,7 @@ def test_q267_crash_window_unreachable(spark, sf_dir, tmp_path):
     shutil.copytree(
         os.path.join(crash, "base", "gen-000001"),
         os.path.join(crash, "base", "gen-000002"))
-    roots = _q267_live_roots(crash)
+    roots = derived.lsm_live_roots(crash)
     assert os.path.join(crash, "base", "gen-000001") in roots
     assert all("gen-000002" not in r for r in roots)
 

@@ -108,7 +108,9 @@ def test_q265_q266_bounded_cert_checks(spark, sf_dir):
 
 def test_no_module_function_refs_in_worker_closures():
     """Worker-shipped closures (the function arguments of mapInPandas /
-    applyInPandas / mapInArrow) must not reference module-level
+    applyInPandas / mapInArrow, and the ``kernel`` argument of
+    ``similarity.vector_batches``, which wraps mapInPandas) must not
+    reference module-level
     FUNCTIONS: cloudpickle serializes those by module reference, so the
     executor's Python worker must be able to ``import
     tidb_gateway_spark`` — true when the driver runs from the repo root
@@ -124,10 +126,28 @@ def test_no_module_function_refs_in_worker_closures():
     root = os.path.join(os.path.dirname(__file__), "..",
                         "tidb_gateway_spark")
     ship_calls = {"mapInPandas", "applyInPandas", "mapInArrow"}
+    # wrappers that ship one of their arguments: name -> (position,
+    # keyword) of the shipped function
+    ship_wrappers = {"vector_batches": (2, "kernel")}
+
+    def shipped_arg(call):
+        f = call.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(
+            f, "id", None)
+        if name in ship_calls and isinstance(f, ast.Attribute):
+            pos, kw = 0, None
+        elif name in ship_wrappers:
+            pos, kw = ship_wrappers[name]
+        else:
+            return None
+        args = call.args[pos:pos + 1] + [
+            k.value for k in call.keywords if k.arg == kw]
+        return next((a.id for a in args if isinstance(a, ast.Name)), None)
+
     offenders = []
     for fn in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
         src = open(fn).read()
-        if not any(c in src for c in ship_calls):
+        if not any(c in src for c in ship_calls | set(ship_wrappers)):
             continue
         tree = ast.parse(src)
         modfuncs = {n.name for n in tree.body
@@ -145,13 +165,9 @@ def test_no_module_function_refs_in_worker_closures():
                     return
                 parent = self.stack[-1]
                 shipped = {
-                    call.args[0].id
+                    shipped_arg(call)
                     for call in ast.walk(parent)
                     if isinstance(call, ast.Call)
-                    and isinstance(call.func, ast.Attribute)
-                    and call.func.attr in ship_calls
-                    and call.args
-                    and isinstance(call.args[0], ast.Name)
                 }
                 if node.name not in shipped:
                     return

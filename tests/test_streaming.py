@@ -728,3 +728,29 @@ def test_partitioned_file_sink_exactly_once_across_restart(spark, tmp_path):
     # directory layout is a real hive partition per day
     parts = sorted(p for p in os.listdir(out) if p.startswith("day="))
     assert len(parts) == 3, parts
+
+
+def test_replay_arrivals_one_split_per_batch_in_split_order(spark,
+                                                            tmp_path):
+    """The streaming-index harness stages split i as the i-th written
+    file, so the file source hands micro-batch i exactly split i — the
+    epoch order the q265 gate's admission decisions depend on — and
+    returns the number of batches it ran."""
+    from tidb_gateway_spark.operators.sampling import hash_bps
+
+    frame = spark.range(60).withColumnRenamed("id", "doc_id")
+    split = (hash_bps(F.col("doc_id"), "replay") % 3).cast("int")
+    sizes = {r["s"]: r["n"] for r in
+             frame.groupBy(split.alias("s")).count()
+             .withColumnRenamed("count", "n").collect()}
+    assert sorted(sizes) == [0, 1, 2] and all(sizes.values()), sizes
+    seen = []
+
+    def on_batch(batch, batch_id):
+        rows = batch.select(split.alias("s")).collect()
+        seen.append((batch_id, sorted({r["s"] for r in rows}), len(rows)))
+
+    n = jobs.replay_arrivals(spark, frame, "doc_id", "replay", 3,
+                             str(tmp_path), on_batch)
+    assert n == 3
+    assert seen == [(i, [i], sizes[i]) for i in range(3)], seen

@@ -17,6 +17,9 @@ fixed cost in the scale path.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -35,6 +38,33 @@ def session_parallelism(spark: SparkSession, default: int = 200) -> int:
             return int(spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
             return default
+
+
+@contextmanager
+def build_shuffle_partitions(spark: SparkSession) -> Iterator[None]:
+    """Size ``spark.sql.shuffle.partitions`` to the session's
+    parallelism for the ``with`` block, then restore it.
+
+    For index builds that run several shuffling jobs per micro-batch:
+    under an externally-owned session's default 200 shuffle partitions
+    that is thousands of tiny tasks of pure scheduling overhead
+    (measured 23 s vs 6 s for the q265 gate at sf0.01).  A session
+    whose conf cannot be read or set runs the block unchanged.
+    """
+    key = "spark.sql.shuffle.partitions"
+    try:
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(session_parallelism(spark)))
+    except Exception:
+        old = None
+    try:
+        yield
+    finally:
+        if old is not None:
+            try:
+                spark.conf.set(key, old)
+            except Exception:
+                pass
 
 
 def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
@@ -48,6 +48,17 @@ from tidb_gateway_spark.operators import similarity
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.queries import llm_extended as _llm
 from tidb_gateway_spark.queries.registry import register
+
+
+def word_list() -> Column:
+    """``wlist``: the whitespace-split tokens of ``text``, an empty
+    array for blank text — the token array the passage and substring
+    families (q210, q261, q264, q268) chunk and gram over."""
+    t = F.trim(F.col("text"))
+    return (F.when(t != "", F.split(t, " +"))
+            .otherwise(F.expr("CAST(array() AS array<string>)"))
+            .alias("wlist"))
+
 
 # ---------------------------------------------------------------- Q210
 _Q210_W = 8  # chunk width in tokens
@@ -111,7 +122,6 @@ _Q210_CHUNKS_SQL = (
 )
 def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
     # ONE explicit h-exchange for the whole hash path: hash-partitioning
     # on h alone satisfies the ClusteredDistribution of the (doc, src,
     # h) distinct (subset clustering) AND the shared-count window, so
@@ -124,12 +134,7 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     cd = (
-        d.select(
-            "doc_id", "source",
-            F.when(t != "", F.split(t, " +"))
-            .otherwise(F.expr("CAST(array() AS array<string>)"))
-            .alias("wlist"),
-        )
+        d.select("doc_id", "source", word_list())
         .select("doc_id", "source",
                 F.explode(F.expr(_Q210_CHUNKS_SQL)).alias("chunk"))
         .select("doc_id", "source", F.md5("chunk").alias("h"))
@@ -604,13 +609,7 @@ def _q261_wl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, wlist) token-array frame shared by the
     substring-dedup family (q261 audit, q264 apply)."""
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    return d.select(
-        "doc_id", "source",
-        F.when(t != "", F.split(t, " +"))
-        .otherwise(F.expr("CAST(array() AS array<string>)"))
-        .alias("wlist"),
-    )
+    return d.select("doc_id", "source", word_list())
 
 
 # Hot-gram skew guard (VERDICT r11 directive 6): a pathologically

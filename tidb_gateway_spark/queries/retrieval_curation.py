@@ -721,14 +721,42 @@ _Q220_ORACLE = (
 )
 
 
-def _q220_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def conjunctive_serve(dfc: DataFrame, post: DataFrame) -> DataFrame:
+    """q220's probe tail, shared by every inverted-index companion:
+    the top-``_Q220_NPROBE`` terms of ``dfc`` (a (w, dfc) frame with
+    one row per term; ties word-ascending) are collected driver-side,
+    then the prefix-partitioned postings ``post`` are pruned to those
+    terms' prefixes and the docs holding all of them are returned.
+
+    The top-k is orderBy().limit() — TakeOrdered (partial top-k per
+    partition + driver merge), never a one-task global window over the
+    vocabulary-sized dictionary."""
+    probes = [
+        r["w"]
+        for r in dfc.orderBy(F.desc("dfc"), "w")
+        .limit(_Q220_NPROBE)
+        .collect()
+    ]
+    pfxs = sorted({w[:1] for w in probes})
+    return (
+        post.filter(F.col("pfx").isin(pfxs) & F.col("w").isin(probes))
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("nw"))
+        .filter(F.col("nw") == _Q220_NPROBE)
+        .select("doc_id")
+        .orderBy("doc_id")
+        .limit(_Q220_TOPK)
+    )
+
+
+def _q220_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per fixture) the inverted-index companion:
-    ``dict/`` = (w, dfc) + a meta.json carrying n_docs;
-    ``postings/`` = (w, doc_id) parquet.  BOTH are PARTITIONED BY
-    first-char prefix — a probe reads only its prefix directories and
-    neither write has a single-task (coalesce(1)) stage, since the
-    dictionary is vocabulary-sized at 100 TB.  Returns the companion
-    root path."""
+    ``dict/`` = (w, dfc); ``postings/`` = (w, doc_id) parquet.  BOTH
+    are PARTITIONED BY first-char prefix — a probe reads only its
+    prefix directories and neither write has a single-task
+    (coalesce(1)) stage, since the dictionary is vocabulary-sized at
+    100 TB.  ``meta.json`` is the freshness marker, written last.
+    Returns the companion root path."""
     import hashlib
     import json
     import os
@@ -739,7 +767,6 @@ def _q220_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     path = derived.derived_path("invidx", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-        n_docs = d.count()
         td = _tok(d).distinct()
 
         def build(tmp: str) -> None:
@@ -759,7 +786,7 @@ def _q220_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
              .partitionBy("pfx")
              .parquet(os.path.join(tmp, "postings")))
             with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_docs": n_docs}, f)
+                json.dump({}, f)
 
         derived.build_atomic(path, build)
     return path
@@ -789,35 +816,12 @@ def _q220_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     tags=("llm", "text", "retrieval", "layout"),
 )
 def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
     import os
 
     path = _q220_index(spark, sf_dir)
-    with open(os.path.join(path, "meta.json")) as f:
-        json.load(f)  # meta carries n_docs for df-relative probe rules
-
     dct = spark.read.parquet(os.path.join(path, "dict"))
-    # global top-3 by df via orderBy().limit() — TakeOrdered (partial
-    # top-k per partition + driver merge), never a one-task global
-    # window over the vocabulary-sized dictionary
-    probes = [
-        r["w"]
-        for r in dct.select("w", "dfc")
-        .orderBy(F.desc("dfc"), "w")
-        .limit(_Q220_NPROBE)
-        .collect()
-    ]
     post = spark.read.parquet(os.path.join(path, "postings"))
-    pfxs = sorted({w[:1] for w in probes})
-    return (
-        post.filter(F.col("pfx").isin(pfxs) & F.col("w").isin(probes))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("nw"))
-        .filter(F.col("nw") == _Q220_NPROBE)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(_Q220_TOPK)
-    )
+    return conjunctive_serve(dct.select("w", "dfc"), post)
 
 
 # ---------------------------------------------------------------- Q223

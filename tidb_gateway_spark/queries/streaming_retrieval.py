@@ -1,143 +1,139 @@
-"""Q244/Q254/Q257: streaming index maintenance + compaction — the
-write-path streaming twins of q220 (inverted index) and q94 (IVF ANN
-index) (VERDICT r8 next-round #7 and r9 next-round #6: the
-derived-companion families that had no streaming counterpart), and the
-centroid-refresh compaction (q257) that closes q254's documented
-'refresh is a re-index' tradeoff with an exact, oracle-certified
-Lloyd step.
+"""Streaming-index family: indexes that Structured Streaming
+micro-batches maintain as immutable per-batch segments, and the
+queries that serve from them.  Every builder replays its fixture as
+arrival units through one ``availableNow`` file stream
+(:func:`~tidb_gateway_spark.streaming.jobs.replay_arrivals`) and
+maintains its index in ``foreachBatch``; every oracle recomputes the
+answer from raw data, so each query certifies its incremental
+maintenance lossless end-to-end.
 
-A Structured Streaming job consumes document arrivals in micro-batches
-and maintains the q220-style index companion incrementally via
-``foreachBatch``:
+* q244: inverted text index.  Each batch appends postings and a delta
+  dictionary (both prefix-partitioned); the serve merges the deltas on
+  read and runs q220's 3-term conjunctive probe.
+* q254: IVF ANN index.  Each batch assigns its vectors to cells of
+  FROZEN seed centroids and appends them under the cell partitioning;
+  the serve runs q94's probe.
+* q257: centroid refresh of q254's index, one exact Lloyd step
+  published as a new companion generation.
+* q259: LSM compaction of q244's index (deltas folded into one base).
+* q260: q244's append and q259's fold in ONE stream: every 4th batch
+  folds the delta pile into the next base generation.
+* q262: MinHash-LSH band index; q263 audits dup-on-arrival over it.
+* q265: streaming dedup gate (each epoch is probed against previously
+  ADMITTED docs); q266 audits the precision of its quarantines; q267
+  keeps the gate's admitted index in the LSM store.
+* q268: exact-substring gram-digest index with cross-epoch hits.
 
-* postings/ — (w, doc_id) parquet partitioned by first-char prefix,
-  APPEND-ONLY: each micro-batch writes its own posting files into the
-  prefix directories (the immutable-segment model every streaming IR
-  system uses);
-* dict/ — per-batch DELTA dictionaries (w, dfc) appended under the
-  same prefix partitioning; the serve path merges deltas with a sum
-  (LSM merge-on-read — q225's compaction round-trip is the companion
-  operator that would fold deltas into a base segment).
+Shared helpers:
 
-The declared query SERVES the same 3-term conjunctive probe as q220
-from the stream-maintained index, so the DuckDB oracle — which
-recomputes containment from raw text — proves the incremental
-maintenance lossless end-to-end: batch-split → streaming merge →
-delta-merged dictionary → pruned posting intersection gives exactly
-the batch-built answer.
+* ``streaming.jobs.replay_arrivals``: stage arrival units, drain one
+  file stream through ``foreachBatch``;
+* ``sources.derived``'s LSM generation store (``lsm_init``,
+  ``lsm_delta_root``, ``lsm_live_roots``, ``lsm_fold``) and
+  ``read_roots``: q260 and q267;
+* ``operators.partitioning.build_shuffle_partitions``: build-scoped
+  shuffle sizing for the per-batch-heavy q265/q267 gate and q268;
+* ``retrieval_curation.conjunctive_serve``: q220's probe tail, served
+  by q244, q259 and q260;
+* ``_arrival_epoch`` / ``_DDB_ARRIVAL_EPOCH``: the q262-family arrival
+  epoch in Spark and in DuckDB.
 
 Scale notes (100 TB): each micro-batch's work is proportional to the
-batch (one tokenize pass, batch-sized aggregates); nothing re-reads
-the accumulated index on the write path.  Dictionary deltas grow one
-segment per batch — merge-on-read is a |batches|-way sum per term,
-bounded by periodic compaction (q225).  The fixture staging step
-splits the corpus into 4 single-file arrival units (repartition(1)
-per split is SIMULATION STAGING — the arrival units of a real stream
-are the source's, not ours).
+batch; the append path never re-reads the accumulated index.  Delta
+segments grow one per batch, so merge-on-read is a |batches|-way sum
+per term, bounded by the fold (q259/q260/q267).  Staging each arrival
+unit as one file is simulation staging: a real stream's arrival units
+are its source's.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.operators import dedup
-from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
-from tidb_gateway_spark.queries.registry import register
+from tidb_gateway_spark.operators.partitioning import (
+    build_shuffle_partitions,
+    ensure_min_partitions,
+)
+from tidb_gateway_spark.operators.sampling import hash_bps
 from tidb_gateway_spark.queries.llm_extended import (
+    _DDB_BANDS,
+    _DDB_SHINGLES,
+    _DDB_SIGS,
     _IVF_CELLS,
     _IVF_NPROBE,
+    _Q72_ORACLE,
     _Q94_ORACLE,
+    _ddb_hex_to_int,
 )
+from tidb_gateway_spark.queries.pipeline_audit import (
+    _Q261_GRAMS_SQL,
+    _Q261_K,
+    word_list,
+)
+from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.queries.retrieval_curation import (
-    _Q220_NPROBE,
     _Q220_ORACLE,
-    _Q220_TOPK,
     _tok,
+    conjunctive_serve,
 )
+from tidb_gateway_spark.sources import derived
+from tidb_gateway_spark.streaming.jobs import replay_arrivals
 
 _Q244_SPLITS = 4  # micro-batch arrival units the staging step simulates
 
 
+def _append_text_delta(batch: DataFrame, root: str) -> None:
+    """Append ``batch``'s postings and its DELTA dictionary under
+    ``root`` (both partitioned by first-char prefix)."""
+    # two consumers: persist the tokenized frame so the batch source is
+    # read once
+    td = _tok(ensure_min_partitions(batch)).distinct()
+    td = td.select(F.substring("w", 1, 1).alias("pfx"), "w", "doc_id")
+    td = td.persist()
+    try:
+        (td.write.mode("append").partitionBy("pfx")
+         .parquet(os.path.join(root, "postings")))
+        # batch DELTA dictionary — merged on read at serve
+        (td.groupBy("pfx", "w")
+         .agg(F.count("*").alias("dfc"))
+         .write.mode("append").partitionBy("pfx")
+         .parquet(os.path.join(root, "dict")))
+    finally:
+        td.unpersist()
+
+
+def _merged_dfc(dct: DataFrame) -> DataFrame:
+    """Merge-on-read of delta dictionaries: (w, dfc) summed per term."""
+    return dct.groupBy("w").agg(F.sum("dfc").cast("bigint").alias("dfc"))
+
+
 def _q244_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per fixture) the STREAM-maintained inverted-index
-    companion: stage the corpus as 4 arrival files, run a real
-    Structured Streaming query (file source, maxFilesPerTrigger=1,
-    availableNow) whose foreachBatch appends batch postings + a batch
-    delta dictionary.  Returns the companion root path."""
-    import hashlib
-    import json
-    import os
-
-    from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.sources import derived
-
+    companion: replay the corpus as 4 arrivals whose foreachBatch
+    appends batch postings + a batch delta dictionary.  Returns the
+    companion root path."""
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     key = hashlib.md5(f"invidx-stream-v1|{src}".encode()).hexdigest()[:16]
     path = derived.derived_path("invidx_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
-        schema = d.schema
 
         def build(tmp: str) -> None:
             os.makedirs(tmp, exist_ok=True)
-            stage = os.path.join(tmp, "stage")
-            # SIMULATION STAGING: one file per arrival unit so the file
-            # source's maxFilesPerTrigger=1 yields 4 deterministic
-            # micro-batches (a real deployment's units come from the
-            # source; this repartition(1) is not on the data path)
-            sp = hash_bps(F.col("doc_id"), "q244") % _Q244_SPLITS
-            for i in range(_Q244_SPLITS):
-                (d.filter(sp == i).repartition(1)
-                 .write.mode("append").parquet(stage))
-
-            post_dir = os.path.join(tmp, "postings")
-            dict_dir = os.path.join(tmp, "dict")
-            counts: list[int] = []
-
-            def merge(batch: DataFrame, batch_id: int) -> None:
-                # three consumers (postings write, dict write, doc
-                # count) — persist the tokenized frame so the batch
-                # source is read once, not three times (r9 ADVICE)
-                td = _tok(ensure_min_partitions(batch)).distinct()
-                td = td.select(
-                    F.substring("w", 1, 1).alias("pfx"), "w", "doc_id")
-                td = td.persist()
-                try:
-                    (td.write.mode("append").partitionBy("pfx")
-                     .parquet(post_dir))
-                    # batch DELTA dictionary — merge-on-read at serve
-                    (td.groupBy("pfx", "w")
-                     .agg(F.count("*").alias("dfc"))
-                     .write.mode("append").partitionBy("pfx")
-                     .parquet(dict_dir))
-                    # docs that produced >=1 token — NOT the ingest row
-                    # count (empty/whitespace-only docs are excluded);
-                    # the meta field is named accordingly (r10 ADVICE)
-                    counts.append(
-                        td.select("doc_id").distinct().count())
-                finally:
-                    td.unpersist()
-
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(merge)
-                .option("checkpointLocation", os.path.join(tmp, "chk"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            n = replay_arrivals(
+                spark, d, "doc_id", "q244", _Q244_SPLITS, tmp,
+                lambda batch, batch_id: _append_text_delta(batch, tmp))
             with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_docs_tokenized": sum(counts),
-                           "n_batches": len(counts)}, f)
+                json.dump({"n_batches": n}, f)
 
         derived.build_atomic(path, build)
     return path
@@ -160,31 +156,10 @@ def _q244_index(spark: SparkSession, sf_dir: str) -> str:
     tags=("llm", "text", "retrieval", "streaming", "layout"),
 )
 def q244(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     path = _q244_index(spark, sf_dir)
     dct = spark.read.parquet(os.path.join(path, "dict"))
-    # merge-on-read over the batch deltas, then global top-3 by df via
-    # TakeOrdered (partial top-k per partition + driver merge)
-    probes = [
-        r["w"]
-        for r in dct.groupBy("w")
-        .agg(F.sum("dfc").cast("bigint").alias("dfc"))
-        .orderBy(F.desc("dfc"), "w")
-        .limit(_Q220_NPROBE)
-        .collect()
-    ]
     post = spark.read.parquet(os.path.join(path, "postings"))
-    pfxs = sorted({w[:1] for w in probes})
-    return (
-        post.filter(F.col("pfx").isin(pfxs) & F.col("w").isin(probes))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("nw"))
-        .filter(F.col("nw") == _Q220_NPROBE)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(_Q220_TOPK)
-    )
+    return conjunctive_serve(_merged_dfc(dct), post)
 
 
 # ---------------------------------------------------------------- Q254
@@ -192,13 +167,12 @@ _Q254_SPLITS = 4
 
 
 def _q254_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per fixture) the STREAM-maintained IVF index: stage
-    the embedding corpus as 4 arrival files, run a Structured Streaming
-    job (file source, maxFilesPerTrigger=1, availableNow) whose
-    foreachBatch assigns each arriving vector to its argmax-inner-
-    product cell and APPENDS it under the cell partition — per-batch
-    immutable segments accumulate inside each cell directory (the same
-    LSM model as q244's postings; the serve path reads them merged).
+    """Build (once per fixture) the STREAM-maintained IVF index: replay
+    the embedding corpus as 4 arrivals whose foreachBatch assigns each
+    arriving vector to its argmax-inner-product cell and APPENDS it
+    under the cell partition — per-batch immutable segments accumulate
+    inside each cell directory (the same LSM model as q244's postings;
+    the serve path reads them merged).
 
     Centroids are FROZEN up front (the deterministic seed set q94
     uses) — the precondition for incremental assignment ≡ batch
@@ -207,17 +181,10 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
     refresh is a full re-index (or a cell-split compaction), not a
     streaming operation.  Returns the companion root path.
     """
-    import hashlib
-    import json
-    import os
-
-    from tidb_gateway_spark.operators.sampling import hash_bps
     from tidb_gateway_spark.operators.similarity import (
         ivf_centroids,
         with_ivf_cell_arrow,
     )
-    from tidb_gateway_spark.queries.llm_extended import _IVF_CELLS
-    from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
     key = hashlib.md5(f"ivf-stream-v1|{src}|{_IVF_CELLS}".encode()).hexdigest()[:16]
@@ -225,19 +192,10 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
     if not derived.is_fresh(path, src, marker="meta.json"):
         cents = ivf_centroids(spark, src, _IVF_CELLS)
         e = spark.read.parquet(src)
-        schema = e.schema
 
         def build(tmp: str) -> None:
             os.makedirs(tmp, exist_ok=True)
-            stage = os.path.join(tmp, "stage")
-            # SIMULATION STAGING (see q244): one file per arrival unit
-            sp = hash_bps(F.col("vec_id"), "q254") % _Q254_SPLITS
-            for i in range(_Q254_SPLITS):
-                (e.filter(sp == i).repartition(1)
-                 .write.mode("append").parquet(stage))
-
             cell_dir = os.path.join(tmp, "cells")
-            counts: list[int] = []
 
             def assign(batch: DataFrame, batch_id: int) -> None:
                 # cell assignment is one Arrow matmul per batch against
@@ -247,21 +205,11 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
                     ensure_min_partitions(batch), cents)
                 (assigned.write.mode("append").partitionBy("cell")
                  .parquet(cell_dir))
-                counts.append(1)
 
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(assign)
-                .option("checkpointLocation", os.path.join(tmp, "chk"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            n = replay_arrivals(spark, e, "vec_id", "q254", _Q254_SPLITS,
+                                tmp, assign)
             with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_batches": len(counts),
-                           "n_cells": _IVF_CELLS}, f)
+                json.dump({"n_batches": n, "n_cells": _IVF_CELLS}, f)
 
         derived.build_atomic(path, build)
     return path
@@ -286,15 +234,9 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
     tags=("llm", "similarity", "ann", "streaming", "layout"),
 )
 def q254(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from tidb_gateway_spark.operators.similarity import (
         ivf_centroids,
         ivf_query,
-    )
-    from tidb_gateway_spark.queries.llm_extended import (
-        _IVF_CELLS,
-        _IVF_NPROBE,
     )
 
     path = _q254_index(spark, sf_dir)
@@ -388,15 +330,12 @@ def _q257_index(spark: SparkSession, sf_dir: str):
     centroid table; the rebuild write is the same partitioned-append
     shape as the original index build.
     """
-    import json
-
     import numpy as np
 
     from tidb_gateway_spark.operators.similarity import (
         ivf_centroids,
         vector_batches,
     )
-    from tidb_gateway_spark.sources import derived
 
     stream_path = _q254_index(spark, sf_dir)
     key = hashlib.md5(  # v2: non-empty-cell masking (r10 ADVICE)
@@ -548,10 +487,6 @@ def _q259_compact(spark: SparkSession, sf_dir: str) -> str:
     standard LSM maintenance cycle (Lucene merges, RocksDB
     compaction) expressed as Spark jobs.
     """
-    import json
-
-    from tidb_gateway_spark.sources import derived
-
     stream_path = _q244_index(spark, sf_dir)
     key = hashlib.md5(
         f"invidx-compact-v2|{stream_path}".encode()).hexdigest()[:16]
@@ -610,39 +545,16 @@ def _q259_compact(spark: SparkSession, sf_dir: str) -> str:
 )
 def q259(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _q259_compact(spark, sf_dir)
-    dct = spark.read.parquet(os.path.join(path, "dict"))
     # base dictionary is folded — one row per term, so the top-3 probe
     # is a plain TakeOrdered, no merge-on-read aggregate
-    probes = [
-        r["w"]
-        for r in dct.orderBy(F.desc("dfc"), "w")
-        .limit(_Q220_NPROBE).collect()
-    ]
+    dct = spark.read.parquet(os.path.join(path, "dict"))
     post = spark.read.parquet(os.path.join(path, "postings"))
-    pfxs = sorted({w[:1] for w in probes})
-    return (
-        post.filter(F.col("pfx").isin(pfxs) & F.col("w").isin(probes))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("nw"))
-        .filter(F.col("nw") == _Q220_NPROBE)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(_Q220_TOPK)
-    )
+    return conjunctive_serve(dct, post)
 
 
 # ---------------------------------------------------------------- Q260
 _Q260_SPLITS = 6       # arrival units staged for the simulation
 _Q260_COMPACT_EVERY = 4  # fold the delta pile every N micro-batches
-
-
-def _union_roots(spark: SparkSession, roots: list[str]) -> DataFrame:
-    """Union per-root partitioned reads (Spark's partition discovery
-    rejects multiple partitioned roots in a single read)."""
-    from functools import reduce
-
-    frames = [spark.read.parquet(r) for r in roots]
-    return reduce(DataFrame.unionByName, frames)
 
 
 def _q260_index(spark: SparkSession, sf_dir: str) -> str:
@@ -661,12 +573,12 @@ def _q260_index(spark: SparkSession, sf_dir: str) -> str:
     Production note: the fold runs inside the same foreachBatch
     transaction slot as the append (Structured Streaming serializes
     batches), so no concurrent writer exists; fold-then-truncate is
-    crash-atomic via the segment-epoch MANIFEST (r11): the next base
-    generation is written in full under base/gen-(k+1), then ONE
-    atomic manifest replace flips {base_gen, delta_epoch} together —
-    a crash at any point leaves readers on the old generation plus
-    the whole delta pile (consistent), and superseded directories are
-    GC'd only after the flip.  os.replace of the manifest FILE is the
+    crash-atomic via the LSM store's manifest (``derived.lsm_fold``):
+    the next base generation is written in full, then ONE atomic
+    manifest replace flips {base_gen, delta_epoch} together — a crash
+    at any point leaves readers on the old generation plus the whole
+    delta pile (consistent), and superseded directories are GC'd only
+    after the flip.  os.replace of the manifest FILE is the
     single-key-PUT shape an object-store deployment maps it to; no
     directory is ever renamed.
 
@@ -675,12 +587,6 @@ def _q260_index(spark: SparkSession, sf_dir: str) -> str:
     this is Lucene's merge policy / RocksDB leveled compaction
     expressed as Spark jobs on the same companion layout q220 serves.
     """
-    import json
-    import shutil
-
-    from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.sources import derived
-
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     key = hashlib.md5(  # v2: manifest-pointer fold switchover
         f"invidx-lsm-v2|{src}|{_Q260_SPLITS}|{_Q260_COMPACT_EVERY}"
@@ -688,125 +594,43 @@ def _q260_index(spark: SparkSession, sf_dir: str) -> str:
     path = derived.derived_path("invidx_lsm", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
-        schema = d.schema
 
         def build(tmp: str) -> None:
             os.makedirs(tmp, exist_ok=True)
-            stage = os.path.join(tmp, "stage")
-            sp = hash_bps(F.col("doc_id"), "q260") % _Q260_SPLITS
-            for i in range(_Q260_SPLITS):
-                (d.filter(sp == i).repartition(1)
-                 .write.mode("append").parquet(stage))
-
-            # LSM state lives behind ONE manifest (r10 verdict
-            # directive 4 — the os.rename fold was local-FS-only and a
-            # crash between the delta truncate and the base swap could
-            # serve an inconsistent index): immutable base GENERATIONS
-            # under base/gen-N, append epochs under delta/epoch-E, and
-            # {base_gen, delta_epoch} flipped in one atomic manifest
-            # replace.  A crash anywhere mid-fold leaves readers on
-            # the old (base_gen, delta_epoch) pair — old base + the
-            # ENTIRE delta pile, a complete consistent index; the
-            # half-written next generation is unreachable garbage.
-            derived.write_manifest(
-                tmp, {"base_gen": 0, "delta_epoch": 1})
+            derived.lsm_init(tmp)
             stats = {"n_batches": 0, "n_folds": 0, "deltas_live": 0}
 
-            def _epoch_root(e: int) -> str:
-                return os.path.join(tmp, "delta", f"epoch-{e:06d}")
-
-            def _gen_root(k: int) -> str:
-                return os.path.join(tmp, "base", f"gen-{k:06d}")
+            def fold(roots: list[str], nxt: str) -> None:
+                # dictionary summed, postings rewritten one segment
+                # per prefix
+                dicts = [os.path.join(r, "dict") for r in roots]
+                posts = [os.path.join(r, "postings") for r in roots]
+                (derived.read_roots(spark, dicts)
+                 .groupBy("pfx", "w")
+                 .agg(F.sum("dfc").cast("bigint").alias("dfc"))
+                 .repartition("pfx")
+                 .write.mode("overwrite").partitionBy("pfx")
+                 .parquet(os.path.join(nxt, "dict")))
+                (derived.read_roots(spark, posts).repartition("pfx")
+                 .write.mode("overwrite").partitionBy("pfx")
+                 .parquet(os.path.join(nxt, "postings")))
 
             def merge(batch: DataFrame, batch_id: int) -> None:
-                st = derived.read_manifest(tmp)
-                e, k = st["delta_epoch"], st["base_gen"]
-                td = _tok(ensure_min_partitions(batch)).distinct()
-                td = td.select(
-                    F.substring("w", 1, 1).alias("pfx"), "w", "doc_id")
-                td = td.persist()
-                try:
-                    (td.write.mode("append").partitionBy("pfx")
-                     .parquet(os.path.join(_epoch_root(e), "postings")))
-                    (td.groupBy("pfx", "w")
-                     .agg(F.count("*").alias("dfc"))
-                     .write.mode("append").partitionBy("pfx")
-                     .parquet(os.path.join(_epoch_root(e), "dict")))
-                finally:
-                    td.unpersist()
+                _append_text_delta(batch, derived.lsm_delta_root(tmp))
                 stats["n_batches"] += 1
                 stats["deltas_live"] += 1
-                if stats["n_batches"] % _Q260_COMPACT_EVERY:
-                    return
-                # scheduled fold: next base generation := base ∪ delta
-                # epoch (dictionary summed, postings rewritten one
-                # segment per prefix), WRITTEN IN FULL before the
-                # manifest flips to {base_gen: k+1, delta_epoch: e+1};
-                # the superseded generation and epoch are GC'd only
-                # after the flip.  Per-root reads unioned: Spark's
-                # partition discovery rejects multiple partitioned
-                # roots in one read (CONFLICTING_DIRECTORY_STRUCTURES).
-                dicts = [os.path.join(_epoch_root(e), "dict")] + (
-                    [os.path.join(_gen_root(k), "dict")] if k else [])
-                posts = [os.path.join(_epoch_root(e), "postings")] + (
-                    [os.path.join(_gen_root(k), "postings")] if k else [])
-                folded_dict = (
-                    _union_roots(spark, dicts)
-                    .groupBy("pfx", "w")
-                    .agg(F.sum("dfc").cast("bigint").alias("dfc"))
-                )
-                (folded_dict.repartition("pfx")
-                 .write.mode("overwrite").partitionBy("pfx")
-                 .parquet(os.path.join(_gen_root(k + 1), "dict")))
-                (_union_roots(spark, posts).repartition("pfx")
-                 .write.mode("overwrite").partitionBy("pfx")
-                 .parquet(os.path.join(_gen_root(k + 1), "postings")))
-                derived.write_manifest(
-                    tmp, {"base_gen": k + 1, "delta_epoch": e + 1})
-                # lazy GC after the flip (a crash here leaves garbage,
-                # never inconsistency)
-                if k:
-                    shutil.rmtree(_gen_root(k), ignore_errors=True)
-                shutil.rmtree(_epoch_root(e), ignore_errors=True)
-                stats["n_folds"] += 1
-                stats["deltas_live"] = 0
+                if stats["n_batches"] % _Q260_COMPACT_EVERY == 0:
+                    derived.lsm_fold(tmp, fold)
+                    stats["n_folds"] += 1
+                    stats["deltas_live"] = 0
 
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(merge)
-                .option("checkpointLocation", os.path.join(tmp, "chk"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            replay_arrivals(spark, d, "doc_id", "q260", _Q260_SPLITS, tmp,
+                            merge)
             with open(os.path.join(tmp, "meta.json"), "w") as f:
                 json.dump(stats, f)
 
         derived.build_atomic(path, build)
     return path
-
-
-def _q260_live_roots(path: str) -> list[str]:
-    """Index roots a reader serves from, resolved THROUGH the manifest:
-    the current base generation (if any folds happened) plus the
-    current delta epoch (if it has received appends).  Directories not
-    named by the manifest — e.g. a half-written next generation left
-    by a crashed fold — are unreachable by construction."""
-    from tidb_gateway_spark.sources import derived
-
-    st = derived.read_manifest(path)
-    roots: list[str] = []
-    if st is None:  # pre-manifest layout (not produced anymore)
-        return [os.path.join(path, "base"), os.path.join(path, "delta")]
-    if st["base_gen"]:
-        roots.append(
-            os.path.join(path, "base", f"gen-{st['base_gen']:06d}"))
-    ep = os.path.join(path, "delta", f"epoch-{st['delta_epoch']:06d}")
-    if os.path.exists(ep):
-        roots.append(ep)
-    return roots
 
 
 @register(
@@ -828,47 +652,51 @@ def _q260_live_roots(path: str) -> list[str]:
 )
 def q260(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _q260_index(spark, sf_dir)
-    gens = _q260_live_roots(path)
+    gens = derived.lsm_live_roots(path)
     dicts = [os.path.join(g, "dict") for g in gens
              if os.path.exists(os.path.join(g, "dict"))]
     posts = [os.path.join(g, "postings") for g in gens
              if os.path.exists(os.path.join(g, "postings"))]
-    dct = _union_roots(spark, dicts)
-    probes = [
-        r["w"]
-        for r in dct.groupBy("w")
-        .agg(F.sum("dfc").cast("bigint").alias("dfc"))
-        .orderBy(F.desc("dfc"), "w")
-        .limit(_Q220_NPROBE)
-        .collect()
-    ]
-    post = _union_roots(spark, posts)
-    pfxs = sorted({w[:1] for w in probes})
-    return (
-        post.filter(F.col("pfx").isin(pfxs) & F.col("w").isin(probes))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("nw"))
-        .filter(F.col("nw") == _Q220_NPROBE)
-        .select("doc_id")
-        .orderBy("doc_id")
-        .limit(_Q220_TOPK)
-    )
+    return conjunctive_serve(_merged_dfc(derived.read_roots(spark, dicts)),
+                             derived.read_roots(spark, posts))
 
 
 # ---------------------------------------------------------------- Q262
 _Q262_SPLITS = 4
 
 
+def _arrival_epoch() -> Column:
+    """Arrival epoch of a document in the q262–q268 replays: the split
+    ``replay_arrivals(..., "doc_id", "q262", _Q262_SPLITS, ...)``
+    staged it in, as an int."""
+    return (hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS).cast("int")
+
+
+# DuckDB twin of _arrival_epoch (before the INT cast)
+_DDB_ARRIVAL_EPOCH = (
+    "(" + _ddb_hex_to_int("md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
+    + f" % 10000) % {_Q262_SPLITS}")
+
+# shared oracle prefix: shingles → signatures → bands (q72's certified
+# chain), arrival epochs e, and band rows carrying their epoch be
+_DDB_EPOCH_BANDS = (
+    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+    f"e AS (SELECT doc_id, CAST({_DDB_ARRIVAL_EPOCH} AS INT) AS ep "
+    "FROM documents), "
+    "be AS (SELECT b.doc_id, b.band, b.bv, e.ep FROM bands b "
+    "JOIN e USING (doc_id)), "
+)
+
+
 def _q262_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per fixture) the STREAM-maintained MinHash-LSH band
     index — the third member of the streaming-index family (q244 =
     inverted text index, q254 = IVF ANN index, this = the near-dup
-    candidate index): stage the corpus as 4 arrival files, run a
-    Structured Streaming job (file source, maxFilesPerTrigger=1,
-    availableNow) whose foreachBatch computes each arriving document's
-    MinHash signature and appends its (band, bv, doc_id, ep) band
-    rows under the band partitioning — immutable per-batch segments,
-    the same LSM model as the other two.
+    candidate index): replay the corpus as 4 arrivals whose
+    foreachBatch computes each arriving document's MinHash signature
+    and appends its (band, bv, doc_id, ep) band rows under the band
+    partitioning — immutable per-batch segments, the same LSM model as
+    the other two.
 
     Signatures depend ONLY on the document's own text (min over its
     shingle hashes), so per-batch computation trivially equals the
@@ -878,11 +706,6 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
     the index carries arrival order in a form any engine can
     recompute.
     """
-    import json
-
-    from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.sources import derived
-
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     key = hashlib.md5(
         f"lshband-stream-v1|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}"
@@ -890,18 +713,10 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
     path = derived.derived_path("lsh_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
-        schema = d.schema
 
         def build(tmp: str) -> None:
             os.makedirs(tmp, exist_ok=True)
-            stage = os.path.join(tmp, "stage")
-            sp = hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS
-            for i in range(_Q262_SPLITS):
-                (d.filter(sp == i).repartition(1)
-                 .write.mode("append").parquet(stage))
-
             band_dir = os.path.join(tmp, "bands")
-            counts: list[int] = []
 
             def assign(batch: DataFrame, batch_id: int) -> None:
                 # per-batch signature: one shingle pass + one
@@ -910,40 +725,23 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
                 sh = dedup.doc_shingles(
                     ensure_min_partitions(batch), distinct=False)
                 bl = dedup.lsh_bands(dedup.minhash_signatures(sh))
-                ep = (hash_bps(F.col("doc_id"), "q262")
-                      % _Q262_SPLITS).cast("int")
-                (bl.withColumn("ep", ep)
+                (bl.withColumn("ep", _arrival_epoch())
                  .write.mode("append").partitionBy("band")
                  .parquet(band_dir))
-                counts.append(1)
 
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-                .writeStream.foreachBatch(assign)
-                .option("checkpointLocation", os.path.join(tmp, "chk"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            n = replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
+                                tmp, assign)
             with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_batches": len(counts),
+                json.dump({"n_batches": n,
                            "bands": dedup.BANDS, "k": dedup.K}, f)
 
         derived.build_atomic(path, build)
     return path
 
 
-def _q262_oracle() -> str:
-    from tidb_gateway_spark.queries.llm_extended import _Q72_ORACLE
-
-    return _Q72_ORACLE
-
-
 @register(
     "q262_streaming_lsh_band_index",
-    None,  # assembled below from q72's oracle (import-order safe)
+    _Q72_ORACLE,
     doc="Streaming MinHash-LSH band-index maintenance — the near-dup "
         "candidate index as the third streaming-index family member "
         "(q244 inverted text, q254 IVF ANN): foreachBatch computes "
@@ -973,22 +771,9 @@ def _q263_oracle() -> str:
     same md5-bps hash the staging split uses, flag = shares a band
     bucket with a strictly earlier arrival ((ep, doc_id) lexicographic
     — first occurrence wins)."""
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS,
-        _DDB_SHINGLES,
-        _DDB_SIGS,
-        _ddb_hex_to_int,
-    )
-
-    ep = ("(" + _ddb_hex_to_int(
-        "md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
-        + f" % 10000) % {_Q262_SPLITS}")
     return (
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-        f"e AS (SELECT doc_id, CAST({ep} AS INT) AS ep FROM documents), "
-        "be AS (SELECT b.doc_id, b.band, b.bv, e.ep FROM bands b "
-        "JOIN e USING (doc_id)), "
-        "fl AS (SELECT DISTINCT y.doc_id FROM be x JOIN be y "
+        _DDB_EPOCH_BANDS
+        + "fl AS (SELECT DISTINCT y.doc_id FROM be x JOIN be y "
         "ON x.band = y.band AND x.bv = y.bv AND "
         "(x.ep < y.ep OR (x.ep = y.ep AND x.doc_id < y.doc_id))), "
         "n AS (SELECT ep, CAST(COUNT(*) AS BIGINT) AS n_docs "
@@ -1004,7 +789,7 @@ def _q263_oracle() -> str:
 
 @register(
     "q263_incremental_neardup_on_arrival",
-    None,  # assembled below (imports q72's oracle fragments)
+    _q263_oracle(),
     doc="Ingest-time incremental near-dup detection — the operation a "
         "continuously-ingesting curation pipeline actually runs "
         "against q262's stream-maintained LSH index: for each arrival "
@@ -1023,8 +808,6 @@ def _q263_oracle() -> str:
     tags=("llm", "dedup", "minhash", "streaming", "governance"),
 )
 def q263(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators.sampling import hash_bps
-
     path = _q262_index(spark, sf_dir)
     bl = spark.read.parquet(os.path.join(path, "bands"))
     x, y = bl.alias("x"), bl.alias("y")
@@ -1047,8 +830,7 @@ def q263(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load_table(spark, sf_dir, "documents")
     arrivals = (
-        d.select((hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS)
-                 .cast("int").alias("ep"))
+        d.select(_arrival_epoch().alias("ep"))
         .groupBy("ep")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -1069,19 +851,13 @@ def q263(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Assemble the oracles that reuse q72's certified SQL fragments (the
-# QuerySpec is frozen — swap via dataclasses.replace, the q234 way).
-import dataclasses as _dc  # noqa: E402
-
-from tidb_gateway_spark.queries.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["q262_streaming_lsh_band_index"] = _dc.replace(
-    _REG["q262_streaming_lsh_band_index"], oracle=_q262_oracle())
-_REG["q263_incremental_neardup_on_arrival"] = _dc.replace(
-    _REG["q263_incremental_neardup_on_arrival"], oracle=_q263_oracle())
-
-
 # ---------------------------------------------------------------- Q265
+# admitted band rows; the explicit schema fixes bvp's type (partition
+# type INFERENCE over bvp dirs crashes under ANSI when digit-only early
+# state later meets a hex-letter value: 'a' -> BIGINT cast)
+_ADM_SCHEMA = "doc_id long, bv string, ep int, band int, bvp string"
+
+
 def _q265_gate(spark: SparkSession, sf_dir: str,
                fold_every: int | None = None) -> str:
     """Build (once per fixture) the STREAMING DEDUP GATE state — the
@@ -1100,9 +876,8 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
     admitted, which is why q265's quarantine count is a lower bound of
     q263's flag count (pinned by test).
 
-    Arrival order: the file source lists oldest-mtime-first and the
-    staging writes splits in epoch order, so epochs arrive 0,1,2,3;
-    each batch's epoch is recomputed from its rows and asserted
+    Arrival order: ``replay_arrivals`` delivers epochs 0,1,2,3 in
+    order; each batch's epoch is recomputed from its rows and asserted
     monotonic (a reordering would silently change gate semantics).
 
     Scale notes (100 TB): the admitted index is partitioned by
@@ -1115,24 +890,16 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
     fraction of the index).  Everything exchanged is band rows
     (digests + ids), never text.
 
-    ``fold_every`` (q267): when set, the admitted index is an LSM
-    tree behind ONE {base_gen, delta_epoch} manifest — per-batch
-    appends land in the live delta epoch, and every Nth batch the
-    base generation and the delta pile are folded into the next base
-    generation (rewritten ONE file per (band, bvp) leaf) before a
-    single atomic manifest replace flips both pointers; superseded
-    directories are GC'd only after the flip.  The flat form
-    (fold_every=None, q265) appends one file per (band, bvp) dir per
-    batch FOREVER — the listing/footer cost a continuously-running
+    ``fold_every`` (q267): when set, the admitted index lives in the
+    LSM generation store — per-batch appends land in the live delta
+    epoch, and every Nth batch ``derived.lsm_fold`` rewrites base ∪
+    delta as the next base generation (ONE file per (band, bvp) leaf)
+    before a single manifest replace flips both pointers.  The flat
+    form (fold_every=None, q265) appends one file per (band, bvp) dir
+    per batch FOREVER — the listing/footer cost a continuously-running
     gate accumulates linearly, which is exactly what the fold
     amortizes away (q259/q260's model applied to band segments).
     """
-    import json
-    import shutil
-
-    from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.sources import derived
-
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     if fold_every is None:
         key = hashlib.md5(
@@ -1146,96 +913,30 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
         path = derived.derived_path("lsh_gate_lsm", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
-        schema = d.schema
 
         def build(tmp: str) -> None:
-            from tidb_gateway_spark.operators.partitioning import (
-                session_parallelism,
-            )
-
             os.makedirs(tmp, exist_ok=True)
-            stage = os.path.join(tmp, "stage")
-            sp = hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS
-            # epoch order = write order = the file source's
-            # oldest-mtime-first listing order
-            for i in range(_Q262_SPLITS):
-                (d.filter(sp == i).repartition(1)
-                 .write.mode("append").parquet(stage))
-
             adm_dir = os.path.join(tmp, "admitted_bands")
             quar_dir = os.path.join(tmp, "quarantine")
             stats = {"epochs_seen": [], "admitted": [], "quarantined": [],
                      "n_folds": 0}
             if fold_every is not None:
-                derived.write_manifest(
-                    tmp, {"base_gen": 0, "delta_epoch": 1})
+                derived.lsm_init(tmp)
 
-            def _gen_root(k: int) -> str:
-                return os.path.join(tmp, "base", f"gen-{k:06d}")
-
-            def _epoch_root(e: int) -> str:
-                return os.path.join(tmp, "delta", f"epoch-{e:06d}")
-
-            _ADM_SCHEMA = ("doc_id long, bv string, ep int, "
-                           "band int, bvp string")
-
-            def _adm_roots() -> list[str]:
-                """Admitted-index roots the probe serves from.  Flat
-                mode: the single append dir.  LSM mode: resolved
-                THROUGH the manifest — current base generation plus
-                the live delta epoch; a half-written next generation
-                left by a crashed fold is unreachable."""
-                if fold_every is None:
-                    return [adm_dir]
-                st = derived.read_manifest(tmp)
-                roots = []
-                if st["base_gen"]:
-                    roots.append(_gen_root(st["base_gen"]))
-                ep_root = _epoch_root(st["delta_epoch"])
-                if os.path.exists(ep_root):
-                    roots.append(ep_root)
-                return roots
-
-            def _read_adm(roots: list[str], bvps: list[str]) -> DataFrame:
-                # explicit schema per root: partition-column TYPE
-                # INFERENCE over bvp dirs crashes under ANSI when
-                # digit-only early state later meets a hex-letter
-                # value ('a' -> BIGINT cast); per-root reads because
-                # multiple partitioned roots in one read raise
-                # CONFLICTING_DIRECTORY_STRUCTURES
-                parts = [
-                    spark.read.schema(_ADM_SCHEMA).parquet(r)
-                    .filter(F.col("bvp").isin(bvps))
-                    for r in roots
-                ]
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionByName(p)
-                return out
-
-            # BUILD-SCOPED shuffle sizing: the gate runs ~6 shuffling
-            # jobs per micro-batch; under an externally-owned session's
-            # default 200 shuffle partitions that is ~5000 tiny tasks
-            # of pure scheduling overhead (measured 23 s vs 6 s at
-            # sf0.01).  Sized to the session's parallelism for the
-            # build only, restored after.
-            old_sp = None
-            try:
-                old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(session_parallelism(spark)))
-            except Exception:
-                old_sp = None
+            def fold(roots: list[str], nxt: str) -> None:
+                # one exchange on the partition key -> ONE file per
+                # (band, bvp) leaf of the next base generation
+                (derived.read_roots(spark, roots, _ADM_SCHEMA)
+                 .repartition("band", "bvp")
+                 .write.mode("overwrite")
+                 .partitionBy("band", "bvp").parquet(nxt))
 
             def gate(batch: DataFrame, batch_id: int) -> None:
                 sh = dedup.doc_shingles(
                     ensure_min_partitions(batch), distinct=False)
-                ep_col = (hash_bps(F.col("doc_id"), "q262")
-                          % _Q262_SPLITS).cast("int")
                 bl = (
                     dedup.lsh_bands(dedup.minhash_signatures(sh))
-                    .withColumn("ep", ep_col)
+                    .withColumn("ep", _arrival_epoch())
                     .withColumn("bvp", F.substring("bv", -1, 1))
                     .persist()
                 )
@@ -1257,7 +958,10 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
                     if has_index:
                         bvps = [r["bvp"] for r in
                                 bl.select("bvp").distinct().collect()]
-                        adm = (_read_adm(_adm_roots(), bvps)
+                        roots = ([adm_dir] if fold_every is None
+                                 else derived.lsm_live_roots(tmp))
+                        adm = (derived.read_roots(spark, roots, _ADM_SCHEMA)
+                               .filter(F.col("bvp").isin(bvps))
                                .select(F.col("band").alias("aband"),
                                        F.col("bv").alias("abv")))
                         flagged = (
@@ -1296,11 +1000,8 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
                     # (band, bvp) dir per batch; the unpartitioned
                     # write emitted tasks x dirs tiny files, which the
                     # serve path pays in listing/footer reads
-                    if fold_every is None:
-                        dest = adm_dir
-                    else:
-                        st0 = derived.read_manifest(tmp)
-                        dest = _epoch_root(st0["delta_epoch"])
+                    dest = (adm_dir if fold_every is None
+                            else derived.lsm_delta_root(tmp))
                     (admitted_rows.repartition("band", "bvp")
                      .write.mode("append")
                      .partitionBy("band", "bvp").parquet(dest))
@@ -1311,52 +1012,14 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
                     if (fold_every is not None
                             and len(stats["epochs_seen"]) % fold_every
                             == 0):
-                        # scheduled fold (q259/q260's LSM step on band
-                        # segments): next base generation := base ∪
-                        # delta, rewritten ONE file per (band, bvp)
-                        # leaf, WRITTEN IN FULL before the manifest
-                        # flips {base_gen, delta_epoch} together; GC
-                        # only after the flip — a crash anywhere
-                        # mid-fold leaves readers on old base + the
-                        # whole delta pile (consistent)
-                        st0 = derived.read_manifest(tmp)
-                        k, e = st0["base_gen"], st0["delta_epoch"]
-                        roots = ([_gen_root(k)] if k else []) + (
-                            [_epoch_root(e)]
-                            if os.path.exists(_epoch_root(e)) else [])
-                        folded = _read_adm(roots, list("0123456789abcdef"))
-                        (folded.repartition("band", "bvp")
-                         .write.mode("overwrite")
-                         .partitionBy("band", "bvp")
-                         .parquet(_gen_root(k + 1)))
-                        derived.write_manifest(
-                            tmp, {"base_gen": k + 1, "delta_epoch": e + 1})
-                        if k:
-                            shutil.rmtree(_gen_root(k), ignore_errors=True)
-                        shutil.rmtree(_epoch_root(e), ignore_errors=True)
+                        derived.lsm_fold(tmp, fold)
                         stats["n_folds"] += 1
                 finally:
                     bl.unpersist()
 
-            try:
-                q = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(stage)
-                    .writeStream.foreachBatch(gate)
-                    .option("checkpointLocation",
-                            os.path.join(tmp, "chk"))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                if old_sp is not None:
-                    try:
-                        spark.conf.set(
-                            "spark.sql.shuffle.partitions", old_sp)
-                    except Exception:
-                        pass
+            with build_shuffle_partitions(spark):
+                replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
+                                tmp, gate)
             with open(os.path.join(tmp, "meta.json"), "w") as f:
                 json.dump(stats, f)
 
@@ -1364,20 +1027,10 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
     return path
 
 
-def _q265_oracle() -> str:
-    """Unrolled sequential-admission recompute from raw text: epoch k's
-    quarantine = docs sharing a band bucket with the UNION of epochs
-    < k's admitted sets (first epoch admits everything)."""
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS,
-        _DDB_SHINGLES,
-        _DDB_SIGS,
-        _ddb_hex_to_int,
-    )
-
-    ep = ("(" + _ddb_hex_to_int(
-        "md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
-        + f" % 10000) % {_Q262_SPLITS}")
+def _ddb_admission_chain() -> str:
+    """Unrolled sequential admission (after ``_DDB_EPOCH_BANDS``): a0 =
+    epoch 0; f<k> = epoch-k docs sharing a band bucket with the UNION
+    of a0..a<k-1>; a<k> = the rest of epoch k."""
     chain = ["a0 AS (SELECT doc_id FROM e WHERE ep = 0)"]
     adm_terms = ["SELECT doc_id FROM a0"]
     for k in range(1, _Q262_SPLITS):
@@ -1390,16 +1043,19 @@ def _q265_oracle() -> str:
             f"a{k} AS (SELECT doc_id FROM e WHERE ep = {k} "
             f"AND doc_id NOT IN (SELECT doc_id FROM f{k}))")
         adm_terms.append(f"SELECT doc_id FROM a{k}")
+    return ", ".join(chain) + ", "
+
+
+def _q265_oracle() -> str:
+    """Unrolled sequential-admission recompute from raw text: epoch k's
+    quarantine = docs sharing a band bucket with the UNION of epochs
+    < k's admitted sets (first epoch admits everything)."""
     adm_union = " UNION ALL ".join(
         f"SELECT doc_id, {k} AS ep FROM a{k}"
         for k in range(_Q262_SPLITS))
     return (
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-        f"e AS (SELECT doc_id, CAST({ep} AS INT) AS ep FROM documents), "
-        "be AS (SELECT b.doc_id, b.band, b.bv, e.ep FROM bands b "
-        "JOIN e USING (doc_id)), "
-        + ", ".join(chain) + ", "
-        f"adm AS ({adm_union}) "
+        _DDB_EPOCH_BANDS + _ddb_admission_chain()
+        + f"adm AS ({adm_union}) "
         "SELECT e.ep, CAST(COUNT(*) AS BIGINT) AS n_arrived, "
         "CAST(SUM(CASE WHEN adm.doc_id IS NULL THEN 0 ELSE 1 END) "
         "AS BIGINT) AS n_admitted, "
@@ -1412,33 +1068,13 @@ def _q265_oracle() -> str:
     )
 
 
-@register(
-    "q265_streaming_dedup_gate",
-    None,  # assembled below (imports q72's oracle fragments)
-    doc="Streaming dedup GATE — ingest-time quarantine, the apply "
-        "member of the q262/q263 family and the operation a production "
-        "pipeline runs BEFORE data enters the corpus: each arriving "
-        "epoch is probed against the index of previously ADMITTED "
-        "documents (band-bucket match ⇒ quarantine; admitted docs' "
-        "band rows join the index — so the decision basis is itself "
-        "gated, making the operator inherently sequential).  The "
-        "declared query reports per-epoch arrivals, admissions, "
-        "quarantines and an admitted-id checksum from the gate's "
-        "persisted state; the oracle recomputes the whole sequential "
-        "admission by an unrolled epoch chain from raw text — the "
-        "value-hash certifies every admit/quarantine decision.  "
-        "Probe reads are bounded by (band, bvp) partition pruning "
-        "(batch's ≤48 bucket keys collected driver-side); all "
-        "exchanges carry band rows (digests+ids), never text.",
-    tags=("llm", "dedup", "minhash", "streaming", "governance"),
-)
-def q265(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators.sampling import hash_bps
-
-    path = _q265_gate(spark, sf_dir)
+def _gate_report(spark: SparkSession, sf_dir: str, path: str,
+                 admitted: DataFrame) -> DataFrame:
+    """Per-epoch arrivals, admissions, quarantines and admitted-id
+    checksum of the gate built at ``path``, whose admitted band rows
+    are ``admitted`` (q265 flat, q267 through the LSM store)."""
     adm = (
-        spark.read.parquet(os.path.join(path, "admitted_bands"))
-        .select("doc_id", "ep").distinct()
+        admitted.select("doc_id", "ep").distinct()
         .groupBy("ep")
         .agg(
             F.count("*").alias("n_admitted"),
@@ -1453,8 +1089,7 @@ def q265(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load_table(spark, sf_dir, "documents")
     arrivals = (
-        d.select((hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS)
-                 .cast("int").alias("ep"))
+        d.select(_arrival_epoch().alias("ep"))
         .groupBy("ep")
         .agg(F.count("*").alias("n_arrived"))
     )
@@ -1474,8 +1109,31 @@ def q265(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["q265_streaming_dedup_gate"] = _dc.replace(
-    _REG["q265_streaming_dedup_gate"], oracle=_q265_oracle())
+@register(
+    "q265_streaming_dedup_gate",
+    _q265_oracle(),
+    doc="Streaming dedup GATE — ingest-time quarantine, the apply "
+        "member of the q262/q263 family and the operation a production "
+        "pipeline runs BEFORE data enters the corpus: each arriving "
+        "epoch is probed against the index of previously ADMITTED "
+        "documents (band-bucket match ⇒ quarantine; admitted docs' "
+        "band rows join the index — so the decision basis is itself "
+        "gated, making the operator inherently sequential).  The "
+        "declared query reports per-epoch arrivals, admissions, "
+        "quarantines and an admitted-id checksum from the gate's "
+        "persisted state; the oracle recomputes the whole sequential "
+        "admission by an unrolled epoch chain from raw text — the "
+        "value-hash certifies every admit/quarantine decision.  "
+        "Probe reads are bounded by (band, bvp) partition pruning "
+        "(batch's ≤48 bucket keys collected driver-side); all "
+        "exchanges carry band rows (digests+ids), never text.",
+    tags=("llm", "dedup", "minhash", "streaming", "governance"),
+)
+def q265(spark: SparkSession, sf_dir: str) -> DataFrame:
+    path = _q265_gate(spark, sf_dir)
+    return _gate_report(
+        spark, sf_dir, path,
+        spark.read.parquet(os.path.join(path, "admitted_bands")))
 
 
 # ---------------------------------------------------------------- Q266
@@ -1485,40 +1143,14 @@ def _q266_oracle() -> str:
     VERIFIED when some admitted doc from a strictly earlier epoch that
     shares a band bucket has exact Jaccard >= 0.5 (the integer form
     2i >= |a|+|b|-i, bit-identical cross-engine)."""
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS,
-        _DDB_SHINGLES,
-        _DDB_SIGS,
-        _ddb_hex_to_int,
-    )
-
-    ep = ("(" + _ddb_hex_to_int(
-        "md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
-        + f" % 10000) % {_Q262_SPLITS}")
-    chain = ["a0 AS (SELECT doc_id FROM e WHERE ep = 0)"]
-    adm_terms = ["SELECT doc_id FROM a0"]
-    for k in range(1, _Q262_SPLITS):
-        prev = " UNION ALL ".join(adm_terms)
-        chain.append(
-            f"f{k} AS (SELECT DISTINCT y.doc_id FROM be x JOIN be y "
-            f"ON x.band = y.band AND x.bv = y.bv "
-            f"AND x.doc_id IN ({prev}) AND y.ep = {k})")
-        chain.append(
-            f"a{k} AS (SELECT doc_id FROM e WHERE ep = {k} "
-            f"AND doc_id NOT IN (SELECT doc_id FROM f{k}))")
-        adm_terms.append(f"SELECT doc_id FROM a{k}")
     adm_union = " UNION ALL ".join(
         f"SELECT doc_id FROM a{k}" for k in range(_Q262_SPLITS))
     quar_union = " UNION ALL ".join(
         f"SELECT doc_id, {k} AS ep FROM f{k}"
         for k in range(1, _Q262_SPLITS))
     return (
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-        f"e AS (SELECT doc_id, CAST({ep} AS INT) AS ep FROM documents), "
-        "be AS (SELECT b.doc_id, b.band, b.bv, e.ep FROM bands b "
-        "JOIN e USING (doc_id)), "
-        + ", ".join(chain) + ", "
-        f"admset AS ({adm_union}), quar AS ({quar_union}), "
+        _DDB_EPOCH_BANDS + _ddb_admission_chain()
+        + f"admset AS ({adm_union}), quar AS ({quar_union}), "
         # candidates: quarantined y vs admitted x from strictly
         # earlier epochs sharing a band bucket — exactly the matches
         # the gate acted on
@@ -1551,7 +1183,7 @@ def _q266_oracle() -> str:
 
 @register(
     "q266_gate_precision_audit",
-    None,  # assembled below
+    _q266_oracle(),
     doc="Gate PRECISION audit — the governance closing piece of the "
         "q262/q263/q265 family: every quarantine decision the "
         "streaming gate made is re-examined by EXACT shingle-set "
@@ -1571,12 +1203,9 @@ def _q266_oracle() -> str:
     tags=("llm", "dedup", "minhash", "streaming", "governance"),
 )
 def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators.sampling import hash_bps
-
     path = _q265_gate(spark, sf_dir)
     adm = (
-        spark.read
-        .schema("doc_id long, bv string, ep int, band int, bvp string")
+        spark.read.schema(_ADM_SCHEMA)
         .parquet(os.path.join(path, "admitted_bands"))
         .select(F.col("band").alias("aband"), F.col("bv").alias("abv"),
                 F.col("doc_id").alias("a"), F.col("ep").alias("epa"))
@@ -1631,11 +1260,7 @@ def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce("v", F.lit(0))).alias("n_v"),
         )
     )
-    eps = (
-        d.select((hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS)
-                 .cast("int").alias("ep"))
-        .distinct()
-    )
+    eps = d.select(_arrival_epoch().alias("ep")).distinct()
     return (
         eps.join(perq, eps.ep == perq.epb, "left")
         .select(
@@ -1652,35 +1277,13 @@ def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["q266_gate_precision_audit"] = _dc.replace(
-    _REG["q266_gate_precision_audit"], oracle=_q266_oracle())
-
-
 # ---------------------------------------------------------------- Q267
 _Q267_FOLD_EVERY = 3
 
 
-def _q267_live_roots(path: str) -> list[str]:
-    """Admitted-index roots of the FOLDED gate, resolved THROUGH the
-    manifest: current base generation (if any fold ran) plus the live
-    delta epoch.  A half-written next generation left by a crashed
-    fold is not named by the manifest and therefore unreachable."""
-    from tidb_gateway_spark.sources import derived
-
-    st = derived.read_manifest(path)
-    roots: list[str] = []
-    if st["base_gen"]:
-        roots.append(
-            os.path.join(path, "base", f"gen-{st['base_gen']:06d}"))
-    ep = os.path.join(path, "delta", f"epoch-{st['delta_epoch']:06d}")
-    if os.path.exists(ep):
-        roots.append(ep)
-    return roots
-
-
 @register(
     "q267_streaming_gate_lsm_fold",
-    None,  # q265's unrolled sequential-admission oracle, bound below
+    _q265_oracle(),
     doc="Streaming dedup gate WITH the LSM fold — the composition "
         "that completes the gate family (VERDICT r11 directive 2): "
         "q265's flat form appends one file per (band, bvp) dir per "
@@ -1706,57 +1309,11 @@ def _q267_live_roots(path: str) -> list[str]:
           "layout"),
 )
 def q267(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators.sampling import hash_bps
-
     path = _q265_gate(spark, sf_dir, fold_every=_Q267_FOLD_EVERY)
-    roots = _q267_live_roots(path)
-    parts = [
-        spark.read.schema("doc_id long, bv string, ep int, "
-                          "band int, bvp string").parquet(r)
-        for r in roots
-    ]
-    rows = parts[0]
-    for p in parts[1:]:
-        rows = rows.unionByName(p)
-    adm = (
-        rows.select("doc_id", "ep").distinct()
-        .groupBy("ep")
-        .agg(
-            F.count("*").alias("n_admitted"),
-            F.sum("doc_id").alias("admitted_idsum"),
-        )
-    )
-    quar = (
-        spark.read.schema("doc_id long, ep int")
-        .parquet(os.path.join(path, "quarantine"))
-        .groupBy("ep")
-        .agg(F.count("*").alias("n_quarantined"))
-    )
-    d = load_table(spark, sf_dir, "documents")
-    arrivals = (
-        d.select((hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS)
-                 .cast("int").alias("ep"))
-        .groupBy("ep")
-        .agg(F.count("*").alias("n_arrived"))
-    )
-    return (
-        arrivals.join(adm, "ep", "left").join(quar, "ep", "left")
-        .select(
-            "ep",
-            F.col("n_arrived").cast("bigint").alias("n_arrived"),
-            F.coalesce("n_admitted", F.lit(0)).cast("bigint")
-            .alias("n_admitted"),
-            F.coalesce("n_quarantined", F.lit(0)).cast("bigint")
-            .alias("n_quarantined"),
-            F.coalesce("admitted_idsum", F.lit(0)).cast("bigint")
-            .alias("admitted_idsum"),
-        )
-        .orderBy("ep")
-    )
-
-
-_REG["q267_streaming_gate_lsm_fold"] = _dc.replace(
-    _REG["q267_streaming_gate_lsm_fold"], oracle=_q265_oracle())
+    return _gate_report(
+        spark, sf_dir, path,
+        derived.read_roots(spark, derived.lsm_live_roots(path),
+                           _ADM_SCHEMA))
 
 
 # ---------------------------------------------------------------- Q268
@@ -1787,17 +1344,6 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
     q259/q267 manifest machinery when segment counts matter (not
     composed here — q267 certifies that composition for the family).
     """
-    import json
-
-    from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.queries.pipeline_audit import (
-        _Q261_GRAMS_SQL,
-        _q261_wl,
-    )
-    from tidb_gateway_spark.sources import derived
-
-    del _q261_wl  # batch frames are built inline from the stream batch
-
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     key = hashlib.md5(
         f"gramidx-stream-v1|{src}|{_Q262_SPLITS}".encode()
@@ -1805,50 +1351,23 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
     path = derived.derived_path("gram_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
-        schema = d.schema
 
         def build(tmp: str) -> None:
-            from tidb_gateway_spark.operators.partitioning import (
-                session_parallelism,
-            )
-
             os.makedirs(tmp, exist_ok=True)
-            stage = os.path.join(tmp, "stage")
-            sp = hash_bps(F.col("doc_id"), "q262") % _Q262_SPLITS
-            for i in range(_Q262_SPLITS):
-                (d.filter(sp == i).repartition(1)
-                 .write.mode("append").parquet(stage))
-
             idx_dir = os.path.join(tmp, "grams")
             hits_dir = os.path.join(tmp, "hits")
             stats = {"epochs_seen": [], "n_grams": [], "n_hits": []}
 
-            old_sp = None
-            try:
-                old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(session_parallelism(spark)))
-            except Exception:
-                old_sp = None
-
             def ingest(batch: DataFrame, batch_id: int) -> None:
-                t = F.trim(F.col("text"))
                 wl = ensure_min_partitions(batch).select(
-                    "doc_id",
-                    F.when(t != "", F.split(t, " +"))
-                    .otherwise(F.expr("CAST(array() AS array<string>)"))
-                    .alias("wlist"),
-                )
-                ep_col = (hash_bps(F.col("doc_id"), "q262")
-                          % _Q262_SPLITS).cast("int")
+                    "doc_id", word_list())
                 g = (
                     wl.select(
                         "doc_id",
                         F.posexplode(F.expr(_Q261_GRAMS_SQL))
                         .alias("pos", "gh"),
                     )
-                    .withColumn("ep", ep_col)
+                    .withColumn("ep", _arrival_epoch())
                     .persist()
                 )
                 try:
@@ -1890,25 +1409,9 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
                 finally:
                     g.unpersist()
 
-            try:
-                q = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(stage)
-                    .writeStream.foreachBatch(ingest)
-                    .option("checkpointLocation",
-                            os.path.join(tmp, "chk"))
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-            finally:
-                if old_sp is not None:
-                    try:
-                        spark.conf.set(
-                            "spark.sql.shuffle.partitions", old_sp)
-                    except Exception:
-                        pass
+            with build_shuffle_partitions(spark):
+                replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
+                                tmp, ingest)
             with open(os.path.join(tmp, "meta.json"), "w") as f:
                 json.dump(stats, f)
 
@@ -1921,18 +1424,12 @@ def _q268_oracle() -> str:
     start in epoch k is a hit iff the same digest occurs in ANY
     strictly earlier epoch — one EXISTS join, no unrolling (the index
     is append-only; decisions never feed back)."""
-    from tidb_gateway_spark.queries.llm_extended import _ddb_hex_to_int
-    from tidb_gateway_spark.queries.pipeline_audit import _Q261_K
-
-    ep = ("(" + _ddb_hex_to_int(
-        "md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
-        + f" % 10000) % {_Q262_SPLITS}")
     return (
         "WITH wl AS (SELECT doc_id, "
         "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
         "FROM documents), "
         "e AS (SELECT doc_id, "
-        f"CAST({ep} AS INT) AS ep FROM documents), "
+        f"CAST({_DDB_ARRIVAL_EPOCH} AS INT) AS ep FROM documents), "
         "g AS (SELECT doc_id, CAST(u.i AS INT) AS pos, "
         "substr(md5(array_to_string("
         f"wl[CAST(u.i + 1 AS INT):CAST(u.i + {_Q261_K} AS INT)], ' ')), "
@@ -1962,7 +1459,7 @@ def _q268_oracle() -> str:
 
 @register(
     "q268_streaming_substring_dup_on_arrival",
-    None,  # assembled below (imports q261/q72 oracle fragments)
+    _q268_oracle(),
     doc="Streaming exact-substring dup-on-arrival — q261's semantics "
         "as an ingest-time operator and the fourth streaming-index "
         "family member (q244 inverted text, q254 IVF, q262 LSH bands, "
@@ -1982,20 +1479,9 @@ def _q268_oracle() -> str:
     tags=("llm", "dedup", "governance", "text", "streaming"),
 )
 def q268(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators.sampling import hash_bps
-    from tidb_gateway_spark.queries.pipeline_audit import _Q261_K
-
     path = _q268_index(spark, sf_dir)
-    d = load_table(spark, sf_dir, "documents")
-    t = F.trim(F.col("text"))
-    wl = d.select(
-        "doc_id",
-        F.when(t != "", F.split(t, " +"))
-        .otherwise(F.expr("CAST(array() AS array<string>)"))
-        .alias("wlist"),
-    )
-    ep_col = (hash_bps(F.col("doc_id"), "q262")
-              % _Q262_SPLITS).cast("int")
+    wl = load_table(spark, sf_dir, "documents").select(
+        "doc_id", word_list())
     # gram COUNT is pure arithmetic — never evaluate the digests just
     # to size them
     ng = F.when(
@@ -2004,7 +1490,7 @@ def q268(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(0))
     totals = (
         wl.select("doc_id", ng.alias("ng"))
-        .withColumn("ep", ep_col)
+        .withColumn("ep", _arrival_epoch())
         .groupBy("ep")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -2037,8 +1523,3 @@ def q268(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("ep")
     )
-
-
-_REG["q268_streaming_substring_dup_on_arrival"] = _dc.replace(
-    _REG["q268_streaming_substring_dup_on_arrival"],
-    oracle=_q268_oracle())

@@ -11,16 +11,71 @@ The reference carries streams only as opaque byte relays
 (/root/reference/gateway/relay.go:12-99); event-time semantics,
 watermarks and state stores are engine-side capability this rebuild adds.
 
-Scale notes: all jobs are keyed-state operators — state is partitioned
-by group key across executors; watermarks bound state size (without one,
-a session/dedup state store grows forever at 100 TB/day ingest).
+:func:`replay_arrivals` is the write-path harness of the streaming
+index builders (queries/streaming_retrieval.py): it replays a fixture
+as a file stream of arrival units and hands each micro-batch to a
+``foreachBatch`` callback.
+
+Scale notes: the event jobs are keyed-state operators — state is
+partitioned by group key across executors; watermarks bound state size
+(without one, a session/dedup state store grows forever at 100 TB/day
+ingest).
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tidb_gateway_spark.operators.sampling import hash_bps
+
+
+def replay_arrivals(spark: SparkSession, frame: DataFrame, key_col: str,
+                    salt: str, splits: int, tmp: str,
+                    on_batch: Callable[[DataFrame, int], None]) -> int:
+    """Replay ``frame`` as ``splits`` arrivals through one file-source
+    stream and return the number of micro-batches that ran.
+
+    Staging: rows go to split ``hash_bps(key_col, salt) % splits``, and
+    each split is written as ONE file under ``tmp/stage``, in split
+    order.  That is simulation staging (a real stream's arrival units
+    are its source's), and the write order is a contract: the file
+    source lists oldest-modified first, so with ``maxFilesPerTrigger=1``
+    micro-batch i holds exactly split i.  The q265 gate's admission
+    decisions depend on that epoch order (it asserts it per batch).
+
+    The stream is read with ``frame``'s schema, runs ``on_batch(batch,
+    batch_id)`` per micro-batch with its checkpoint at ``tmp/chk``, and
+    drains with ``availableNow``.  ``on_batch`` runs on the driver, so
+    it may reference anything (the worker pickling rule does not
+    apply).
+    """
+    stage = os.path.join(tmp, "stage")
+    sp = hash_bps(F.col(key_col), salt) % splits
+    for i in range(splits):
+        (frame.filter(sp == i).repartition(1)
+         .write.mode("append").parquet(stage))
+    n_batches = 0
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        nonlocal n_batches
+        on_batch(batch, batch_id)
+        n_batches += 1
+
+    (spark.readStream.schema(frame.schema)
+     .option("maxFilesPerTrigger", 1)
+     .parquet(stage)
+     .writeStream.foreachBatch(run)
+     .option("checkpointLocation", os.path.join(tmp, "chk"))
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+    return n_batches
+
 
 def events_file_schema(spark: SparkSession, path: str) -> T.StructType:
     """Declared schema for the events file stream, taken from the actual
