@@ -39,17 +39,17 @@ SF_DIR = os.environ.get("Q267_SF_DIR", os.path.join(REPO, ".benchdata", "sf10"))
 def bounded_oracle() -> str:
     """Two-epoch admission replay (epoch 0 admits all; epoch 1
     quarantines on band-match vs epoch 0)."""
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS,
-        _DDB_SHINGLES,
-        _DDB_SIGS,
+    from tidb_gateway_spark.operators.dedup import (
+        DDB_BANDS,
+        DDB_SHINGLES,
+        DDB_SIGS,
     )
     from tidb_gateway_spark.queries.streaming_retrieval import (
         _DDB_ARRIVAL_EPOCH as ep,
     )
 
     return (
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+        f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
         f"e AS (SELECT doc_id, CAST({ep} AS INT) AS ep FROM documents "
         "WHERE " + ep + " < 2), "
         "be AS (SELECT b.doc_id, b.band, b.bv, e.ep FROM bands b "

@@ -5,8 +5,11 @@ operator behavior, and source/sink round-trips."""
 from __future__ import annotations
 
 import math
+import string
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -112,8 +115,8 @@ def test_lsh_band_rows_match_oracle(spark, sf_dir, ddb):
     """The (doc_id, band, bv) rows themselves — not only the candidate
     pairs they induce — equal the DuckDB oracle chain's: persisted band
     indexes (q262/q265/q267) are joined on these exact values."""
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS, _DDB_SHINGLES, _DDB_SIGS,
+    from tidb_gateway_spark.operators.dedup import (
+        DDB_BANDS, DDB_SHINGLES, DDB_SIGS,
     )
 
     d = load_table(spark, sf_dir, "documents")
@@ -121,9 +124,112 @@ def test_lsh_band_rows_match_oracle(spark, sf_dir, ddb):
         dedup.minhash_signatures(dedup.doc_shingles(d, distinct=False)))
     got = {(r["doc_id"], r["band"], r["bv"]) for r in bl.collect()}
     want = set(ddb.execute(
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS} "
+        f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS} "
         "SELECT doc_id, band, bv FROM bands").fetchall())
     assert got and got == want
+
+
+# ---- shared hash twins: each Spark form against its DuckDB text ----
+
+@given(
+    keys=st.lists(st.integers(min_value=-2**63, max_value=2**63 - 1),
+                  min_size=1, max_size=40),
+    salt=st.text(alphabet=string.ascii_letters + string.digits + "_",
+                 max_size=12),
+)
+@example(keys=[0, -1, 2**31 - 1, 2**31, -2**31 - 1, 2**63 - 1, -2**63],
+         salt="split")
+@settings(max_examples=25, deadline=None)
+def test_hash_bps_matches_ddb_twin(spark, ddb, keys, salt):
+    """sampling.hash_bps and ddb_hash_bps bucket every BIGINT key the
+    same way, for any salt: the registry's sampling oracles rest on it."""
+    from tidb_gateway_spark.operators.sampling import ddb_hash_bps, hash_bps
+
+    got = {
+        (r["k"], r["bps"])
+        for r in spark.createDataFrame([(k,) for k in keys], "k bigint")
+        .select("k", hash_bps(F.col("k"), salt).alias("bps")).collect()
+    }
+    want = set(ddb.execute(
+        f"SELECT k, {ddb_hash_bps('k', salt)} AS bps "
+        "FROM (SELECT UNNEST(CAST(? AS BIGINT[])) AS k)", [keys]).fetchall())
+    assert got == want
+
+
+def test_simhash_rows_match_ddb_twin(spark, sf_dir, ddb):
+    """The (doc_id, sh) SimHash signatures equal dedup.DDB_SIMHASH_SIGS's
+    rows, not only the aggregates q73/q114 declare."""
+    d = load_table(spark, sf_dir, "documents")
+    got = {(r["doc_id"], r["sh"])
+           for r in dedup.simhash(dedup.doc_word_sets(d)).collect()}
+    want = set(ddb.execute(
+        f"WITH {dedup.DDB_SIMHASH_SIGS} SELECT doc_id, sh FROM sh").fetchall())
+    assert got and got == want
+
+
+def test_cms_cells_match_ddb_twin(spark, sf_dir, ddb):
+    """Every (j, bucket, cnt) count-min cell equals sketch.ddb_cms_cells's,
+    not only the top-10 estimates q179 declares."""
+    from tidb_gateway_spark.operators import sketch
+
+    o = load_table(spark, sf_dir, "orders")
+    got = {(r["j"], r["bucket"], r["cnt"])
+           for r in sketch.cms_cells(o, F.col("o_custkey")).collect()}
+    want = set(ddb.execute(
+        sketch.ddb_cms_cells("orders", "o_custkey")).fetchall())
+    assert got and got == want
+
+
+def test_hash_twins_live_only_in_operators():
+    """Query modules assemble oracles from the operators' DuckDB twins:
+    no salted md5 is spelled by hand outside operators/, no query module
+    reaches into another one's private ``_DDB_*``/``_ddb_*`` SQL, and no
+    registered QuerySpec is patched with dataclasses.replace."""
+    import ast
+    import pathlib
+    import re
+
+    import tidb_gateway_spark
+
+    pkg = pathlib.Path(tidb_gateway_spark.__file__).parent
+    salted = re.compile(r"md5\('[^']*\|' \|\||F\.md5\(F\.concat\(F\.lit\(")
+    private = re.compile(r"^_(DDB|ddb)_")
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg).as_posix()
+        src = p.read_text()
+        if not rel.startswith("operators/"):
+            offenders += [f"{rel}:{i} salted md5"
+                          for i, line in enumerate(src.splitlines(), 1)
+                          if salted.search(line)]
+        if not rel.startswith("queries/"):
+            continue
+        tree = ast.parse(src)
+        # names bound to the dataclasses module or to dataclasses.replace
+        dc_mods = {a.asname or a.name for n in ast.walk(tree)
+                   if isinstance(n, ast.Import)
+                   for a in n.names if a.name == "dataclasses"}
+        dc_replace = {a.asname or a.name for n in ast.walk(tree)
+                      if isinstance(n, ast.ImportFrom)
+                      and n.module == "dataclasses"
+                      for a in n.names if a.name == "replace"}
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.ImportFrom)
+                    and (node.module or "").startswith(
+                        "tidb_gateway_spark.queries")):
+                offenders += [f"{rel}:{node.lineno} imports {a.name}"
+                              for a in node.names if private.match(a.name)]
+            if isinstance(node, ast.Attribute) and private.match(node.attr):
+                offenders.append(f"{rel}:{node.lineno} reads .{node.attr}")
+            if isinstance(node, ast.Call) and (
+                    (isinstance(node.func, ast.Name)
+                     and node.func.id in dc_replace)
+                    or (isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "replace"
+                        and isinstance(node.func.value, ast.Name)
+                        and node.func.value.id in dc_mods)):
+                offenders.append(f"{rel}:{node.lineno} dataclasses.replace")
+    assert offenders == []
 
 
 def test_lsh_ann_is_exact_within_bucket(spark, sf_dir):
@@ -1012,8 +1118,7 @@ def test_tracked_persist_lru_bounds_session_cache(spark):
         opcache._MAX_TRACKED, opcache._tracked = saved_max, saved
 
 
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
+from hypothesis import HealthCheck
 
 # ------------------------------------------------------------------
 # grouped_weighted_percentiles properties (VERDICT r13 directive 6:

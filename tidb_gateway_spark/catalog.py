@@ -36,11 +36,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor
-# (region=5 rows, nation=25 rows regardless of sf; supplier/part grow
-# slowly). Queries join these with an explicit broadcast hint.
-BROADCAST_TABLES = ("region", "nation", "supplier")
-
 # Ingest-time JSON shredding (sources/io.py:shred_json_column): JSON
 # string columns whose paths are parsed ONCE into typed columns and
 # served as a companion "<table>_shredded" view.  The gateway dialect
@@ -57,8 +52,6 @@ SHREDDED_JSON: dict[str, dict] = {
     },
 }
 SHREDDED_SUFFIX = "_shredded"
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Memoized DataFrames / view registrations.  spark.read.parquet costs a
 # driver-side footer read per call; with 70 queries × up to 10 tables that

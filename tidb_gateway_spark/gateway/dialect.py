@@ -370,7 +370,6 @@ _SHOW_COLUMNS_RE = re.compile(r"^\s*SHOW\s+(?:FULL\s+)?COLUMNS\s+FROM\s+`?(\w+)`
 _SHOW_CREATE_RE = re.compile(r"^\s*SHOW\s+CREATE\s+TABLE\s+`?(\w+)`?", re.IGNORECASE)
 _SYSVAR_SELECT_RE = re.compile(r"^\s*SELECT\s+[^()]*@@", re.IGNORECASE)
 _SYSVAR_TOKEN = re.compile(r"@@(?:session\.|global\.)?([A-Za-z_0-9]+)(?:\s+AS\s+`?([A-Za-z_0-9]+)`?)?", re.IGNORECASE)
-_PING_SELECT = re.compile(r"^\s*SELECT\s+1\s*$", re.IGNORECASE)
 
 
 _SQL_ESCAPES = {

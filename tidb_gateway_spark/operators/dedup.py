@@ -16,8 +16,10 @@ Tiers (all pure DataFrame transforms, no driver-side loops):
   :func:`near_dup_pairs` is the whole candidate→verify pipeline.
 
 Determinism: hashes are md5 hex strings (lexicographic min), reproducible
-in any engine — the DuckDB oracles in queries/llm_extended.py recompute
-identical signatures.
+in any engine.  The ``DDB_*`` strings at the end of this module are the
+DuckDB twins of the shingle, signature, band, verify and SimHash stages,
+built from the same constants; every registry oracle of this family is
+assembled from them.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.sampling import hex_int
 
 # The one MinHash-LSH operating point: SHINGLE_N-word shingles, K
 # single-digest slices per signature (K <= 6: 32 hex chars / 5 per
@@ -37,6 +40,11 @@ from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 SHINGLE_N = 3
 K = 6
 BANDS = 3
+ROWS = K // BANDS
+
+# The one SimHash width: SIMHASH_BITS hex digits of md5(word), one bit
+# each (at most 16, the two conv halves simhash folds them into).
+SIMHASH_BITS = 16
 
 
 def doc_word_sets(documents: DataFrame) -> DataFrame:
@@ -147,13 +155,12 @@ def lsh_bands(signatures: DataFrame) -> DataFrame:
     structs, so the signature pipeline is planned once for all bands
     (a per-band projection union pruned each branch to its own slices
     and re-planned the whole aggregate once per band)."""
-    rows = K // BANDS
     return signatures.select(
         "doc_id",
         F.inline(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
-                F.concat(*[F.col(f"h{b * rows + r}") for r in range(rows)])
+                F.concat(*[F.col(f"h{b * ROWS + r}") for r in range(ROWS)])
                 .alias("bv"),
             )
             for b in range(BANDS)
@@ -201,8 +208,9 @@ def near_dup_pairs(documents: DataFrame) -> DataFrame:
     )
 
 
-def simhash(words: DataFrame, bits: int = 16) -> DataFrame:
-    """(doc_id, sh) where sh is a {bits}-char '0'/'1' SimHash signature.
+def simhash(words: DataFrame) -> DataFrame:
+    """(doc_id, sh) where sh is a SIMHASH_BITS-char '0'/'1' SimHash
+    signature.
 
     Bit j is the sign of the sum over words of ±1 — +1 when hex digit j
     of md5(word) has its top bit set.  One groupBy shuffle.
@@ -213,23 +221,21 @@ def simhash(words: DataFrame, bits: int = 16) -> DataFrame:
     round-trip — with identical plan shape; the signature semantics
     (sign of per-bit sums) are unchanged.
 
-    Bit extraction is integer ops, not string ops: the first ``bits``
-    hex digits are folded into two longs with ``conv`` (once per word),
-    and each bit test is a codegen'd shift+mask — "hex digit j has its
-    top bit set" ⟺ ``(half >> 4*pos) & 15 >= 8``.  Byte-identical to
-    the previous per-digit substring/isin derivation (same md5 hex
-    chars), without ``bits`` substring evaluations per word.
+    Bit extraction is integer ops, not string ops: the first
+    SIMHASH_BITS hex digits are folded into two longs with ``conv``
+    (once per word), and each bit test is a codegen'd shift+mask — "hex
+    digit j has its top bit set" ⟺ ``(half >> 4*pos) & 15 >= 8``.
+    Byte-identical to the per-digit substring/isin derivation the
+    DuckDB twin (:data:`DDB_SIMHASH_BITS`) spells out.
     """
-    if bits > 16:
-        raise ValueError("simhash supports at most 16 bits (two conv halves)")
     h = F.md5("w")
     hashed = words.select(
         "doc_id",
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("_ha"),
-        F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("_hb"),
+        hex_int(h, 1, 8).alias("_ha"),
+        hex_int(h, 9, 8).alias("_hb"),
     )
     bit_aggs = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         half, off = ("_ha", 4 * (7 - j)) if j < 8 else ("_hb", 4 * (15 - j))
         digit = F.shiftright(F.col(half), off).bitwiseAND(F.lit(15))
         bit_aggs.append(
@@ -237,7 +243,8 @@ def simhash(words: DataFrame, bits: int = 16) -> DataFrame:
         )
     per_doc = hashed.groupBy("doc_id").agg(*bit_aggs)
     sig = F.concat(
-        *[F.when(F.col(f"b{j}") > 0, F.lit("1")).otherwise(F.lit("0")) for j in range(bits)]
+        *[F.when(F.col(f"b{j}") > 0, F.lit("1")).otherwise(F.lit("0"))
+          for j in range(SIMHASH_BITS)]
     )
     return per_doc.select("doc_id", sig.alias("sh"))
 
@@ -464,16 +471,16 @@ def keep_first(df: DataFrame, key, order_col: str) -> DataFrame:
     )
 
 
-def simhash_multiprobe_pairs(documents: DataFrame, bits: int = 16) -> DataFrame:
+def simhash_multiprobe_pairs(documents: DataFrame) -> DataFrame:
     """Near-dup pairs within Hamming distance ≤ 1 of their SimHash
     signatures, via multi-probe LSH: each document emits its signature
-    plus every 1-bit flip (bits+1 probes), and ``probe(a) == sig(b)``
+    plus every 1-bit flip (SIMHASH_BITS+1 probes), and ``probe(a) == sig(b)``
     holds exactly when hamming(a, b) ≤ 1 — so the equi-join IS the
     distance predicate, with zero false positives and no verify pass.
 
     This closes the gap q73 documents (equal signatures ⇒ near-identical
     token multisets): exact-equality SimHash misses pairs that differ in
-    one noisy bit; multi-probe recovers them for a (bits+1)× probe-side
+    one noisy bit; multi-probe recovers them for a (SIMHASH_BITS+1)× probe-side
     blowup while staying a plain shuffle join — the standard trade, and
     still never O(n²).  Distance-1 pairs are found from both endpoints'
     probe sets; the a<b filter + distinct collapses the two sightings.
@@ -497,14 +504,15 @@ def simhash_multiprobe_pairs(documents: DataFrame, bits: int = 16) -> DataFrame:
     #     shuffle key and codegen'd integer probes instead of a
     #     16-char '0'/'1' string rebuilt by substring/translate.
     sigs = tracked_persist(
-        simhash(doc_word_sets(documents), bits=bits)
+        simhash(doc_word_sets(documents))
         .select("doc_id", F.conv("sh", 2, 10).cast("bigint").alias("si"))
     )
     probes = sigs.select(
         F.col("doc_id").alias("a"),
         F.explode(F.array(
             F.col("si"),
-            *[F.col("si").bitwiseXOR(F.lit(1 << j)) for j in range(bits)],
+            *[F.col("si").bitwiseXOR(F.lit(1 << j))
+              for j in range(SIMHASH_BITS)],
         )).alias("p"),
     )
     right = sigs.select(F.col("doc_id").alias("b"), F.col("si").alias("p"))
@@ -514,3 +522,81 @@ def simhash_multiprobe_pairs(documents: DataFrame, bits: int = 16) -> DataFrame:
         .select("a", "b")
         .distinct()
     )
+
+
+# ---------------------------------------------------------------------------
+# DuckDB twins, as CTE text over the ``documents`` view.  Table and
+# column names (words/shingles/sigs/bands, h0..h{K-1}, band/bv,
+# cand/sizes/inter, b0..b{SIMHASH_BITS-1}) are part of the contract:
+# oracles join on them.
+
+# (doc_id, w) distinct unigrams — doc_word_sets
+DDB_WORDS = (
+    "words AS (SELECT DISTINCT doc_id, w FROM "
+    "(SELECT doc_id, UNNEST(string_split(text,' ')) AS w FROM documents) "
+    "WHERE w <> '')"
+)
+# (doc_id, w) distinct SHINGLE_N-word shingles — doc_shingles
+DDB_SHINGLES = (
+    "shingles AS (SELECT DISTINCT doc_id, w FROM ("
+    f"SELECT doc_id, UNNEST(CASE WHEN len(wl) >= {SHINGLE_N} THEN "
+    f"list_transform(range(1, len(wl) - {SHINGLE_N - 2}), i -> "
+    + " || ' ' || ".join(
+        ["wl[i]"] + [f"wl[i+{k}]" for k in range(1, SHINGLE_N)])
+    + ") ELSE [array_to_string(wl, ' ')] END) AS w FROM "
+    "(SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS wl "
+    "FROM documents)))"
+)
+# (doc_id, h0..h{K-1}) over shingles — minhash_signatures
+DDB_SIGS = (
+    "sigs AS (SELECT doc_id, "
+    + ", ".join(f"MIN(substr(md5(w), {1 + 5 * j}, 5)) AS h{j}"
+                for j in range(K))
+    + " FROM shingles GROUP BY doc_id)"
+)
+# (doc_id, band, bv) over sigs — lsh_bands
+DDB_BANDS = (
+    "bands AS ("
+    + " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, "
+        + " || ".join(f"h{ROWS * b + r}" for r in range(ROWS))
+        + " AS bv FROM sigs"
+        for b in range(BANDS)
+    )
+    + ")"
+)
+# band_pairs as cand(a, b), then the Jaccard verify's inputs: shingle
+# set sizes and candidate intersections inter(a, b, i)
+DDB_CAND_CHAIN = (
+    "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x JOIN bands y "
+    "ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id), "
+    "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
+    "inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM cand c "
+    "JOIN shingles wa ON wa.doc_id = c.a JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w "
+    "GROUP BY c.a, c.b)"
+)
+# simhash's per-bit sums b0..b{SIMHASH_BITS-1}, aggregated over words
+DDB_SIMHASH_BITS = ", ".join(
+    f"SUM(CASE WHEN substr(md5(w), {j + 1}, 1) IN "
+    f"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS b{j}"
+    for j in range(SIMHASH_BITS)
+)
+# the '0'/'1' signature string from those sums
+DDB_SIMHASH_CONCAT = " || ".join(
+    f"(CASE WHEN b{j} > 0 THEN '1' ELSE '0' END)" for j in range(SIMHASH_BITS)
+)
+# (doc_id, sh) signatures — simhash(doc_word_sets(documents))
+DDB_SIMHASH_SIGS = (
+    f"{DDB_WORDS}, "
+    f"perdoc AS (SELECT doc_id, {DDB_SIMHASH_BITS} FROM words GROUP BY doc_id), "
+    f"sh AS (SELECT doc_id, {DDB_SIMHASH_CONCAT} AS sh FROM perdoc)"
+)
+# every 1-bit flip of a signature ``sh`` — simhash_multiprobe_pairs'
+# probe set without the signature itself.  The oracles mirror the same
+# O((SIMHASH_BITS+1)·n) probe join; an all-pairs bit-diff would be O(n²).
+DDB_SIMHASH_FLIPS = (
+    "list_transform(range(1, " + str(SIMHASH_BITS + 1) + "), j -> "
+    "substr(sh, 1, j - 1) || "
+    "(CASE substr(sh, j, 1) WHEN '0' THEN '1' ELSE '0' END) || "
+    "substr(sh, j + 1))"
+)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tidb_gateway_spark.operators.sampling import ddb_hex_int
+
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -49,6 +51,12 @@ def with_synthetic_binary(documents: DataFrame, text_col: str = "text") -> DataF
     """Attach a deterministic 16-byte ``payload`` binary column (stands in
     for image bytes; derived from md5 so oracles can recompute it)."""
     return documents.withColumn("payload", F.unhex(F.md5(F.col(text_col))))
+
+
+def ddb_payload_byte(k: int) -> str:
+    """DuckDB twin of payload byte ``k`` of :func:`with_synthetic_binary`,
+    over a column ``h`` holding ``md5(text)``: hex pair (2k+1, 2k+2)."""
+    return ddb_hex_int("h", 2 * k + 1, 2)
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, str]:
@@ -109,8 +117,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("feat", T.ArrayType(T.FloatType())),
     ]
 )
-
-FEATURE_DIM = 4
 
 
 def extract_features(df: DataFrame) -> DataFrame:

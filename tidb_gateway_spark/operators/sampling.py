@@ -17,12 +17,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def salted_md5(key: Column, salt: str) -> Column:
+    """md5 hex digest of ``salt|key``: the one salted row-key hash."""
+    return F.md5(F.concat(F.lit(salt + "|"), key.cast("string")))
+
+
+def hex_int(h: Column, start: int, n: int) -> Column:
+    """The ``n`` hex digits of ``h`` from 1-based ``start`` as a BIGINT."""
+    return F.conv(F.substring(h, start, n), 16, 10).cast("bigint")
+
+
 def hash_bps(key: Column, salt: str = "split") -> Column:
     """Deterministic basis-point bucket [0, 10000) from a row key."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt + "|"), key.cast("string"))), 1, 8), 16, 10)
-        .cast("bigint") % 10_000
-    )
+    return hex_int(salted_md5(key, salt), 1, 8) % 10_000
+
+
+def ddb_hex_int(hexpr: str, start: int | str, n: int) -> str:
+    """DuckDB twin of :func:`hex_int` (``start`` may be a SQL expression)."""
+    return f"CAST(('0x' || substr({hexpr}, {start}, {n})) AS BIGINT)"
+
+
+def ddb_salted_md5(key_sql: str, salt: str) -> str:
+    """DuckDB twin of :func:`salted_md5`."""
+    return f"md5('{salt}|' || CAST({key_sql} AS VARCHAR))"
+
+
+def ddb_hash_bps(key_sql: str, salt: str = "split") -> str:
+    """DuckDB twin of :func:`hash_bps`, parenthesized."""
+    return f"({ddb_hex_int(ddb_salted_md5(key_sql, salt), 1, 8)} % 10000)"
 
 
 def mixture_keep(key: Column, stratum: Column, rates_bps: dict[str, int],
@@ -84,8 +106,8 @@ def k_per_stratum(df: DataFrame, key: str, stratum: str, k: int,
     """
     from pyspark.sql.window import Window
 
-    hk = F.md5(F.concat(F.lit(salt + "|"), F.col(key).cast("string")))
-    w = Window.partitionBy(stratum).orderBy(hk, F.col(key))
+    w = Window.partitionBy(stratum).orderBy(
+        salted_md5(F.col(key), salt), F.col(key))
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)

@@ -27,6 +27,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tidb_gateway_spark.operators.sampling import (
+    ddb_hex_int,
+    ddb_salted_md5,
+    hex_int,
+    salted_md5,
+)
+
 
 def kmv_sketch(values: DataFrame, col: str, k: int = 256) -> DataFrame:
     """DISTINCT values of ``col`` → one row: (k_used, kth_hash, est).
@@ -62,60 +69,79 @@ def hex_frac(h: Column) -> Column:
     )
 
 
+def ddb_hex_frac(hexpr: str) -> str:
+    """DuckDB twin of :func:`hex_frac`, parenthesized."""
+    return f"({ddb_hex_int(hexpr, 1, 8)} / 4294967296.0)"
+
+
 # ---------------------------------------------------------------------------
 # Count–min sketch (shared by queries/governance.q179 and the streaming
 # twin in streaming/jobs.py).  The sketch IS a DataFrame of (j, bucket,
-# cnt) cells — fixed ≤ depth·width rows of mergeable state — built from
-# ONE md5 per input row with the j-th hash taken as the j-th 5-hex
-# (20-bit) slice of the digest (single-digest construction, like
-# minhash_signatures; slices of a cryptographic digest are independent).
-# All arithmetic is portable md5/substring/conv, so external engines
-# recompute identical cells (q179's DuckDB oracle does).
+# cnt) cells — fixed ≤ CMS_DEPTH·CMS_WIDTH rows of mergeable state —
+# built from ONE salted md5 per input row with the j-th hash taken as
+# the j-th 5-hex (20-bit) slice of the digest (single-digest
+# construction, like minhash_signatures; slices of a cryptographic
+# digest are independent).  All arithmetic is portable
+# md5/substring/conv, so the ``ddb_*`` twins below recompute identical
+# cells in DuckDB (q179's oracle is built from them).
 
 CMS_DEPTH = 4
 CMS_WIDTH = 2048
 
 
 def cms_digest(key: Column) -> Column:
-    """ONE md5 per row; all depth hash functions slice it."""
-    return F.md5(F.concat(F.lit("cms|"), key.cast("string")))
+    """ONE md5 per row; all CMS_DEPTH hash functions slice it."""
+    return salted_md5(key, "cms")
 
 
-def cms_bucket_from_digest(j: int, digest: Column,
-                           width: int = CMS_WIDTH) -> Column:
-    """Bucket of hash row j in [0, width): the j-th 20-bit digest slice."""
-    return (
-        F.conv(F.substring(digest, 1 + j * 5, 5), 16, 10)
-        .cast("bigint") % width
-    )
+def cms_bucket_from_digest(j: int, digest: Column) -> Column:
+    """Bucket of hash row j in [0, CMS_WIDTH): the j-th 20-bit digest slice."""
+    return hex_int(digest, 1 + j * 5, 5) % CMS_WIDTH
 
 
-def cms_depth_buckets(digest: Column, depth: int = CMS_DEPTH,
-                      width: int = CMS_WIDTH) -> Column:
+def cms_depth_buckets(digest: Column) -> Column:
     """Exploded (j, bucket) struct stream — one row per hash function."""
     return F.explode(
         F.array(*[
             F.struct(
                 F.lit(j).alias("j"),
-                cms_bucket_from_digest(j, digest, width).alias("bucket"),
+                cms_bucket_from_digest(j, digest).alias("bucket"),
             )
-            for j in range(depth)
+            for j in range(CMS_DEPTH)
         ])
     )
 
 
-def cms_cells(df: DataFrame, key: Column, depth: int = CMS_DEPTH,
-              width: int = CMS_WIDTH) -> DataFrame:
+def cms_cells(df: DataFrame, key: Column) -> DataFrame:
     """The sketch: (j, bucket, cnt) counter cells.  groupBy partial-
-    aggregates map-side, so the exchange carries ≤ depth·width rows per
-    task.  Works identically on a static frame and a streaming frame —
-    on a stream the SAME aggregation becomes incremental sketch state
-    (streaming/jobs.streaming_cms_cells), which is the point of CMS:
-    update and merge are the same counter addition."""
+    aggregates map-side, so the exchange carries ≤ CMS_DEPTH·CMS_WIDTH
+    rows per task.  Works identically on a static frame and a streaming
+    frame — on a stream the SAME aggregation becomes incremental sketch
+    state (streaming/jobs.streaming_cms_cells), which is the point of
+    CMS: update and merge are the same counter addition."""
     return (
         df.select(cms_digest(key).alias("dg"))
-        .select(cms_depth_buckets(F.col("dg"), depth, width).alias("c"))
+        .select(cms_depth_buckets(F.col("dg")).alias("c"))
         .select("c.j", "c.bucket")
         .groupBy("j", "bucket")
         .agg(F.count("*").alias("cnt"))
+    )
+
+
+def ddb_cms_bucket(j_sql: str, key_sql: str) -> str:
+    """DuckDB twin of :func:`cms_bucket_from_digest` over
+    :func:`cms_digest` of ``key_sql``, for hash row ``j_sql``."""
+    return (
+        ddb_hex_int(ddb_salted_md5(key_sql, "cms"),
+                    f"1 + CAST({j_sql} AS INT) * 5", 5)
+        + f" % {CMS_WIDTH}"
+    )
+
+
+def ddb_cms_cells(table: str, key_sql: str) -> str:
+    """DuckDB twin of :func:`cms_cells`: a SELECT of (j, bucket, cnt)."""
+    return (
+        "SELECT t.j, " + ddb_cms_bucket("t.j", key_sql)
+        + " AS bucket, COUNT(*) AS cnt "
+        f"FROM {table}, UNNEST(range(0, {CMS_DEPTH})) AS t(j) GROUP BY 1, 2"
     )

@@ -6,8 +6,9 @@ UDFs, no shuffle until the final aggregate) — at 100 TB these run at
 scan speed.
 
 Determinism contract: every expression uses only IEEE arithmetic and
-exact string ops that external oracles evaluate identically; the paired
-DuckDB forms live in queries/llm_extended.py.
+exact string ops that external oracles evaluate identically.
+:data:`DDB_QSCORE` is the DuckDB twin of :func:`quality_score`; the
+other paired DuckDB forms live beside their queries.
 """
 
 from __future__ import annotations
@@ -63,6 +64,15 @@ def quality_score(text: Column, n_chars: Column) -> Column:
         + F.lit(0.3) * (F.lit(1.0) - sp / L)
         + F.lit(0.2) * F.least(F.lit(1.0), avg_word / F.lit(8.0))
     )
+
+
+# DuckDB twin of quality_score(text, n_chars) over a row with both columns
+DDB_QSCORE = (
+    "0.5 * LEAST(1.0, n_chars / 200.0) "
+    "+ 0.3 * (1.0 - (length(text) - length(replace(text,' ',''))) * 1.0 / length(text)) "
+    "+ 0.2 * LEAST(1.0, ((length(text) - (length(text) - length(replace(text,' ','')))) "
+    "/ ((length(text) - length(replace(text,' ',''))) + 1.0)) / 8.0)"
+)
 
 
 def nonempty_words(text: Column) -> Column:

@@ -39,8 +39,14 @@ from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators import dedup
 from tidb_gateway_spark.operators.cache import tracked_persist
+from tidb_gateway_spark.operators.dedup import DDB_BANDS, DDB_SHINGLES, DDB_SIGS
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
-from tidb_gateway_spark.queries.llm_extended import _ddb_hex_to_int
+from tidb_gateway_spark.operators.sampling import (
+    ddb_hash_bps,
+    ddb_hex_int,
+    hash_bps,
+    hex_int,
+)
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q227
@@ -146,16 +152,6 @@ def q227(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a partial write on one of two 100 TB table copies.
 _Q228_BPS = 50
 
-_DDB_Q228_BPS = (
-    "(" + _ddb_hex_to_int("md5('corrupt|' || CAST(o_orderkey AS VARCHAR))", 8)
-    + " % 10000)"
-)
-
-
-def _ddb_row_ck(key_expr: str) -> str:
-    return _ddb_hex_to_int(f"md5({key_expr})", 8)
-
-
 _Q228_KEY_A = (
     "CAST(o_orderkey AS VARCHAR) || '|' || "
     "CAST(CAST(FLOOR(o_totalprice*100 + 0.5) AS BIGINT) AS VARCHAR) "
@@ -164,14 +160,15 @@ _Q228_KEY_A = (
 _Q228_KEY_B = (
     "CAST(o_orderkey AS VARCHAR) || '|' || "
     "CAST(CAST(FLOOR(o_totalprice*100 + 0.5) AS BIGINT) AS VARCHAR) "
-    f"|| '|' || (CASE WHEN {_DDB_Q228_BPS} < {_Q228_BPS} THEN 'X' "
+    f"|| '|' || (CASE WHEN {ddb_hash_bps('o_orderkey', 'corrupt')} "
+    f"< {_Q228_BPS} THEN 'X' "
     "ELSE o_orderstatus END)"
 )
 
 _Q228_ORACLE = (
     "WITH ck AS (SELECT strftime(o_orderdate, '%Y-%m') AS month, "
-    f"CAST({_ddb_row_ck(_Q228_KEY_A)} AS BIGINT) AS ha, "
-    f"CAST({_ddb_row_ck(_Q228_KEY_B)} AS BIGINT) AS hb FROM orders), "
+    f"CAST({ddb_hex_int(f'md5({_Q228_KEY_A})', 1, 8)} AS BIGINT) AS ha, "
+    f"CAST({ddb_hex_int(f'md5({_Q228_KEY_B})', 1, 8)} AS BIGINT) AS hb FROM orders), "
     "agg AS (SELECT month, CAST(COUNT(*) AS BIGINT) AS n_rows, "
     "CAST(SUM(ha) AS BIGINT) AS ck_a, CAST(SUM(hb) AS BIGINT) AS ck_b, "
     "CAST(SUM(CASE WHEN ha <> hb THEN 1 ELSE 0 END) AS BIGINT) AS n_diff "
@@ -198,11 +195,7 @@ _Q228_ORACLE = (
 def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = ensure_min_partitions(load_table(spark, sf_dir, "orders"))
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
-    bps = (
-        F.conv(F.substring(F.md5(F.concat(
-            F.lit("corrupt|"), F.col("o_orderkey").cast("string"))), 1, 8),
-            16, 10).cast("bigint") % 10_000
-    )
+    bps = hash_bps(F.col("o_orderkey"), "corrupt")
     status_b = F.when(bps < _Q228_BPS, F.lit("X")).otherwise(
         F.col("o_orderstatus"))
     key_a = F.concat_ws(
@@ -211,8 +204,7 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     key_b = F.concat_ws(
         "|", F.col("o_orderkey").cast("string"), cents.cast("string"),
         status_b)
-    row_ck = lambda k: F.conv(  # noqa: E731
-        F.substring(F.md5(k), 1, 8), 16, 10).cast("bigint")
+    row_ck = lambda k: hex_int(F.md5(k), 1, 8)  # noqa: E731
     agg = (
         o.select(
             F.date_format("o_orderdate", "yyyy-MM").alias("month"),
@@ -242,15 +234,8 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
 # containment 1.0).
 _Q229_TAU = 0.6
 
-# Reuse q72's LSH candidate SQL chain (same signature family).
-from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _DDB_BANDS,
-    _DDB_SHINGLES,
-    _DDB_SIGS,
-)
-
 _Q229_ORACLE = (
-    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
     "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x "
     "JOIN bands y ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id), "
     "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "

@@ -38,8 +38,24 @@ from pyspark.sql.window import Window
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.operators import dedup
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_CAND_CHAIN,
+    DDB_SHINGLES,
+    DDB_SIGS,
+    DDB_SIMHASH_FLIPS,
+    DDB_SIMHASH_SIGS,
+)
 from tidb_gateway_spark.operators.localrel import local_rows_df
-from tidb_gateway_spark.queries.llm_extended import _ddb_hex_to_int
+from tidb_gateway_spark.operators.sampling import (
+    ddb_hash_bps,
+    ddb_hex_int,
+    ddb_salted_md5,
+    hex_int,
+    salted_md5,
+)
+from tidb_gateway_spark.operators.sketch import ddb_hex_frac
+from tidb_gateway_spark.operators.text import DDB_QSCORE
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q103
@@ -161,10 +177,10 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q105
 _N_SHARDS = 8
-_DDB_SHUF_KEY = "md5('shuf|' || CAST(doc_id AS VARCHAR))"
+_DDB_SHUF_KEY = ddb_salted_md5("doc_id", "shuf")
 _Q105_ORACLE = (
     f"WITH s AS (SELECT doc_id, n_chars, {_DDB_SHUF_KEY} AS k, "
-    f"CAST({_ddb_hex_to_int(_DDB_SHUF_KEY, 8)} % {_N_SHARDS} AS INT) AS shard "
+    f"CAST({ddb_hex_int(_DDB_SHUF_KEY, 1, 8)} % {_N_SHARDS} AS INT) AS shard "
     "FROM documents), "
     "p AS (SELECT shard, doc_id, n_chars, "
     "ROW_NUMBER() OVER (PARTITION BY shard ORDER BY k, doc_id) AS pos FROM s) "
@@ -188,10 +204,8 @@ _Q105_ORACLE = (
 )
 def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    k = F.md5(F.concat(F.lit("shuf|"), F.col("doc_id").cast("string")))
-    shard = (
-        F.conv(F.substring(k, 1, 8), 16, 10).cast("bigint") % _N_SHARDS
-    ).cast("int")
+    k = salted_md5(F.col("doc_id"), "shuf")
+    shard = (hex_int(k, 1, 8) % _N_SHARDS).cast("int")
     w = Window.partitionBy("shard").orderBy("k", "doc_id")
     p = (
         d.select("doc_id", "n_chars", k.alias("k"), shard.alias("shard"))
@@ -210,10 +224,9 @@ def q105(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q110
 _KPS = 40
-_DDB_KPS_KEY = "md5('kps|' || CAST(doc_id AS VARCHAR))"
 _Q110_ORACLE = (
-    "WITH r AS (SELECT lang, doc_id, "
-    f"ROW_NUMBER() OVER (PARTITION BY lang ORDER BY {_DDB_KPS_KEY}, doc_id) AS rn "
+    "WITH r AS (SELECT lang, doc_id, ROW_NUMBER() OVER (PARTITION BY lang "
+    f"ORDER BY {ddb_salted_md5('doc_id', 'kps')}, doc_id) AS rn "
     "FROM documents) "
     f"SELECT lang, COUNT(*) AS n, CAST(SUM(doc_id) AS BIGINT) AS ids "
     f"FROM r WHERE rn <= {_KPS} GROUP BY lang ORDER BY lang"
@@ -246,7 +259,12 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q111
 @register(
     "q111_curriculum_quartiles",
-    None,  # oracle set below (needs the shared quality-score expression)
+    f"WITH q AS (SELECT lang, doc_id, ({DDB_QSCORE}) AS qs FROM documents), "
+    "p AS (SELECT lang, qs, CAST(NTILE(4) OVER (PARTITION BY lang "
+    "ORDER BY qs, doc_id) AS INT) AS phase FROM q) "
+    "SELECT lang, phase, COUNT(*) AS n, "
+    "FLOOR(AVG(qs) * 10000 + 0.5) / 10000 AS aq "
+    "FROM p GROUP BY lang, phase ORDER BY lang, phase",
     doc="Curriculum phase assignment: per-language quality quartiles via "
         "ntile(4) over (qscore, doc_id) — the ordering step of quality-"
         "staged training (feed phase 4 last). Partitioned window, no "
@@ -272,28 +290,6 @@ def q111(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "phase")
     )
-
-
-# q111 oracle: reuses q78's exact quality-score SQL so the two share one
-# definition of "quality" (a drifting pair would silently diverge).
-from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _DDB_QSCORE,
-    _DDB_SHINGLES,
-)
-from tidb_gateway_spark.queries.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["q111_curriculum_quartiles"] = _dc.replace(
-    _REG["q111_curriculum_quartiles"],
-    oracle=(
-        f"WITH q AS (SELECT lang, doc_id, ({_DDB_QSCORE}) AS qs FROM documents), "
-        "p AS (SELECT lang, qs, CAST(NTILE(4) OVER (PARTITION BY lang "
-        "ORDER BY qs, doc_id) AS INT) AS phase FROM q) "
-        "SELECT lang, phase, COUNT(*) AS n, "
-        "FLOOR(AVG(qs) * 10000 + 0.5) / 10000 AS aq "
-        "FROM p GROUP BY lang, phase ORDER BY lang, phase"
-    ),
-)
 
 
 # ---------------------------------------------------------------- Q112
@@ -342,9 +338,9 @@ _Q113_ORACLE = (
     "WHERE w <> ''), "
     f"kmin AS (SELECT h FROM h ORDER BY h LIMIT {_KMV_K}), "
     "agg AS (SELECT COUNT(*) AS k_used, MAX(h) AS kth, "
-    "(COUNT(*) - 1) * 1.0 / ("
-    + _ddb_hex_to_int("MAX(h)", 8)
-    + " / 4294967296.0) AS est_raw FROM kmin) "
+    "(COUNT(*) - 1) * 1.0 / "
+    + ddb_hex_frac("MAX(h)")
+    + " AS est_raw FROM kmin) "
     "SELECT k_used, kth, CAST(FLOOR(est_raw + 0.5) AS BIGINT) AS est, "
     "(SELECT COUNT(DISTINCT w) FROM "
     "(SELECT UNNEST(string_split(text, ' ')) AS w FROM documents) "
@@ -384,34 +380,9 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q114
-_SH_BITS = 16
-_DDB_SH_WORDS = (
-    "words AS (SELECT DISTINCT doc_id, w FROM "
-    "(SELECT doc_id, UNNEST(string_split(text,' ')) AS w FROM documents) "
-    "WHERE w <> '')"
-)
-_DDB_SH_BITS = ", ".join(
-    f"SUM(CASE WHEN substr(md5(w), {j + 1}, 1) IN "
-    f"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS b{j}"
-    for j in range(_SH_BITS)
-)
-_DDB_SH_CONCAT = " || ".join(
-    f"(CASE WHEN b{j} > 0 THEN '1' ELSE '0' END)" for j in range(_SH_BITS)
-)
-# probe set: the signature + every 1-bit flip, mirrored in DuckDB with
-# the same O((bits+1)·n) probe join the engine plans — an all-pairs
-# bit-diff oracle would be O(n²) and hang any sweep beyond sf0.01.
-_DDB_SH_FLIPS = (
-    "list_transform(range(1, " + str(_SH_BITS + 1) + "), j -> "
-    "substr(sh, 1, j - 1) || "
-    "(CASE substr(sh, j, 1) WHEN '0' THEN '1' ELSE '0' END) || "
-    "substr(sh, j + 1))"
-)
 _Q114_ORACLE = (
-    f"WITH {_DDB_SH_WORDS}, "
-    f"perdoc AS (SELECT doc_id, {_DDB_SH_BITS} FROM words GROUP BY doc_id), "
-    f"sh AS (SELECT doc_id, {_DDB_SH_CONCAT} AS sh FROM perdoc), "
-    f"probes AS (SELECT doc_id, UNNEST(list_append({_DDB_SH_FLIPS}, sh)) AS p "
+    f"WITH {DDB_SIMHASH_SIGS}, "
+    f"probes AS (SELECT doc_id, UNNEST(list_append({DDB_SIMHASH_FLIPS}, sh)) AS p "
     "FROM sh), "
     "pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM probes x "
     "JOIN sh y ON x.p = y.sh AND x.doc_id < y.doc_id) "
@@ -438,7 +409,7 @@ _Q114_ORACLE = (
 )
 def q114(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.simhash_multiprobe_pairs(d, bits=_SH_BITS)
+    pairs = dedup.simhash_multiprobe_pairs(d)
     return pairs.agg(
         F.count("*").alias("pairs"),
         F.countDistinct("a").alias("nda"),
@@ -449,15 +420,20 @@ def q114(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q115
 # Snapshot split: hash_bps(doc_id, "snap") < 5000 = snapshot A, else B
 # (stands in for two ingest snapshots of the same pipeline).
-_DDB_SNAP = (
-    "(" + _ddb_hex_to_int("md5('snap|' || CAST(doc_id AS VARCHAR))", 8)
-    + " % 10000)"
-)
-
-
 @register(
     "q115_distribution_drift_psi",
-    None,  # assembled below — shares q78's quality-score SQL
+    "WITH q AS (SELECT doc_id, "
+    f"LEAST(9, CAST(FLOOR(({DDB_QSCORE}) * 10) AS INT)) AS bucket, "
+    f"(CASE WHEN {ddb_hash_bps('doc_id', 'snap')} < 5000 THEN 1 ELSE 0 END) AS in_a "
+    "FROM documents), "
+    "per AS (SELECT bucket, SUM(in_a) AS ca, SUM(1 - in_a) AS cb "
+    "FROM q GROUP BY bucket), "
+    "tot AS (SELECT SUM(ca) AS na, SUM(cb) AS nb, COUNT(*) AS k FROM per) "
+    "SELECT bucket, CAST(ca AS BIGINT) AS ca, CAST(cb AS BIGINT) AS cb, "
+    "FLOOR((((ca + 1) * 1.0 / (na + k)) - ((cb + 1) * 1.0 / (nb + k))) "
+    "* ln(((ca + 1) * 1.0 / (na + k)) / ((cb + 1) * 1.0 / (nb + k))) "
+    "* 1000000 + 0.5) / 1000000 AS psi_term "
+    "FROM per CROSS JOIN tot ORDER BY bucket",
     doc="Data-quality drift check: Population Stability Index of the "
         "quality-score distribution between two deterministic snapshot "
         "halves, per decile bucket with Laplace(+1) smoothing. The "
@@ -500,25 +476,6 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_REG["q115_distribution_drift_psi"] = _dc.replace(
-    _REG["q115_distribution_drift_psi"],
-    oracle=(
-        "WITH q AS (SELECT doc_id, "
-        f"LEAST(9, CAST(FLOOR(({_DDB_QSCORE}) * 10) AS INT)) AS bucket, "
-        f"(CASE WHEN {_DDB_SNAP} < 5000 THEN 1 ELSE 0 END) AS in_a "
-        "FROM documents), "
-        "per AS (SELECT bucket, SUM(in_a) AS ca, SUM(1 - in_a) AS cb "
-        "FROM q GROUP BY bucket), "
-        "tot AS (SELECT SUM(ca) AS na, SUM(cb) AS nb, COUNT(*) AS k FROM per) "
-        "SELECT bucket, CAST(ca AS BIGINT) AS ca, CAST(cb AS BIGINT) AS cb, "
-        "FLOOR((((ca + 1) * 1.0 / (na + k)) - ((cb + 1) * 1.0 / (nb + k))) "
-        "* ln(((ca + 1) * 1.0 / (na + k)) / ((cb + 1) * 1.0 / (nb + k))) "
-        "* 1000000 + 0.5) / 1000000 AS psi_term "
-        "FROM per CROSS JOIN tot ORDER BY bucket"
-    ),
-)
-
-
 # ---------------------------------------------------------------- Q116
 # The full pre-training data recipe as ONE declared query, composed
 # from the operator library: quality filter → exact dedup (keep lowest
@@ -533,19 +490,19 @@ _REG["q115_distribution_drift_psi"] = _dc.replace(
 _RECIPE_RATES = {"en": 5000}  # en halved; other languages kept in full
 _Q116_ORACLE = (
     "WITH "
-    f"q AS (SELECT *, ({_DDB_QSCORE}) AS qs FROM documents), "
+    f"q AS (SELECT *, ({DDB_QSCORE}) AS qs FROM documents), "
     "kept AS (SELECT * FROM q WHERE qs >= 0.5), "
     "uniq AS (SELECT * FROM kept WHERE doc_id IN ("
     "SELECT MIN(doc_id) FROM kept GROUP BY md5(text))), "
-    f"{_DDB_SHINGLES}, "
+    f"{DDB_SHINGLES}, "
     "bench AS (SELECT DISTINCT w FROM shingles WHERE doc_id < 10), "
     "contaminated AS (SELECT DISTINCT s.doc_id FROM shingles s "
     "JOIN bench b ON s.w = b.w WHERE s.doc_id >= 10), "
     "clean AS (SELECT * FROM uniq WHERE doc_id >= 10 AND doc_id NOT IN "
     "(SELECT doc_id FROM contaminated)), "
     "mixed AS (SELECT * FROM clean WHERE "
-    "(" + _ddb_hex_to_int("md5('mix|' || CAST(doc_id AS VARCHAR))", 8)
-    + " % 10000) < (CASE lang WHEN 'en' THEN 5000 ELSE 10000 END)) "
+    f"{ddb_hash_bps('doc_id', 'mix')} < "
+    "(CASE lang WHEN 'en' THEN 5000 ELSE 10000 END)) "
     "SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars, "
     "CAST(SUM(doc_id) AS BIGINT) AS ck FROM mixed GROUP BY lang ORDER BY lang"
 )
@@ -684,8 +641,7 @@ _Q151_ORACLE = (
     "AS BIGINT)) AS bps FROM raw, mx), "
     "kept AS (SELECT d.lang, COUNT(*) AS k FROM documents d "
     "JOIN rates t ON t.lang = d.lang "
-    "WHERE CAST(('0x' || substr(md5('mixT|' || CAST(d.doc_id AS VARCHAR)), "
-    "1, 8)) AS BIGINT) % 10000 < t.bps GROUP BY d.lang) "
+    f"WHERE {ddb_hash_bps('d.doc_id', 'mixT')} < t.bps GROUP BY d.lang) "
     "SELECT r.lang, CAST(r.n AS BIGINT) AS total, "
     "CAST(r.bps AS BIGINT) AS bps, CAST(COALESCE(k.k, 0) AS BIGINT) AS kept "
     "FROM rates r LEFT JOIN kept k ON k.lang = r.lang ORDER BY r.lang"
@@ -799,16 +755,9 @@ def q152(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q156
-_Q156_DDB_QS = (
-    "0.5 * LEAST(1.0, n_chars / 200.0) "
-    "+ 0.3 * (1.0 - (length(text) - length(replace(text,' ',''))) * 1.0 / length(text)) "
-    "+ 0.2 * LEAST(1.0, ((length(text) - (length(text) - length(replace(text,' ','')))) "
-    "/ ((length(text) - length(replace(text,' ',''))) + 1.0)) / 8.0)"
-)
 _Q156_ORACLE = (
-    f"WITH s AS (SELECT doc_id, lang, ({_Q156_DDB_QS}) AS q, "
-    "CAST(('0x' || substr(md5('softq|' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-    "AS BIGINT) % 10000 AS h FROM documents) "
+    f"WITH s AS (SELECT doc_id, lang, ({DDB_QSCORE}) AS q, "
+    f"{ddb_hash_bps('doc_id', 'softq')} AS h FROM documents) "
     "SELECT lang, COUNT(*) AS total, "
     "CAST(COUNT(*) FILTER (WHERE h < CAST(FLOOR(q * 10000 + 0.5) "
     "AS BIGINT)) AS BIGINT) AS kept "
@@ -847,10 +796,9 @@ def q156(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q157
-_Q157_DDB_KEY = "md5('il|' || CAST(doc_id AS VARCHAR))"
 _Q157_ORACLE = (
     f"WITH r AS (SELECT doc_id, lang, ROW_NUMBER() OVER "
-    f"(PARTITION BY lang ORDER BY {_Q157_DDB_KEY}, doc_id) AS rn "
+    f"(PARTITION BY lang ORDER BY {ddb_salted_md5('doc_id', 'il')}, doc_id) AS rn "
     "FROM documents), "
     "o AS (SELECT doc_id, lang, ROW_NUMBER() OVER "
     "(ORDER BY rn, lang, doc_id) AS pos FROM r) "
@@ -878,8 +826,8 @@ _Q157_ORACLE = (
 )
 def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    hk = F.md5(F.concat(F.lit("il|"), F.col("doc_id").cast("string")))
-    wl = Window.partitionBy("lang").orderBy(hk, F.col("doc_id"))
+    wl = Window.partitionBy("lang").orderBy(
+        salted_md5(F.col("doc_id"), "il"), F.col("doc_id"))
     r = d.select("doc_id", "lang", F.row_number().over(wl).alias("rn"))
     wg = Window.orderBy("rn", "lang", "doc_id")
     o = r.select("doc_id", "lang", F.row_number().over(wg).alias("pos"))
@@ -908,7 +856,7 @@ _CHUNK, _STRIDE = 200, 150   # 50-char overlap
     "SELECT CAST(COUNT(*) AS BIGINT) AS chunks, "
     "CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS docs, "
     "CAST(SUM(length(chunk)) AS BIGINT) AS chars, "
-    "CAST(SUM(CAST(('0x' || substr(md5(chunk), 1, 8)) AS BIGINT) "
+    f"CAST(SUM({ddb_hex_int('md5(chunk)', 1, 8)} "
     "% 1000000007) AS BIGINT) AS ck FROM c",
     doc="RAG document chunking: fixed 200-char windows at stride 150 "
         "(50-char overlap so no retrieval boundary loses context) via "
@@ -937,8 +885,7 @@ def q158(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("chunk"),
         )
     )
-    ck = F.conv(F.substring(F.md5("chunk"), 1, 8), 16, 10).cast(
-        "bigint") % 1000000007
+    ck = hex_int(F.md5("chunk"), 1, 8) % 1000000007
     return c.agg(
         F.count("*").alias("chunks"),
         F.countDistinct("doc_id").alias("docs"),
@@ -956,12 +903,8 @@ _Q169_K = 20
     # Efraimidis–Spirakis with a DETERMINISTIC uniform: u = (bps+0.5)/1e4
     # from the md5 basis-point hash, key = -ln(u)/w, take k smallest.
     "WITH s AS (SELECT doc_id, "
-    "(CAST(('0x' || substr(md5('wres|' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-    "AS BIGINT) % 10000 + 0.5) / 10000.0 AS u, "
-    "(0.5 * LEAST(1.0, n_chars / 200.0) "
-    "+ 0.3 * (1.0 - (length(text) - length(replace(text,' ',''))) * 1.0 / length(text)) "
-    "+ 0.2 * LEAST(1.0, ((length(text) - (length(text) - length(replace(text,' ','')))) "
-    "/ ((length(text) - length(replace(text,' ',''))) + 1.0)) / 8.0)) AS w "
+    f"({ddb_hash_bps('doc_id', 'wres')} + 0.5) / 10000.0 AS u, "
+    f"({DDB_QSCORE}) AS w "
     "FROM documents), "
     # quantize the float key to an integer on BOTH engines: libm vs JVM
     # LN can differ in the last ulp, and a raw float ORDER BY near the
@@ -1047,26 +990,20 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q197
-from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _DDB_BANDS, _DDB_CAND_CHAIN, _DDB_SIGS,
-)
-
 _Q197_SPLIT_BPS = 9_000  # train share (basis points of the hash space)
 
 
 def _q197_split_sql(key_expr: str) -> str:
-    """train/eval decision from the md5-bps hash of ``key_expr`` —
-    identical arithmetic to operators/sampling.hash_bps."""
+    """train/eval decision from hash_bps(``key_expr``, "csplit")."""
     return (
-        "CASE WHEN CAST(('0x' || substr(md5('csplit|' || "
-        f"CAST({key_expr} AS VARCHAR)), 1, 8)) AS BIGINT) % 10000 "
+        f"CASE WHEN {ddb_hash_bps(key_expr, 'csplit')} "
         f"< {_Q197_SPLIT_BPS} THEN 'train' ELSE 'eval' END"
     )
 
 
 _Q197_ORACLE = (
-    f"WITH RECURSIVE {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-    f"{_DDB_CAND_CHAIN}, "
+    f"WITH RECURSIVE {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+    f"{DDB_CAND_CHAIN}, "
     "ver AS (SELECT t.a, t.b FROM inter t "
     "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
     "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -1171,8 +1108,7 @@ _Q198_BUDGET = 50_000  # whitespace-token budget per language
 _Q198_ORACLE = (
     "WITH t AS (SELECT doc_id, lang, "
     "len(list_filter(string_split(text, ' '), x -> x <> '')) AS toks, "
-    "CAST(('0x' || substr(md5('budget|' || CAST(doc_id AS VARCHAR)), "
-    "1, 8)) AS BIGINT) % 10000 AS bps FROM documents), "
+    f"{ddb_hash_bps('doc_id', 'budget')} AS bps FROM documents), "
     "r AS (SELECT lang, toks, SUM(toks) OVER (PARTITION BY lang "
     "ORDER BY bps, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND "
     "CURRENT ROW) AS cum FROM t) "

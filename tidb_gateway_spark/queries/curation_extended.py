@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators import text as text_ops
+from tidb_gateway_spark.operators.sampling import ddb_salted_md5, salted_md5
 from tidb_gateway_spark.queries.registry import register
 
 _DDB_TOKS = "len(list_filter(string_split(text, ' '), x -> x <> ''))"
@@ -109,7 +110,7 @@ _Q202_CAP = 5
 
 _Q202_ORACLE = (
     "WITH r AS (SELECT source, ROW_NUMBER() OVER (PARTITION BY source "
-    "ORDER BY md5('cap|' || CAST(doc_id AS VARCHAR)), doc_id) AS rk, "
+    f"ORDER BY {ddb_salted_md5('doc_id', 'cap')}, doc_id) AS rk, "
     f"{_DDB_TOKS} AS toks FROM documents) "
     "SELECT source, CAST(COUNT(*) AS BIGINT) AS total_docs, "
     f"CAST(SUM(CASE WHEN rk <= {_Q202_CAP} THEN 1 ELSE 0 END) AS BIGINT) "
@@ -136,8 +137,8 @@ _Q202_ORACLE = (
 )
 def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    h = F.md5(F.concat(F.lit("cap|"), F.col("doc_id").cast("string")))
-    w = Window.partitionBy("source").orderBy(h, "doc_id")
+    w = Window.partitionBy("source").orderBy(
+        salted_md5(F.col("doc_id"), "cap"), "doc_id")
     r = d.select(
         "source",
         text_ops.ws_token_count(F.col("text")).cast("bigint").alias("toks"),

@@ -64,7 +64,14 @@ from pyspark.sql.window import Window
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators import dedup
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_CAND_CHAIN,
+    DDB_SHINGLES,
+    DDB_SIGS,
+)
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.sampling import ddb_hash_bps
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q245
@@ -279,16 +286,10 @@ def q247(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q248
 # Reuse q72/q74's EXACT candidate/verify definitions so the matrix is
 # an aggregation of the certified pair list, not a re-derivation.
-from tidb_gateway_spark.queries.llm_extended import (  # noqa: E402
-    _DDB_BANDS,
-    _DDB_CAND_CHAIN,
-    _DDB_SHINGLES,
-    _DDB_SIGS,
-)
 
 _Q248_ORACLE = (
-    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-    f"{_DDB_CAND_CHAIN} , "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+    f"{DDB_CAND_CHAIN} , "
     "ver AS (SELECT t.a, t.b FROM inter t "
     "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
     "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -343,8 +344,7 @@ _Q249_B = 10  # delete-one-block jackknife blocks (md5-hash assigned)
 
 _Q249_ORACLE = (
     "WITH blk AS (SELECT "
-    "(CAST(('0x' || substr(md5('jk|' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-    f"AS BIGINT) % 10000) % {_Q249_B} AS b, n_chars FROM documents), "
+    f"{ddb_hash_bps('doc_id', 'jk')} % {_Q249_B} AS b, n_chars FROM documents), "
     "p AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS nb, "
     "CAST(SUM(n_chars) AS BIGINT) AS sb FROM blk GROUP BY 1), "
     "t AS (SELECT b, nb, sb, CAST(SUM(nb) OVER () AS BIGINT) AS n, "

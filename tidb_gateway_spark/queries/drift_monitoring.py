@@ -44,7 +44,8 @@ from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators.cache import tracked_persist
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
-from tidb_gateway_spark.queries.llm_extended import _ddb_hex_to_int
+from tidb_gateway_spark.operators.sampling import ddb_hash_bps
+from tidb_gateway_spark.operators.sketch import ddb_hex_frac, hex_frac
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q255
@@ -63,9 +64,9 @@ _Q255_ORACLE = (
     "merged AS (SELECT '__all__' AS source, h FROM ("
     "SELECT DISTINCT h FROM kmin ORDER BY h LIMIT " + str(_Q255_K) + ")), "
     "sk AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS k_used, "
-    "MAX(h) AS kth, (COUNT(*) - 1) * 1.0 / ("
-    + _ddb_hex_to_int("MAX(h)", 8)
-    + " / 4294967296.0) AS est_raw "
+    "MAX(h) AS kth, (COUNT(*) - 1) * 1.0 / "
+    + ddb_hex_frac("MAX(h)")
+    + " AS est_raw "
     "FROM (SELECT * FROM kmin UNION ALL SELECT * FROM merged) "
     "GROUP BY source), "
     "ex AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS exact FROM sw "
@@ -118,8 +119,7 @@ def q255(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est_raw = (
         (F.count("*") - F.lit(1)).cast("double")
-        / (F.conv(F.substring(F.max("h"), 1, 8), 16, 10).cast("double")
-           / F.lit(4294967296.0))
+        / hex_frac(F.max("h"))
     )
     sk = (
         kmin.unionAll(merged)
@@ -157,14 +157,10 @@ def q255(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q256
 _Q256_SNAP_BPS = 5_000  # hash half-split: snapshot A < 5000 <= B
 
-_DDB_Q256_BPS = (
-    "(" + _ddb_hex_to_int("md5('snap|' || CAST(doc_id AS VARCHAR))", 8)
-    + " % 10000)"
-)
-
 _Q256_ORACLE = (
     "WITH snap AS (SELECT source, "
-    f"CASE WHEN {_DDB_Q256_BPS} < {_Q256_SNAP_BPS} THEN 'a' ELSE 'b' END "
+    f"CASE WHEN {ddb_hash_bps('doc_id', 'snap')} < {_Q256_SNAP_BPS} "
+    "THEN 'a' ELSE 'b' END "
     "AS snp, md5(text) AS th FROM documents), "
     "per AS (SELECT source, snp, CAST(COUNT(*) AS BIGINT) AS n, "
     "CAST(COUNT(*) - COUNT(DISTINCT th) AS BIGINT) AS dups "
@@ -265,11 +261,6 @@ def q256(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q258
 _Q258_N = 3  # gram width in words
 
-_DDB_Q258_BPS = (
-    "(" + _ddb_hex_to_int("md5('snap|' || CAST(doc_id AS VARCHAR))", 8)
-    + " % 10000)"
-)
-
 # DuckDB: 3-word grams over the >=3-word docs, md5'd (md5 is the
 # cross-engine-identical hash; both engines join on the same 32-hex
 # digests, so the novelty counts match bit-for-bit with no
@@ -283,8 +274,8 @@ _Q258_ORACLE = (
     f"i -> array_to_string(wl[i : i + {_Q258_N - 1}], ' '))) AS gram "
     f"FROM wl WHERE len(wl) >= {_Q258_N}), "
     "s AS (SELECT "
-    f"CASE WHEN {_DDB_Q258_BPS} < {_Q256_SNAP_BPS} THEN 'a' ELSE 'b' END "
-    "AS snp, source, md5(gram) AS h FROM g), "
+    f"CASE WHEN {ddb_hash_bps('doc_id', 'snap')} < {_Q256_SNAP_BPS} "
+    "THEN 'a' ELSE 'b' END AS snp, source, md5(gram) AS h FROM g), "
     "cd AS (SELECT DISTINCT snp, source, h FROM s), "
     "a AS (SELECT DISTINCT h FROM cd WHERE snp = 'a'), "
     "b AS (SELECT source, h FROM cd WHERE snp = 'b'), "

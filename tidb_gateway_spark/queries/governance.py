@@ -47,6 +47,7 @@ from pyspark.sql.window import Window
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.operators import sketch
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.queries.registry import register
@@ -122,46 +123,29 @@ def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q179
-_CMS_DEPTH = 4
-_CMS_WIDTH = 2048
+# CMS hashing and cell construction, in both engines, live in
+# operators/sketch.py (shared with the streaming twin,
+# streaming/jobs.streaming_cms_cells).
 _CMS_TOPK = 10
 
-def _q179_hash_sql(j_expr: str, key_expr: str) -> str:
-    """DuckDB twin of _cms_bucket: the j-th 5-hex-digit (20-bit) slice
-    of ONE md5 of 'cms|{key}' — single-digest row hashing, same
-    construction as minhash_signatures (slices of a cryptographic
-    digest are independent)."""
-    return (
-        f"CAST(('0x' || substr(md5('cms|' || CAST({key_expr} AS VARCHAR)), "
-        f"1 + CAST({j_expr} AS INT) * 5, 5)) AS BIGINT) % {_CMS_WIDTH}"
-    )
-
-
 _Q179_ORACLE = (
-    "WITH cells AS (SELECT t.j, "
-    + _q179_hash_sql("t.j", "o_custkey")
-    + " AS bucket, COUNT(*) AS cnt "
-    f"FROM orders, UNNEST(range(0, {_CMS_DEPTH})) AS t(j) GROUP BY 1, 2), "
+    f"WITH cells AS ({sketch.ddb_cms_cells('orders', 'o_custkey')}), "
     "exact AS (SELECT o_custkey AS custkey, COUNT(*) AS exact_n "
     "FROM orders GROUP BY 1 "
     f"ORDER BY exact_n DESC, custkey LIMIT {_CMS_TOPK}), "
     "est AS (SELECT e.custkey, e.exact_n, MIN(c.cnt) AS est_n "
-    f"FROM exact e, UNNEST(range(0, {_CMS_DEPTH})) AS t(j) "
+    f"FROM exact e, UNNEST(range(0, {sketch.CMS_DEPTH})) AS t(j) "
     "JOIN cells c ON c.j = t.j AND c.bucket = "
-    + _q179_hash_sql("t.j", "e.custkey")
+    + sketch.ddb_cms_bucket("t.j", "e.custkey")
     + " GROUP BY 1, 2), "
     "n AS (SELECT COUNT(*) AS total FROM orders) "
     "SELECT est.custkey, CAST(est.exact_n AS BIGINT) AS exact_n, "
     "CAST(est.est_n AS BIGINT) AS est_n, "
     "(est.est_n >= est.exact_n AND "
-    f"est.est_n <= est.exact_n + CAST(CEIL(2.0 / {_CMS_WIDTH} * n.total) "
-    "AS BIGINT)) AS within_bound "
+    "est.est_n <= est.exact_n + "
+    f"CAST(CEIL(2.0 / {sketch.CMS_WIDTH} * n.total) AS BIGINT)) AS within_bound "
     "FROM est, n ORDER BY exact_n DESC, custkey"
 )
-
-
-# CMS hashing/cell construction lives in operators/sketch.py (shared
-# with the streaming twin, streaming/jobs.streaming_cms_cells).
 
 
 @register(
@@ -169,7 +153,7 @@ _Q179_ORACLE = (
     _Q179_ORACLE,
     doc="Count–min sketch heavy hitters, composed from DataFrame ops "
         "instead of an opaque accumulator: the sketch is the "
-        f"({_CMS_DEPTH}×{_CMS_WIDTH})-cell counter table built by a "
+        f"({sketch.CMS_DEPTH}×{sketch.CMS_WIDTH})-cell counter table built by a "
         "depth-way explode + partial-aggregated groupBy — fixed-size "
         "mergeable state no matter the input (the CMS update/merge "
         "algebra, map-side combined by Catalyst).  Estimates for the "
@@ -182,14 +166,12 @@ _Q179_ORACLE = (
     tags=("sketch", "approx", "governance"),
 )
 def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators import sketch
-
     o = load_table(spark, sf_dir, "orders")
     key = F.col("o_custkey")
 
     # sketch cells: ONE md5 per order (projected so codegen evaluates
     # it once), depth bucket slices exploded, count per cell
-    cells = sketch.cms_cells(o, key, _CMS_DEPTH, _CMS_WIDTH)
+    cells = sketch.cms_cells(o, key)
 
     exact = (
         o.groupBy(key.alias("custkey"))
@@ -204,8 +186,7 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
             sketch.cms_digest(F.col("custkey")).alias("dg"))
         .select(
             "custkey", "exact_n",
-            sketch.cms_depth_buckets(
-                F.col("dg"), _CMS_DEPTH, _CMS_WIDTH).alias("c"))
+            sketch.cms_depth_buckets(F.col("dg")).alias("c"))
         .select("custkey", "exact_n", "c.j", "c.bucket")
     )
 
@@ -217,7 +198,8 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     total = o.agg(F.count("*").alias("total"))
-    eps_bound = F.ceil(F.lit(2.0 / _CMS_WIDTH) * F.col("total")).cast("bigint")
+    eps_bound = F.ceil(
+        F.lit(2.0 / sketch.CMS_WIDTH) * F.col("total")).cast("bigint")
     return (
         est.crossJoin(total)
         .select(

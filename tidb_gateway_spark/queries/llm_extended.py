@@ -15,53 +15,28 @@ from pyspark.sql import functions as F
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators import dedup, text as text_ops
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_CAND_CHAIN,
+    DDB_SHINGLES,
+    DDB_SIGS,
+    DDB_SIMHASH_BITS,
+    DDB_SIMHASH_CONCAT,
+    DDB_SIMHASH_SIGS,
+    DDB_WORDS,
+)
 from tidb_gateway_spark.operators.localrel import local_rows_df
+from tidb_gateway_spark.operators.multimodal import ddb_payload_byte
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.sampling import ddb_hash_bps
 from tidb_gateway_spark.operators.similarity import cosine_nn_arrow, hyperplanes
+from tidb_gateway_spark.operators.text import DDB_QSCORE
 from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.sources import derived
 
 # ---------------------------------------------------------------- Q72
-_DDB_WORDS = (
-    "words AS (SELECT DISTINCT doc_id, w FROM "
-    "(SELECT doc_id, UNNEST(string_split(text,' ')) AS w FROM documents) "
-    "WHERE w <> '')"
-)
-# dedup.SHINGLE_N-word shingles (see operators/dedup.py:doc_shingles
-# for why unigrams are the wrong feature for MinHash on a
-# small-vocabulary corpus).
-_DDB_SHINGLES = (
-    "shingles AS (SELECT DISTINCT doc_id, w FROM ("
-    f"SELECT doc_id, UNNEST(CASE WHEN len(wl) >= {dedup.SHINGLE_N} THEN "
-    f"list_transform(range(1, len(wl) - {dedup.SHINGLE_N - 2}), i -> "
-    + " || ' ' || ".join(
-        ["wl[i]"] + [f"wl[i+{k}]" for k in range(1, dedup.SHINGLE_N)])
-    + ") ELSE [array_to_string(wl, ' ')] END) AS w FROM "
-    "(SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS wl "
-    "FROM documents)))"
-)
-# Single-digest MinHash: hash function j is the j-th 5-hex-digit slice
-# of ONE md5 per shingle — must state the same family as
-# operators/dedup.py:minhash_signatures (one digest, k slices).
-_DDB_SIGS = (
-    "sigs AS (SELECT doc_id, "
-    + ", ".join(f"MIN(substr(md5(w), {1 + 5 * j}, 5)) AS h{j}"
-                for j in range(dedup.K))
-    + " FROM shingles GROUP BY doc_id)"
-)
-_DDB_ROWS = dedup.K // dedup.BANDS
-_DDB_BANDS = (
-    "bands AS ("
-    + " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        + " || ".join(f"h{_DDB_ROWS * b + r}" for r in range(_DDB_ROWS))
-        + " AS bv FROM sigs"
-        for b in range(dedup.BANDS)
-    )
-    + ")"
-)
 _Q72_ORACLE = (
-    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS} "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS} "
     "SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x JOIN bands y "
     "ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id ORDER BY a, b"
 )
@@ -81,19 +56,10 @@ def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q73
-_BITS = 16
-_DDB_SIMHASH_BITS = ", ".join(
-    f"SUM(CASE WHEN substr(md5(w), {j + 1}, 1) IN "
-    f"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS b{j}"
-    for j in range(_BITS)
-)
-_DDB_SIMHASH_CONCAT = " || ".join(
-    f"(CASE WHEN b{j} > 0 THEN '1' ELSE '0' END)" for j in range(_BITS)
-)
 _Q73_ORACLE = (
-    f"WITH {_DDB_WORDS}, "
-    f"perdoc AS (SELECT doc_id, {_DDB_SIMHASH_BITS} FROM words GROUP BY doc_id), "
-    f"sh AS (SELECT {_DDB_SIMHASH_CONCAT} AS sh FROM perdoc), "
+    f"WITH {DDB_WORDS}, "
+    f"perdoc AS (SELECT doc_id, {DDB_SIMHASH_BITS} FROM words GROUP BY doc_id), "
+    f"sh AS (SELECT {DDB_SIMHASH_CONCAT} AS sh FROM perdoc), "
     "g AS (SELECT sh, COUNT(*) AS m FROM sh GROUP BY sh) "
     "SELECT COUNT(*) AS u, CAST(SUM(m) AS BIGINT) AS n, "
     "CAST(SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS BIGINT) AS c FROM g"
@@ -109,7 +75,7 @@ _Q73_ORACLE = (
 )
 def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash(dedup.doc_word_sets(d), bits=_BITS)
+    sh = dedup.simhash(dedup.doc_word_sets(d))
     g = sh.groupBy("sh").agg(F.count("*").alias("m"))
     return g.agg(
         F.count("*").alias("u"),
@@ -119,16 +85,8 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q74
-_DDB_CAND_CHAIN = (
-    "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x JOIN bands y "
-    "ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id), "
-    "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
-    "inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM cand c "
-    "JOIN shingles wa ON wa.doc_id = c.a JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w "
-    "GROUP BY c.a, c.b)"
-)
 _Q74_ORACLE = (
-    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, {_DDB_CAND_CHAIN} "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, {DDB_CAND_CHAIN} "
     "SELECT t.a, t.b, FLOOR((CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE))*10000 + 0.5)/10000 AS jac "
     "FROM inter t JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
     "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5 ORDER BY a, b"
@@ -397,17 +355,9 @@ def q77(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q78
-_DDB_QSCORE = (
-    "0.5 * LEAST(1.0, n_chars / 200.0) "
-    "+ 0.3 * (1.0 - (length(text) - length(replace(text,' ',''))) * 1.0 / length(text)) "
-    "+ 0.2 * LEAST(1.0, ((length(text) - (length(text) - length(replace(text,' ','')))) "
-    "/ ((length(text) - length(replace(text,' ',''))) + 1.0)) / 8.0)"
-)
-
-
 @register(
     "q78_quality_score_histogram",
-    f"SELECT CAST(FLOOR(({_DDB_QSCORE}) * 20) AS INT) AS bucket, COUNT(*) AS n "
+    f"SELECT CAST(FLOOR(({DDB_QSCORE}) * 20) AS INT) AS bucket, COUNT(*) AS n "
     "FROM documents GROUP BY 1 ORDER BY bucket",
     doc="Quality-score histogram (operators/text.py:quality_score): "
         "length/space-density/word-length composite, bucketed at 0.05.",
@@ -483,22 +433,13 @@ def q80(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q81
-# Oracle recomputes the stub decode from md5 hex chars: byte k of the
-# payload = hex pair (2k+1, 2k+2) parsed via strpos arithmetic.
-_DDB_HEXPOS = "(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"
-
-
-def _ddb_byte(k: int) -> str:
-    hi = _DDB_HEXPOS.format(i=2 * k + 1)
-    lo = _DDB_HEXPOS.format(i=2 * k + 2)
-    return f"({hi} * 16 + {lo})"
-
-
+# Oracle recomputes the stub decode from md5 hex chars
+# (operators/multimodal.py:ddb_payload_byte).
 _Q81_ORACLE = (
     "WITH hx AS (SELECT md5(text) AS h FROM documents), "
-    f"meta AS (SELECT CAST({_ddb_byte(0)} % 64 + 16 AS INT) AS width, "
-    f"CAST({_ddb_byte(1)} % 64 + 16 AS INT) AS height, "
-    f"(CASE {_ddb_byte(2)} % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' "
+    f"meta AS (SELECT CAST({ddb_payload_byte(0)} % 64 + 16 AS INT) AS width, "
+    f"CAST({ddb_payload_byte(1)} % 64 + 16 AS INT) AS height, "
+    f"(CASE {ddb_payload_byte(2)} % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' "
     "ELSE 'webp' END) AS fmt FROM hx) "
     "SELECT fmt, COUNT(*) AS n, FLOOR(AVG(width)*100 + 0.5)/100 AS aw, "
     "FLOOR(AVG(height)*100 + 0.5)/100 AS ah FROM meta GROUP BY fmt ORDER BY fmt"
@@ -532,24 +473,10 @@ def q81(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q82
-# Oracle recomputes hash_bps: first 8 md5 hex chars parsed as a 32-bit
-# int (DuckDB lacks conv(hex); strpos arithmetic builds the value).
-def _ddb_hex_to_int(hexpr: str, n: int) -> str:
-    terms = [
-        f"(strpos('0123456789abcdef', substr({hexpr}, {i + 1}, 1)) - 1) * {16 ** (n - 1 - i)}"
-        for i in range(n)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-_DDB_BPS = (
-    "(" + _ddb_hex_to_int("md5('split|' || CAST(doc_id AS VARCHAR))", 8) + " % 10000)"
-)
-
-
 @register(
     "q82_deterministic_split",
-    f"SELECT CASE WHEN {_DDB_BPS} < 9000 THEN 'train' ELSE 'eval' END AS part, "
+    f"SELECT CASE WHEN {ddb_hash_bps('doc_id', 'split')} < 9000 "
+    "THEN 'train' ELSE 'eval' END AS part, "
     "COUNT(*) AS n, COUNT(DISTINCT lang) AS nl FROM documents "
     "GROUP BY 1 ORDER BY part",
     doc="Deterministic 90/10 train-eval split by hashed doc_id "
@@ -573,14 +500,10 @@ def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q83
-_DDB_SAMPLE_BPS = (
-    "(" + _ddb_hex_to_int("md5('sample|' || CAST(doc_id AS VARCHAR))", 8) + " % 10000)"
-)
-
-
 @register(
     "q83_hash_sample_per_stratum",
-    f"SELECT lang, COUNT(*) AS n FROM documents WHERE {_DDB_SAMPLE_BPS} < 2000 "
+    "SELECT lang, COUNT(*) AS n FROM documents "
+    f"WHERE {ddb_hash_bps('doc_id', 'sample')} < 2000 "
     "GROUP BY lang ORDER BY lang",
     doc="~20% deterministic hash sample, counted per language stratum "
         "(operators/sampling.py:hash_sample) — uniformity within strata "
@@ -650,7 +573,8 @@ def q85(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q90
 @register(
     "q90_incremental_dedup_anti_join",
-    f"WITH seen AS (SELECT md5(text) AS h FROM documents WHERE {_DDB_SAMPLE_BPS} < 5000) "
+    "WITH seen AS (SELECT md5(text) AS h FROM documents "
+    f"WHERE {ddb_hash_bps('doc_id', 'sample')} < 5000) "
     "SELECT COUNT(*) AS novel, (SELECT COUNT(*) FROM documents) AS total FROM documents d "
     "WHERE NOT EXISTS (SELECT 1 FROM seen s WHERE s.h = md5(d.text))",
     doc="Incremental dedup: new-batch documents anti-joined against a "
@@ -678,7 +602,7 @@ def q90(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q91
 @register(
     "q91_contamination_check",
-    f"WITH {_DDB_SHINGLES}, "
+    f"WITH {DDB_SHINGLES}, "
     "bench AS (SELECT DISTINCT w FROM shingles WHERE doc_id < 10), "
     "hits AS (SELECT DISTINCT s.doc_id FROM shingles s JOIN bench b ON s.w = b.w "
     "WHERE s.doc_id >= 10) "
@@ -824,15 +748,11 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
 # documents fixture is ~39% en); zh/de kept in full via the default.
 _MIX_RATES = {"en": 4000, "fr": 8000, "es": 8000}
 
-_DDB_MIX_BPS = (
-    "(" + _ddb_hex_to_int("md5('mix|' || CAST(doc_id AS VARCHAR))", 8) + " % 10000)"
-)
-
 _Q97_ORACLE = (
     "WITH r(rl, bps) AS (VALUES "
     + ", ".join(f"('{k}', {v})" for k, v in sorted(_MIX_RATES.items()))
     + "), k AS (SELECT d.lang, CASE WHEN "
-    + _DDB_MIX_BPS
+    + ddb_hash_bps("doc_id", "mix")
     + " < COALESCE(r.bps, 10000) THEN 1 ELSE 0 END AS keep "
     "FROM documents d LEFT JOIN r ON d.lang = r.rl) "
     "SELECT lang, CAST(SUM(keep) AS BIGINT) AS kept, COUNT(*) AS total "
@@ -996,8 +916,8 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q101
 _Q101_ORACLE = (
-    f"WITH RECURSIVE {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-    f"{_DDB_CAND_CHAIN}, "
+    f"WITH RECURSIVE {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+    f"{DDB_CAND_CHAIN}, "
     "ver AS (SELECT t.a, t.b FROM inter t "
     "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
     "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -1030,11 +950,9 @@ def q101(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q130
 _Q130_ORACLE = (
-    f"WITH {_DDB_WORDS}, "
-    f"perdoc AS (SELECT doc_id, {_DDB_SIMHASH_BITS} FROM words GROUP BY doc_id), "
-    f"sh AS (SELECT doc_id, {_DDB_SIMHASH_CONCAT} AS sh FROM perdoc), "
+    f"WITH {DDB_SIMHASH_SIGS}, "
     "q AS (SELECT doc_id, ("
-    + _DDB_QSCORE +
+    + DDB_QSCORE +
     ") AS q FROM documents), "
     "r AS (SELECT s.sh, s.doc_id, q.q, "
     "ROW_NUMBER() OVER (PARTITION BY s.sh ORDER BY q.q DESC, s.doc_id) AS rn, "
@@ -1067,7 +985,7 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators import text as text_ops
 
     d = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash(dedup.doc_word_sets(d), bits=_BITS)
+    sh = dedup.simhash(dedup.doc_word_sets(d))
     q = d.select(
         "doc_id",
         text_ops.quality_score(F.col("text"), F.col("n_chars")).alias("q"),
@@ -1428,7 +1346,7 @@ def _q209_oracle() -> str:
             "JOIN deg d ON d.src = e.src GROUP BY e.dst)"
         )
     return (
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+        f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
         # AS MATERIALIZED: the edges CTE is referenced by every
         # iteration; without the hint DuckDB inlines the whole
         # MinHash pipeline into each reference and spilled >70 GB at

@@ -21,18 +21,19 @@ from pyspark.sql import functions as F
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators import multimodal
-from tidb_gateway_spark.queries.llm_extended import _ddb_byte, _ddb_hex_to_int
+from tidb_gateway_spark.operators.multimodal import ddb_payload_byte
+from tidb_gateway_spark.operators.sampling import ddb_hex_int, hex_int
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q108
 _FMT_CASE = (
-    f"(CASE {_ddb_byte(2)} % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' "
+    f"(CASE {ddb_payload_byte(2)} % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' "
     "ELSE 'webp' END)"
 )
 _Q108_ORACLE = (
     "WITH hx AS (SELECT md5(text) AS h FROM documents), "
     f"f AS (SELECT {_FMT_CASE} AS fmt, "
-    + ", ".join(f"{_ddb_byte(d)} / 256.0 AS f{d}" for d in range(4))
+    + ", ".join(f"{ddb_payload_byte(d)} / 256.0 AS f{d}" for d in range(4))
     + " FROM hx) "
     "SELECT fmt, COUNT(*) AS n, "
     + ", ".join(
@@ -73,13 +74,13 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q109
 _Q109_ORACLE = (
     "WITH hx AS (SELECT doc_id, md5(text) AS h FROM documents), "
-    f"nf AS (SELECT doc_id, h, {_ddb_byte(3)} % 30 + 1 AS n FROM hx), "
+    f"nf AS (SELECT doc_id, h, {ddb_payload_byte(3)} % 30 + 1 AS n FROM hx), "
     "fr AS (SELECT doc_id, UNNEST(range(0, n, 5)) AS idx, h FROM nf), "
     "k AS (SELECT doc_id, CAST(idx AS INT) AS frame_idx, "
     "md5(h || '|' || CAST(idx AS VARCHAR)) AS key FROM fr) "
     "SELECT COUNT(*) AS frames, COUNT(DISTINCT doc_id) AS docs, "
     "CAST(MAX(frame_idx) AS INT) AS max_idx, "
-    f"CAST(SUM({_ddb_hex_to_int('key', 8)}) AS BIGINT) AS ck FROM k"
+    f"CAST(SUM({ddb_hex_int('key', 1, 8)}) AS BIGINT) AS ck FROM k"
 )
 
 
@@ -102,19 +103,17 @@ def q109(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("frames"),
         F.countDistinct("doc_id").alias("docs"),
         F.max("frame_idx").alias("max_idx"),
-        F.sum(
-            F.conv(F.substring("frame_key", 1, 8), 16, 10).cast("bigint")
-        ).alias("ck"),
+        F.sum(hex_int(F.col("frame_key"), 1, 8)).alias("ck"),
     )
 
 
 # ---------------------------------------------------------------- Q149
 _Q149_RMS = " + ".join(
-    f"({_ddb_byte(k)} - 128) * ({_ddb_byte(k)} - 128)" for k in range(16)
+    f"({ddb_payload_byte(k)} - 128) * ({ddb_payload_byte(k)} - 128)" for k in range(16)
 )
 _Q149_ORACLE = (
     "WITH hx AS (SELECT md5(text) AS h FROM documents), "
-    f"a AS (SELECT (CASE {_ddb_byte(0)} % 3 WHEN 0 THEN 16000 "
+    f"a AS (SELECT (CASE {ddb_payload_byte(0)} % 3 WHEN 0 THEN 16000 "
     "WHEN 1 THEN 22050 ELSE 44100 END) AS sample_rate, "
     f"CAST({_Q149_RMS} AS BIGINT) AS rms_q FROM hx) "
     "SELECT CAST(sample_rate AS INT) AS sample_rate, COUNT(*) AS n, "

@@ -45,8 +45,15 @@ from pyspark.sql import functions as F
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.operators import dedup
 from tidb_gateway_spark.operators import similarity
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_CAND_CHAIN,
+    DDB_SHINGLES,
+    DDB_SIGS,
+    DDB_SIMHASH_FLIPS,
+    DDB_SIMHASH_SIGS,
+)
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
-from tidb_gateway_spark.queries import llm_extended as _llm
 from tidb_gateway_spark.queries.registry import register
 
 
@@ -244,7 +251,7 @@ _Q212_MATCHES = " + ".join(
 )
 
 _Q212_ORACLE = (
-    f"WITH {_llm._DDB_SHINGLES}, {_llm._DDB_SIGS}, {_llm._DDB_BANDS}, "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
     "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b "
     "FROM bands x JOIN bands y ON x.band = y.band AND x.bv = y.bv "
     "AND x.doc_id < y.doc_id), "
@@ -334,8 +341,8 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q213
 _Q213_ORACLE = (
-    f"WITH {_llm._DDB_SHINGLES}, {_llm._DDB_SIGS}, {_llm._DDB_BANDS}, "
-    f"{_llm._DDB_CAND_CHAIN}, "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+    f"{DDB_CAND_CHAIN}, "
     "ver AS (SELECT t.a, t.b FROM inter t "
     "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
     "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -384,25 +391,17 @@ def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q234
 # Prediction: SimHash multiprobe pairs (Hamming <= 1, q114's operator);
 # truth: MinHash-LSH candidates verified at exact Jaccard >= 0.5 (q74).
-_Q234_ORACLE_TMPL = None  # assembled below from both sketch chains
-
-
 def _q234_oracle() -> str:
-    from tidb_gateway_spark.queries import corpus_shaping as _cs
-
     truth = (
-        f"{_llm._DDB_SHINGLES}, {_llm._DDB_SIGS}, {_llm._DDB_BANDS}, "
-        f"{_llm._DDB_CAND_CHAIN}, "
+        f"{DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+        f"{DDB_CAND_CHAIN}, "
         "truth AS (SELECT t.a, t.b FROM inter t "
         "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
         "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5)"
     )
     pred = (
-        f"{_cs._DDB_SH_WORDS}, "
-        f"perdoc AS (SELECT doc_id, {_cs._DDB_SH_BITS} FROM words "
-        "GROUP BY doc_id), "
-        f"sh AS (SELECT doc_id, {_cs._DDB_SH_CONCAT} AS sh FROM perdoc), "
-        f"probes AS (SELECT doc_id, UNNEST(list_append({_cs._DDB_SH_FLIPS}, "
+        f"{DDB_SIMHASH_SIGS}, "
+        f"probes AS (SELECT doc_id, UNNEST(list_append({DDB_SIMHASH_FLIPS}, "
         "sh)) AS p FROM sh), "
         "pred AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b "
         "FROM probes x JOIN sh y ON x.p = y.sh AND x.doc_id < y.doc_id)"
@@ -422,7 +421,7 @@ def _q234_oracle() -> str:
 
 @register(
     "q234_sketch_agreement_audit",
-    None,  # assembled at import end (needs corpus_shaping loaded)
+    _q234_oracle(),
     doc="Sketch cross-validation: SimHash multiprobe pairs (Hamming "
         "<= 1, the q114 operator) scored as a PREDICTOR of the "
         "MinHash-verified truth set (LSH candidates at exact Jaccard "
@@ -438,7 +437,7 @@ def _q234_oracle() -> str:
 def q234(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     truth = dedup.near_dup_pairs(d).select("a", "b")
-    pred = dedup.simhash_multiprobe_pairs(d, bits=16).select("a", "b")
+    pred = dedup.simhash_multiprobe_pairs(d).select("a", "b")
     # ONE full-outer join + ONE aggregate computes all three counts —
     # the three-aggregate form (n_truth, n_pred, tp as separate
     # branches) re-executed the whole minhash-verify chain twice and
@@ -469,13 +468,10 @@ def q234(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q235
-_Q235_ORACLE_TMPL = None  # assembled below
-
-
 def _q235_oracle() -> str:
     near = (
-        f"{_llm._DDB_SHINGLES}, {_llm._DDB_SIGS}, {_llm._DDB_BANDS}, "
-        f"{_llm._DDB_CAND_CHAIN}, "
+        f"{DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+        f"{DDB_CAND_CHAIN}, "
         "ver AS (SELECT t.a, t.b FROM inter t "
         "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
         "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -501,7 +497,7 @@ def _q235_oracle() -> str:
 
 @register(
     "q235_dedup_waterfall",
-    None,  # assembled at import end
+    _q235_oracle(),
     doc="Per-source dedup waterfall: raw doc count -> exact-dedup "
         "survivors (min doc_id per md5(text)) -> near-dup canonical "
         "survivors (docs that are their connected-component canonical "
@@ -545,18 +541,6 @@ def q235(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-# Assemble the composite oracles now that both sketch chains exist
-# (QuerySpec is frozen — swap via dataclasses.replace, the q115 way).
-import dataclasses as _dc  # noqa: E402
-
-from tidb_gateway_spark.queries.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["q234_sketch_agreement_audit"] = _dc.replace(
-    _REG["q234_sketch_agreement_audit"], oracle=_q234_oracle())
-_REG["q235_dedup_waterfall"] = _dc.replace(
-    _REG["q235_dedup_waterfall"], oracle=_q235_oracle())
 
 
 # ---------------------------------------------------------------- Q261

@@ -7,8 +7,15 @@ driver executes both at sf0.01 and hash-matches row-count + schema +
 values (columns sorted by name), so **every computed column is aliased to
 the same name in both forms** (FIXTURES.md canonicalization rules).
 
-Specs whose semantics are not SQL-expressible (stateful streaming,
-multimodal decode stubs) set ``oracle=None`` and get a rows-only check.
+An oracle is fixed when its query registers: a ``QuerySpec`` is frozen
+and never replaced afterwards.  Oracles are assembled from the DuckDB
+twins that ``operators/`` exports beside each shared Spark form (salted
+hashes in ``sampling``, MinHash/SimHash in ``dedup``, count-min cells
+in ``sketch``, the quality score in ``text``, payload bytes in
+``multimodal``), never from another query module's private SQL.  Only
+specs whose semantics are not SQL-expressible (stateful streaming,
+multimodal decode stubs) register ``oracle=None`` and get a rows-only
+check.
 """
 
 from __future__ import annotations

@@ -44,7 +44,14 @@ from pyspark.sql.window import Window
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_CAND_CHAIN,
+    DDB_SHINGLES,
+    DDB_SIGS,
+)
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.sampling import ddb_hash_bps, salted_md5
 from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.sources import derived
 
@@ -320,8 +327,7 @@ _Q218_BPS = 100  # 1% of customers are deletion subjects
 
 _Q218_ORACLE = (
     "WITH subj AS (SELECT c_custkey, c_nationkey FROM customer "
-    "WHERE CAST(('0x' || substr(md5('gdpr|' || CAST(c_custkey AS VARCHAR)), "
-    f"1, 8)) AS BIGINT) % 10000 < {_Q218_BPS}), "
+    f"WHERE {ddb_hash_bps('c_custkey', 'gdpr')} < {_Q218_BPS}), "
     "o AS (SELECT s.c_nationkey, o.o_orderkey FROM subj s "
     "JOIN orders o ON o.o_custkey = s.c_custkey), "
     "l AS (SELECT o.c_nationkey, COUNT(*) AS n_lineitems FROM o "
@@ -455,14 +461,8 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q217
 def _q217_oracle() -> str:
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS,
-        _DDB_SHINGLES,
-        _DDB_SIGS,
-    )
-
     return (
-        f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+        f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
         "cand AS MATERIALIZED (SELECT DISTINCT x.doc_id AS a, y.doc_id "
         "AS b FROM bands x JOIN bands y ON x.band = y.band AND "
         "x.bv = y.bv AND x.doc_id < y.doc_id), "
@@ -684,9 +684,7 @@ def q222(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ep in (1, 2):
         hk = F.concat(
             F.lit("0x"),
-            F.substring(
-                F.md5(F.concat(F.lit(f"epoch{ep}|"),
-                               F.col("doc_id").cast("string"))), 1, 16),
+            F.substring(salted_md5(F.col("doc_id"), f"epoch{ep}"), 1, 16),
         )
         r = (
             d.select(F.lit(ep).alias("epoch"), "doc_id", hk.alias("hk"))
@@ -832,8 +830,7 @@ _Q223_TOPK = 20
 _Q223_ORACLE = (
     "WITH win AS (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS ws, "
     f"CAST(o_orderdate AS DATE) + {_Q223_DAYS} AS we FROM orders "
-    "WHERE CAST(('0x' || substr(md5('win|' || CAST(o_orderkey AS VARCHAR)), "
-    f"1, 8)) AS BIGINT) % 10000 < {_Q223_BPS}) "
+    f"WHERE {ddb_hash_bps('o_orderkey', 'win')} < {_Q223_BPS}) "
     "SELECT w.o_orderkey, CAST(COUNT(*) AS BIGINT) AS n_shipped "
     "FROM win w JOIN lineitem l "
     "ON CAST(l.l_shipdate AS DATE) >= w.ws "
@@ -903,20 +900,12 @@ _Q224_BASE_BPS = 8000  # 80% of docs form the base snapshot
 
 
 def _q224_oracle() -> str:
-    from tidb_gateway_spark.queries.llm_extended import (
-        _DDB_BANDS,
-        _DDB_CAND_CHAIN,
-        _DDB_SHINGLES,
-        _DDB_SIGS,
-    )
+    def base_pred(c: str) -> str:
+        return f"{ddb_hash_bps(c, 'ivmbase')} < {_Q224_BASE_BPS}"
 
-    base_pred = (
-        "CAST(('0x' || substr(md5('ivmbase|' || CAST({c} AS VARCHAR)), "
-        f"1, 8)) AS BIGINT) % 10000 < {_Q224_BASE_BPS}"
-    )
     return (
-        f"WITH RECURSIVE {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
-        f"{_DDB_CAND_CHAIN}, "
+        f"WITH RECURSIVE {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
+        f"{DDB_CAND_CHAIN}, "
         "ver AS MATERIALIZED (SELECT t.a, t.b FROM inter t "
         "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
         "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
@@ -925,7 +914,7 @@ def _q224_oracle() -> str:
         "UNION SELECT e.u, w.m FROM edges e JOIN walk w ON w.n = e.v), "
         "cc_full AS (SELECT n AS doc_id, MIN(m) AS cid FROM walk GROUP BY n), "
         "bedges AS (SELECT u, v FROM edges WHERE "
-        + base_pred.format(c="u") + " AND " + base_pred.format(c="v") + "), "
+        + base_pred("u") + " AND " + base_pred("v") + "), "
         "bwalk(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM bedges) "
         "UNION SELECT e.u, w.m FROM bedges e JOIN bwalk w ON w.n = e.v), "
         "cc_base AS (SELECT n AS doc_id, MIN(m) AS cid FROM bwalk GROUP BY n), "

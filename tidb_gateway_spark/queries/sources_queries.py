@@ -149,16 +149,6 @@ def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORDERS_SCHEMA = T.StructType([
-    T.StructField("o_orderkey", T.LongType()),
-    T.StructField("o_custkey", T.LongType()),
-    T.StructField("o_orderstatus", T.StringType()),
-    T.StructField("o_totalprice", T.DoubleType()),
-    T.StructField("o_orderdate", T.TimestampType()),
-    T.StructField("o_orderpriority", T.StringType()),
-])
-
-
 @register(
     "q128_orc_source_roundtrip",
     "SELECT o_orderpriority, COUNT(*) AS n, "

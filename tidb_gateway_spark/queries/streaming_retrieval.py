@@ -59,20 +59,17 @@ from pyspark.sql import types as T
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.operators import dedup
+from tidb_gateway_spark.operators.dedup import DDB_BANDS, DDB_SHINGLES, DDB_SIGS
 from tidb_gateway_spark.operators.partitioning import (
     build_shuffle_partitions,
     ensure_min_partitions,
 )
-from tidb_gateway_spark.operators.sampling import hash_bps
+from tidb_gateway_spark.operators.sampling import ddb_hash_bps, hash_bps
 from tidb_gateway_spark.queries.llm_extended import (
-    _DDB_BANDS,
-    _DDB_SHINGLES,
-    _DDB_SIGS,
     _IVF_CELLS,
     _IVF_NPROBE,
     _Q72_ORACLE,
     _Q94_ORACLE,
-    _ddb_hex_to_int,
 )
 from tidb_gateway_spark.queries.pipeline_audit import (
     _Q261_GRAMS_SQL,
@@ -673,14 +670,12 @@ def _arrival_epoch() -> Column:
 
 
 # DuckDB twin of _arrival_epoch (before the INT cast)
-_DDB_ARRIVAL_EPOCH = (
-    "(" + _ddb_hex_to_int("md5('q262|' || CAST(doc_id AS VARCHAR))", 8)
-    + f" % 10000) % {_Q262_SPLITS}")
+_DDB_ARRIVAL_EPOCH = f"{ddb_hash_bps('doc_id', 'q262')} % {_Q262_SPLITS}"
 
 # shared oracle prefix: shingles → signatures → bands (q72's certified
 # chain), arrival epochs e, and band rows carrying their epoch be
 _DDB_EPOCH_BANDS = (
-    f"WITH {_DDB_SHINGLES}, {_DDB_SIGS}, {_DDB_BANDS}, "
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
     f"e AS (SELECT doc_id, CAST({_DDB_ARRIVAL_EPOCH} AS INT) AS ep "
     "FROM documents), "
     "be AS (SELECT b.doc_id, b.band, b.bv, e.ep FROM bands b "

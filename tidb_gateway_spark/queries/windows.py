@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.operators.sampling import ddb_hex_int, hex_int
 from tidb_gateway_spark.queries.registry import register
 
 # Per-user event ordering: ts is unique per user in the fixture, event_id
@@ -84,21 +85,14 @@ def q32(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value-exact: every (event_id, prev, nxt) triple feeds an md5-derived
 # 32-bit term summed per user, so any wrong/missing lag or lead anywhere
 # changes chk.  Both engines derive the term identically (first 8 md5
-# hex chars as an integer — Spark conv(...,16,10) ↔ DuckDB strpos
-# arithmetic); the sum is order-independent so no ordered agg is needed.
-def _chk_hex8_ddb(expr: str) -> str:
-    terms = [
-        f"(strpos('0123456789abcdef', substr({expr}, {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-        for i in range(8)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
+# hex chars as an integer — operators/sampling.hex_int and its DuckDB
+# twin ddb_hex_int); the sum is order-independent so no ordered agg is
+# needed.
 _Q33_ORACLE = (
     "SELECT user_id, COUNT(*) AS n, CAST(SUM("
-    + _chk_hex8_ddb(
+    + ddb_hex_int(
         "md5(CAST(event_id AS VARCHAR) || '|' || "
-        "COALESCE(prev, '~') || '|' || COALESCE(nxt, '~'))"
+        "COALESCE(prev, '~') || '|' || COALESCE(nxt, '~'))", 1, 8
     )
     + ") AS BIGINT) AS chk FROM ("
     "SELECT user_id, event_id, "
@@ -129,20 +123,17 @@ def q33(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("event_type").over(w).alias("prev"),
         F.lead("event_type").over(w).alias("nxt"),
     )
-    term = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("event_id").cast("string"),
-                    F.coalesce(F.col("prev"), F.lit("~")),
-                    F.coalesce(F.col("nxt"), F.lit("~")),
-                )
-            ),
-            1, 8,
+    term = hex_int(
+        F.md5(
+            F.concat_ws(
+                "|",
+                F.col("event_id").cast("string"),
+                F.coalesce(F.col("prev"), F.lit("~")),
+                F.coalesce(F.col("nxt"), F.lit("~")),
+            )
         ),
-        16, 10,
-    ).cast("bigint")
+        1, 8,
+    )
     return (
         seq.groupBy("user_id")
         .agg(F.count("*").alias("n"), F.sum(term).alias("chk"))
