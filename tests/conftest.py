@@ -42,3 +42,23 @@ def ddb():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SMOKE_SF_DIR
+
+
+@pytest.fixture(scope="session")
+def irregular_sf_dir(tmp_path_factory):
+    """The smoke fixture with 1–3 spaces between words and edge spaces
+    in every document (tests/perturbed_fixtures.py)."""
+    from tests.perturbed_fixtures import write_irregular_copy
+
+    return write_irregular_copy(
+        SMOKE_SF_DIR, str(tmp_path_factory.mktemp("sf_irregular")))
+
+
+@pytest.fixture(scope="session")
+def blank_sf_dir(tmp_path_factory):
+    """The irregular copy with every 50th document blank ('' or all
+    spaces)."""
+    from tests.perturbed_fixtures import write_blank_copy
+
+    return write_blank_copy(
+        SMOKE_SF_DIR, str(tmp_path_factory.mktemp("sf_blank")))

@@ -182,3 +182,18 @@ def test_mtime_rule_lives_only_in_derived():
         if any(b in line for b in banned)
     ]
     assert offenders == []
+
+
+def test_key_is_the_md5_prefix_of_the_joined_parts():
+    """derived.key keeps every companion name the hand-spelled
+    md5("a|b|…")[:16] gave, so artifacts built before it stay valid
+    (q76's ann_index among them)."""
+    src = "/fx/embeddings.parquet"
+    assert derived.key(src, 8, 64) == "ce1e108310b9a6d2"            # ann_index
+    assert derived.key("ivf", src, 8) == "54bc62ea8b853355"         # ivf_index
+    assert derived.key("ivfadc", src, 8, 16, 8, 256) == "02a702bd397ffe79"
+    assert derived.key("lshgate-lsm-v1", "/fx/documents.parquet",
+                       6, 3, 4, 2) == "804ed381e913dec1"
+    assert derived.key("/fx/events.parquet", "hourly-v1") == "d9c15a8167175531"
+    assert derived.key("bucketed", "/fx/orders.parquet",
+                       "/d/bucketed")[:8] == "be9df161"

@@ -161,7 +161,7 @@ def test_simhash_rows_match_ddb_twin(spark, sf_dir, ddb):
     rows, not only the aggregates q73/q114 declare."""
     d = load_table(spark, sf_dir, "documents")
     got = {(r["doc_id"], r["sh"])
-           for r in dedup.simhash(dedup.doc_word_sets(d)).collect()}
+           for r in dedup.simhash(d).collect()}
     want = set(ddb.execute(
         f"WITH {dedup.DDB_SIMHASH_SIGS} SELECT doc_id, sh FROM sh").fetchall())
     assert got and got == want
@@ -180,11 +180,95 @@ def test_cms_cells_match_ddb_twin(spark, sf_dir, ddb):
     assert got and got == want
 
 
+# ---- tokenizer twins: each text.py shape against its DuckDB text ----
+
+# Space runs, edge spaces, blank and all-space text, tabs, NBSP and
+# other non-ASCII; only U+0020 separates words.
+_PIECES = [" ", "  ", "   ", "\t", "\u00a0", "\u3000", "a", "b", "ab",
+           "é", "中文", "x\ty", "\u00a0z"]
+_texts = st.lists(
+    st.lists(st.sampled_from(_PIECES), max_size=14).map("".join),
+    min_size=1, max_size=8)
+_BLANKS = ["", " ", "   ", "\t", "\u00a0", " a  b ", "  中文\t é  "]
+
+
+def _twin_frames(spark, texts):
+    import duckdb
+    import pandas as pd
+
+    rows = list(enumerate(texts))
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["id", "text"]))
+    return spark.createDataFrame(rows, "id long, text string"), con
+
+
+@given(texts=_texts)
+@example(texts=_BLANKS)
+@settings(max_examples=25, deadline=None)
+def test_words_and_count_match_ddb_twins(spark, texts):
+    """text.words / word_count equal ddb_words / ddb_word_count on any
+    spacing: [] and 0 for blank text, no trimming of NBSP or tabs."""
+    from tidb_gateway_spark.operators import text as tx
+
+    df, con = _twin_frames(spark, texts)
+    got = {r["id"]: (list(r["w"]), r["n"]) for r in df.select(
+        "id", tx.words().alias("w"), tx.word_count().alias("n")).collect()}
+    want = {i: (w, n) for i, w, n in con.execute(
+        f"SELECT id, {tx.ddb_words()}, {tx.ddb_word_count()} FROM documents"
+    ).fetchall()}
+    assert got == want
+    for i, t in enumerate(texts):
+        assert got[i][0] == [w for w in t.split(" ") if w]
+
+
+@given(texts=_texts)
+@example(texts=_BLANKS)
+@settings(max_examples=25, deadline=None)
+def test_word_rows_match_ddb_twin(spark, texts):
+    """text.word_rows equals ddb_word_rows as a multiset of (id, w);
+    a blank text has no row."""
+    from collections import Counter
+
+    from tidb_gateway_spark.operators import text as tx
+
+    df, con = _twin_frames(spark, texts)
+    got = Counter((r["id"], r["w"])
+                  for r in tx.word_rows(df, "id").collect())
+    want = Counter(con.execute(tx.ddb_word_rows("id")).fetchall())
+    assert got == want
+
+
+@given(texts=st.lists(
+    st.lists(st.tuples(st.sampled_from(["a", "b", "é"]),
+                       st.sampled_from([" ", "  ", "   "])),
+             max_size=20)
+    .map(lambda ws: " " + "".join(w + s for w, s in ws)),
+    min_size=1, max_size=6))
+@settings(max_examples=25, deadline=None)
+def test_gram_digests_match_ddb_twin(spark, texts):
+    """(id, pos, gh) from posexplode(text.gram_digests) over text.words
+    equals text.DDB_GRAMS over ddb_words — including texts shorter
+    than GRAM_K words, which have no gram."""
+    from tidb_gateway_spark.operators import text as tx
+
+    df, con = _twin_frames(spark, texts)
+    got = {(r["id"], r["pos"], r["gh"]) for r in
+           df.select("id", tx.words().alias("wlist"))
+           .select("id", F.posexplode(tx.gram_digests()).alias("pos", "gh"))
+           .collect()}
+    want = set(con.execute(
+        f"WITH wl AS (SELECT id AS doc_id, {tx.ddb_words()} AS wl "
+        f"FROM documents), "
+        f"{tx.DDB_GRAMS} SELECT doc_id, pos, gh FROM g").fetchall())
+    assert got == want
+
+
 def test_hash_twins_live_only_in_operators():
     """Query modules assemble oracles from the operators' DuckDB twins:
-    no salted md5 is spelled by hand outside operators/, no query module
-    reaches into another one's private ``_DDB_*``/``_ddb_*`` SQL, and no
-    registered QuerySpec is patched with dataclasses.replace."""
+    no salted md5 is spelled by hand outside operators/, no whitespace
+    split of the ``text`` column is spelled outside operators/text.py,
+    no query module reaches into another one's ``_``-prefixed names,
+    and no registered QuerySpec is patched with dataclasses.replace."""
     import ast
     import pathlib
     import re
@@ -194,6 +278,20 @@ def test_hash_twins_live_only_in_operators():
     pkg = pathlib.Path(tidb_gateway_spark.__file__).parent
     salted = re.compile(r"md5\('[^']*\|' \|\||F\.md5\(F\.concat\(F\.lit\(")
     private = re.compile(r"^_(DDB|ddb)_")
+    # split(<first arg>, <separator>) in Spark code, Spark SQL or DuckDB
+    # SQL; the first arg is "of text" when it names text (text,
+    # trim(text), d.text, F.col("text"), text_col) or is the trimmed-text
+    # local ``t``
+    split_call = re.compile(
+        r"\b(?:string_|str_|regexp_)?split(?:_to_array)?\(\s*"
+        r"((?:[^,()]|\([^()]*(?:\([^()]*\))?[^()]*\))*),\s*"
+        r"(\"[^\"]*\"|'[^']*')")
+    split_exceptions = {
+        ("functions/udf_surface.py", 'F.col(text_col)', '" "'):
+            "explode_tokens' posexplode positions count empty tokens",
+        ("queries/distribution_quality.py", 'F.col("text")', '""'):
+            "a character split, not a word split",
+    }
     offenders = []
     for p in sorted(pkg.rglob("*.py")):
         rel = p.relative_to(pkg).as_posix()
@@ -202,10 +300,22 @@ def test_hash_twins_live_only_in_operators():
             offenders += [f"{rel}:{i} salted md5"
                           for i, line in enumerate(src.splitlines(), 1)
                           if salted.search(line)]
+        if rel != "operators/text.py":
+            for m in split_call.finditer(src):
+                arg, sep = m.group(1).strip(), m.group(2)
+                if (("text" in arg or arg == "t")
+                        and (rel, arg, sep) not in split_exceptions):
+                    line = src.count("\n", 0, m.start()) + 1
+                    offenders.append(f"{rel}:{line} splits {arg}")
         if not rel.startswith("queries/"):
             continue
         tree = ast.parse(src)
-        # names bound to the dataclasses module or to dataclasses.replace
+        # names bound to other query modules, to the dataclasses module
+        # or to dataclasses.replace
+        query_mods = {a.asname or a.name for n in ast.walk(tree)
+                      if isinstance(n, ast.ImportFrom)
+                      and n.module == "tidb_gateway_spark.queries"
+                      for a in n.names}
         dc_mods = {a.asname or a.name for n in ast.walk(tree)
                    if isinstance(n, ast.Import)
                    for a in n.names if a.name == "dataclasses"}
@@ -218,8 +328,12 @@ def test_hash_twins_live_only_in_operators():
                     and (node.module or "").startswith(
                         "tidb_gateway_spark.queries")):
                 offenders += [f"{rel}:{node.lineno} imports {a.name}"
-                              for a in node.names if private.match(a.name)]
-            if isinstance(node, ast.Attribute) and private.match(node.attr):
+                              for a in node.names if a.name.startswith("_")]
+            if isinstance(node, ast.Attribute) and (
+                    private.match(node.attr)
+                    or (node.attr.startswith("_")
+                        and isinstance(node.value, ast.Name)
+                        and node.value.id in query_mods)):
                 offenders.append(f"{rel}:{node.lineno} reads .{node.attr}")
             if isinstance(node, ast.Call) and (
                     (isinstance(node.func, ast.Name)
@@ -419,7 +533,7 @@ def test_ensure_min_partitions_connect_rebalances(spark, sf_dir):
 
 def test_simhash_identical_docs_collide(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash(dedup.doc_word_sets(d))
+    sh = dedup.simhash(d)
     pair = (
         d.alias("x")
         .join(d.alias("y"), (F.expr("md5(x.text) = md5(y.text)"))
@@ -754,10 +868,10 @@ def test_pack_sequences_next_fit_semantics(spark):
 
 def test_pack_sequences_stable_under_repartition(spark, sf_dir):
     from tidb_gateway_spark.operators.packing import pack_sequences
-    from tidb_gateway_spark.operators.text import ws_token_count
+    from tidb_gateway_spark.operators.text import word_count
 
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", ws_token_count(F.col("text")).alias("tok"))
+        "doc_id", "lang", word_count().alias("tok"))
     a = pack_sequences(d, "doc_id", "tok", 2048).collect()
     b = pack_sequences(d.repartition(7), "doc_id", "tok", 2048).collect()
     assert sorted((r["doc_id"], r["pack_id"]) for r in a) == \
@@ -995,12 +1109,14 @@ def test_temperature_rates_math():
 
 
 def test_hof_free_tokens_match_filtered_split_on_spark(spark):
-    """The round-6 tokenizer rewrite rests on split(trim(t), ' +') ==
+    """text.words rests on split(trim(t), ' +') ==
     filter(split(t, ' '), x -> x != '') — assert the identity on
     SPARK's own expressions over adversarial whitespace layouts (runs
     of spaces, edge spaces, tabs/newlines/unicode spaces that trim
     must NOT strip, empty and all-space strings)."""
     from pyspark.sql import functions as F
+
+    from tidb_gateway_spark.operators.text import words
 
     corpus = [
         "", " ", "   ", "a", " a", "a ", "  a  b  ", "a b", "a  b",
@@ -1008,9 +1124,7 @@ def test_hof_free_tokens_match_filtered_split_on_spark(spark):
         "word " * 5, "  leading", "trailing  ", " x  y   z ",
     ]
     df = spark.createDataFrame([(s,) for s in corpus], "t STRING")
-    t = F.trim(F.col("t"))
-    new = F.when(t != "", F.split(t, " +")).otherwise(
-        F.expr("CAST(array() AS array<string>)"))
+    new = words(F.col("t"))
     old = F.filter(F.split(F.col("t"), " "), lambda x: x != F.lit(""))
     rows = df.select(new.alias("n"), old.alias("o")).collect()
     for s, r in zip(corpus, rows):

@@ -19,7 +19,7 @@ def test_q254_stream_maintained_ivf_equals_batch_index(spark, sf_dir):
     present exactly once (bounded-replay convergence — the LSM append
     path neither drops nor duplicates arrivals)."""
     from tidb_gateway_spark.operators.similarity import ivf_index
-    from tidb_gateway_spark.queries.llm_extended import _IVF_CELLS
+    from tidb_gateway_spark.operators.similarity import IVF_CELLS
     from tidb_gateway_spark.queries.streaming_retrieval import _q254_index
 
     path = _q254_index(spark, sf_dir)
@@ -27,7 +27,7 @@ def test_q254_stream_maintained_ivf_equals_batch_index(spark, sf_dir):
         "vec_id", "cell")
     batch_idx = ivf_index(
         spark, os.path.join(sf_dir, "embeddings.parquet"),
-        n_cells=_IVF_CELLS).select("vec_id", "cell")
+        n_cells=IVF_CELLS).select("vec_id", "cell")
 
     a = {(r["vec_id"], r["cell"]) for r in stream_idx.collect()}
     b = {(r["vec_id"], r["cell"]) for r in batch_idx.collect()}
@@ -205,7 +205,7 @@ def test_q257_refresh_is_exact_lloyd_step(spark, sf_dir):
     import numpy as np
 
     from tidb_gateway_spark.operators.similarity import ivf_index
-    from tidb_gateway_spark.queries.llm_extended import _IVF_CELLS
+    from tidb_gateway_spark.operators.similarity import IVF_CELLS
     from tidb_gateway_spark.queries.streaming_retrieval import (
         _Q257_SCALE,
         _q257_index,
@@ -225,7 +225,7 @@ def test_q257_refresh_is_exact_lloyd_step(spark, sf_dir):
     )
     ids = np.array([r["vec_id"] for r in rows])
     E = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    C = E[ids < _IVF_CELLS]
+    C = E[ids < IVF_CELLS]
     seed_cell = (E @ C.T).argmax(axis=1)
     Q = np.floor(E * _Q257_SCALE + 0.5)
     # non-empty cells only (r10 ADVICE): the engine masks empty seed

@@ -282,18 +282,14 @@ def shredded_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     seen and read back from disk afterwards; mtime staleness triggers a
     rebuild, per the sources/derived.py contract.
     """
-    import hashlib
 
+    from tidb_gateway_spark.sources import derived
     from tidb_gateway_spark.sources.io import shred_json_column
 
     spec = SHREDDED_JSON[name]
     src = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    key = hashlib.md5(
-        f"{src}|{spec['schema']}|{spec['prefix']}".encode()
-    ).hexdigest()[:16]
-    from tidb_gateway_spark.sources import derived
-
-    path = derived.derived_path("shredded", key)
+    path = derived.derived_path(
+        "shredded", derived.key(src, spec["schema"], spec["prefix"]))
     with _shred_lock:
         if not derived.is_fresh(path, src):
             shred_json_column(

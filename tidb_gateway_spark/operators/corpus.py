@@ -28,17 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tidb_gateway_spark.functions import stable_round
-
-
-def _tokens(documents: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, w) one row per token occurrence, empty tokens dropped."""
-    return (
-        documents.select(
-            F.col(id_col),
-            F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-    )
+from tidb_gateway_spark.operators.text import word_rows, words
 
 
 def tfidf_top_terms(
@@ -62,7 +52,7 @@ def tfidf_top_terms(
     compares the *rounded* score with a term-name tie-break so the
     cut is stable across engines' last-ulp ``ln`` differences.
     """
-    toks = _tokens(documents, text_col, id_col)
+    toks = word_rows(documents, id_col, text=text_col)
     # one row per (doc, term): basis for both tf and df
     tf = toks.groupBy(id_col, "w").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("w").agg(F.count("*").alias("dfc"))
@@ -105,10 +95,7 @@ def pmi_bigrams(
     """
     from tidb_gateway_spark.operators.cache import tracked_persist
 
-    arr = F.filter(
-        F.split(F.trim(F.col(text_col)), " "), lambda x: x != F.lit("")
-    )
-    docs = documents.select(arr.alias("l"))
+    docs = documents.select(words(F.col(text_col)).alias("l"))
 
     # The corpus is tokenized exactly TWICE (unigram pass, bigram
     # pass); every downstream consumer rides a PERSISTED aggregate.

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import hex_int
+from tidb_gateway_spark.operators.text import ddb_word_rows, ddb_words, words
 
 # The one MinHash-LSH operating point: SHINGLE_N-word shingles, K
 # single-digest slices per signature (K <= 6: 32 hex chars / 5 per
@@ -47,30 +48,6 @@ ROWS = K // BANDS
 SIMHASH_BITS = 16
 
 
-def doc_word_sets(documents: DataFrame) -> DataFrame:
-    """Distinct (doc_id, word) pairs (unigram sets — SimHash features)
-    via ROW-LOCAL dedup: ``array_distinct`` inside each row replaces a
-    corpus-wide ``.distinct()`` exchange, so per-doc aggregating
-    consumers (SimHash signatures) reach their groupBy with map-side
-    partial aggregation and ONE narrow shuffle instead of a full
-    exploded-corpus wide shuffle.  The parallelism guard repartitions
-    the RAW documents (50 k rows ≪ the 5 M exploded pairs a distinct
-    would have shuffled) because a compact parquet source can be a
-    single input split, which would serialize the per-word hashing
-    onto one task.  Measured (sf1, r6): q73 1.9 s → 0.65 s.
-    """
-    return (
-        ensure_min_partitions(documents.select("doc_id", "text"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(F.split(F.col("text"), " "))
-            ).alias("w"),
-        )
-        .filter(F.col("w") != "")
-    )
-
-
 def _shingle_array_sql(n: int) -> str:
     """SQL expression: array<string> of n-word shingles over ``wlist``."""
     return (
@@ -78,7 +55,8 @@ def _shingle_array_sql(n: int) -> str:
         f"transform(sequence(1, size(wlist) - {n - 1}), i -> "
         + "concat("
         + ", ' ', ".join(f"element_at(wlist, i + {k})" for k in range(n))
-        + ")) ELSE array(concat_ws(' ', wlist)) END"
+        + ")) WHEN size(wlist) > 0 THEN array(concat_ws(' ', wlist)) "
+        "ELSE array(CAST(NULL AS string)) END"
     )
 
 
@@ -90,7 +68,11 @@ def doc_shingles(documents: DataFrame, n: int = SHINGLE_N,
     shares a small vocabulary (every document collides with every other —
     O(n²) candidate blowup); n-gram shingles have corpus-scale cardinality
     so only genuinely similar documents share them.  Short documents
-    (< n words) contribute their whole text as one shingle.
+    (< n words) contribute their whole text as one shingle; a blank
+    document contributes one NULL shingle, as its DuckDB twin does
+    (``array_to_string([], ' ')`` is NULL there, where Spark's
+    ``concat_ws`` gives ``''``).  A NULL shingle has a NULL signature,
+    which never band-matches, so no two blank documents pair.
 
     ``distinct=True`` dedups through a shuffle — deliberately: the
     exchange it creates is a plan-level REUSE POINT, so consumers that
@@ -99,23 +81,9 @@ def doc_shingles(documents: DataFrame, n: int = SHINGLE_N,
     made q91 18× slower because every fan-out branch re-ran the
     shingle transform against the scan.
     """
-    # HOF-free tokens (text.nonempty_words): split(trim, ' +') ≡
-    # filter(split(text,' '), x -> x != '') but whole-stage-codegen'd
-    # (higher-order filter is CodegenFallback).  Blank docs guard to
-    # wlist=[], which _shingle_array_sql's ELSE branch turns into
-    # array(concat_ws(' ', wlist)) = array('') — ONE empty-string
-    # shingle per blank doc, exactly what the old filter form produced
-    # (behavior-identical; blank docs can only band-match each other
-    # and are rejected by the Jaccard verify downstream).
-    t = F.trim(F.col("text"))
     out = (
         ensure_min_partitions(documents)
-        .select(
-            "doc_id",
-            F.when(t != "", F.split(t, " +"))
-            .otherwise(F.expr("CAST(array() AS array<string>)"))
-            .alias("wlist"),
-        )
+        .select("doc_id", words().alias("wlist"))
         .select("doc_id", F.explode(F.expr(_shingle_array_sql(n))).alias("w"))
     )
     return out.distinct() if distinct else out
@@ -208,12 +176,21 @@ def near_dup_pairs(documents: DataFrame) -> DataFrame:
     )
 
 
-def simhash(words: DataFrame) -> DataFrame:
+def simhash(documents: DataFrame) -> DataFrame:
     """(doc_id, sh) where sh is a SIMHASH_BITS-char '0'/'1' SimHash
-    signature.
+    signature of each document's distinct words.
 
     Bit j is the sign of the sum over words of ±1 — +1 when hex digit j
     of md5(word) has its top bit set.  One groupBy shuffle.
+
+    The word sets are deduplicated ROW-LOCALLY (``array_distinct``
+    inside each row instead of a corpus-wide ``.distinct()`` exchange),
+    so the per-doc bit sums reach their groupBy with map-side partial
+    aggregation and ONE narrow shuffle.  The parallelism guard
+    repartitions the RAW documents (50 k rows ≪ the 5 M exploded pairs
+    a distinct would have shuffled) because a compact parquet source
+    can be a single input split, which would serialize the per-word
+    hashing onto one task.  Measured (sf1, r6): q73 1.9 s → 0.65 s.
 
     Production note: the md5-hex bit derivation exists for cross-engine
     oracle parity (DuckDB reproduces it in SQL).  A pipeline that owns
@@ -226,10 +203,14 @@ def simhash(words: DataFrame) -> DataFrame:
     (once per word), and each bit test is a codegen'd shift+mask — "hex
     digit j has its top bit set" ⟺ ``(half >> 4*pos) & 15 >= 8``.
     Byte-identical to the per-digit substring/isin derivation the
-    DuckDB twin (:data:`DDB_SIMHASH_BITS`) spells out.
+    DuckDB twin (:data:`DDB_SIMHASH_SIGS`) spells out.
     """
+    wsets = (
+        ensure_min_partitions(documents.select("doc_id", "text"))
+        .select("doc_id", F.explode(F.array_distinct(words())).alias("w"))
+    )
     h = F.md5("w")
-    hashed = words.select(
+    hashed = wsets.select(
         "doc_id",
         hex_int(h, 1, 8).alias("_ha"),
         hex_int(h, 9, 8).alias("_hb"),
@@ -257,15 +238,9 @@ def doc_shingle_arrays(documents: DataFrame) -> DataFrame:
     set algebra per ROW (array_intersect Jaccard) instead of per
     exploded pair.  ~115 shingles ≈ 1.5 kB per doc ride the verify
     joins as a payload column."""
-    t = F.trim(F.col("text"))
     return (
         ensure_min_partitions(documents.select("doc_id", "text"))
-        .select(
-            "doc_id",
-            F.when(t != "", F.split(t, " +"))
-            .otherwise(F.expr("CAST(array() AS array<string>)"))
-            .alias("wlist"),
-        )
+        .select("doc_id", words().alias("wlist"))
         .select(
             "doc_id",
             F.array_distinct(F.expr(_shingle_array_sql(SHINGLE_N)))
@@ -504,7 +479,7 @@ def simhash_multiprobe_pairs(documents: DataFrame) -> DataFrame:
     #     shuffle key and codegen'd integer probes instead of a
     #     16-char '0'/'1' string rebuilt by substring/translate.
     sigs = tracked_persist(
-        simhash(doc_word_sets(documents))
+        simhash(documents)
         .select("doc_id", F.conv("sh", 2, 10).cast("bigint").alias("si"))
     )
     probes = sigs.select(
@@ -530,12 +505,6 @@ def simhash_multiprobe_pairs(documents: DataFrame) -> DataFrame:
 # cand/sizes/inter, b0..b{SIMHASH_BITS-1}) are part of the contract:
 # oracles join on them.
 
-# (doc_id, w) distinct unigrams — doc_word_sets
-DDB_WORDS = (
-    "words AS (SELECT DISTINCT doc_id, w FROM "
-    "(SELECT doc_id, UNNEST(string_split(text,' ')) AS w FROM documents) "
-    "WHERE w <> '')"
-)
 # (doc_id, w) distinct SHINGLE_N-word shingles — doc_shingles
 DDB_SHINGLES = (
     "shingles AS (SELECT DISTINCT doc_id, w FROM ("
@@ -544,8 +513,7 @@ DDB_SHINGLES = (
     + " || ' ' || ".join(
         ["wl[i]"] + [f"wl[i+{k}]" for k in range(1, SHINGLE_N)])
     + ") ELSE [array_to_string(wl, ' ')] END) AS w FROM "
-    "(SELECT doc_id, list_filter(string_split(text,' '), x -> x <> '') AS wl "
-    "FROM documents)))"
+    f"(SELECT doc_id, {ddb_words()} AS wl FROM documents)))"
 )
 # (doc_id, h0..h{K-1}) over shingles — minhash_signatures
 DDB_SIGS = (
@@ -585,9 +553,9 @@ DDB_SIMHASH_BITS = ", ".join(
 DDB_SIMHASH_CONCAT = " || ".join(
     f"(CASE WHEN b{j} > 0 THEN '1' ELSE '0' END)" for j in range(SIMHASH_BITS)
 )
-# (doc_id, sh) signatures — simhash(doc_word_sets(documents))
+# (doc_id, sh) signatures over distinct (doc_id, w) words — simhash
 DDB_SIMHASH_SIGS = (
-    f"{DDB_WORDS}, "
+    f"words AS (SELECT DISTINCT doc_id, w FROM ({ddb_word_rows('doc_id')})), "
     f"perdoc AS (SELECT doc_id, {DDB_SIMHASH_BITS} FROM words GROUP BY doc_id), "
     f"sh AS (SELECT doc_id, {DDB_SIMHASH_CONCAT} AS sh FROM perdoc)"
 )

@@ -24,7 +24,6 @@ per-window shape); here the batch build stands in for the backfill.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,7 +58,7 @@ def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_confs(spark)
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.md5(f"{src}|hourly-v1".encode()).hexdigest()[:16]
+    key = derived.key(src, "hourly-v1")
     path = derived.derived_path("rollup", key)
     if not derived.is_fresh(path, src):
         build_hourly_rollup(load_table(spark, sf_dir, "events"), path)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.sources import derived
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -386,7 +387,6 @@ def _read_index(spark: SparkSession, key: str, src: str,
     ``build(path)`` if it is absent or older than ``src``
     (sources/derived.py contract, kind ``ann_index``)."""
     from tidb_gateway_spark.session import ensure_session_confs
-    from tidb_gateway_spark.sources import derived
 
     path = derived.derived_path("ann_index", key)
     ensure_session_confs(spark)
@@ -406,7 +406,7 @@ def ann_index(spark: SparkSession, embeddings_path: str, n_planes: int = 8,
     query after it reads a single bucket partition.
     """
     src = os.path.abspath(embeddings_path)
-    key = hashlib.md5(f"{src}|{n_planes}|{dim}".encode()).hexdigest()[:16]
+    key = derived.key(src, n_planes, dim)
     return _read_index(spark, key, src, lambda path: build_ann_index(
         spark.read.parquet(src), path, n_planes=n_planes, dim=dim))
 
@@ -465,7 +465,7 @@ def int8_index(spark: SparkSession, embeddings_path: str,
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
-    key = hashlib.md5(f"int8|{src}".encode()).hexdigest()[:16]
+    key = derived.key("int8", src)
 
     def build(path: str) -> None:
         corpus = spark.read.parquet(src)
@@ -491,6 +491,10 @@ def int8_index(spark: SparkSession, embeddings_path: str,
 # SQL oracle reproduces the identical cell assignment; a production
 # build would k-means-refine them — the index/serving shape (and all
 # the partition-pruning math) is unchanged by better centroids.
+
+# The one IVF operating point of the registry (q94, q254, q257 and their
+# oracles): IVF_CELLS seed-centroid cells, IVF_NPROBE probed per query.
+IVF_CELLS, IVF_NPROBE = 8, 2
 
 
 def with_ivf_cell_arrow(df: DataFrame, centroids: list[list[float]],
@@ -527,7 +531,7 @@ def ivf_index(spark: SparkSession, embeddings_path: str,
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
-    key = hashlib.md5(f"ivf|{src}|{n_cells}".encode()).hexdigest()[:16]
+    key = derived.key("ivf", src, n_cells)
 
     def build(path: str) -> None:
         corpus = spark.read.parquet(src)
@@ -1082,9 +1086,7 @@ def ivfadc_index(spark: SparkSession, embeddings_path: str,
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
-    key = hashlib.md5(
-        f"ivfadc|{src}|{n_cells}|{n_codes}|{n_sub}|{scale}".encode()
-    ).hexdigest()[:16]
+    key = derived.key("ivfadc", src, n_cells, n_codes, n_sub, scale)
 
     def build(path: str) -> None:
         corpus = spark.read.parquet(src)

@@ -1,23 +1,47 @@
-"""Text-analysis operators: language-ID heuristic, quality scoring,
-token counting, document fingerprinting.
+"""Text-analysis operators: the whitespace tokenizer, language-ID
+heuristic, quality scoring, token counting, document fingerprinting.
 
 All are single-pass columnar expressions (whole-stage codegen; no Python
 UDFs, no shuffle until the final aggregate) — at 100 TB these run at
 scan speed.
 
 Determinism contract: every expression uses only IEEE arithmetic and
-exact string ops that external oracles evaluate identically.
-:data:`DDB_QSCORE` is the DuckDB twin of :func:`quality_score`; the
-other paired DuckDB forms live beside their queries.
+exact string ops that external oracles evaluate identically, and each
+shape that an oracle recomputes has its DuckDB twin here.
+
+The tokenizer vocabulary.  A *word* is a maximal run of characters
+other than U+0020; tabs, NBSP and every other Unicode space are word
+characters.  Blank or all-space text has no words.  Four shapes, each
+a Spark form with its DuckDB twin:
+
+* the word array — :func:`words` / :func:`ddb_words`: ``[]`` for
+  blank text, never ``['']``;
+* the exploded ``(keys…, w)`` rows — :func:`word_rows` /
+  :func:`ddb_word_rows`: no row for blank text;
+* the word count — :func:`word_count` / :func:`ddb_word_count`: 0 for
+  blank text;
+* the stride-1 ``GRAM_K``-word gram digests of the substring-dedup
+  family — :func:`gram_digests` / :data:`DDB_GRAMS`: none for texts
+  shorter than ``GRAM_K`` words.
+
+No twin trims in DuckDB: DuckDB's ``trim`` also strips NBSP and the
+other Unicode space separators, Spark's strips U+0020 only.
+:data:`DDB_QSCORE` is the DuckDB twin of :func:`quality_score`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # BPE-ish token pattern: letter runs, digit runs, single other-symbols.
 BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
+
+# Gram width of the exact-substring dedup family (q261/q264/q268): the
+# minimum duplicated-substring length, in words.
+GRAM_K = 8
+
+_EMPTY = "CAST(array() AS array<string>)"
 
 
 def char_count(text: Column, ch: str) -> Column:
@@ -75,8 +99,9 @@ DDB_QSCORE = (
 )
 
 
-def nonempty_words(text: Column) -> Column:
-    """Space-separated non-empty tokens, HOF-free.
+def words(text: Column | None = None) -> Column:
+    """The word array of ``text`` (default column ``text``); ``[]``
+    for blank text.
 
     ``split(trim(text), ' +')`` yields exactly what
     ``filter(split(text, ' '), x -> x != '')`` does — runs of spaces
@@ -84,18 +109,63 @@ def nonempty_words(text: Column) -> Column:
     codegen, while higher-order ``filter`` is CodegenFallback
     (interpreted row-at-a-time, lambda eval per element).  Measured at
     sf1 the swap halves the token-battery scans (q98 1.73→0.8 s class).
-
-    Caveat: a blank/all-space text yields ``['']`` (size 1), not
-    ``[]`` — callers that must treat blank docs as zero-token guard on
-    ``trim(text) != ''`` (see ws_token_count / word_repetition_bucket).
+    The split alone gives ``['']`` for blank text, hence the guard.
     """
-    return F.split(F.trim(text), " +")
+    t = F.trim(F.col("text") if text is None else text)
+    return F.when(t != "", F.split(t, " +")).otherwise(F.expr(_EMPTY))
 
 
-def ws_token_count(text: Column) -> Column:
-    """Whitespace tokens (empty strings dropped)."""
-    t = F.trim(text)
-    return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, " +")))
+def word_rows(frame: DataFrame, *keys, text: str = "text") -> DataFrame:
+    """``(keys…, w)``: one row per word occurrence of ``frame[text]``,
+    in word order within a row."""
+    return frame.select(*keys, F.explode(words(F.col(text))).alias("w"))
+
+
+def word_count(text: Column | None = None) -> Column:
+    """Number of words of ``text`` (int; 0 for blank text)."""
+    return F.size(words(text))
+
+
+def gram_digests() -> Column:
+    """Stride-1 ``GRAM_K``-word gram digests over the word-array column
+    ``wlist``: ``substr(md5(gram), 1, 16)`` per start offset, in offset
+    order (a posexplode index IS the gram's 0-based start), ``[]`` when
+    the text has fewer than ``GRAM_K`` words."""
+    return F.expr(
+        f"CASE WHEN size(wlist) >= {GRAM_K} THEN "
+        f"transform(sequence(1, size(wlist) - {GRAM_K - 1}), i -> "
+        f"substring(md5(concat_ws(' ', slice(wlist, i, {GRAM_K}))), "
+        f"1, 16)) ELSE {_EMPTY} END"
+    )
+
+
+def ddb_words(text: str = "text") -> str:
+    """DuckDB twin of :func:`words` over the SQL expression ``text``."""
+    return f"list_filter(string_split({text},' '), x -> x <> '')"
+
+
+def ddb_word_rows(*keys: str) -> str:
+    """DuckDB twin of :func:`word_rows`: a SELECT of ``(keys…, w)``
+    over ``documents``."""
+    cols = ", ".join([*keys, f"UNNEST({ddb_words()}) AS w"])
+    return f"SELECT {cols} FROM documents"
+
+
+def ddb_word_count(text: str = "text") -> str:
+    """DuckDB twin of :func:`word_count` (BIGINT)."""
+    return f"len({ddb_words(text)})"
+
+
+# DuckDB twin of gram_digests: the CTE g(doc_id, pos, gh) over a CTE
+# wl(doc_id, wl) of word arrays; pos is the gram's 0-based start.
+DDB_GRAMS = (
+    "g AS (SELECT doc_id, CAST(u.i AS INT) AS pos, "
+    "substr(md5(array_to_string("
+    f"wl[CAST(u.i + 1 AS INT):CAST(u.i + {GRAM_K} AS INT)], ' ')), "
+    "1, 16) AS gh "
+    f"FROM wl, UNNEST(range(0, len(wl) - {GRAM_K - 1})) AS u(i) "
+    f"WHERE len(wl) >= {GRAM_K})"
+)
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -151,9 +221,8 @@ def word_repetition_bucket(text: Column) -> Column:
     Whole expression is codegen'd array ops — no explode, no shuffle;
     the histogram over it is one partial-aggregated scan.
     """
-    t = F.trim(text)
-    toks = F.split(t, " +")
+    toks = words(text)
     n = F.size(toks)
     u = F.size(F.array_distinct(toks))
-    # blank-doc guard (nonempty_words caveat): trim=='' ⇒ n would be 1
-    return F.when(t != "", F.floor((n - u) * 10 / n).cast("int"))
+    # blank text has no words and no bucket (NULL)
+    return F.when(n > 0, F.floor((n - u) * 10 / n).cast("int"))

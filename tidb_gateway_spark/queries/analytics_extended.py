@@ -743,7 +743,7 @@ def q159(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q160_dataset_card",
     "WITH w AS (SELECT doc_id, lang, source, n_chars, "
-    "len(list_filter(string_split(text, ' '), x -> x <> '')) AS wc, "
+    f"{text_ops.ddb_word_count()} AS wc, "
     "md5(text) AS h FROM documents) "
     "SELECT CAST(COUNT(*) AS BIGINT) AS docs, "
     "CAST(COUNT(DISTINCT lang) AS BIGINT) AS langs, "
@@ -766,7 +766,7 @@ def q160(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     w = d.select(
         "lang", "source", "n_chars",
-        text_ops.ws_token_count(F.col("text")).alias("wc"),
+        text_ops.word_count().alias("wc"),
         F.md5("text").alias("h"),
     )
     return w.agg(

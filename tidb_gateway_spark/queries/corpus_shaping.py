@@ -55,7 +55,15 @@ from tidb_gateway_spark.operators.sampling import (
     salted_md5,
 )
 from tidb_gateway_spark.operators.sketch import ddb_hex_frac
-from tidb_gateway_spark.operators.text import DDB_QSCORE
+from tidb_gateway_spark.operators.text import (
+    DDB_QSCORE,
+    ddb_word_count,
+    ddb_word_rows,
+    ddb_words,
+    word_count,
+    word_rows,
+    words,
+)
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q103
@@ -64,10 +72,7 @@ _BENCH_MAX_ID = 10     # fixture stand-in for the benchmark set
 
 # DuckDB word-13-gram construction mirroring operators/dedup.py
 # doc_shingles(n=13): docs shorter than n contribute their whole text.
-_DDB_WL = (
-    "wl AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-    "FROM documents)"
-)
+_DDB_WL = f"wl AS (SELECT doc_id, {ddb_words()} AS wl FROM documents)"
 _DDB_G13 = (
     "grams AS (SELECT DISTINCT doc_id, w FROM ("
     "SELECT doc_id, UNNEST(CASE WHEN len(wl) >= 13 THEN "
@@ -333,18 +338,14 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q113
 _KMV_K = 256
 _Q113_ORACLE = (
-    "WITH h AS (SELECT DISTINCT md5(w) AS h FROM "
-    "(SELECT UNNEST(string_split(text, ' ')) AS w FROM documents) "
-    "WHERE w <> ''), "
+    f"WITH h AS (SELECT DISTINCT md5(w) AS h FROM ({ddb_word_rows()})), "
     f"kmin AS (SELECT h FROM h ORDER BY h LIMIT {_KMV_K}), "
     "agg AS (SELECT COUNT(*) AS k_used, MAX(h) AS kth, "
     "(COUNT(*) - 1) * 1.0 / "
     + ddb_hex_frac("MAX(h)")
     + " AS est_raw FROM kmin) "
     "SELECT k_used, kth, CAST(FLOOR(est_raw + 0.5) AS BIGINT) AS est, "
-    "(SELECT COUNT(DISTINCT w) FROM "
-    "(SELECT UNNEST(string_split(text, ' ')) AS w FROM documents) "
-    "WHERE w <> '') AS exact FROM agg"
+    f"(SELECT COUNT(DISTINCT w) FROM ({ddb_word_rows()})) AS exact FROM agg"
 )
 
 
@@ -365,15 +366,13 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.sketch import kmv_sketch
 
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        F.explode(F.split(F.col("text"), " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = word_rows(d)
     # ONE tokenize + ONE partial-combined distinct exchange builds the
     # vocabulary; both the sketch and the exact audit count ride the
     # persisted |vocab|-sized frame (the naive form exploded and
     # shuffled the corpus-sized token stream twice — once for the
     # sketch's distinct, once for countDistinct).
-    vocab = tracked_persist(words.distinct())
+    vocab = tracked_persist(toks.distinct())
     sk = kmv_sketch(vocab, "w", _KMV_K)
     exact = vocab.agg(F.count("*").cast("bigint").alias("exact"))
     return sk.crossJoin(exact)
@@ -557,9 +556,7 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q122
 _Q122_ORACLE = (
-    "WITH wl AS (SELECT source, "
-    "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-    "FROM documents), "
+    f"WITH wl AS (SELECT source, {ddb_words()} AS wl FROM documents), "
     "per AS (SELECT source, len(wl) AS tw, len(list_distinct(wl)) AS dw, "
     "list_sum(list_transform(wl, x -> len(x))) AS cl "
     "FROM wl WHERE len(wl) > 0) "
@@ -591,12 +588,11 @@ _Q122_ORACLE = (
 )
 def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    # HOF-free tokens (text.nonempty_words): split(trim, ' +') stays in
-    # whole-stage codegen where higher-order filter() is interpreted —
-    # measured 3.8 s → codegen class at sf1.  The trim != '' filter is
-    # the blank-doc guard (≡ the old tw > 0: blank text would mis-count
-    # as the one-element ['']).
-    words = F.split(F.trim(F.col("text")), " +")
+    # HOF-free words (text.words) stay in whole-stage codegen where
+    # higher-order filter() is interpreted — measured 3.8 s → codegen
+    # class at sf1.  The tw > 0 filter drops blank docs, as the
+    # oracle's len(wl) > 0 does.
+    ws = words()
     # Σ word lengths = length(concat_ws('', words)): reuses the SAME
     # split via codegen subexpression elimination, so it is ~free on
     # top of tw/dw — r8 sweep: the previous translate(text,' ','')
@@ -604,12 +600,12 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (best-of-5 idle, BASELINE.md "Skeleton floors"), and translate is only
     # Σ-word-lengths when spaces are the sole separator; concat_ws is
     # the definition itself.  1.75 s → 0.97 s = 1.17× DuckDB.
-    d = d.filter(F.trim(F.col("text")) != "").select(
+    d = d.select(
         "source",
-        F.size(words).alias("tw"),
-        F.size(F.array_distinct(words)).alias("dw"),
-        F.length(F.concat_ws("", words)).alias("cl"),
-    )
+        F.size(ws).alias("tw"),
+        F.size(F.array_distinct(ws)).alias("dw"),
+        F.length(F.concat_ws("", ws)).alias("cl"),
+    ).filter(F.col("tw") > 0)
     ttr = F.col("dw") / F.col("tw")
     mwl = F.col("cl") / F.col("tw")
     from tidb_gateway_spark.functions import stable_round
@@ -726,11 +722,10 @@ def q152(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     bigrams = dedup.doc_shingles(d, n=2, distinct=False)
-    words = dedup.doc_shingles(d, n=1, distinct=False)
     # uni feeds two consumers (the vocab scalar and the broadcast
     # lookup); unpersisted, each re-ran the words explode+aggregate
     # over the corpus (the q100 diamond lesson).  |vocab|-sized.
-    uni = tracked_persist(words.groupBy(F.col("w").alias("w1")).agg(
+    uni = tracked_persist(word_rows(d).groupBy(F.col("w").alias("w1")).agg(
         F.count("*").alias("c1")))
     vocab = uni.agg(F.count("*").alias("v"))
     bgc = bigrams.groupBy("w").agg(F.count("*").alias("c12"))
@@ -1107,7 +1102,7 @@ _Q198_BUDGET = 50_000  # whitespace-token budget per language
 
 _Q198_ORACLE = (
     "WITH t AS (SELECT doc_id, lang, "
-    "len(list_filter(string_split(text, ' '), x -> x <> '')) AS toks, "
+    f"{ddb_word_count()} AS toks, "
     f"{ddb_hash_bps('doc_id', 'budget')} AS bps FROM documents), "
     "r AS (SELECT lang, toks, SUM(toks) OVER (PARTITION BY lang "
     "ORDER BY bps, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND "
@@ -1138,12 +1133,12 @@ _Q198_ORACLE = (
     tags=("llm", "sampling", "corpus"),
 )
 def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators import sampling, text as text_ops
+    from tidb_gateway_spark.operators import sampling
 
     d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", "lang",
-        text_ops.ws_token_count(F.col("text")).cast("bigint").alias("toks"),
+        word_count().cast("bigint").alias("toks"),
         sampling.hash_bps(F.col("doc_id"), "budget").alias("bps"),
     )
     w = (
@@ -1179,8 +1174,7 @@ _Q270_ORACLE = (
     "flagged AS (SELECT DISTINCT c.doc_id FROM corpus c "
     "JOIN bench b USING (gh)), "
     "tok AS (SELECT d.doc_id, d.source, "
-    "CAST(len(list_filter(string_split(d.text, ' '), x -> x <> '')) "
-    "AS BIGINT) AS nt FROM documents d "
+    f"CAST({ddb_word_count('d.text')} AS BIGINT) AS nt FROM documents d "
     f"WHERE d.doc_id >= {_BENCH_MAX_ID}) "
     "SELECT t.source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
     "CAST(SUM(CASE WHEN f.doc_id IS NOT NULL THEN 1 ELSE 0 END) "
@@ -1231,14 +1225,9 @@ def q270(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id").distinct()
         .withColumn("rm", F.lit(1))
     )
-    t = F.trim(F.col("text"))
     tok = (
         d.filter(F.col("doc_id") >= _BENCH_MAX_ID)
-        .select(
-            "doc_id", "source",
-            F.when(t != "", F.size(F.split(t, " +")))
-            .otherwise(F.lit(0)).cast("bigint").alias("nt"),
-        )
+        .select("doc_id", "source", word_count().cast("bigint").alias("nt"))
     )
     j = tok.join(flagged, "doc_id", "left")
     removed = F.col("rm").isNotNull()

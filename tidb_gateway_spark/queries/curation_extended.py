@@ -44,7 +44,6 @@ from tidb_gateway_spark.operators import text as text_ops
 from tidb_gateway_spark.operators.sampling import ddb_salted_md5, salted_md5
 from tidb_gateway_spark.queries.registry import register
 
-_DDB_TOKS = "len(list_filter(string_split(text, ' '), x -> x <> ''))"
 
 # ---------------------------------------------------------------- Q201
 # Per-language epoch factors: the high-quality/low-volume sources get
@@ -57,7 +56,7 @@ _Q201_ORACLE = (
         f"SELECT '{lang}' AS lang, {k} AS k"
         for lang, k in sorted(_Q201_EPOCHS.items()))
     + "), up AS (SELECT d.lang, d.doc_id, u.i AS epoch, "
-    f"{_DDB_TOKS} AS toks "
+    f"{text_ops.ddb_word_count()} AS toks "
     "FROM documents d JOIN ep ON ep.lang = d.lang, "
     "UNNEST(range(1, ep.k + 1)) AS u(i)) "
     "SELECT lang, CAST(epoch AS INT) AS epoch, "
@@ -92,7 +91,7 @@ def q201(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     up = d.select(
         "lang",
-        text_ops.ws_token_count(F.col("text")).cast("bigint").alias("toks"),
+        text_ops.word_count().cast("bigint").alias("toks"),
         F.explode(F.sequence(F.lit(1), k)).alias("epoch"),
     )
     return (
@@ -111,7 +110,7 @@ _Q202_CAP = 5
 _Q202_ORACLE = (
     "WITH r AS (SELECT source, ROW_NUMBER() OVER (PARTITION BY source "
     f"ORDER BY {ddb_salted_md5('doc_id', 'cap')}, doc_id) AS rk, "
-    f"{_DDB_TOKS} AS toks FROM documents) "
+    f"{text_ops.ddb_word_count()} AS toks FROM documents) "
     "SELECT source, CAST(COUNT(*) AS BIGINT) AS total_docs, "
     f"CAST(SUM(CASE WHEN rk <= {_Q202_CAP} THEN 1 ELSE 0 END) AS BIGINT) "
     "AS kept_docs, "
@@ -141,7 +140,7 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
         salted_md5(F.col("doc_id"), "cap"), "doc_id")
     r = d.select(
         "source",
-        text_ops.ws_token_count(F.col("text")).cast("bigint").alias("toks"),
+        text_ops.word_count().cast("bigint").alias("toks"),
         F.row_number().over(w).alias("rk"),
     )
     kept = F.col("rk") <= _Q202_CAP
@@ -161,9 +160,7 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q203_TOPK = 30
 
 _Q203_ORACLE = (
-    "WITH tok AS (SELECT d.lang, t.w FROM documents d, "
-    "UNNEST(list_filter(string_split(d.text, ' '), x -> x <> '')) "
-    "AS t(w)), "
+    f"WITH tok AS ({text_ops.ddb_word_rows('lang')}), "
     "vocab AS (SELECT w FROM (SELECT w, ROW_NUMBER() OVER "
     "(ORDER BY COUNT(*) DESC, w) AS rk FROM tok GROUP BY w) "
     f"WHERE rk <= {_Q203_TOPK}) "
@@ -198,11 +195,7 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.cache import tracked_persist
 
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    tok = d.filter(t != "").select(
-        "lang",
-        F.explode(text_ops.nonempty_words(F.col("text"))).alias("w"),
-    )
+    tok = text_ops.word_rows(d, "lang")
     # the ONLY corpus-scale stage: map-side combined into (lang, w)
     # counts; persisted because both the vocab rank and the OOV
     # aggregate read it (recompute would re-tokenize the corpus)
@@ -237,7 +230,8 @@ def q203(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q207_BUCKET = 32
 
 _Q207_ORACLE = (
-    f"WITH t AS (SELECT lang, {_DDB_TOKS} AS toks FROM documents), "
+    f"WITH t AS (SELECT lang, {text_ops.ddb_word_count()} AS toks "
+    "FROM documents), "
     "mx AS (SELECT MAX(toks) AS mx FROM t) "
     "SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs, "
     "CAST(SUM(toks) AS BIGINT) AS n_tokens, "
@@ -268,7 +262,7 @@ def q207(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     t = d.select(
         "lang",
-        text_ops.ws_token_count(F.col("text")).cast("bigint").alias("toks"),
+        text_ops.word_count().cast("bigint").alias("toks"),
     )
     mx = t.agg(F.max("toks").alias("mx"))
     b = _Q207_BUCKET

@@ -72,15 +72,15 @@ from tidb_gateway_spark.operators.dedup import (
 )
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps
-from tidb_gateway_spark.queries.registry import register
+from tidb_gateway_spark.operators.text import ddb_word_count, word_count
+from tidb_gateway_spark.queries.registry import REGISTRY, register
 
 # ---------------------------------------------------------------- Q245
 _Q245_PCTS = (50, 90, 99)
 
 _Q245_ORACLE = (
-    "WITH w AS (SELECT lang, n_chars AS v, "
-    "len(list_filter(string_split(trim(text), ' '), x -> x <> '')) AS wt "
-    "FROM documents WHERE trim(text) <> ''), "
+    f"WITH w AS (SELECT lang, n_chars AS v, {ddb_word_count()} AS wt "
+    "FROM documents), "
     "g AS (SELECT lang, v, CAST(SUM(wt) AS BIGINT) AS wv FROM w "
     "WHERE wt > 0 GROUP BY 1, 2), "
     "c AS (SELECT lang, v, "
@@ -125,11 +125,10 @@ _Q245_ORACLE = (
 )
 def q245(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    w = d.filter(t != "").select(
+    w = d.select(
         "lang",
         F.col("n_chars").alias("v"),
-        F.size(F.split(t, " +")).cast("bigint").alias("wt"),
+        word_count().cast("bigint").alias("wt"),
     ).filter(F.col("wt") > 0)
     g = w.groupBy("lang", "v").agg(F.sum("wt").cast("bigint").alias("wv"))
     wcum = (
@@ -656,11 +655,10 @@ def q252(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q253
 def _q253_oracle() -> str:
-    from tidb_gateway_spark.queries.governance import _Q183_ORACLE
-
     # q183's oracle ends with the confusion-matrix SELECT; wrap it as a
     # CTE and aggregate the chance-corrected agreement statistic
-    conf_sql = _Q183_ORACLE.replace("ORDER BY lang, pred_lang", "")
+    conf_sql = REGISTRY["q183_trigram_langid_confusion"].oracle.replace(
+        "ORDER BY lang, pred_lang", "")
     return (
         f"WITH conf AS ({conf_sql}), "
         "r AS (SELECT lang AS k, CAST(SUM(n_docs) AS BIGINT) AS a "

@@ -46,6 +46,13 @@ from tidb_gateway_spark.operators.cache import tracked_persist
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps
 from tidb_gateway_spark.operators.sketch import ddb_hex_frac, hex_frac
+from tidb_gateway_spark.operators.text import (
+    ddb_word_rows,
+    ddb_words,
+    word_count,
+    word_rows,
+    words,
+)
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q255
@@ -56,8 +63,7 @@ _Q255_ORACLE = (
     # the '__all__' row merges the PER-SOURCE SKETCHES (not the raw
     # vocabulary) — the mergeability identity the audit certifies
     "WITH sw AS (SELECT DISTINCT source, md5(w) AS h FROM ("
-    "SELECT source, UNNEST(string_split(text, ' ')) AS w FROM documents"
-    ") WHERE w <> ''), "
+    f"{ddb_word_rows('source')})), "
     "ranked AS (SELECT source, h, ROW_NUMBER() OVER ("
     "PARTITION BY source ORDER BY h) AS rn FROM sw), "
     f"kmin AS (SELECT source, h FROM ranked WHERE rn <= {_Q255_K}), "
@@ -103,11 +109,7 @@ _Q255_ORACLE = (
 def q255(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     sw = tracked_persist(
-        d.select(
-            "source",
-            F.explode(F.split(F.col("text"), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
+        word_rows(d, "source")
         .select("source", F.md5("w").alias("h"))
         .distinct()
     )
@@ -266,9 +268,7 @@ _Q258_N = 3  # gram width in words
 # digests, so the novelty counts match bit-for-bit with no
 # hash-function divergence to excuse).
 _Q258_ORACLE = (
-    "WITH wl AS (SELECT doc_id, source, "
-    "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-    "FROM documents), "
+    f"WITH wl AS (SELECT doc_id, source, {ddb_words()} AS wl FROM documents), "
     "g AS (SELECT doc_id, source, "
     f"UNNEST(list_transform(range(1, len(wl) - {_Q258_N - 2}), "
     f"i -> array_to_string(wl[i : i + {_Q258_N - 1}], ' '))) AS gram "
@@ -316,14 +316,13 @@ def q258(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.sampling import hash_bps
 
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    d = d.filter((t != "") & (F.size(F.split(t, " +")) >= _Q258_N))
+    d = d.filter(word_count() >= _Q258_N)
     snp = F.when(
         hash_bps(F.col("doc_id"), "snap") < _Q256_SNAP_BPS, "a"
     ).otherwise("b")
     g = (
         d.select(snp.alias("snp"), "source",
-                 F.split(t, " +").alias("wlist"))
+                 words().alias("wlist"))
         .select("snp", "source",
                 F.explode(F.expr(_shingle_array_sql(_Q258_N))).alias("w"))
         .select("snp", "source", F.md5("w").alias("h"))

@@ -50,6 +50,7 @@ from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators import sketch
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.text import ddb_word_rows, word_rows
 from tidb_gateway_spark.queries.registry import register
 
 
@@ -479,16 +480,13 @@ def _q183_model(spark: SparkSession, sf_dir: str) -> dict[str, list[str]]:
     so it is INGEST cost paid once per (fixture, params), leaving the
     declared query the single score job.  The stored model is
     metadata-sized (≤ topk·|langs| 3-char strings)."""
-    import hashlib as _hashlib
     import json as _json
     import os as _os
 
     from tidb_gateway_spark.sources import derived
 
     src = _os.path.abspath(_os.path.join(sf_dir, "documents.parquet"))
-    key = _hashlib.md5(
-        f"{src}|{_Q183_PREFIX}|{_Q183_TOPK}".encode()
-    ).hexdigest()[:16]
+    key = derived.key(src, _Q183_PREFIX, _Q183_TOPK)
     path = derived.derived_path("q183_model", key)
     mfile = _os.path.join(path, "model.json")
     if derived.is_fresh(path, src):
@@ -757,9 +755,8 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q186_ORACLE = (
     # one BPE training iteration: word frequencies, then adjacent
     # char-pair counts weighted by word frequency, top-10 merges
-    "WITH words AS (SELECT w, COUNT(*) AS freq FROM ("
-    "SELECT UNNEST(list_filter(string_split(text, ' '), x -> x <> '')) "
-    "AS w FROM documents) GROUP BY w), "
+    f"WITH words AS (SELECT w, COUNT(*) AS freq FROM ({ddb_word_rows()}) "
+    "GROUP BY w), "
     "pairs AS (SELECT substr(w, CAST(i AS INT), 2) AS pair, freq "
     "FROM words, UNNEST(range(1, len(w))) AS u(i) WHERE len(w) >= 2) "
     "SELECT pair, CAST(SUM(freq) AS BIGINT) AS n "
@@ -781,12 +778,9 @@ _Q186_ORACLE = (
     tags=("llm", "text", "tokenizer"),
 )
 def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tidb_gateway_spark.operators import text as t_ops
-
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
     words = (
-        d.select(F.explode(t_ops.nonempty_words(F.col("text"))).alias("w"))
-        .filter(F.col("w") != "")
+        word_rows(d)
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
     )

@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.text import ddb_words, word_count
 from tidb_gateway_spark.queries.registry import register
 
 
@@ -135,8 +136,7 @@ _Q194_N = 5
 _Q194_ORACLE = (
     # 5-gram multiset per doc; coverage = chars in grams occurring >1
     # time within the doc / chars in all grams — deciles by integer math
-    "WITH wl AS (SELECT doc_id, list_filter(string_split(text, ' '), "
-    "x -> x <> '') AS wl FROM documents), "
+    f"WITH wl AS (SELECT doc_id, {ddb_words()} AS wl FROM documents), "
     "g AS (SELECT doc_id, "
     f"array_to_string(wl[CAST(i AS INT):CAST(i + {_Q194_N - 1} AS INT)], ' ') AS gram "
     f"FROM wl, UNNEST(range(1, len(wl) - {_Q194_N - 2})) AS u(i) "
@@ -173,8 +173,7 @@ def q194(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs with < n words carry no n-gram (doc_shingles would fold them
     # to one whole-text gram; the oracle's len >= n guard drops them) —
     # filter BEFORE shingling so both engines see the same domain
-    t = F.trim(F.col("text"))
-    d = d.filter((t != "") & (F.size(F.split(t, " +")) >= _Q194_N))
+    d = d.filter(word_count() >= _Q194_N)
     # distinct=False keeps within-doc duplicates — the signal measured.
     # Group on the gram HASH with the char length carried alongside
     # (the q103 lesson): xxhash64 makes the key an 8-byte BIGINT — half
@@ -401,7 +400,6 @@ def _q199_zcopy(spark: SparkSession, sf_dir: str):
     ANALYZE statistics a 100 TB table would pin — and are stored next
     to the data so readers recompute bucket rectangles without
     scanning.  Returns (path, bounds)."""
-    import hashlib
     import json
     import os
 
@@ -409,7 +407,7 @@ def _q199_zcopy(spark: SparkSession, sf_dir: str):
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, "orders.parquet"))
-    key = hashlib.md5(f"zorder|{src}".encode()).hexdigest()[:16]
+    key = derived.key("zorder", src)
     path = derived.derived_path("zorder", key)
     stats = os.path.join(path, "_zbounds.json")
     with _q199_lock:

@@ -20,16 +20,18 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_CAND_CHAIN,
     DDB_SHINGLES,
     DDB_SIGS,
-    DDB_SIMHASH_BITS,
-    DDB_SIMHASH_CONCAT,
     DDB_SIMHASH_SIGS,
-    DDB_WORDS,
 )
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.multimodal import ddb_payload_byte
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps
-from tidb_gateway_spark.operators.similarity import cosine_nn_arrow, hyperplanes
+from tidb_gateway_spark.operators.similarity import (
+    IVF_CELLS,
+    IVF_NPROBE,
+    cosine_nn_arrow,
+    hyperplanes,
+)
 from tidb_gateway_spark.operators.text import DDB_QSCORE
 from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.sources import derived
@@ -57,9 +59,7 @@ def q72(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q73
 _Q73_ORACLE = (
-    f"WITH {DDB_WORDS}, "
-    f"perdoc AS (SELECT doc_id, {DDB_SIMHASH_BITS} FROM words GROUP BY doc_id), "
-    f"sh AS (SELECT {DDB_SIMHASH_CONCAT} AS sh FROM perdoc), "
+    f"WITH {DDB_SIMHASH_SIGS}, "
     "g AS (SELECT sh, COUNT(*) AS m FROM sh GROUP BY sh) "
     "SELECT COUNT(*) AS u, CAST(SUM(m) AS BIGINT) AS n, "
     "CAST(SUM(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS BIGINT) AS c FROM g"
@@ -75,7 +75,7 @@ _Q73_ORACLE = (
 )
 def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash(dedup.doc_word_sets(d))
+    sh = dedup.simhash(d)
     g = sh.groupBy("sh").agg(F.count("*").alias("m"))
     return g.agg(
         F.count("*").alias("u"),
@@ -220,11 +220,9 @@ def q76(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q94
-_IVF_CELLS, _IVF_NPROBE = 8, 2
-
 _Q94_ORACLE = (
     "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings), "
-    f"c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < {_IVF_CELLS}), "
+    f"c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < {IVF_CELLS}), "
     "scored AS (SELECT v.vec_id, v.e, c.cid, list_dot_product(v.e, c.ce) AS s "
     "FROM v CROSS JOIN c), "
     "cells AS (SELECT vec_id, e, cid AS cell FROM ("
@@ -233,7 +231,7 @@ _Q94_ORACLE = (
     "q AS (SELECT e AS qe FROM v WHERE vec_id = 0), "
     "qcells AS (SELECT cid FROM (SELECT c.cid, ROW_NUMBER() OVER "
     "(ORDER BY list_dot_product(q.qe, c.ce) DESC, c.cid) AS rn "
-    f"FROM c CROSS JOIN q) WHERE rn <= {_IVF_NPROBE}) "
+    f"FROM c CROSS JOIN q) WHERE rn <= {IVF_NPROBE}) "
     "SELECT x.vec_id, FLOOR(list_dot_product(x.e, q.qe)*10000 + 0.5)/10000 AS dp "
     "FROM cells x CROSS JOIN q "
     "WHERE x.cell IN (SELECT cid FROM qcells) AND x.vec_id <> 0 "
@@ -263,11 +261,11 @@ def q94(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = f"{sf_dir}/embeddings.parquet"
-    idx = ivf_index(spark, path, n_cells=_IVF_CELLS)
+    idx = ivf_index(spark, path, n_cells=IVF_CELLS)
     cents = derived.memo(
-        "q94", path, lambda: ivf_centroids(spark, path, _IVF_CELLS))
+        "q94", path, lambda: ivf_centroids(spark, path, IVF_CELLS))
     # the probe is vec_id 0, which IS centroid 0 — no extra fetch
-    return ivf_query(idx, cents, cents[0], k=3, nprobe=_IVF_NPROBE,
+    return ivf_query(idx, cents, cents[0], k=3, nprobe=IVF_NPROBE,
                      exclude_id=0)
 
 
@@ -378,11 +376,11 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q79_token_count_stats",
     "SELECT source, "
-    "CAST(SUM(len(list_filter(string_split(text,' '), x -> x <> ''))) AS BIGINT) AS wt, "
+    f"CAST(SUM({text_ops.ddb_word_count()}) AS BIGINT) AS wt, "
     f"CAST(SUM(len(regexp_extract_all(text, '{text_ops.BPE_PATTERN}'))) AS BIGINT) AS bt "
     "FROM documents GROUP BY source ORDER BY source",
     doc="Token counting per source: whitespace tokens + BPE-ish regex "
-        "tokens (operators/text.py:ws_token_count/bpe_token_count).",
+        "tokens (operators/text.py:word_count/bpe_token_count).",
     tags=("text", "llm"),
 )
 def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,7 +389,7 @@ def q79(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.groupBy("source")
         .agg(
-            F.sum(text_ops.ws_token_count(F.col("text"))).alias("wt"),
+            F.sum(text_ops.word_count()).alias("wt"),
             F.sum(text_ops.bpe_token_count(F.col("text"))).alias("bt"),
         )
         .orderBy("source")
@@ -525,17 +523,17 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q84
 @register(
     "q84_corpus_statistics",
-    "WITH toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS w FROM documents) "
+    f"WITH toks AS ({text_ops.ddb_word_rows('doc_id')}) "
     "SELECT COUNT(*) AS total_tokens, COUNT(DISTINCT w) AS vocab, "
     "FLOOR((CAST(COUNT(DISTINCT w) AS DOUBLE) / COUNT(*)) * 1000000 + 0.5)/1000000 AS ttr "
-    "FROM toks WHERE w <> ''",
+    "FROM toks",
     doc="Corpus statistics: token count, vocabulary size, type-token "
         "ratio — the dataset-card numbers for a training corpus.",
     tags=("llm", "text"),
 )
 def q84(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(F.split("text", " ")).alias("w")).filter(F.col("w") != "")
+    toks = text_ops.word_rows(d)
     return toks.agg(
         F.count("*").alias("total_tokens"),
         F.countDistinct("w").alias("vocab"),
@@ -710,8 +708,7 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_BUDGET = 2048
 
 _Q96_ORACLE = (
-    "WITH t AS (SELECT lang, doc_id, "
-    "len(list_filter(string_split(text,' '), x -> x <> '')) AS tok "
+    f"WITH t AS (SELECT lang, doc_id, {text_ops.ddb_word_count()} AS tok "
     "FROM documents), "
     "c AS (SELECT lang, doc_id, tok, "
     "COALESCE(SUM(tok) OVER (PARTITION BY lang ORDER BY doc_id "
@@ -737,7 +734,7 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.packing import pack_sequences, pack_stats
 
     d = load_table(spark, sf_dir, "documents").withColumn(
-        "tok", text_ops.ws_token_count(F.col("text"))
+        "tok", text_ops.word_count()
     )
     packed = pack_sequences(d, "doc_id", "tok", _PACK_BUDGET, ("lang",))
     return pack_stats(packed, "tok", ("lang",))
@@ -790,10 +787,8 @@ def q97(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q98
 _Q98_ORACLE = (
-    "WITH t AS (SELECT "
-    "len(list_filter(string_split(text,' '), x -> x <> '')) AS n, "
-    "len(list_distinct(list_filter(string_split(text,' '), x -> x <> ''))) AS u "
-    "FROM documents) "
+    f"WITH t AS (SELECT {text_ops.ddb_word_count()} AS n, "
+    f"len(list_distinct({text_ops.ddb_words()})) AS u FROM documents) "
     "SELECT CAST(((n - u) * 10) // n AS INT) AS bucket, COUNT(*) AS n_docs "
     "FROM t WHERE n > 0 GROUP BY 1 ORDER BY bucket"
 )
@@ -820,12 +815,11 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times per row (measured: no gain from the HOF-free rewrite until
     # this restructure).  The blank-doc guard becomes the Filter.
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    toks = F.split(t, " +")
-    per = d.filter(t != "").select(
+    toks = text_ops.words()
+    per = d.select(
         F.size(toks).alias("n"),
         F.size(F.array_distinct(toks)).alias("u"),
-    )
+    ).filter(F.col("n") > 0)
     bucket = F.floor((F.col("n") - F.col("u")) * 10 / F.col("n")).cast("int")
     return (
         per.select(bucket.alias("bucket"))
@@ -837,8 +831,7 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q99
 _Q99_ORACLE = (
-    "WITH tok AS (SELECT doc_id, UNNEST(list_filter("
-    "string_split(trim(text), ' '), x -> x <> '')) AS w FROM documents), "
+    f"WITH tok AS ({text_ops.ddb_word_rows('doc_id')}), "
     "tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY 1, 2), "
     "dfreq AS (SELECT w, COUNT(*) AS dfc FROM tf GROUP BY 1), "
     "n AS (SELECT COUNT(*) AS n_docs FROM documents), "
@@ -873,8 +866,7 @@ def q99(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q100
 _Q100_ORACLE = (
-    "WITH wl AS (SELECT list_filter(string_split(trim(text), ' '), "
-    "x -> x <> '') AS l FROM documents), "
+    f"WITH wl AS (SELECT {text_ops.ddb_words()} AS l FROM documents), "
     "uni AS (SELECT UNNEST(l) AS w FROM wl), "
     "cu AS (SELECT w, COUNT(*) AS c FROM uni GROUP BY 1), "
     "cb AS (SELECT b, COUNT(*) AS cxy FROM (SELECT UNNEST("
@@ -985,7 +977,7 @@ def q130(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators import text as text_ops
 
     d = load_table(spark, sf_dir, "documents")
-    sh = dedup.simhash(dedup.doc_word_sets(d))
+    sh = dedup.simhash(d)
     q = d.select(
         "doc_id",
         text_ops.quality_score(F.col("text"), F.col("n_chars")).alias("q"),

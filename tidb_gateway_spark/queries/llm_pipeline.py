@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.operators.text import ddb_word_rows, word_rows
 from tidb_gateway_spark.queries.registry import register
 
 
@@ -96,16 +97,15 @@ def q63(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q64_tokenize_tf",
-    "SELECT w, COUNT(*) AS n FROM (SELECT UNNEST(string_split(TRIM(text),' ')) AS w "
-    "FROM documents) t WHERE w <> '' GROUP BY w ORDER BY n DESC, w LIMIT 20",
+    f"SELECT w, COUNT(*) AS n FROM ({ddb_word_rows()}) t "
+    "GROUP BY w ORDER BY n DESC, w LIMIT 20",
     doc="Whitespace tokenize + explode + term frequency (top-20).",
     tags=("text", "llm"),
 )
 def q64(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(F.split(F.trim(F.col("text")), " ")).alias("w"))
-        .filter(F.col("w") != "")
+        word_rows(d)
         .groupBy("w")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("w"))

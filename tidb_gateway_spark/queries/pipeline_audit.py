@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
@@ -54,17 +54,14 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_SIMHASH_SIGS,
 )
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.text import (
+    DDB_GRAMS,
+    GRAM_K,
+    ddb_words,
+    gram_digests,
+    words,
+)
 from tidb_gateway_spark.queries.registry import register
-
-
-def word_list() -> Column:
-    """``wlist``: the whitespace-split tokens of ``text``, an empty
-    array for blank text — the token array the passage and substring
-    families (q210, q261, q264, q268) chunk and gram over."""
-    t = F.trim(F.col("text"))
-    return (F.when(t != "", F.split(t, " +"))
-            .otherwise(F.expr("CAST(array() AS array<string>)"))
-            .alias("wlist"))
 
 
 # ---------------------------------------------------------------- Q210
@@ -74,8 +71,7 @@ _Q210_W = 8  # chunk width in tokens
 # contribute no chunk rows (but still count in n_docs).
 _Q210_ORACLE = (
     "WITH wl AS (SELECT doc_id, source, "
-    "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-    "FROM documents), "
+    f"{ddb_words()} AS wl FROM documents), "
     "ch AS (SELECT doc_id, source, "
     f"UNNEST(list_transform(range(0, CAST(floor(len(wl) / {_Q210_W}) AS INT)), "
     f"i -> array_to_string(wl[i * {_Q210_W} + 1 : i * {_Q210_W} + {_Q210_W}], ' '))) "
@@ -141,7 +137,7 @@ def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     cd = (
-        d.select("doc_id", "source", word_list())
+        d.select("doc_id", "source", words().alias("wlist"))
         .select("doc_id", "source",
                 F.explode(F.expr(_Q210_CHUNKS_SQL)).alias("chunk"))
         .select("doc_id", "source", F.md5("chunk").alias("h"))
@@ -544,8 +540,6 @@ def q235(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q261
-_Q261_K = 8  # minimum duplicated-substring length, in tokens
-
 # DuckDB twin: recompute the whole chain from raw text — stride-1
 # K-token gram digests, global duplicate detection, per-doc maximal
 # interval merge (gaps-and-islands), per-source report.  Both engines
@@ -554,23 +548,17 @@ _Q261_K = 8  # minimum duplicated-substring length, in tokens
 # identically cross-engine (the q210 convention).
 _Q261_ORACLE = (
     "WITH wl AS (SELECT doc_id, source, "
-    "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-    "FROM documents), "
-    "g AS (SELECT doc_id, CAST(u.i AS INT) AS pos, "
-    "substr(md5(array_to_string("
-    f"wl[CAST(u.i + 1 AS INT):CAST(u.i + {_Q261_K} AS INT)], ' ')), "
-    "1, 16) AS gh "
-    f"FROM wl, UNNEST(range(0, len(wl) - {_Q261_K - 1})) AS u(i) "
-    f"WHERE len(wl) >= {_Q261_K}), "
+    f"{ddb_words()} AS wl FROM documents), "
+    f"{DDB_GRAMS}, "
     "dup AS (SELECT doc_id, pos FROM (SELECT doc_id, pos, "
     "COUNT(*) OVER (PARTITION BY gh) AS c FROM g) WHERE c >= 2), "
     "brk AS (SELECT doc_id, pos, CASE WHEN pos - lag(pos) OVER "
-    f"(PARTITION BY doc_id ORDER BY pos) > {_Q261_K} THEN 1 ELSE 0 END "
+    f"(PARTITION BY doc_id ORDER BY pos) > {GRAM_K} THEN 1 ELSE 0 END "
     "AS b FROM dup), "
     "isl AS (SELECT doc_id, pos, SUM(b) OVER (PARTITION BY doc_id "
     "ORDER BY pos) AS island FROM brk), "
     "sp AS (SELECT doc_id, island, MIN(pos) AS st, "
-    f"MAX(pos) + {_Q261_K} - 1 AS en FROM isl GROUP BY 1, 2), "
+    f"MAX(pos) + {GRAM_K} - 1 AS en FROM isl GROUP BY 1, 2), "
     "per AS (SELECT doc_id, COUNT(*) AS n_spans, "
     "SUM(en - st + 1) AS dup_tokens FROM sp GROUP BY 1), "
     "pj AS (SELECT d.source, p.n_spans, p.dup_tokens "
@@ -593,7 +581,7 @@ def _q261_wl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, wlist) token-array frame shared by the
     substring-dedup family (q261 audit, q264 apply)."""
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    return d.select("doc_id", "source", word_list())
+    return d.select("doc_id", "source", words().alias("wlist"))
 
 
 # Hot-gram skew guard (VERDICT r11 directive 6): a pathologically
@@ -605,16 +593,6 @@ def _q261_wl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sorted window partition stops being acceptable on one executor.
 _Q261_HOT_THRESHOLD = 50_000_000
 _Q261_HOT_SAMPLE_MOD = 64  # diagnose on a deterministic 1/64 doc sample
-
-# stride-1 K-gram digests with 0-based token offset; the transform
-# index / posexplode index IS the gram's start offset (matches the
-# oracle's u.i)
-_Q261_GRAMS_SQL = (
-    f"CASE WHEN size(wlist) >= {_Q261_K} THEN "
-    f"transform(sequence(1, size(wlist) - {_Q261_K - 1}), i -> "
-    f"substring(md5(concat_ws(' ', slice(wlist, i, {_Q261_K}))), "
-    "1, 16)) ELSE CAST(array() AS array<string>) END"
-)
 
 
 def _q261_hot_gram_detected(
@@ -633,7 +611,7 @@ def _q261_hot_gram_detected(
     sample = wl.filter(hash_bps(F.col("doc_id"), "q261hot")
                        % sample_mod == 0)
     top = (
-        sample.select(F.explode(F.expr(_Q261_GRAMS_SQL)).alias("gh"))
+        sample.select(F.explode(gram_digests()).alias("gh"))
         .groupBy("gh").count()
         .agg(F.max("count").alias("mx"))
         .collect()
@@ -666,7 +644,7 @@ def _q261_dup_positions(
         hot_guard = _q261_hot_gram_detected(wl)
     if not hot_guard:
         g = (
-            wl.select("doc_id", F.posexplode(F.expr(_Q261_GRAMS_SQL))
+            wl.select("doc_id", F.posexplode(gram_digests())
                       .alias("pos", "gh"))
             .repartition("gh")
         )
@@ -682,7 +660,7 @@ def _q261_dup_positions(
     # the gram differs from its predecessor; run j spans
     # [starts[j], nextstart[j]) — zip starts with its shift-by-one
     # (tail + total length) to get lengths without a second pass.
-    gs = F.expr(_Q261_GRAMS_SQL)
+    gs = gram_digests()
     starts_sql = (
         "filter(sequence(0, size(gs) - 1), "
         "i -> i = 0 OR element_at(gs, i + 1) != element_at(gs, i))"
@@ -727,14 +705,14 @@ def _q261_spans(dup: DataFrame) -> DataFrame:
     isl = dup.select(
         "doc_id", "pos",
         F.sum(
-            F.when(F.col("pos") - F.lag("pos").over(wd) > _Q261_K, 1)
+            F.when(F.col("pos") - F.lag("pos").over(wd) > GRAM_K, 1)
             .otherwise(0)
         ).over(wd.rowsBetween(Window.unboundedPreceding, 0))
         .alias("island"),
     )
     return isl.groupBy("doc_id", "island").agg(
         F.min("pos").alias("st"),
-        (F.max("pos") + _Q261_K - 1).alias("en"),
+        (F.max("pos") + GRAM_K - 1).alias("en"),
     )
 
 
@@ -822,19 +800,13 @@ def q261(spark: SparkSession, sf_dir: str) -> DataFrame:
 # construction.
 _Q264_ORACLE = (
     "WITH wl AS (SELECT doc_id, source, "
-    "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-    "FROM documents), "
-    "g AS (SELECT doc_id, CAST(u.i AS INT) AS pos, "
-    "substr(md5(array_to_string("
-    f"wl[CAST(u.i + 1 AS INT):CAST(u.i + {_Q261_K} AS INT)], ' ')), "
-    "1, 16) AS gh "
-    f"FROM wl, UNNEST(range(0, len(wl) - {_Q261_K - 1})) AS u(i) "
-    f"WHERE len(wl) >= {_Q261_K}), "
+    f"{ddb_words()} AS wl FROM documents), "
+    f"{DDB_GRAMS}, "
     "dup AS (SELECT doc_id, pos FROM (SELECT doc_id, pos, "
     "COUNT(*) OVER (PARTITION BY gh) AS c FROM g) WHERE c >= 2), "
     "ev AS (SELECT doc_id, pos AS at, 0 AS kind, 1 AS delta, "
     "CAST(0 AS BIGINT) AS L FROM dup "
-    f"UNION ALL SELECT doc_id, pos + {_Q261_K} AS at, 0 AS kind, "
+    f"UNION ALL SELECT doc_id, pos + {GRAM_K} AS at, 0 AS kind, "
     "-1 AS delta, CAST(0 AS BIGINT) AS L FROM dup "
     "UNION ALL SELECT doc_id, CAST(u.i AS INT) AS at, 1 AS kind, "
     "0 AS delta, CAST(len(wl[CAST(u.i + 1 AS INT)]) AS BIGINT) AS L "

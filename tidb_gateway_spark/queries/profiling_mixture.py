@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
+from tidb_gateway_spark.operators.text import ddb_word_count, word_count
 from tidb_gateway_spark.queries.registry import register
 
 # ---------------------------------------------------------------- Q232
@@ -144,9 +145,9 @@ def q232(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q233_BUDGET_BPS = 6000
 
 _Q233_ORACLE = (
-    "WITH sup AS (SELECT source, CAST(SUM(len(list_filter("
-    "string_split(trim(text), ' '), x -> x <> ''))) AS BIGINT) AS supply "
-    "FROM documents WHERE trim(text) <> '' GROUP BY source), "
+    "WITH sup AS (SELECT source, CAST(SUM(nt) AS BIGINT) AS supply FROM "
+    f"(SELECT source, {ddb_word_count()} AS nt FROM documents) "
+    "WHERE nt > 0 GROUP BY source), "
     # weights: rank by (supply DESC, source), w_s = rank / R
     "rk AS (SELECT source, supply, CAST(ROW_NUMBER() OVER "
     "(ORDER BY supply DESC, source) AS BIGINT) AS rank FROM sup), "
@@ -200,10 +201,9 @@ _Q233_ORACLE = (
 )
 def q233(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
     sup = (
-        d.filter(t != "")
-        .select("source", F.size(F.split(t, " +")).cast("bigint").alias("nt"))
+        d.select("source", word_count().cast("bigint").alias("nt"))
+        .filter(F.col("nt") > 0)
         .groupBy("source")
         .agg(F.sum("nt").cast("bigint").alias("supply"))
     )

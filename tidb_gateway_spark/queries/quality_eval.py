@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.operators import text as text_ops
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.rank import global_ntile
 from tidb_gateway_spark.queries.registry import register
@@ -275,8 +276,7 @@ _Q239_STAGES = (
 )
 
 _Q239_ORACLE = (
-    "WITH f AS (SELECT list_filter(string_split(trim(text), ' '), "
-    "x -> x <> '') AS words FROM documents), "
+    f"WITH f AS (SELECT {text_ops.ddb_words()} AS words FROM documents), "
     "m AS (SELECT CAST(len(words) AS BIGINT) AS n, "
     "CAST(COALESCE(list_sum(list_transform(words, x -> len(x))), 0) "
     "AS BIGINT) AS sumlen, "
@@ -325,8 +325,7 @@ _Q239_ORACLE = (
 )
 def q239(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    words = F.filter(
-        F.split(F.trim(F.col("text")), " "), lambda x: x != "")
+    words = text_ops.words()
     m = d.select(
         F.size(words).cast("bigint").alias("n"),
         F.coalesce(
@@ -500,9 +499,9 @@ def q241(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q242_KEEP_BPS = 9000  # keep while 10^4 * cum_prev < KEEP_BPS * total
 
 _Q242_ORACLE = (
-    "WITH t AS (SELECT doc_id, source, "
-    "CAST(len(list_filter(string_split(trim(text), ' '), x -> x <> '')) "
-    "AS BIGINT) AS nt FROM documents WHERE trim(text) <> ''), "
+    "WITH t AS (SELECT * FROM (SELECT doc_id, source, "
+    f"CAST({text_ops.ddb_word_count()} AS BIGINT) AS nt FROM documents) "
+    "WHERE nt > 0), "
     "c AS (SELECT source, nt, "
     "CAST(COALESCE(SUM(nt) OVER (PARTITION BY source "
     "ORDER BY nt DESC, doc_id "
@@ -539,14 +538,9 @@ _Q242_ORACLE = (
 )
 def q242(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    base = (
-        d.filter(t != "")
-        .select(
-            "doc_id", "source",
-            F.size(F.split(t, " +")).cast("bigint").alias("nt"),
-        )
-    )
+    base = d.select(
+        "doc_id", "source", text_ops.word_count().cast("bigint").alias("nt"),
+    ).filter(F.col("nt") > 0)
     wprev = (
         Window.partitionBy("source")
         .orderBy(F.desc("nt"), "doc_id")

@@ -52,24 +52,9 @@ from tidb_gateway_spark.operators.dedup import (
 )
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps, salted_md5
+from tidb_gateway_spark.operators.text import ddb_word_rows, word_rows
 from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.sources import derived
-
-_TOK_SQL_DDB = (
-    "SELECT doc_id, UNNEST(list_filter(string_split(trim(text), ' '), "
-    "x -> x <> '')) AS w FROM documents WHERE trim(text) <> ''"
-)
-
-
-def _tok(d: DataFrame) -> DataFrame:
-    """(doc_id, w) exploded nonempty words — the shared tokenizer shape
-    (split on space runs, codegen'd; matches _TOK_SQL_DDB)."""
-    t = F.trim(F.col("text"))
-    return (
-        d.filter(t != "")
-        .select("doc_id", F.explode(F.split(t, " +")).alias("w"))
-    )
-
 
 # ---------------------------------------------------------------- Q214
 _Q214_K1 = 1.2
@@ -78,7 +63,7 @@ _Q214_NTERMS = 5
 _Q214_TOPK = 10
 
 _Q214_ORACLE = (
-    f"WITH tok AS ({_TOK_SQL_DDB}), "
+    f"WITH tok AS ({ddb_word_rows('doc_id')}), "
     "tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY 1, 2), "
     "dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1), "
     "dfreq AS (SELECT w, COUNT(*) AS dfc FROM tf GROUP BY 1), "
@@ -119,7 +104,7 @@ _Q214_ORACLE = (
 )
 def q214(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    tok = _tok(d)
+    tok = word_rows(d, "doc_id")
     # EVERYTHING derives from the tf aggregate (dl = Σ tf per doc ≡ the
     # raw token count), and tf is PERSISTED for the life of the query:
     # it feeds four consumers (scoring probe, dfreq, dl, avgdl) and
@@ -178,7 +163,7 @@ def q214(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q215_V = 100  # vocabulary cap: top-K corpus words
 
 _Q215_ORACLE = (
-    f"WITH tok AS ({_TOK_SQL_DDB}), "
+    f"WITH tok AS ({ddb_word_rows('doc_id')}), "
     "src AS (SELECT t.doc_id, d.source, t.w FROM tok t "
     "JOIN documents d USING (doc_id)), "
     "v AS (SELECT w FROM (SELECT w, ROW_NUMBER() OVER (ORDER BY "
@@ -225,11 +210,7 @@ def q215(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.operators.cache import tracked_persist
 
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    t = F.trim(F.col("text"))
-    tok = (
-        d.filter(t != "")
-        .select("source", F.explode(F.split(t, " +")).alias("w"))
-    )
+    tok = word_rows(d, "source")
     # ONE tokenize pass: the (source, w) count table feeds both the
     # vocabulary selection and the per-source distribution; it is
     # persisted because column pruning specializes each consumer's
@@ -276,7 +257,7 @@ def q215(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q216
 _Q216_ORACLE = (
-    f"WITH tok AS ({_TOK_SQL_DDB}), "
+    f"WITH tok AS ({ddb_word_rows('doc_id')}), "
     "n AS (SELECT MAX(doc_id) + 1 AS nd FROM documents), "
     "fs AS (SELECT w, MIN(CAST(doc_id * 10 / nd AS INT)) AS decile "
     "FROM tok CROSS JOIN n GROUP BY w), "
@@ -304,7 +285,7 @@ _Q216_ORACLE = (
 )
 def q216(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    tok = _tok(d)
+    tok = word_rows(d, "doc_id")
     n = d.agg((F.max("doc_id") + 1).alias("nd"))
     fs = (
         tok.crossJoin(F.broadcast(n))
@@ -706,7 +687,7 @@ _Q220_NPROBE = 3
 _Q220_TOPK = 20
 
 _Q220_ORACLE = (
-    f"WITH tok AS ({_TOK_SQL_DDB}), "
+    f"WITH tok AS ({ddb_word_rows('doc_id')}), "
     "td AS (SELECT DISTINCT doc_id, w FROM tok), "
     "dfreq AS (SELECT w, COUNT(*) AS dfc FROM td GROUP BY 1), "
     "n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents), "
@@ -755,17 +736,16 @@ def _q220_index(spark: SparkSession, sf_dir: str) -> str:
     (coalesce(1)) stage, since the dictionary is vocabulary-sized at
     100 TB.  ``meta.json`` is the freshness marker, written last.
     Returns the companion root path."""
-    import hashlib
     import json
     import os
 
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     # v2: dictionary prefix-partitioned (layout change ⇒ key bump)
-    key = hashlib.md5(f"invidx-v2|{src}".encode()).hexdigest()[:16]
+    key = derived.key("invidx-v2", src)
     path = derived.derived_path("invidx", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-        td = _tok(d).distinct()
+        td = word_rows(d, "doc_id").distinct()
 
         def build(tmp: str) -> None:
             os.makedirs(tmp, exist_ok=True)
@@ -999,11 +979,10 @@ def _q225_compacted(spark: SparkSession, sf_dir: str) -> str:
     writer leaves behind) and its COMPACTED generation (4 target-size
     files via one coalesce-free repartition).  Returns the companion
     root; the declared query reads the compacted generation."""
-    import hashlib
     import os
 
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(f"compact|{src}".encode()).hexdigest()[:16]
+    key = derived.key("compact", src)
     path = derived.derived_path("compact", key)
     if not derived.is_fresh(path, src, marker="_COMPACT_DONE"):
         d = load_table(spark, sf_dir, "documents")
@@ -1064,7 +1043,7 @@ def q225(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q226_RANKS = 1000  # fit over the top-1000 rank-frequency points
 
 _Q226_ORACLE = (
-    f"WITH tok AS ({_TOK_SQL_DDB}), "
+    f"WITH tok AS ({ddb_word_rows('doc_id')}), "
     "cnt AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w), "
     "rk AS (SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, w) AS r "
     f"FROM cnt QUALIFY r <= {_Q226_RANKS}), "
@@ -1096,7 +1075,7 @@ _Q226_ORACLE = (
 )
 def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    cnt = _tok(d).groupBy("w").agg(F.count("*").alias("c"))
+    cnt = word_rows(d).groupBy("w").agg(F.count("*").alias("c"))
     rk = (
         cnt.select("c", F.row_number().over(
             Window.orderBy(F.desc("c"), "w")).alias("r"))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
+from tidb_gateway_spark.operators.text import ddb_words, words
 from tidb_gateway_spark.queries.registry import register
 
 
@@ -302,7 +303,7 @@ def q161(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB UNNEST drops empty lists; emulate *_outer by padding empty
     # lists with a NULL element.
     "WITH a AS (SELECT doc_id, "
-    "list_filter(string_split(text, ' '), x -> len(x) >= 9) AS long_w "
+    f"list_filter({ddb_words()}, x -> len(x) >= 9) AS long_w "
     "FROM documents), "
     "p AS (SELECT doc_id, CASE WHEN len(long_w) = 0 "
     "THEN [NULL] ELSE long_w END AS lw FROM a), "
@@ -322,8 +323,7 @@ def q161(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q162(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    long_w = F.filter(
-        F.split(F.col("text"), " "), lambda x: F.length(x) >= 9)
+    long_w = F.filter(words(), lambda x: F.length(x) >= 9)
     e = d.select(
         "doc_id", F.explode_outer(long_w).alias("w"))
     return e.agg(

@@ -26,7 +26,6 @@ collect).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import threading
 
@@ -52,7 +51,7 @@ def _companion(spark: SparkSession, sf_dir: str, table: str, fmt: str,
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    key = hashlib.md5(f"{fmt}|{src}".encode()).hexdigest()[:16]
+    key = derived.key(fmt, src)
     path = derived.derived_path(fmt, key)
     with _export_lock:
         if not derived.is_fresh(path, src):
@@ -255,7 +254,6 @@ def _q205_bucketed(spark: SparkSession, sf_dir: str, table: str,
     metastore), so a fresh session re-registers over the same files
     via write_bucketed_table only when they are stale, else a
     CREATE TABLE ... CLUSTERED BY pointing at the existing path."""
-    import hashlib
 
     from tidb_gateway_spark.sources.io import write_bucketed_table
 
@@ -267,7 +265,7 @@ def _q205_bucketed(spark: SparkSession, sf_dir: str, table: str,
     # source-only key would reuse a catalog entry whose LOCATION points
     # at the old root while freshness is judged against the new one
     root = os.path.abspath(derived.derived_root("bucketed"))
-    key8 = hashlib.md5(f"bucketed|{src}|{root}".encode()).hexdigest()[:8]
+    key8 = derived.key("bucketed", src, root)[:8]
     name = f"b7_{table}_{key8}"
     path = derived.derived_path("bucketed", name)
     with _export_lock:

@@ -48,7 +48,6 @@ are its source's.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import math
 import os
@@ -65,23 +64,17 @@ from tidb_gateway_spark.operators.partitioning import (
     ensure_min_partitions,
 )
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps, hash_bps
-from tidb_gateway_spark.queries.llm_extended import (
-    _IVF_CELLS,
-    _IVF_NPROBE,
-    _Q72_ORACLE,
-    _Q94_ORACLE,
+from tidb_gateway_spark.operators.similarity import IVF_CELLS, IVF_NPROBE
+from tidb_gateway_spark.operators.text import (
+    DDB_GRAMS,
+    GRAM_K,
+    ddb_words,
+    gram_digests,
+    word_rows,
+    words,
 )
-from tidb_gateway_spark.queries.pipeline_audit import (
-    _Q261_GRAMS_SQL,
-    _Q261_K,
-    word_list,
-)
-from tidb_gateway_spark.queries.registry import register
-from tidb_gateway_spark.queries.retrieval_curation import (
-    _Q220_ORACLE,
-    _tok,
-    conjunctive_serve,
-)
+from tidb_gateway_spark.queries.registry import REGISTRY, register
+from tidb_gateway_spark.queries.retrieval_curation import conjunctive_serve
 from tidb_gateway_spark.sources import derived
 from tidb_gateway_spark.streaming.jobs import replay_arrivals
 
@@ -93,7 +86,7 @@ def _append_text_delta(batch: DataFrame, root: str) -> None:
     ``root`` (both partitioned by first-char prefix)."""
     # two consumers: persist the tokenized frame so the batch source is
     # read once
-    td = _tok(ensure_min_partitions(batch)).distinct()
+    td = word_rows(ensure_min_partitions(batch), "doc_id").distinct()
     td = td.select(F.substring("w", 1, 1).alias("pfx"), "w", "doc_id")
     td = td.persist()
     try:
@@ -119,7 +112,7 @@ def _q244_index(spark: SparkSession, sf_dir: str) -> str:
     appends batch postings + a batch delta dictionary.  Returns the
     companion root path."""
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(f"invidx-stream-v1|{src}".encode()).hexdigest()[:16]
+    key = derived.key("invidx-stream-v1", src)
     path = derived.derived_path("invidx_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
@@ -138,7 +131,7 @@ def _q244_index(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q244_streaming_index_maintenance",
-    _Q220_ORACLE,
+    REGISTRY["q220_inverted_index_roundtrip"].oracle,
     doc="Streaming inverted-index maintenance: a Structured Streaming "
         "foreachBatch job consumes the corpus in 4 micro-batches and "
         "appends per-batch postings + DELTA dictionaries (both "
@@ -184,10 +177,10 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
     src = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
-    key = hashlib.md5(f"ivf-stream-v1|{src}|{_IVF_CELLS}".encode()).hexdigest()[:16]
+    key = derived.key("ivf-stream-v1", src, IVF_CELLS)
     path = derived.derived_path("ivf_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
-        cents = ivf_centroids(spark, src, _IVF_CELLS)
+        cents = ivf_centroids(spark, src, IVF_CELLS)
         e = spark.read.parquet(src)
 
         def build(tmp: str) -> None:
@@ -206,7 +199,7 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
             n = replay_arrivals(spark, e, "vec_id", "q254", _Q254_SPLITS,
                                 tmp, assign)
             with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_batches": n, "n_cells": _IVF_CELLS}, f)
+                json.dump({"n_batches": n, "n_cells": IVF_CELLS}, f)
 
         derived.build_atomic(path, build)
     return path
@@ -214,7 +207,8 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q254_streaming_ivf_maintenance",
-    _Q94_ORACLE,  # recomputes assignment + probe from raw embeddings
+    # recomputes assignment + probe from raw embeddings
+    REGISTRY["q94_ivf_ann"].oracle,
     doc="Streaming IVF-index maintenance: a Structured Streaming "
         "foreachBatch job consumes embedding arrivals in 4 "
         "micro-batches, assigns each vector to its argmax-inner-"
@@ -239,8 +233,8 @@ def q254(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _q254_index(spark, sf_dir)
     idx = spark.read.parquet(os.path.join(path, "cells"))
     cents = ivf_centroids(
-        spark, os.path.join(sf_dir, "embeddings.parquet"), _IVF_CELLS)
-    return ivf_query(idx, cents, cents[0], k=3, nprobe=_IVF_NPROBE,
+        spark, os.path.join(sf_dir, "embeddings.parquet"), IVF_CELLS)
+    return ivf_query(idx, cents, cents[0], k=3, nprobe=IVF_NPROBE,
                      exclude_id=0)
 
 
@@ -290,7 +284,7 @@ _Q257_ORACLE = (
     "FROM r x CROSS JOIN q0 "
     "WHERE x.cell IN (SELECT cell FROM pc) AND x.vec_id <> 0 "
     "ORDER BY dp DESC, x.vec_id LIMIT 3"
-).format(cells=_IVF_CELLS, scale=_Q257_SCALE, dimp1=65, nprobe=_IVF_NPROBE)
+).format(cells=IVF_CELLS, scale=_Q257_SCALE, dimp1=65, nprobe=IVF_NPROBE)
 
 
 def _quantize_rows(mat):
@@ -335,9 +329,8 @@ def _q257_index(spark: SparkSession, sf_dir: str):
     )
 
     stream_path = _q254_index(spark, sf_dir)
-    key = hashlib.md5(  # v2: non-empty-cell masking (r10 ADVICE)
-        f"ivf-refresh-v2|{stream_path}|{_Q257_SCALE}".encode()
-    ).hexdigest()[:16]
+    # v2: non-empty-cell masking (r10 ADVICE)
+    key = derived.key("ivf-refresh-v2", stream_path, _Q257_SCALE)
     # object-store-safe switchover (r10 verdict directive 4): the
     # refreshed index is published as an immutable GENERATION under the
     # companion root and readers resolve through the atomically-flipped
@@ -408,7 +401,7 @@ def _q257_index(spark: SparkSession, sf_dir: str):
             # metadata-sized: persist it in the marker so the serve
             # path never re-runs the Lloyd-step job
             with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_cells": _IVF_CELLS, "scale": _Q257_SCALE,
+                json.dump({"n_cells": IVF_CELLS, "scale": _Q257_SCALE,
                            "cells": [int(c) for c in present],
                            "centroids": M.astype(int).tolist()}, f)
 
@@ -458,7 +451,7 @@ def q257(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over NON-EMPTY cells only — `present` is ascending, so index-order
     # tie-break = the oracle's (s DESC, cell)
     q0q = _quantize_rows(np.array([q0]))[0]
-    probes = [present[j] for j in top_cells(M @ q0q, _IVF_NPROBE)]
+    probes = [present[j] for j in top_cells(M @ q0q, IVF_NPROBE)]
     # exact rerank against the RAW probe vector within pruned cells
     return topk(idx.filter(F.col("cell").isin(probes)), "vec_id",
                 probe_dot("embedding", q0), 3, exclude_id=0)
@@ -485,8 +478,7 @@ def _q259_compact(spark: SparkSession, sf_dir: str) -> str:
     compaction) expressed as Spark jobs.
     """
     stream_path = _q244_index(spark, sf_dir)
-    key = hashlib.md5(
-        f"invidx-compact-v2|{stream_path}".encode()).hexdigest()[:16]
+    key = derived.key("invidx-compact-v2", stream_path)
     # manifest-pointer switchover, not directory rename (see _q257_index)
     root = derived.derived_path("invidx_compact", key)
     marker_src = os.path.join(stream_path, "meta.json")
@@ -525,7 +517,7 @@ def _q259_compact(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q259_index_delta_compaction",
-    _Q220_ORACLE,
+    REGISTRY["q220_inverted_index_roundtrip"].oracle,
     doc="LSM compaction of the stream-maintained inverted index — the "
         "fold q244's merge-on-read defers to (its documented 'q225 is "
         "the folding operator' tradeoff, implemented for the index "
@@ -585,9 +577,9 @@ def _q260_index(spark: SparkSession, sf_dir: str) -> str:
     expressed as Spark jobs on the same companion layout q220 serves.
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(  # v2: manifest-pointer fold switchover
-        f"invidx-lsm-v2|{src}|{_Q260_SPLITS}|{_Q260_COMPACT_EVERY}"
-        .encode()).hexdigest()[:16]
+    # v2: manifest-pointer fold switchover
+    key = derived.key("invidx-lsm-v2", src, _Q260_SPLITS,
+                      _Q260_COMPACT_EVERY)
     path = derived.derived_path("invidx_lsm", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
@@ -632,7 +624,7 @@ def _q260_index(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q260_streaming_lsm_index_lifecycle",
-    _Q220_ORACLE,
+    REGISTRY["q220_inverted_index_roundtrip"].oracle,
     doc="The complete streaming LSM index lifecycle in ONE job: every "
         "micro-batch appends posting+dictionary delta segments (q244's "
         "path) and every 4th batch the same foreachBatch hook folds "
@@ -702,9 +694,8 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
     recompute.
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"lshband-stream-v1|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}"
-        .encode()).hexdigest()[:16]
+    key = derived.key("lshband-stream-v1", src, dedup.K, dedup.BANDS,
+                      _Q262_SPLITS)
     path = derived.derived_path("lsh_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
@@ -736,7 +727,7 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q262_streaming_lsh_band_index",
-    _Q72_ORACLE,
+    REGISTRY["q72_minhash_lsh_candidates"].oracle,
     doc="Streaming MinHash-LSH band-index maintenance — the near-dup "
         "candidate index as the third streaming-index family member "
         "(q244 inverted text, q254 IVF ANN): foreachBatch computes "
@@ -897,14 +888,12 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     if fold_every is None:
-        key = hashlib.md5(
-            f"lshgate-stream-v3|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}"
-            .encode()).hexdigest()[:16]
+        key = derived.key("lshgate-stream-v3", src, dedup.K, dedup.BANDS,
+                          _Q262_SPLITS)
         path = derived.derived_path("lsh_gate", key)
     else:
-        key = hashlib.md5(
-            f"lshgate-lsm-v1|{src}|{dedup.K}|{dedup.BANDS}|{_Q262_SPLITS}|"
-            f"{fold_every}".encode()).hexdigest()[:16]
+        key = derived.key("lshgate-lsm-v1", src, dedup.K, dedup.BANDS,
+                          _Q262_SPLITS, fold_every)
         path = derived.derived_path("lsh_gate_lsm", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
@@ -1318,7 +1307,7 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
     and the fourth streaming-index family member (q244 = inverted
     text, q254 = IVF, q262 = LSH bands, this = K-gram digests): the
     corpus arrives as 4 epoch files; each micro-batch computes its
-    docs' stride-1 K-token gram digests (q261's _Q261_GRAMS_SQL — the
+    docs' stride-1 K-token gram digests (text.gram_digests — the
     identical function both engines evaluate), probes them against
     the ACCUMULATED index of earlier epochs' distinct digests (a gram
     start whose digest already exists is a cross-epoch substring
@@ -1340,9 +1329,7 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
     composed here — q267 certifies that composition for the family).
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.md5(
-        f"gramidx-stream-v1|{src}|{_Q262_SPLITS}".encode()
-    ).hexdigest()[:16]
+    key = derived.key("gramidx-stream-v1", src, _Q262_SPLITS)
     path = derived.derived_path("gram_stream", key)
     if not derived.is_fresh(path, src, marker="meta.json"):
         d = load_table(spark, sf_dir, "documents")
@@ -1355,12 +1342,11 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
 
             def ingest(batch: DataFrame, batch_id: int) -> None:
                 wl = ensure_min_partitions(batch).select(
-                    "doc_id", word_list())
+                    "doc_id", words().alias("wlist"))
                 g = (
                     wl.select(
                         "doc_id",
-                        F.posexplode(F.expr(_Q261_GRAMS_SQL))
-                        .alias("pos", "gh"),
+                        F.posexplode(gram_digests()).alias("pos", "gh"),
                     )
                     .withColumn("ep", _arrival_epoch())
                     .persist()
@@ -1420,17 +1406,10 @@ def _q268_oracle() -> str:
     strictly earlier epoch — one EXISTS join, no unrolling (the index
     is append-only; decisions never feed back)."""
     return (
-        "WITH wl AS (SELECT doc_id, "
-        "list_filter(string_split(text, ' '), x -> x <> '') AS wl "
-        "FROM documents), "
+        f"WITH wl AS (SELECT doc_id, {ddb_words()} AS wl FROM documents), "
         "e AS (SELECT doc_id, "
         f"CAST({_DDB_ARRIVAL_EPOCH} AS INT) AS ep FROM documents), "
-        "g AS (SELECT doc_id, CAST(u.i AS INT) AS pos, "
-        "substr(md5(array_to_string("
-        f"wl[CAST(u.i + 1 AS INT):CAST(u.i + {_Q261_K} AS INT)], ' ')), "
-        "1, 16) AS gh "
-        f"FROM wl, UNNEST(range(0, len(wl) - {_Q261_K - 1})) AS u(i) "
-        f"WHERE len(wl) >= {_Q261_K}), "
+        f"{DDB_GRAMS}, "
         "ge AS (SELECT g.doc_id, g.pos, g.gh, e.ep FROM g "
         "JOIN e USING (doc_id)), "
         "hit AS (SELECT y.ep, y.doc_id FROM ge y WHERE EXISTS ("
@@ -1476,12 +1455,12 @@ def _q268_oracle() -> str:
 def q268(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _q268_index(spark, sf_dir)
     wl = load_table(spark, sf_dir, "documents").select(
-        "doc_id", word_list())
+        "doc_id", words().alias("wlist"))
     # gram COUNT is pure arithmetic — never evaluate the digests just
     # to size them
     ng = F.when(
-        F.size("wlist") >= _Q261_K,
-        F.size("wlist") - (_Q261_K - 1),
+        F.size("wlist") >= GRAM_K,
+        F.size("wlist") - (GRAM_K - 1),
     ).otherwise(F.lit(0))
     totals = (
         wl.select("doc_id", ng.alias("ng"))

@@ -8,7 +8,7 @@ one contract:
 
 * location: ``$SPARK_GRAFT_DERIVED_DIR/<kind>`` if the env var is set,
   else ``<repo>/.benchdata/<kind>`` (gitignored), subdirectory named
-  by an md5 of the source path + build parameters;
+  by :func:`key` of the source path + build parameters;
 * freshness: the artifact is fresh iff its ``_SUCCESS`` marker is at
   least as new as the source file — a rewritten fixture invalidates
   every companion derived from it;
@@ -40,6 +40,7 @@ when a fold writes the next base.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -56,6 +57,12 @@ def derived_root(kind: str) -> str:
     repo = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     return os.path.join(repo, ".benchdata", kind)
+
+
+def key(*parts) -> str:
+    """Artifact name for build parameters ``parts``: the first 16 hex
+    digits of md5 over their ``|``-joined ``str`` forms."""
+    return hashlib.md5("|".join(map(str, parts)).encode()).hexdigest()[:16]
 
 
 def derived_path(kind: str, name: str) -> str:
