@@ -9,6 +9,11 @@ column names/types match the Spark output.
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,126 +28,34 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["q22_tpch_q1_agg"].spark(spark, "/root/testdata/sf0.001")
 
 
-# Queries needing the driver's oracle harness first — it records a
-# ~50-entry window per round (r01–r04: 50 each; r05: 51), so this tuple
-# is PRIORITY-ORDERED (tuple position, not qid) and more than ~50
-# entries means the tail defers to the next round by design.
-_CHANGED_FIRST = (
-    # Tier 0 — round 14 changes, riskiest first.  All entries pass the
-    # in-repo driver-faithful oracle diff at sf0.01 before queueing.
-    "q272_hybrid_rrf_fusion",      # NEW r14: lexical BM25 (q214) ×
-                                   # dense cosine fused by reciprocal
-                                   # rank (RRF k=60), integer-exact
-                                   # fused score — completes the
-                                   # retrieval family
-    "q240_weighted_median",        # r14: grouped_weighted_percentiles
-                                   # reworked twice — driver fold +
-                                   # JVM-literal targets (r14.0), then
-                                   # the optimization pass: bucket
-                                   # assignment back to codegen'd
-                                   # comparison casts and the crossing
-                                   # as literal range predicates with
-                                   # a single-exchange agg+window tail
-                                   # (operators/rank.py; equivalence
-                                   # hypothesis-tested both paths).
-                                   # NOTE q245's registered impl does
-                                   # NOT call this operator (own
-                                   # inlined form, unchanged).
-    # r14 optimization pass — internals changed, outputs pinned by the
-    # in-repo oracle diff; queued for driver re-certification:
-    "q101_dedup_clusters",         # connected_components: pairs pinned
-                                   # before symmetrize; driver path
-                                   # returns a JVM local relation
-                                   # (operators/localrel.py) instead of
-                                   # an ExistingRDD
-    "q235_dedup_waterfall",        # same connected_components rework
-    "q224_incremental_cluster_merge_audit",  # same (two CC calls)
-    "q130_canonical_doc_per_cluster",        # same
-    "q209_neardup_pagerank",       # driver PageRank vector via
-                                   # localrel (ExistingRDD removed)
-    "q212_minhash_calibration",    # sigs/arrs tracked-persisted (the
-                                   # diamond-reuse lesson)
-    "q152_bigram_lm_score",        # uni aggregate tracked-persisted
-    "q151_temperature_mixture",    # rate table via localrel +
-                                   # broadcast kept-side join
-    "q184_benford_first_digit_audit",  # expectation table via localrel
-                                       # + broadcast counts join
-    "q219_exact_group_median",     # bucket assignment back to
-                                   # codegen'd casts (rank.py)
-    "q31_row_number",              # same bucket-assignment change
-    "q32_rank_dense_rank",         # same
-    "q37_ntile",                   # same
-    "q232_table_profile",          # 6 scan+agg union branches -> ONE
-                                   # Expand-based aggregate + literal
-                                   # unpivot
-    "q221_name_similarity_join",   # tg/lst diamond lineages
-                                   # tracked-persisted
-)
+@functools.cache
+def _ordered_qids() -> tuple[str, ...]:
+    """Registry qids, oldest certification first.
 
-# CERTIFICATION-REFRESH ROTATION (VERDICT r8 directive 6; r13
-# directive 2: the 30 remaining r8-era entries lead the r14 window —
-# recomputed from CORRECTNESS_r01–r13 latest-green at r14 start, which
-# found 30, not the 28 the r13 TODO arithmetic claimed — then the
-# oldest r9 entries (numeric-qid order) fill the 50-slot window:
-# 2 changed + 30 r8 + 18 r9.  PRIORITY-ORDERED oldest-cert-first; the
-# tail defers to the next round by design.
-_STALE_CERT = (
-    # r8 cohort — oldest remaining certs (latest green =
-    # CORRECTNESS_r08).  Entries also present in _CHANGED_FIRST
-    # (q219/q221/q224/q235) are listed ONLY there: the two tuples must
-    # stay disjoint (tests/test_cert_window.py enforces it).
-    "q75_cosine_nearest_neighbor", "q76_ann_lsh_bucket",
-    "q94_ivf_ann", "q95_int8_quantized_topk",
-    "q205_bucketed_join_roundtrip", "q211_semantic_dedup_cells",
-    "q216_heaps_vocab_growth", "q217_neardup_triangle_census",
-    "q218_gdpr_cascade_audit", "q222_seeded_epoch_shuffle",
-    "q223_interval_bucket_join",
-    "q225_compaction_roundtrip", "q226_zipf_slope",
-    "q227_basket_pair_affinity", "q228_replica_divergence_audit",
-    "q229_containment_neardup", "q230_grouped_ols_trend",
-    "q231_markov_transition_matrix", "q233_mixture_waterfill",
-    "q236_ks_two_sample",
-    "q237_auc_mann_whitney", "q238_decile_lift_table",
-    "q239_quality_rule_waterfall", "q241_centroid_affinity_matrix",
-    "q242_top_p_mass_cap", "q243_trimmed_winsorized_means",
-    # r9 cohort head (oldest-first by numeric qid) — 18 entries
-    # complete the 50-slot window; the remaining 29 r9 entries lead
-    # the r15 rotation
-    "q08_case_when", "q09_cast_groupby", "q10_inner_equijoin",
-    "q11_multiway_join", "q12_left_outer_join", "q13_right_outer_join",
-    "q14_full_outer_join", "q15_left_semi_join", "q17_cross_join",
-    "q18_theta_join", "q22_tpch_q1_agg", "q23_global_agg",
-    "q24_count_distinct", "q25_having", "q27_rollup", "q28_cube",
-    "q30_statistical_aggs", "q38_multikey_sort",
-)
-
-
-def _ordered_qids() -> list[str]:
-    """Registry qids ordered by certification staleness: changed this
-    round, then stale-cert, then freshly-certified.
-
-    The driver correctness harness may record only the first N entries it
-    sees; ordering by staleness makes the certified window cover exactly
-    what changed.
+    The correctness driver certifies only the first ~50 entries of
+    :func:`queries` each round, so the order is the sort key
+    ``(latest green round, numeric qid, qid)`` over the
+    ``CORRECTNESS_r*.json`` records beside this file: a record is green
+    when its ``hash_match`` is true, and a never-certified query has
+    round 0.  The records are found relative to ``__file__`` because
+    the driver runs from another working directory.
     """
     from tidb_gateway_spark.queries import REGISTRY
 
-    changed_rank = {qid: i for i, qid in enumerate(_CHANGED_FIRST)}
-    stale_rank = {qid: i for i, qid in enumerate(_STALE_CERT)}
+    here = os.path.dirname(os.path.abspath(__file__))
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for qid, rec in json.load(f).items():
+                if rec.get("hash_match"):
+                    latest[qid] = max(latest.get(qid, 0), rnd)
 
     def sort_key(qid: str) -> tuple[int, int, str]:
-        if qid in changed_rank:
-            # tuple POSITION, not qid: _CHANGED_FIRST is priority-ordered
-            # so the certified window covers exactly the highest-stakes
-            # entries (see the tier comments above).
-            return (0, changed_rank[qid], qid)
-        if qid in stale_rank:
-            # oldest-cert-first: the r14 rotation drains the r8 cohort
-            # and bites into r9 (VERDICT r13 directive 2)
-            return (1, stale_rank[qid], qid)
-        return (2, 0, qid)
+        return (latest.get(qid, 0), int(re.match(r"q(\d+)", qid).group(1)),
+                qid)
 
-    return sorted(REGISTRY, key=sort_key)
+    return tuple(sorted(REGISTRY, key=sort_key))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,12 +1,11 @@
-"""Driver certification-window simulation (VERDICT r5 directive 7).
+"""Driver certification-window order.
 
 The driver records only the first ~50 entries of ``queries()`` per round
-(CORRECTNESS_r01–r04: 50 each; r05: 51).  A registry reorder could
-silently push a never-certified query out of its planned window.  This
-test renders ``__spark_entry__`` through the same protocol the driver
-uses — ordering, window size, oracle presence — and fails if any query
-that has never appeared in a ``CORRECTNESS_r*.json`` falls outside the
-next window.
+(CORRECTNESS_r01–r04: 50 each; r05: 51).  ``__spark_entry__`` derives
+that order from the ``CORRECTNESS_r*.json`` records: oldest latest-green
+round first (never certified = round 0), then numeric qid.  These tests
+restate the rule independently and pin the window it gives for the
+r01–r15 records.
 
 No SparkSession needed; this is pure registry/metadata inspection.
 """
@@ -16,6 +15,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Conservative lower bound on the driver's per-round window (observed
@@ -23,58 +23,68 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 50
 
 
-def _certified_qids() -> set[str]:
-    qids: set[str] = set()
+def _round(path: str) -> int:
+    return int(re.search(r"_r(\d+)\.json$", path).group(1))
+
+
+def _latest_green(max_round: int | None = None) -> dict[str, int]:
+    latest: dict[str, int] = {}
     for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = _round(path)
+        if max_round is not None and rnd > max_round:
+            continue
         with open(path) as f:
-            qids |= set(json.load(f))
-    return qids
+            for qid, rec in json.load(f).items():
+                if rec["hash_match"]:
+                    latest[qid] = max(latest.get(qid, 0), rnd)
+    return latest
 
 
-def test_window_is_spent_on_never_certified_or_changed():
-    """The registry can exceed one window (176+ queries vs ~50 slots),
-    so the invariant is not "everything uncertified fits" but "no slot
-    is wasted": every query in the next window must be either
-    never-certified or explicitly re-queued via _CHANGED_FIRST, and
-    never-certified queries must rank AHEAD of every certified query
-    whose code did not change (so each round's window drains the
-    backlog maximally — a reorder can't silently demote one)."""
+def _num(qid: str) -> int:
+    return int(qid[1:].split("_")[0])
+
+
+def test_order_is_the_documented_sort(tmp_path, monkeypatch):
+    """queries() is the registry sorted by (latest green round, numeric
+    qid, qid), computed from another cwd as the driver runs it."""
+    import __spark_entry__ as entry
+    from tidb_gateway_spark.queries import REGISTRY
+
+    monkeypatch.chdir(tmp_path)
+    latest = _latest_green()
+    want = sorted(REGISTRY, key=lambda q: (latest.get(q, 0), _num(q), q))
+    assert list(entry._ordered_qids.__wrapped__()) == want
+    assert list(entry.queries()) == want
+
+
+def test_window_is_spent_on_never_certified_or_oldest():
+    """No query in the next window was certified more recently than a
+    query left out of it; never-certified queries come first."""
     import __spark_entry__ as entry
 
+    latest = _latest_green()
     order = list(entry.queries())
-    certified = _certified_qids()
-    changed = set(entry._CHANGED_FIRST)
+    rounds = [latest.get(q, 0) for q in order]
+    assert max(rounds[:WINDOW]) <= min(rounds[WINDOW:])
+    assert rounds == sorted(rounds)
 
-    # A slot is wasted only if a certified-unchanged query ranks ahead
-    # of ANY backlog entry (never-certified or changed).  Once the
-    # backlog is smaller than the window, the remaining slots
-    # legitimately fall to the stalest certified queries.
-    backlog = [q for q in order if q not in certified or q in changed]
-    last_backlog = max(
-        (i for i, q in enumerate(order)
-         if q not in certified or q in changed), default=-1)
-    wasted = [q for q in order[:last_backlog + 1]
-              if q in certified and q not in changed]
-    assert not wasted, (
-        f"window slots spent on certified, unchanged queries ahead of "
-        f"backlog entries: {wasted}"
-    )
-    assert len(backlog) <= WINDOW, (
-        f"backlog ({len(backlog)}) exceeds the ~{WINDOW}-slot window — "
-        f"trim _CHANGED_FIRST or defer new registry entries "
-        f"(VERDICT r6 directive 8)"
-    )
 
-    # never-certified queries must form a block no certified-unchanged
-    # query precedes
-    first_settled = next(
-        (i for i, q in enumerate(order)
-         if q in certified and q not in changed), len(order))
-    demoted = [q for q in order[first_settled:] if q not in certified]
-    assert not demoted, (
-        f"never-certified queries ranked behind certified, unchanged "
-        f"ones (would defer their certification a full round): {demoted}"
-    )
+def test_r15_window_holds_the_r9_cohort(monkeypatch):
+    """With the r01–r15 records, the window is the 39 queries whose
+    newest green cert is r9 plus the 11 lowest-numbered r10 ones."""
+    import __spark_entry__ as entry
+
+    latest = _latest_green(max_round=15)
+    r9 = {q for q, r in latest.items() if r == 9}
+    r10 = sorted((q for q, r in latest.items() if r == 10), key=_num)
+    assert min(latest.values()) == 9 and len(r9) == 39
+
+    real_glob = glob.glob
+    monkeypatch.setattr(glob, "glob", lambda p: [
+        x for x in real_glob(p) if _round(x) <= 15])
+    window = entry._ordered_qids.__wrapped__()[:WINDOW]
+    assert set(window) == r9 | set(r10[:11])
+    assert set(window[:39]) == r9
 
 
 def test_window_queries_all_have_oracles():
@@ -89,27 +99,15 @@ def test_window_queries_all_have_oracles():
 
 
 def test_ordering_is_stable_and_complete():
-    """queries() must enumerate the full registry exactly once, in a
-    deterministic order, with every priority entry resolving."""
+    """queries() enumerates the full registry exactly once, and the
+    entry module names no qid but entry()'s flagship q22: the order is
+    derived, never typed in."""
     import __spark_entry__ as entry
     from tidb_gateway_spark.queries import REGISTRY
 
     order = list(entry.queries())
     assert sorted(order) == sorted(REGISTRY)
     assert len(order) == len(set(order))
-    unknown = [q for q in entry._CHANGED_FIRST if q not in REGISTRY]
-    assert not unknown, f"_CHANGED_FIRST names unknown qids: {unknown}"
-    # duplicate priority entries would silently demote a query to its
-    # later (lower-priority) rank — forbid them
-    assert len(entry._CHANGED_FIRST) == len(set(entry._CHANGED_FIRST))
-    # _STALE_CERT gets the same validation (r9 ADVICE): a typo'd or
-    # renamed qid would silently drop that query from the
-    # certification-refresh rotation to the settled tail
-    unknown = [q for q in entry._STALE_CERT if q not in REGISTRY]
-    assert not unknown, f"_STALE_CERT names unknown qids: {unknown}"
-    assert len(entry._STALE_CERT) == len(set(entry._STALE_CERT))
-    overlap = set(entry._STALE_CERT) & set(entry._CHANGED_FIRST)
-    assert not overlap, (
-        f"qids in both _CHANGED_FIRST and _STALE_CERT (ambiguous "
-        f"priority): {sorted(overlap)}"
-    )
+    with open(entry.__file__) as f:
+        named = set(re.findall(r"\bq\d+_\w+", f.read()))
+    assert named == {"q22_tpch_q1_agg"}

@@ -167,21 +167,90 @@ def test_int8_index_rebuilds_only_when_source_is_newer(
 
 
 def test_mtime_rule_lives_only_in_derived():
-    """Every mtime-keyed cache goes through sources/derived.py: no
-    other module reads a source's mtime or keeps a private index
-    root."""
+    """Every companion goes through derived.companion: no other module
+    reads a source's mtime, keys or checks or builds an artifact itself,
+    keeps a private index root, or holds a build lock of its own (the
+    gateway's locks guard connection state, not companions)."""
     import pathlib
 
     home = pathlib.Path(derived.__file__)
+    pkg = home.parents[1]
     # the env var name is split so a grep of the tree for it finds none
-    banned = ("os.path.getmtime", "SPARK_GRAFT_" "INDEX_DIR")
+    banned = ("os.path.getmtime", "SPARK_GRAFT_" "INDEX_DIR",
+              "derived.key(", "is_fresh(", "build_atomic(")
     offenders = [
-        f"{p.relative_to(home.parents[1])}:{i}"
-        for p in home.parents[1].rglob("*.py") if p != home
+        f"{p.relative_to(pkg)}:{i}"
+        for p in pkg.rglob("*.py") if p != home
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if any(b in line for b in banned)
+        or ("Lock(" in line and p.parent.name != "gateway")
     ]
     assert offenders == []
+
+
+_BUILDER = """
+import os
+
+from tidb_gateway_spark.sources import derived
+
+VALUE = "{value}"
+
+
+def make(src, log):
+    \"\"\"{doc}\"\"\"
+    def build(path):
+        log.append(1)  # {comment}
+        os.makedirs(path)
+        with open(os.path.join(path, "data"), "w") as f:
+            f.write(VALUE + "{body}")
+
+    return derived.companion("fp_test", src, ("fp_test", src), build)
+"""
+
+
+def test_builder_edit_rebuilds_and_comment_edit_does_not(tmp_path,
+                                                         monkeypatch):
+    """The marker holds the builder's fingerprint: editing the builder's
+    body or a module constant it reaches rebuilds the companion, while
+    editing only a comment or a docstring reuses it."""
+    import importlib
+    import sys
+
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path / "derived"))
+    monkeypatch.syspath_prepend(str(tmp_path))
+    src = str(tmp_path / "src.parquet")
+    _touch(src, time.time() - 100)
+    mod_path = tmp_path / "fp_builder_mod.py"
+    stamp = [int(time.time())]
+
+    def load(**kw):
+        fields = dict(value="1", doc="Doc.", comment="note", body="")
+        fields.update(kw)
+        mod_path.write_text(_BUILDER.format(**fields))
+        stamp[0] += 10   # a new mtime each version, past any .pyc stamp
+        os.utime(mod_path, (stamp[0], stamp[0]))
+        importlib.invalidate_caches()
+        if "fp_builder_mod" in sys.modules:
+            return importlib.reload(sys.modules["fp_builder_mod"])
+        return importlib.import_module("fp_builder_mod")
+
+    log: list[int] = []
+
+    def data(**kw):
+        path = load(**kw).make(src, log)
+        with open(os.path.join(path, "data")) as f:
+            return f.read()
+
+    try:
+        assert data() == "1" and len(log) == 1
+        assert data() == "1" and len(log) == 1          # fresh: reused
+        assert data(doc="Other doc.", comment="other note") == "1"
+        assert len(log) == 1                            # no code change
+        assert data(body="-2") == "1-2" and len(log) == 2   # body edit
+        assert data(value="3", body="-2") == "3-2"      # constant edit
+        assert len(log) == 3
+    finally:
+        sys.modules.pop("fp_builder_mod", None)
 
 
 def test_key_is_the_md5_prefix_of_the_joined_parts():

@@ -17,26 +17,9 @@ QIDS = sorted(REGISTRY)
 # Every query whose oracle reads the text table, checked again on the
 # whitespace-perturbed fixture copies (tests/perturbed_fixtures.py):
 # the generated corpus has single spaces and no blank document, so a
-# tokenizer that mishandles either passes on it.
+# tokenizer or a per-text ratio that mishandles either passes on it.
 TEXT_QIDS = sorted(q for q, s in REGISTRY.items()
                    if s.oracle and "documents" in s.oracle)
-
-# Text queries whose blank documents both engines treat alike since a
-# blank document's shingle is NULL in Spark as in DuckDB.  The other
-# text queries still disagree on blank text (see CHANGES.md).
-BLANK_QIDS = [
-    "q72_minhash_lsh_candidates", "q74_jaccard_verify",
-    "q91_contamination_check", "q101_dedup_clusters",
-    "q103_ngram_decontamination", "q152_bigram_lm_score",
-    "q209_neardup_pagerank", "q212_minhash_calibration",
-    "q213_neardup_provenance_matrix", "q217_neardup_triangle_census",
-    "q224_incremental_cluster_merge_audit", "q229_containment_neardup",
-    "q234_sketch_agreement_audit", "q235_dedup_waterfall",
-    "q248_cross_source_dup_matrix", "q262_streaming_lsh_band_index",
-    "q263_incremental_neardup_on_arrival", "q265_streaming_dedup_gate",
-    "q266_gate_precision_audit", "q267_streaming_gate_lsm_fold",
-    "q270_decontamination_apply",
-]
 
 
 def _assert_matches_oracle(spark, ddb, sf_dir, qid):
@@ -89,7 +72,6 @@ def blank_ddb(blank_sf_dir):
 
 def test_text_and_blank_qids_are_registered():
     assert len(TEXT_QIDS) > 100
-    assert set(BLANK_QIDS) <= set(TEXT_QIDS)
 
 
 @pytest.mark.parametrize("qid", TEXT_QIDS)
@@ -98,6 +80,6 @@ def test_query_matches_oracle_irregular_spacing(
     _assert_matches_oracle(spark, irregular_ddb, irregular_sf_dir, qid)
 
 
-@pytest.mark.parametrize("qid", BLANK_QIDS)
+@pytest.mark.parametrize("qid", TEXT_QIDS)
 def test_query_matches_oracle_blank_docs(spark, blank_ddb, blank_sf_dir, qid):
     _assert_matches_oracle(spark, blank_ddb, blank_sf_dir, qid)

@@ -273,17 +273,16 @@ def test_q257_switchover_tracks_stream_generation(spark, sf_dir):
     stream_path = _q254_index(spark, sf_dir)
     gen, _M, _present, _q0 = _q257_index(spark, sf_dir)
     # r11: the companion is generation-managed — _q257_index returns
-    # the CURRENT generation dir; freshness is the manifest at the root
+    # the CURRENT generation dir; freshness is the marker at the root
     root = os.path.dirname(gen)
     assert os.path.basename(gen).startswith("gen-")
-    marker_src = os.path.join(stream_path, "meta.json")
-    assert derived.is_fresh(root, marker_src, marker=derived.MANIFEST)
+    marker_src = os.path.join(stream_path, derived.MARKER)
+    assert derived.is_fresh(root, marker_src)
     orig = os.stat(marker_src)
     future = time.time() + 10
     os.utime(marker_src, (future, future))
     try:
-        assert not derived.is_fresh(
-            root, marker_src, marker=derived.MANIFEST)
+        assert not derived.is_fresh(root, marker_src)
     finally:
         os.utime(marker_src, (orig.st_atime, orig.st_mtime))
 

@@ -16,7 +16,6 @@ the coarse filtering before row-group pushdown.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -270,9 +269,6 @@ def _register_information_schema(spark: SparkSession, sf_dir: str) -> None:
     ).createOrReplaceTempView("__is_columns")
 
 
-_shred_lock = threading.Lock()
-
-
 def shredded_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """MATERIALIZED shredded companion of a JSON-bearing table.
 
@@ -288,12 +284,9 @@ def shredded_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     spec = SHREDDED_JSON[name]
     src = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    path = derived.derived_path(
-        "shredded", derived.key(src, spec["schema"], spec["prefix"]))
-    with _shred_lock:
-        if not derived.is_fresh(path, src):
-            shred_json_column(
-                load_table(spark, sf_dir, name), spec["json_col"],
-                spec["schema"], prefix=spec["prefix"], drop_source=False,
-            ).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.parquet(derived.companion(
+        "shredded", src, (src, spec["schema"], spec["prefix"]),
+        lambda path: shred_json_column(
+            load_table(spark, sf_dir, name), spec["json_col"],
+            spec["schema"], prefix=spec["prefix"], drop_source=False,
+        ).write.mode("overwrite").parquet(path)))

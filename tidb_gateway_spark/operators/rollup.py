@@ -58,8 +58,7 @@ def hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_confs(spark)
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    key = derived.key(src, "hourly-v1")
-    path = derived.derived_path("rollup", key)
-    if not derived.is_fresh(path, src):
-        build_hourly_rollup(load_table(spark, sf_dir, "events"), path)
-    return spark.read.parquet(path)
+    return spark.read.parquet(derived.companion(
+        "rollup", src, (src, "hourly"),
+        lambda path: build_hourly_rollup(
+            load_table(spark, sf_dir, "events"), path)))

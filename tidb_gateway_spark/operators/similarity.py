@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -381,34 +380,24 @@ def build_ann_index(df: DataFrame, path: str, n_planes: int = 8,
     write_parquet_table(bucketed, path, partition_by=["bucket"])
 
 
-def _read_index(spark: SparkSession, key: str, src: str,
-                build: Callable[[str], None]) -> DataFrame:
-    """Read the vector index ``key`` derived from ``src``, first running
-    ``build(path)`` if it is absent or older than ``src``
-    (sources/derived.py contract, kind ``ann_index``)."""
-    from tidb_gateway_spark.session import ensure_session_confs
-
-    path = derived.derived_path("ann_index", key)
-    ensure_session_confs(spark)
-    if not derived.is_fresh(path, src):
-        build(path)
-    return spark.read.parquet(path)
-
-
 def ann_index(spark: SparkSession, embeddings_path: str, n_planes: int = 8,
               dim: int = 64) -> DataFrame:
     """Read (building if absent or stale) the bucketed ANN index for an
     embeddings parquet table.
 
     Staleness: the index is rebuilt when the source file is newer than
-    the index's ``_SUCCESS`` marker — same contract as any derived
-    materialization.  The build cost is the one-pass ingest price; every
+    its marker or its builder changed — the ``derived.companion``
+    contract.  The build cost is the one-pass ingest price; every
     query after it reads a single bucket partition.
     """
+    from tidb_gateway_spark.session import ensure_session_confs
+
     src = os.path.abspath(embeddings_path)
-    key = derived.key(src, n_planes, dim)
-    return _read_index(spark, key, src, lambda path: build_ann_index(
-        spark.read.parquet(src), path, n_planes=n_planes, dim=dim))
+    ensure_session_confs(spark)
+    return spark.read.parquet(derived.companion(
+        "ann_index", src, (src, n_planes, dim),
+        lambda path: build_ann_index(spark.read.parquet(src), path,
+                                     n_planes=n_planes, dim=dim)))
 
 
 # ------------------------------------------------------- int8 quantization
@@ -462,10 +451,10 @@ def int8_index(spark: SparkSession, embeddings_path: str,
     exact dot products.  At 100 TB this IS the embedding store; the
     float column is the cold archival copy.
     """
+    from tidb_gateway_spark.session import ensure_session_confs
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
-    key = derived.key("int8", src)
 
     def build(path: str) -> None:
         corpus = spark.read.parquet(src)
@@ -477,7 +466,9 @@ def int8_index(spark: SparkSession, embeddings_path: str,
         )
         write_parquet_table(codes, path)
 
-    return _read_index(spark, key, src, build)
+    ensure_session_confs(spark)
+    return spark.read.parquet(
+        derived.companion("ann_index", src, ("int8", src), build))
 
 
 # ------------------------------------------------------------------ IVF
@@ -528,10 +519,10 @@ def ivf_index(spark: SparkSession, embeddings_path: str,
     partitioned by ``cell``.  Same materialization contract as
     :func:`ann_index`; centroids are the vectors with the ``n_cells``
     lowest ids (deterministic, metadata-sized collect)."""
+    from tidb_gateway_spark.session import ensure_session_confs
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
-    key = derived.key("ivf", src, n_cells)
 
     def build(path: str) -> None:
         corpus = spark.read.parquet(src)
@@ -539,7 +530,9 @@ def ivf_index(spark: SparkSession, embeddings_path: str,
         write_parquet_table(with_ivf_cell_arrow(corpus, cents), path,
                             partition_by=["cell"])
 
-    return _read_index(spark, key, src, build)
+    ensure_session_confs(spark)
+    return spark.read.parquet(
+        derived.companion("ann_index", src, ("ivf", src, n_cells), build))
 
 
 def ivf_centroids(spark: SparkSession, embeddings_path: str,
@@ -1083,10 +1076,10 @@ def ivfadc_index(spark: SparkSession, embeddings_path: str,
     256-byte vectors — the scan a probe pays is nprobe/n_cells of the
     CODES, a ~64× byte reduction over scanning raw vectors; same
     materialization/staleness contract as :func:`ivf_index`."""
+    from tidb_gateway_spark.session import ensure_session_confs
     from tidb_gateway_spark.sources.io import write_parquet_table
 
     src = os.path.abspath(embeddings_path)
-    key = derived.key("ivfadc", src, n_cells, n_codes, n_sub, scale)
 
     def build(path: str) -> None:
         corpus = spark.read.parquet(src)
@@ -1096,7 +1089,10 @@ def ivfadc_index(spark: SparkSession, embeddings_path: str,
             with_ivfadc_codes_arrow(corpus, cents, W, n_sub, scale),
             path, partition_by=["cell"])
 
-    return _read_index(spark, key, src, build)
+    ensure_session_confs(spark)
+    return spark.read.parquet(derived.companion(
+        "ann_index", src, ("ivfadc", src, n_cells, n_codes, n_sub, scale),
+        build))
 
 
 def ivfadc_query(index: DataFrame, centroids: list[list[float]],

@@ -65,8 +65,9 @@ def lang_id(text: Column) -> Column:
     the fixture corpus is synthetic English word-soup for every `lang`
     value, so this placeholder keeps the *shape* (per-row classifier →
     confusion matrix vs the labeled column) with a portable heuristic.
+    Empty text has NULL ratios (as in DuckDB) and guesses ``other``.
     """
-    L = F.length(text).cast("double")
+    L = F.nullif(F.length(text), F.lit(0)).cast("double")
     e_ratio = char_count(text, "e").cast("double") / L
     a_ratio = char_count(text, "a").cast("double") / L
     sp_ratio = char_count(text, " ").cast("double") / L
@@ -79,8 +80,9 @@ def lang_id(text: Column) -> Column:
 
 
 def quality_score(text: Column, n_chars: Column) -> Column:
-    """Composite [0,1] quality score: length, density, word-length terms."""
-    L = F.length(text).cast("double")
+    """Composite [0,1] quality score: length, density, word-length
+    terms; NULL for empty text, as its DuckDB twin ``DDB_QSCORE``."""
+    L = F.nullif(F.length(text), F.lit(0)).cast("double")
     sp = char_count(text, " ").cast("double")
     avg_word = (L - sp) / (sp + F.lit(1.0))
     return (

@@ -285,7 +285,9 @@ def q111(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     qs = text_ops.quality_score(F.col("text"), F.col("n_chars"))
-    w = Window.partitionBy("lang").orderBy(qs.asc(), F.col("doc_id"))
+    # NULLS LAST is DuckDB's default order (a blank text scores NULL)
+    w = Window.partitionBy("lang").orderBy(qs.asc_nulls_last(),
+                                           F.col("doc_id"))
     return (
         d.withColumn("phase", F.ntile(4).over(w))
         .groupBy("lang", "phase")
@@ -937,7 +939,8 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.floor(-F.log(u) / w * 1e12).cast("long").alias("key"),
         )
-        .orderBy("key", "doc_id")
+        # NULLS LAST as in DuckDB: a blank text has a NULL weight
+        .orderBy(F.col("key").asc_nulls_last(), "doc_id")
         .limit(_Q169_K)
     )
     return sel.agg(

@@ -486,36 +486,29 @@ def _q183_model(spark: SparkSession, sf_dir: str) -> dict[str, list[str]]:
     from tidb_gateway_spark.sources import derived
 
     src = _os.path.abspath(_os.path.join(sf_dir, "documents.parquet"))
-    key = derived.key(src, _Q183_PREFIX, _Q183_TOPK)
-    path = derived.derived_path("q183_model", key)
-    mfile = _os.path.join(path, "model.json")
-    if derived.is_fresh(path, src):
-        with open(mfile) as f:
-            return _json.load(f)
-
-    d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
-    rk = Window.partitionBy("lang").orderBy(F.desc("cnt"), "tri")
-    model_rows = (
-        _q183_tri_stream(_q183_base(d)).groupBy("lang", "tri")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= _Q183_TOPK)
-        .select("lang", "tri")
-        .collect()
-    )
-    profiles: dict[str, list[str]] = {}
-    for r in model_rows:
-        profiles.setdefault(r["lang"], []).append(r["tri"])
 
     def build(tmp: str) -> None:
+        d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
+        rk = Window.partitionBy("lang").orderBy(F.desc("cnt"), "tri")
+        model_rows = (
+            _q183_tri_stream(_q183_base(d)).groupBy("lang", "tri")
+            .agg(F.count("*").alias("cnt"))
+            .withColumn("rk", F.row_number().over(rk))
+            .filter(F.col("rk") <= _Q183_TOPK)
+            .select("lang", "tri")
+            .collect()
+        )
+        profiles: dict[str, list[str]] = {}
+        for r in model_rows:
+            profiles.setdefault(r["lang"], []).append(r["tri"])
         _os.makedirs(tmp, exist_ok=True)
         with open(_os.path.join(tmp, "model.json"), "w") as f:
             _json.dump(profiles, f, sort_keys=True)
-        with open(_os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
 
-    derived.build_atomic(path, build)
-    return profiles
+    path = derived.companion("q183_model", src,
+                             (src, _Q183_PREFIX, _Q183_TOPK), build)
+    with open(_os.path.join(path, "model.json")) as f:
+        return _json.load(f)
 
 
 def _q183_score(

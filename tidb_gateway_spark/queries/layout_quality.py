@@ -389,8 +389,6 @@ _Q199_ORACLE = (
     f"AND o_custkey BETWEEN {_Q199_Y[0]} AND {_Q199_Y[1]}"
 )
 
-_q199_lock = __import__("threading").Lock()
-
 
 def _q199_zcopy(spark: SparkSession, sf_dir: str):
     """Materialize the z-ordered copy of ``orders`` once per fixture
@@ -407,27 +405,22 @@ def _q199_zcopy(spark: SparkSession, sf_dir: str):
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, "orders.parquet"))
-    key = derived.key("zorder", src)
-    path = derived.derived_path("zorder", key)
-    stats = os.path.join(path, "_zbounds.json")
-    with _q199_lock:
-        if not derived.is_fresh(path, src, marker="_zbounds.json"):
-            o = load_table(spark, sf_dir, "orders")
-            row = o.agg(
-                F.min("o_totalprice"), F.max("o_totalprice"),
-                F.min("o_custkey").cast("double"),
-                F.max("o_custkey").cast("double"),
-            ).collect()[0]
-            bounds = tuple(float(v) for v in row)
-            layout.zorder_write(
-                o, "o_totalprice", "o_custkey", path,
-                (bounds[0], bounds[1], bounds[2], bounds[3]))
-            with open(stats, "w") as f:
-                json.dump(bounds, f)
-        else:
-            with open(stats) as f:
-                bounds = tuple(json.load(f))
-    return path, bounds
+
+    def build(path: str) -> None:
+        o = load_table(spark, sf_dir, "orders")
+        row = o.agg(
+            F.min("o_totalprice"), F.max("o_totalprice"),
+            F.min("o_custkey").cast("double"),
+            F.max("o_custkey").cast("double"),
+        ).collect()[0]
+        bounds = tuple(float(v) for v in row)
+        layout.zorder_write(o, "o_totalprice", "o_custkey", path, bounds)
+        with open(os.path.join(path, "_zbounds.json"), "w") as f:
+            json.dump(bounds, f)
+
+    path = derived.companion("zorder", src, ("zorder", src), build)
+    with open(os.path.join(path, "_zbounds.json")) as f:
+        return path, tuple(json.load(f))
 
 
 @register(

@@ -837,8 +837,9 @@ _Q264_ORACLE = (
     doc="Exact substring-level dedup APPLY — the transformation q261's "
         "audit gates: remove every token covered by a duplicated "
         "substring of >= K tokens (the RefinedWeb/Lee-et-al. apply "
-        "step) and certify the cleaned corpus by per-source token and "
-        "character totals.  Detection reuses q261's chain "
+        "step) and certify the cleaned corpus by per-source document, "
+        "token and character totals over the documents that have "
+        "tokens (a blank document has nothing to clean).  Detection reuses q261's chain "
         "(_q261_dup_positions — one gh-exchange, digests only) and "
         "its merged maximal spans (_q261_spans); the r11 form then "
         "paid a SECOND full token pass (posexplode of every doc's "
@@ -885,7 +886,8 @@ def q264(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(0 AS BIGINT), (a, x) -> a + length(x)))"
         ),
     ).otherwise(F.lit(0).cast("bigint"))
-    j = wl.join(F.broadcast(spans_pd), "doc_id", "left").select(
+    j = wl.filter(F.size("wlist") > 0).join(
+        F.broadcast(spans_pd), "doc_id", "left").select(
         "source",
         F.size("wlist").cast("bigint").alias("tok_b"),
         F.expr(

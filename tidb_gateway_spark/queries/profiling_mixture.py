@@ -217,8 +217,10 @@ def q233(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = rk.select(
         "source", "supply", "rank",
         F.sum("rank").over(tot).cast("bigint").alias("r_tot"),
-        (F.sum("supply").over(tot) * _Q233_BUDGET_BPS / 10000)
-        .cast("bigint").alias("budget"),
+        # DuckDB's CAST(double AS BIGINT) rounds to nearest where
+        # Spark's truncates; the budget is positive, so +0.5 and floor
+        F.floor(F.sum("supply").over(tot) * _Q233_BUDGET_BPS / 10000
+                + 0.5).alias("budget"),
     )
     r = F.col("supply").cast("double") * F.col("r_tot") / F.col("rank")
     wseg = (

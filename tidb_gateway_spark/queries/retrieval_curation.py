@@ -734,40 +734,30 @@ def _q220_index(spark: SparkSession, sf_dir: str) -> str:
     are PARTITIONED BY first-char prefix — a probe reads only its
     prefix directories and neither write has a single-task
     (coalesce(1)) stage, since the dictionary is vocabulary-sized at
-    100 TB.  ``meta.json`` is the freshness marker, written last.
-    Returns the companion root path."""
-    import json
+    100 TB.  Returns the companion root path."""
     import os
 
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    # v2: dictionary prefix-partitioned (layout change ⇒ key bump)
-    key = derived.key("invidx-v2", src)
-    path = derived.derived_path("invidx", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
+
+    def build(tmp: str) -> None:
         d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
         td = word_rows(d, "doc_id").distinct()
+        # dictionary is vocabulary-sized (10^8+ rows at 100 TB) —
+        # prefix-partition it like the postings so the build has no
+        # single-task stage and term lookups prune to one directory
+        (td.groupBy("w").agg(F.count("*").alias("dfc"))
+         .select(F.substring("w", 1, 1).alias("pfx"), "w", "dfc")
+         .repartition("pfx")
+         .write.mode("overwrite")
+         .partitionBy("pfx")
+         .parquet(os.path.join(tmp, "dict")))
+        (td.select(F.substring("w", 1, 1).alias("pfx"), "w", "doc_id")
+         .repartition("pfx")
+         .write.mode("overwrite")
+         .partitionBy("pfx")
+         .parquet(os.path.join(tmp, "postings")))
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            # dictionary is vocabulary-sized (10^8+ rows at 100 TB) —
-            # prefix-partition it like the postings so the build has no
-            # single-task stage and term lookups prune to one directory
-            (td.groupBy("w").agg(F.count("*").alias("dfc"))
-             .select(F.substring("w", 1, 1).alias("pfx"), "w", "dfc")
-             .repartition("pfx")
-             .write.mode("overwrite")
-             .partitionBy("pfx")
-             .parquet(os.path.join(tmp, "dict")))
-            (td.select(F.substring("w", 1, 1).alias("pfx"), "w", "doc_id")
-             .repartition("pfx")
-             .write.mode("overwrite")
-             .partitionBy("pfx")
-             .parquet(os.path.join(tmp, "postings")))
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({}, f)
-
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion("invidx", src, ("invidx", src), build)
 
 
 @register(
@@ -982,25 +972,18 @@ def _q225_compacted(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = derived.key("compact", src)
-    path = derived.derived_path("compact", key)
-    if not derived.is_fresh(path, src, marker="_COMPACT_DONE"):
-        d = load_table(spark, sf_dir, "documents")
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            (d.repartition(_Q225_SMALL_FILES)
-             .write.mode("overwrite")
-             .parquet(os.path.join(tmp, "small")))
-            frag = spark.read.parquet(os.path.join(tmp, "small"))
-            (frag.repartition(_Q225_TARGET_FILES)
-             .write.mode("overwrite")
-             .parquet(os.path.join(tmp, "compacted")))
-            with open(os.path.join(tmp, "_COMPACT_DONE"), "w"):
-                pass
+    def build(tmp: str) -> None:
+        (load_table(spark, sf_dir, "documents")
+         .repartition(_Q225_SMALL_FILES)
+         .write.mode("overwrite")
+         .parquet(os.path.join(tmp, "small")))
+        frag = spark.read.parquet(os.path.join(tmp, "small"))
+        (frag.repartition(_Q225_TARGET_FILES)
+         .write.mode("overwrite")
+         .parquet(os.path.join(tmp, "compacted")))
 
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion("compact", src, ("compact", src), build)
 
 
 @register(

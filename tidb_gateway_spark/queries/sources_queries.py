@@ -27,7 +27,6 @@ collect).
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -37,30 +36,14 @@ from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.queries.registry import register
 
-_export_lock = threading.Lock()
-
-
-def _companion(spark: SparkSession, sf_dir: str, table: str, fmt: str,
-               write, atomic: bool = False) -> str:
-    """Materialize an mtime-keyed ``fmt`` export of ``table`` (the
-    sources/derived.py contract: build is ingest cost; the query
-    measures the serving path).  ``atomic=True`` routes a MULTI-JOB
-    build through a temp-dir + rename (sources/derived.build_atomic)
-    so a crash between its write jobs cannot leave a half companion
-    that passes the freshness check.  Returns the path."""
+def _export(sf_dir: str, table: str, fmt: str, build) -> str:
+    """Path of the ``fmt`` export of ``table`` that ``build(path)``
+    writes (a ``derived.companion``: build is ingest cost; the query
+    measures the serving path)."""
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    key = derived.key(fmt, src)
-    path = derived.derived_path(fmt, key)
-    with _export_lock:
-        if not derived.is_fresh(path, src):
-            df = load_table(spark, sf_dir, table)
-            if atomic:
-                derived.build_atomic(path, lambda tmp: write(df, tmp))
-            else:
-                write(df, path)
-    return path
+    return derived.companion(fmt, src, (fmt, src), build)
 
 
 _CUSTOMER_SCHEMA = T.StructType([
@@ -91,10 +74,10 @@ _CUSTOMER_SCHEMA = T.StructType([
 def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.sources.io import read_csv
 
-    path = _companion(
-        spark, sf_dir, "customer", "csv",
-        lambda df, p: df.write.mode("overwrite")
-        .option("header", "true").csv(p),
+    path = _export(
+        sf_dir, "customer", "csv",
+        lambda p: load_table(spark, sf_dir, "customer").write
+        .mode("overwrite").option("header", "true").csv(p),
     )
     c = read_csv(spark, path, schema=_CUSTOMER_SCHEMA, header=True)
     return (
@@ -134,9 +117,10 @@ _DOCUMENTS_SCHEMA = T.StructType([
 def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.sources.io import read_json
 
-    path = _companion(
-        spark, sf_dir, "documents", "jsonl",
-        lambda df, p: df.write.mode("overwrite").json(p),
+    path = _export(
+        sf_dir, "documents", "jsonl",
+        lambda p: load_table(spark, sf_dir, "documents").write
+        .mode("overwrite").json(p),
     )
     d = read_json(spark, path, schema=_DOCUMENTS_SCHEMA)
     return (
@@ -167,9 +151,9 @@ def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tidb_gateway_spark.sources.io import read_orc, write_orc_table
 
-    path = _companion(
-        spark, sf_dir, "orders", "orc",
-        lambda df, p: write_orc_table(df, p),
+    path = _export(
+        sf_dir, "orders", "orc",
+        lambda p: write_orc_table(load_table(spark, sf_dir, "orders"), p),
     )
     o = read_orc(spark, path)
     return (
@@ -210,9 +194,9 @@ _Q200_ORACLE = (
     tags=("source", "layout"),
 )
 def q200(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _companion(
-        spark, sf_dir, "events", "daypart",
-        lambda df, p: df.withColumn(
+    path = _export(
+        sf_dir, "events", "daypart",
+        lambda p: load_table(spark, sf_dir, "events").withColumn(
             "day", F.date_format("ts", "yyyy-MM-dd"))
         .repartition("day")
         .write.mode("overwrite").partitionBy("day").parquet(p),
@@ -249,10 +233,9 @@ _Q205_ORACLE = (
 def _q205_bucketed(spark: SparkSession, sf_dir: str, table: str,
                    key: str, cols: list[str]) -> str:
     """Materialize a hash-bucketed catalog table of ``table`` once per
-    fixture.  Files are mtime-keyed on disk like every companion; the
-    catalog entry is session-scoped (bucket metadata lives in the
-    metastore), so a fresh session re-registers over the same files
-    via write_bucketed_table only when they are stale, else a
+    fixture.  The files are a derived companion; the catalog entry is
+    session-scoped (bucket metadata lives in the metastore), so a
+    session that finds fresh files registers them with a
     CREATE TABLE ... CLUSTERED BY pointing at the existing path."""
 
     from tidb_gateway_spark.sources.io import write_bucketed_table
@@ -260,28 +243,33 @@ def _q205_bucketed(spark: SparkSession, sf_dir: str, table: str,
     from tidb_gateway_spark.sources import derived
 
     src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    # the table name keys on the DERIVED ROOT too (r7 ADVICE): with a
-    # persistent metastore and a changed SPARK_GRAFT_DERIVED_DIR, a
-    # source-only key would reuse a catalog entry whose LOCATION points
-    # at the old root while freshness is judged against the new one
+
+    def table_name(path: str) -> str:
+        return f"b7_{table}_{os.path.basename(path)[:8]}"
+
+    def build(path: str) -> None:
+        spark.sql(f"DROP TABLE IF EXISTS {table_name(path)}")
+        write_bucketed_table(
+            load_table(spark, sf_dir, table).select(*cols),
+            table_name(path), [key], _Q205_BUCKETS, path=path,
+            sort_cols=[key])
+
+    # the key holds the DERIVED ROOT too (r7 ADVICE): with a persistent
+    # metastore and a changed SPARK_GRAFT_DERIVED_DIR, a source-only key
+    # would reuse a catalog entry whose LOCATION points at the old root.
+    # Built in place, not renamed: the catalog records that LOCATION.
     root = os.path.abspath(derived.derived_root("bucketed"))
-    key8 = derived.key("bucketed", src, root)[:8]
-    name = f"b7_{table}_{key8}"
-    path = derived.derived_path("bucketed", name)
-    with _export_lock:
-        if not derived.is_fresh(path, src):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            write_bucketed_table(
-                load_table(spark, sf_dir, table).select(*cols),
-                name, [key], _Q205_BUCKETS, path=path, sort_cols=[key])
-        elif not spark.catalog.tableExists(name):
-            schema = spark.read.parquet(path).schema
-            ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in schema)
-            spark.sql(
-                f"CREATE TABLE {name} ({ddl}) USING parquet "
-                f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                f"INTO {_Q205_BUCKETS} BUCKETS LOCATION '{path}'")
+    path = derived.companion("bucketed", src, ("bucketed", src, root),
+                             build, place=lambda p, b: b(p))
+    name = table_name(path)
+    if not spark.catalog.tableExists(name):
+        schema = spark.read.parquet(path).schema
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in schema)
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+            f"INTO {_Q205_BUCKETS} BUCKETS LOCATION '{path}'")
     return name
 
 
@@ -359,7 +347,8 @@ _Q206_ORACLE = (
     tags=("source", "layout"),
 )
 def q206(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def write_two_generations(df: DataFrame, p: str) -> None:
+    def write_two_generations(p: str) -> None:
+        df = load_table(spark, sf_dir, "customer")
         v1 = df.filter(F.col("c_custkey") % 2 == 0).select(
             "c_custkey", "c_name", "c_acctbal")
         v2 = df.filter(F.col("c_custkey") % 2 == 1).select(
@@ -367,9 +356,7 @@ def q206(spark: SparkSession, sf_dir: str) -> DataFrame:
         v1.write.mode("overwrite").parquet(p)
         v2.write.mode("append").parquet(p)
 
-    path = _companion(
-        spark, sf_dir, "customer", "schemaevo", write_two_generations,
-        atomic=True)
+    path = _export(sf_dir, "customer", "schemaevo", write_two_generations)
     c = spark.read.option("mergeSchema", "true").parquet(path)
     return (
         c.groupBy(

@@ -112,21 +112,18 @@ def _q244_index(spark: SparkSession, sf_dir: str) -> str:
     appends batch postings + a batch delta dictionary.  Returns the
     companion root path."""
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = derived.key("invidx-stream-v1", src)
-    path = derived.derived_path("invidx_stream", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
-        d = load_table(spark, sf_dir, "documents")
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            n = replay_arrivals(
-                spark, d, "doc_id", "q244", _Q244_SPLITS, tmp,
-                lambda batch, batch_id: _append_text_delta(batch, tmp))
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_batches": n}, f)
+    def build(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
+        n = replay_arrivals(
+            spark, load_table(spark, sf_dir, "documents"), "doc_id", "q244",
+            _Q244_SPLITS, tmp,
+            lambda batch, batch_id: _append_text_delta(batch, tmp))
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump({"n_batches": n}, f)
 
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion("invidx_stream", src, ("invidx-stream", src),
+                             build)
 
 
 @register(
@@ -177,32 +174,28 @@ def _q254_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
     src = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
-    key = derived.key("ivf-stream-v1", src, IVF_CELLS)
-    path = derived.derived_path("ivf_stream", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
         cents = ivf_centroids(spark, src, IVF_CELLS)
-        e = spark.read.parquet(src)
+        cell_dir = os.path.join(tmp, "cells")
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            cell_dir = os.path.join(tmp, "cells")
+        def assign(batch: DataFrame, batch_id: int) -> None:
+            # cell assignment is one Arrow matmul per batch against
+            # the frozen centroid matrix; the append is the only
+            # index write — nothing re-reads accumulated segments
+            assigned = with_ivf_cell_arrow(
+                ensure_min_partitions(batch), cents)
+            (assigned.write.mode("append").partitionBy("cell")
+             .parquet(cell_dir))
 
-            def assign(batch: DataFrame, batch_id: int) -> None:
-                # cell assignment is one Arrow matmul per batch against
-                # the frozen centroid matrix; the append is the only
-                # index write — nothing re-reads accumulated segments
-                assigned = with_ivf_cell_arrow(
-                    ensure_min_partitions(batch), cents)
-                (assigned.write.mode("append").partitionBy("cell")
-                 .parquet(cell_dir))
+        n = replay_arrivals(spark, spark.read.parquet(src), "vec_id", "q254",
+                            _Q254_SPLITS, tmp, assign)
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump({"n_batches": n, "n_cells": IVF_CELLS}, f)
 
-            n = replay_arrivals(spark, e, "vec_id", "q254", _Q254_SPLITS,
-                                tmp, assign)
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_batches": n, "n_cells": IVF_CELLS}, f)
-
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion("ivf_stream", src,
+                             ("ivf-stream", src, IVF_CELLS), build)
 
 
 @register(
@@ -329,17 +322,8 @@ def _q257_index(spark: SparkSession, sf_dir: str):
     )
 
     stream_path = _q254_index(spark, sf_dir)
-    # v2: non-empty-cell masking (r10 ADVICE)
-    key = derived.key("ivf-refresh-v2", stream_path, _Q257_SCALE)
-    # object-store-safe switchover (r10 verdict directive 4): the
-    # refreshed index is published as an immutable GENERATION under the
-    # companion root and readers resolve through the atomically-flipped
-    # manifest — never a directory rename, which S3-class stores make
-    # copy+delete (non-atomic)
-    root = derived.derived_path("ivf_refresh", key)
-    marker_src = os.path.join(stream_path, "meta.json")
 
-    if not derived.is_fresh(root, marker_src, marker=derived.MANIFEST):
+    def build(tmp: str) -> None:
         idx = spark.read.parquet(os.path.join(stream_path, "cells"))
         dim = 64
         # refreshed centroids: exact integer per-(cell, dim) sums.  The
@@ -372,40 +356,46 @@ def _q257_index(spark: SparkSession, sf_dir: str):
         M = np.zeros((len(present), dim), dtype=np.float64)
         for r in sums:
             M[cell_row[r["cell"]]][r["pos"]] = math.floor(r["s"] / r["n"])
+        os.makedirs(tmp, exist_ok=True)
+        narrow = idx.select("vec_id", "embedding")
+        out_schema = T.StructType(
+            list(narrow.schema.fields)
+            + [T.StructField("cell", T.IntegerType(), False)]
+        )
+        Ct = M.T  # dim × |present|
+        cells_arr = np.array(present, dtype="int32")
+        scale = float(_Q257_SCALE)
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            narrow = idx.select("vec_id", "embedding")
-            out_schema = T.StructType(
-                list(narrow.schema.fields)
-                + [T.StructField("cell", T.IntegerType(), False)]
-            )
-            Ct = M.T  # dim × |present|
-            cells_arr = np.array(present, dtype="int32")
-            scale = float(_Q257_SCALE)
+        def reassign(pdf, M):
+            Q = np.floor(M * scale + 0.5)
+            pdf = pdf.copy()
+            # exact integer dots in float64; argmax takes the
+            # FIRST maximal row = smallest cell id among ties =
+            # the oracle's (s DESC, cell)
+            pdf["cell"] = cells_arr[(Q @ Ct).argmax(axis=1)]
+            return pdf
 
-            def reassign(pdf, M):
-                Q = np.floor(M * scale + 0.5)
-                pdf = pdf.copy()
-                # exact integer dots in float64; argmax takes the
-                # FIRST maximal row = smallest cell id among ties =
-                # the oracle's (s DESC, cell)
-                pdf["cell"] = cells_arr[(Q @ Ct).argmax(axis=1)]
-                return pdf
+        (vector_batches(ensure_min_partitions(narrow), "embedding",
+                        reassign, out_schema)
+         .write.mode("overwrite").partitionBy("cell")
+         .parquet(os.path.join(tmp, "cells")))
+        # the refreshed centroid matrix is integer-valued and
+        # metadata-sized: persist it in meta.json so the serve
+        # path never re-runs the Lloyd-step job
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump({"n_cells": IVF_CELLS, "scale": _Q257_SCALE,
+                       "cells": [int(c) for c in present],
+                       "centroids": M.astype(int).tolist()}, f)
 
-            (vector_batches(ensure_min_partitions(narrow), "embedding",
-                            reassign, out_schema)
-             .write.mode("overwrite").partitionBy("cell")
-             .parquet(os.path.join(tmp, "cells")))
-            # the refreshed centroid matrix is integer-valued and
-            # metadata-sized: persist it in the marker so the serve
-            # path never re-runs the Lloyd-step job
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_cells": IVF_CELLS, "scale": _Q257_SCALE,
-                           "cells": [int(c) for c in present],
-                           "centroids": M.astype(int).tolist()}, f)
-
-        derived.publish_generation(root, build)
+    # object-store-safe switchover (r10 verdict directive 4): the
+    # refreshed index is published as an immutable GENERATION under the
+    # companion root and readers resolve through the atomically-flipped
+    # manifest — never a directory rename, which S3-class stores make
+    # copy+delete (non-atomic)
+    root = derived.companion(
+        "ivf_refresh", os.path.join(stream_path, derived.MARKER),
+        ("ivf-refresh", stream_path, _Q257_SCALE), build,
+        place=derived.publish_generation)
     gen = derived.current_generation(root)
     with open(os.path.join(gen, "meta.json")) as f:
         meta = json.load(f)
@@ -478,41 +468,38 @@ def _q259_compact(spark: SparkSession, sf_dir: str) -> str:
     compaction) expressed as Spark jobs.
     """
     stream_path = _q244_index(spark, sf_dir)
-    key = derived.key("invidx-compact-v2", stream_path)
+
+    def _n_segments(root: str) -> int:
+        return sum(
+            1 for r, _, fs in os.walk(root)
+            for f in fs if f.endswith(".parquet")
+        )
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
+        dct = spark.read.parquet(os.path.join(stream_path, "dict"))
+        (dct.groupBy("pfx", "w")
+         .agg(F.sum("dfc").cast("bigint").alias("dfc"))
+         .repartition("pfx")
+         .write.mode("overwrite").partitionBy("pfx")
+         .parquet(os.path.join(tmp, "dict")))
+        post = spark.read.parquet(os.path.join(stream_path, "postings"))
+        (post.repartition("pfx")
+         .write.mode("overwrite").partitionBy("pfx")
+         .parquet(os.path.join(tmp, "postings")))
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump({
+                "segments_before": _n_segments(
+                    os.path.join(stream_path, "postings")),
+                "segments_after": _n_segments(
+                    os.path.join(tmp, "postings")),
+            }, f)
+
     # manifest-pointer switchover, not directory rename (see _q257_index)
-    root = derived.derived_path("invidx_compact", key)
-    marker_src = os.path.join(stream_path, "meta.json")
-    if not derived.is_fresh(root, marker_src, marker=derived.MANIFEST):
-
-        def _n_segments(root: str) -> int:
-            return sum(
-                1 for r, _, fs in os.walk(root)
-                for f in fs if f.endswith(".parquet")
-            )
-
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            dct = spark.read.parquet(os.path.join(stream_path, "dict"))
-            (dct.groupBy("pfx", "w")
-             .agg(F.sum("dfc").cast("bigint").alias("dfc"))
-             .repartition("pfx")
-             .write.mode("overwrite").partitionBy("pfx")
-             .parquet(os.path.join(tmp, "dict")))
-            post = spark.read.parquet(
-                os.path.join(stream_path, "postings"))
-            (post.repartition("pfx")
-             .write.mode("overwrite").partitionBy("pfx")
-             .parquet(os.path.join(tmp, "postings")))
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({
-                    "segments_before": _n_segments(
-                        os.path.join(stream_path, "postings")),
-                    "segments_after": _n_segments(
-                        os.path.join(tmp, "postings")),
-                }, f)
-
-        derived.publish_generation(root, build)
-    return derived.current_generation(root)
+    return derived.current_generation(derived.companion(
+        "invidx_compact", os.path.join(stream_path, derived.MARKER),
+        ("invidx-compact", stream_path), build,
+        place=derived.publish_generation))
 
 
 @register(
@@ -577,49 +564,45 @@ def _q260_index(spark: SparkSession, sf_dir: str) -> str:
     expressed as Spark jobs on the same companion layout q220 serves.
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    # v2: manifest-pointer fold switchover
-    key = derived.key("invidx-lsm-v2", src, _Q260_SPLITS,
-                      _Q260_COMPACT_EVERY)
-    path = derived.derived_path("invidx_lsm", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
+
+    def build(tmp: str) -> None:
         d = load_table(spark, sf_dir, "documents")
+        os.makedirs(tmp, exist_ok=True)
+        derived.lsm_init(tmp)
+        stats = {"n_batches": 0, "n_folds": 0, "deltas_live": 0}
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            derived.lsm_init(tmp)
-            stats = {"n_batches": 0, "n_folds": 0, "deltas_live": 0}
+        def fold(roots: list[str], nxt: str) -> None:
+            # dictionary summed, postings rewritten one segment
+            # per prefix
+            dicts = [os.path.join(r, "dict") for r in roots]
+            posts = [os.path.join(r, "postings") for r in roots]
+            (derived.read_roots(spark, dicts)
+             .groupBy("pfx", "w")
+             .agg(F.sum("dfc").cast("bigint").alias("dfc"))
+             .repartition("pfx")
+             .write.mode("overwrite").partitionBy("pfx")
+             .parquet(os.path.join(nxt, "dict")))
+            (derived.read_roots(spark, posts).repartition("pfx")
+             .write.mode("overwrite").partitionBy("pfx")
+             .parquet(os.path.join(nxt, "postings")))
 
-            def fold(roots: list[str], nxt: str) -> None:
-                # dictionary summed, postings rewritten one segment
-                # per prefix
-                dicts = [os.path.join(r, "dict") for r in roots]
-                posts = [os.path.join(r, "postings") for r in roots]
-                (derived.read_roots(spark, dicts)
-                 .groupBy("pfx", "w")
-                 .agg(F.sum("dfc").cast("bigint").alias("dfc"))
-                 .repartition("pfx")
-                 .write.mode("overwrite").partitionBy("pfx")
-                 .parquet(os.path.join(nxt, "dict")))
-                (derived.read_roots(spark, posts).repartition("pfx")
-                 .write.mode("overwrite").partitionBy("pfx")
-                 .parquet(os.path.join(nxt, "postings")))
+        def merge(batch: DataFrame, batch_id: int) -> None:
+            _append_text_delta(batch, derived.lsm_delta_root(tmp))
+            stats["n_batches"] += 1
+            stats["deltas_live"] += 1
+            if stats["n_batches"] % _Q260_COMPACT_EVERY == 0:
+                derived.lsm_fold(tmp, fold)
+                stats["n_folds"] += 1
+                stats["deltas_live"] = 0
 
-            def merge(batch: DataFrame, batch_id: int) -> None:
-                _append_text_delta(batch, derived.lsm_delta_root(tmp))
-                stats["n_batches"] += 1
-                stats["deltas_live"] += 1
-                if stats["n_batches"] % _Q260_COMPACT_EVERY == 0:
-                    derived.lsm_fold(tmp, fold)
-                    stats["n_folds"] += 1
-                    stats["deltas_live"] = 0
+        replay_arrivals(spark, d, "doc_id", "q260", _Q260_SPLITS, tmp,
+                        merge)
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump(stats, f)
 
-            replay_arrivals(spark, d, "doc_id", "q260", _Q260_SPLITS, tmp,
-                            merge)
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump(stats, f)
-
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion(
+        "invidx_lsm", src,
+        ("invidx-lsm", src, _Q260_SPLITS, _Q260_COMPACT_EVERY), build)
 
 
 @register(
@@ -694,35 +677,32 @@ def _q262_index(spark: SparkSession, sf_dir: str) -> str:
     recompute.
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = derived.key("lshband-stream-v1", src, dedup.K, dedup.BANDS,
-                      _Q262_SPLITS)
-    path = derived.derived_path("lsh_stream", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
+
+    def build(tmp: str) -> None:
         d = load_table(spark, sf_dir, "documents")
+        os.makedirs(tmp, exist_ok=True)
+        band_dir = os.path.join(tmp, "bands")
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            band_dir = os.path.join(tmp, "bands")
+        def assign(batch: DataFrame, batch_id: int) -> None:
+            # per-batch signature: one shingle pass + one
+            # partial-combined min-aggregate over THIS batch only;
+            # the append is the only index write
+            sh = dedup.doc_shingles(
+                ensure_min_partitions(batch), distinct=False)
+            bl = dedup.lsh_bands(dedup.minhash_signatures(sh))
+            (bl.withColumn("ep", _arrival_epoch())
+             .write.mode("append").partitionBy("band")
+             .parquet(band_dir))
 
-            def assign(batch: DataFrame, batch_id: int) -> None:
-                # per-batch signature: one shingle pass + one
-                # partial-combined min-aggregate over THIS batch only;
-                # the append is the only index write
-                sh = dedup.doc_shingles(
-                    ensure_min_partitions(batch), distinct=False)
-                bl = dedup.lsh_bands(dedup.minhash_signatures(sh))
-                (bl.withColumn("ep", _arrival_epoch())
-                 .write.mode("append").partitionBy("band")
-                 .parquet(band_dir))
+        n = replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
+                            tmp, assign)
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump({"n_batches": n,
+                       "bands": dedup.BANDS, "k": dedup.K}, f)
 
-            n = replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
-                                tmp, assign)
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump({"n_batches": n,
-                           "bands": dedup.BANDS, "k": dedup.K}, f)
-
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion(
+        "lsh_stream", src,
+        ("lshband-stream", src, dedup.K, dedup.BANDS, _Q262_SPLITS), build)
 
 
 @register(
@@ -887,128 +867,126 @@ def _q265_gate(spark: SparkSession, sf_dir: str,
     amortizes away (q259/q260's model applied to band segments).
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    if fold_every is None:
-        key = derived.key("lshgate-stream-v3", src, dedup.K, dedup.BANDS,
-                          _Q262_SPLITS)
-        path = derived.derived_path("lsh_gate", key)
-    else:
-        key = derived.key("lshgate-lsm-v1", src, dedup.K, dedup.BANDS,
-                          _Q262_SPLITS, fold_every)
-        path = derived.derived_path("lsh_gate_lsm", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
+
+    def build(tmp: str) -> None:
         d = load_table(spark, sf_dir, "documents")
+        os.makedirs(tmp, exist_ok=True)
+        adm_dir = os.path.join(tmp, "admitted_bands")
+        quar_dir = os.path.join(tmp, "quarantine")
+        stats = {"epochs_seen": [], "admitted": [], "quarantined": [],
+                 "n_folds": 0}
+        if fold_every is not None:
+            derived.lsm_init(tmp)
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            adm_dir = os.path.join(tmp, "admitted_bands")
-            quar_dir = os.path.join(tmp, "quarantine")
-            stats = {"epochs_seen": [], "admitted": [], "quarantined": [],
-                     "n_folds": 0}
-            if fold_every is not None:
-                derived.lsm_init(tmp)
+        def fold(roots: list[str], nxt: str) -> None:
+            # one exchange on the partition key -> ONE file per
+            # (band, bvp) leaf of the next base generation
+            (derived.read_roots(spark, roots, _ADM_SCHEMA)
+             .repartition("band", "bvp")
+             .write.mode("overwrite")
+             .partitionBy("band", "bvp").parquet(nxt))
 
-            def fold(roots: list[str], nxt: str) -> None:
-                # one exchange on the partition key -> ONE file per
-                # (band, bvp) leaf of the next base generation
-                (derived.read_roots(spark, roots, _ADM_SCHEMA)
-                 .repartition("band", "bvp")
-                 .write.mode("overwrite")
-                 .partitionBy("band", "bvp").parquet(nxt))
+        def gate(batch: DataFrame, batch_id: int) -> None:
+            sh = dedup.doc_shingles(
+                ensure_min_partitions(batch), distinct=False)
+            bl = (
+                dedup.lsh_bands(dedup.minhash_signatures(sh))
+                .withColumn("ep", _arrival_epoch())
+                .withColumn("bvp", F.substring("bv", -1, 1))
+                .persist()
+            )
+            try:
+                eps = [r["ep"] for r in
+                       bl.select("ep").distinct().collect()]
+                assert len(eps) == 1, f"mixed-epoch batch: {eps}"
+                ep = eps[0]
+                assert all(ep > e for e in stats["epochs_seen"]), (
+                    stats["epochs_seen"], ep)
+                stats["epochs_seen"].append(ep)
 
-            def gate(batch: DataFrame, batch_id: int) -> None:
-                sh = dedup.doc_shingles(
-                    ensure_min_partitions(batch), distinct=False)
-                bl = (
-                    dedup.lsh_bands(dedup.minhash_signatures(sh))
-                    .withColumn("ep", _arrival_epoch())
-                    .withColumn("bvp", F.substring("bv", -1, 1))
-                    .persist()
-                )
-                try:
-                    eps = [r["ep"] for r in
-                           bl.select("ep").distinct().collect()]
-                    assert len(eps) == 1, f"mixed-epoch batch: {eps}"
-                    ep = eps[0]
-                    assert all(ep > e for e in stats["epochs_seen"]), (
-                        stats["epochs_seen"], ep)
-                    stats["epochs_seen"].append(ep)
-
-                    # O(1) existence check (r11 walked the whole
-                    # admitted dir per batch — O(index files) driver
-                    # work that defeats the fold's point): the gate
-                    # admitted rows before iff any prior batch
-                    # reported admissions
-                    has_index = sum(stats["admitted"]) > 0
-                    if has_index:
-                        bvps = [r["bvp"] for r in
-                                bl.select("bvp").distinct().collect()]
-                        roots = ([adm_dir] if fold_every is None
-                                 else derived.lsm_live_roots(tmp))
-                        adm = (derived.read_roots(spark, roots, _ADM_SCHEMA)
-                               .filter(F.col("bvp").isin(bvps))
-                               .select(F.col("band").alias("aband"),
-                                       F.col("bv").alias("abv")))
-                        flagged = (
-                            bl.join(
-                                adm,
-                                (F.col("band") == F.col("aband"))
-                                & (F.col("bv") == F.col("abv")),
-                                "leftsemi",
-                            )
-                            .select("doc_id").distinct()
+                # O(1) existence check (r11 walked the whole
+                # admitted dir per batch — O(index files) driver
+                # work that defeats the fold's point): the gate
+                # admitted rows before iff any prior batch
+                # reported admissions
+                has_index = sum(stats["admitted"]) > 0
+                if has_index:
+                    bvps = [r["bvp"] for r in
+                            bl.select("bvp").distinct().collect()]
+                    roots = ([adm_dir] if fold_every is None
+                             else derived.lsm_live_roots(tmp))
+                    adm = (derived.read_roots(spark, roots, _ADM_SCHEMA)
+                           .filter(F.col("bvp").isin(bvps))
+                           .select(F.col("band").alias("aband"),
+                                   F.col("bv").alias("abv")))
+                    flagged = (
+                        bl.join(
+                            adm,
+                            (F.col("band") == F.col("aband"))
+                            & (F.col("bv") == F.col("abv")),
+                            "leftsemi",
                         )
-                    else:
-                        flagged = bl.select("doc_id").distinct().limit(0)
-                    # WAL ordering, and not just for crash-safety: the
-                    # quarantine DECISION is materialized to files
-                    # FIRST, while the probe's plan still reads the
-                    # pre-batch index listing; the admitted append
-                    # then anti-joins against the FILE-BACKED decision.
-                    # (The lazy form — persist flagged, append
-                    # admitted, then re-use flagged — re-evaluated the
-                    # probe after the append, at which point every
-                    # admitted doc matched its own just-written band
-                    # rows and the whole batch read as flagged.)
-                    (flagged.withColumn("ep", F.lit(ep))
-                     .write.mode("append").parquet(quar_dir))
-                    flagged_file = (
-                        spark.read
-                        .schema("doc_id long, ep int")
-                        .parquet(quar_dir)
-                        .filter(F.col("ep") == ep)
-                        .select("doc_id")
+                        .select("doc_id").distinct()
                     )
-                    admitted_rows = bl.join(flagged_file, "doc_id",
-                                            "left_anti")
-                    # one exchange on the partition key -> ONE file per
-                    # (band, bvp) dir per batch; the unpartitioned
-                    # write emitted tasks x dirs tiny files, which the
-                    # serve path pays in listing/footer reads
-                    dest = (adm_dir if fold_every is None
-                            else derived.lsm_delta_root(tmp))
-                    (admitted_rows.repartition("band", "bvp")
-                     .write.mode("append")
-                     .partitionBy("band", "bvp").parquet(dest))
-                    nq = flagged_file.count()
-                    stats["quarantined"].append(nq)
-                    stats["admitted"].append(
-                        bl.select("doc_id").distinct().count() - nq)
-                    if (fold_every is not None
-                            and len(stats["epochs_seen"]) % fold_every
-                            == 0):
-                        derived.lsm_fold(tmp, fold)
-                        stats["n_folds"] += 1
-                finally:
-                    bl.unpersist()
+                else:
+                    flagged = bl.select("doc_id").distinct().limit(0)
+                # WAL ordering, and not just for crash-safety: the
+                # quarantine DECISION is materialized to files
+                # FIRST, while the probe's plan still reads the
+                # pre-batch index listing; the admitted append
+                # then anti-joins against the FILE-BACKED decision.
+                # (The lazy form — persist flagged, append
+                # admitted, then re-use flagged — re-evaluated the
+                # probe after the append, at which point every
+                # admitted doc matched its own just-written band
+                # rows and the whole batch read as flagged.)
+                (flagged.withColumn("ep", F.lit(ep))
+                 .write.mode("append").parquet(quar_dir))
+                flagged_file = (
+                    spark.read
+                    .schema("doc_id long, ep int")
+                    .parquet(quar_dir)
+                    .filter(F.col("ep") == ep)
+                    .select("doc_id")
+                )
+                admitted_rows = bl.join(flagged_file, "doc_id",
+                                        "left_anti")
+                # one exchange on the partition key -> ONE file per
+                # (band, bvp) dir per batch; the unpartitioned
+                # write emitted tasks x dirs tiny files, which the
+                # serve path pays in listing/footer reads
+                dest = (adm_dir if fold_every is None
+                        else derived.lsm_delta_root(tmp))
+                (admitted_rows.repartition("band", "bvp")
+                 .write.mode("append")
+                 .partitionBy("band", "bvp").parquet(dest))
+                nq = flagged_file.count()
+                stats["quarantined"].append(nq)
+                stats["admitted"].append(
+                    bl.select("doc_id").distinct().count() - nq)
+                if (fold_every is not None
+                        and len(stats["epochs_seen"]) % fold_every
+                        == 0):
+                    derived.lsm_fold(tmp, fold)
+                    stats["n_folds"] += 1
+            finally:
+                bl.unpersist()
 
-            with build_shuffle_partitions(spark):
-                replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
-                                tmp, gate)
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump(stats, f)
+        with build_shuffle_partitions(spark):
+            replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
+                            tmp, gate)
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump(stats, f)
 
-        derived.build_atomic(path, build)
-    return path
+    if fold_every is None:
+        return derived.companion(
+            "lsh_gate", src,
+            ("lshgate-stream", src, dedup.K, dedup.BANDS, _Q262_SPLITS),
+            build)
+    return derived.companion(
+        "lsh_gate_lsm", src,
+        ("lshgate-lsm", src, dedup.K, dedup.BANDS, _Q262_SPLITS, fold_every),
+        build)
 
 
 def _ddb_admission_chain() -> str:
@@ -1329,75 +1307,72 @@ def _q268_index(spark: SparkSession, sf_dir: str) -> str:
     composed here — q267 certifies that composition for the family).
     """
     src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    key = derived.key("gramidx-stream-v1", src, _Q262_SPLITS)
-    path = derived.derived_path("gram_stream", key)
-    if not derived.is_fresh(path, src, marker="meta.json"):
+
+    def build(tmp: str) -> None:
         d = load_table(spark, sf_dir, "documents")
+        os.makedirs(tmp, exist_ok=True)
+        idx_dir = os.path.join(tmp, "grams")
+        hits_dir = os.path.join(tmp, "hits")
+        stats = {"epochs_seen": [], "n_grams": [], "n_hits": []}
 
-        def build(tmp: str) -> None:
-            os.makedirs(tmp, exist_ok=True)
-            idx_dir = os.path.join(tmp, "grams")
-            hits_dir = os.path.join(tmp, "hits")
-            stats = {"epochs_seen": [], "n_grams": [], "n_hits": []}
-
-            def ingest(batch: DataFrame, batch_id: int) -> None:
-                wl = ensure_min_partitions(batch).select(
-                    "doc_id", words().alias("wlist"))
-                g = (
-                    wl.select(
-                        "doc_id",
-                        F.posexplode(gram_digests()).alias("pos", "gh"),
-                    )
-                    .withColumn("ep", _arrival_epoch())
-                    .persist()
+        def ingest(batch: DataFrame, batch_id: int) -> None:
+            wl = ensure_min_partitions(batch).select(
+                "doc_id", words().alias("wlist"))
+            g = (
+                wl.select(
+                    "doc_id",
+                    F.posexplode(gram_digests()).alias("pos", "gh"),
                 )
-                try:
-                    eps = [r["ep"] for r in
-                           g.select("ep").distinct().collect()]
-                    assert len(eps) <= 1, f"mixed-epoch batch: {eps}"
-                    ep = eps[0] if eps else None
-                    if ep is None:
-                        return
-                    assert all(ep > e for e in stats["epochs_seen"]), (
-                        stats["epochs_seen"], ep)
-                    stats["epochs_seen"].append(ep)
+                .withColumn("ep", _arrival_epoch())
+                .persist()
+            )
+            try:
+                eps = [r["ep"] for r in
+                       g.select("ep").distinct().collect()]
+                assert len(eps) <= 1, f"mixed-epoch batch: {eps}"
+                ep = eps[0] if eps else None
+                if ep is None:
+                    return
+                assert all(ep > e for e in stats["epochs_seen"]), (
+                    stats["epochs_seen"], ep)
+                stats["epochs_seen"].append(ep)
 
-                    has_index = sum(stats["n_grams"]) > 0
-                    if has_index:
-                        idx = (spark.read
-                               .schema("gh string, pfx string")
-                               .parquet(idx_dir)
-                               .select("gh"))
-                        hits = g.join(idx, "gh", "semi")
-                    else:
-                        hits = g.limit(0)
-                    (hits.select("doc_id", "pos", "ep")
-                     .write.mode("append").parquet(hits_dir))
-                    # append AFTER the probe materialized (the hits
-                    # write above is the ordering barrier — Structured
-                    # Streaming serializes batches, and the probe plan
-                    # must never see this batch's own digests)
-                    (g.select("gh").distinct()
-                     .withColumn("pfx", F.substring("gh", 1, 1))
-                     .repartition("pfx")
-                     .write.mode("append").partitionBy("pfx")
-                     .parquet(idx_dir))
-                    stats["n_grams"].append(g.count())
-                    stats["n_hits"].append(
-                        spark.read.schema("doc_id long, pos int, ep int")
-                        .parquet(hits_dir)
-                        .filter(F.col("ep") == ep).count())
-                finally:
-                    g.unpersist()
+                has_index = sum(stats["n_grams"]) > 0
+                if has_index:
+                    idx = (spark.read
+                           .schema("gh string, pfx string")
+                           .parquet(idx_dir)
+                           .select("gh"))
+                    hits = g.join(idx, "gh", "semi")
+                else:
+                    hits = g.limit(0)
+                (hits.select("doc_id", "pos", "ep")
+                 .write.mode("append").parquet(hits_dir))
+                # append AFTER the probe materialized (the hits
+                # write above is the ordering barrier — Structured
+                # Streaming serializes batches, and the probe plan
+                # must never see this batch's own digests)
+                (g.select("gh").distinct()
+                 .withColumn("pfx", F.substring("gh", 1, 1))
+                 .repartition("pfx")
+                 .write.mode("append").partitionBy("pfx")
+                 .parquet(idx_dir))
+                stats["n_grams"].append(g.count())
+                stats["n_hits"].append(
+                    spark.read.schema("doc_id long, pos int, ep int")
+                    .parquet(hits_dir)
+                    .filter(F.col("ep") == ep).count())
+            finally:
+                g.unpersist()
 
-            with build_shuffle_partitions(spark):
-                replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
-                                tmp, ingest)
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump(stats, f)
+        with build_shuffle_partitions(spark):
+            replay_arrivals(spark, d, "doc_id", "q262", _Q262_SPLITS,
+                            tmp, ingest)
+        with open(os.path.join(tmp, "meta.json"), "w") as f:
+            json.dump(stats, f)
 
-        derived.build_atomic(path, build)
-    return path
+    return derived.companion("gram_stream", src,
+                             ("gramidx-stream", src, _Q262_SPLITS), build)
 
 
 def _q268_oracle() -> str:

@@ -1,50 +1,46 @@
-"""Shared mtime-keyed derived-artifact store (.benchdata companions).
+"""Shared derived-artifact store (.benchdata companions).
 
 Every materialized companion in the engine — format exports (CSV/
 JSONL/ORC), shredded JSON tables, hourly rollups, z-ordered and
-day-partitioned copies, bucketed join tables, and the vector indexes
-(LSH-bucketed, int8 codes, IVF, IVFADC; kind ``ann_index``) — follows
-one contract:
+day-partitioned copies, bucketed join tables, the vector indexes
+(LSH-bucketed, int8 codes, IVF, IVFADC; kind ``ann_index``) and the
+streaming indexes — goes through one call, :func:`companion`:
 
 * location: ``$SPARK_GRAFT_DERIVED_DIR/<kind>`` if the env var is set,
   else ``<repo>/.benchdata/<kind>`` (gitignored), subdirectory named
-  by :func:`key` of the source path + build parameters;
-* freshness: the artifact is fresh iff its ``_SUCCESS`` marker is at
-  least as new as the source file — a rewritten fixture invalidates
-  every companion derived from it;
+  by :func:`key` of the build parameters;
+* freshness: the companion is fresh iff its ``_SUCCESS`` marker is no
+  older than the source (a directory source: its newest file) AND the
+  marker holds the current :func:`fingerprint` of the builder — a
+  rewritten fixture or a rewritten builder (its body, or any package
+  function or module constant it reaches) rebuilds it, while a comment
+  or docstring edit does not;
 * builds are ingest cost: queries measure the SERVING path, the build
-  runs once per (fixture, parameters) like ANALYZE statistics.
+  runs once per (fixture, parameters, builder code) like ANALYZE
+  statistics, under one lock per companion path;
+* atomicity: by default the build writes a temp directory that is
+  renamed into place (:func:`build_atomic`), and the marker is written
+  last, so a crash anywhere leaves no companion that passes the
+  freshness check.
 
 Driver-side values derived from a fixture (probe vectors, centroids,
-codebooks) follow the same freshness rule in memory: :func:`memo`
-keeps one slot per (name, source) and recomputes once the source's
-mtime changes.
-
-This module is the single home of that contract (an r7 review found
-five hand-rolled copies drifting — rollup.py treated the env var as a
-parent directory while the others treated it as the root; the vector
-indexes later grew a private root and env var of their own).
-``build_atomic`` additionally makes MULTI-JOB builds crash-safe: Spark
-writes ``_SUCCESS`` after the FIRST job, so a companion built by two
-writes (e.g. the schema-evolution export's two file generations) must
-build in a temp directory and rename into place, or a crash between
-the jobs leaves a half-artifact that passes the freshness check
-forever.
-
-The LSM generation store (``lsm_*`` below) is the streaming indexes'
-form of the same manifest: immutable base generations under
-``base/gen-N``, the live append epoch under ``delta/epoch-E``, and
-``{base_gen, delta_epoch}`` flipped together by one manifest replace
-when a fold writes the next base.
+codebooks) follow the same mtime rule in memory: :func:`memo` keeps
+one slot per (name, source) and recomputes once the source's mtime
+changes.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
+import importlib.util
 import json
 import os
+import pathlib
 import shutil
+import threading
 from collections.abc import Callable
+from types import CodeType
 from typing import TypeVar
 
 T = TypeVar("T")
@@ -65,10 +61,6 @@ def key(*parts) -> str:
     return hashlib.md5("|".join(map(str, parts)).encode()).hexdigest()[:16]
 
 
-def derived_path(kind: str, name: str) -> str:
-    return os.path.join(derived_root(kind), name)
-
-
 def source_mtime(src: str) -> float:
     """Freshness stamp of a source: its mtime, or for a directory
     source the newest file inside (a new part file invalidates)."""
@@ -81,10 +73,13 @@ def source_mtime(src: str) -> float:
     return os.path.getmtime(src)
 
 
-def is_fresh(path: str, src: str, marker: str = "_SUCCESS") -> bool:
-    """Artifact at ``path`` is usable iff its marker is no older than
-    ``src`` (directory sources: the newest file inside)."""
-    m = os.path.join(path, marker)
+MARKER = "_SUCCESS"
+
+
+def is_fresh(path: str, src: str) -> bool:
+    """The mtime half of the freshness rule: the marker of ``path`` is
+    no older than ``src`` (directory sources: the newest file inside)."""
+    m = os.path.join(path, MARKER)
     if not os.path.exists(m):
         return False
     return os.path.getmtime(m) >= source_mtime(src)
@@ -110,18 +105,9 @@ def memo(name: str, src: str, compute: Callable[[], T]) -> T:
 
 
 def build_atomic(path: str, build: Callable[[str], None]) -> None:
-    """Run ``build(tmp_dir)`` then atomically rename into ``path``.
-
-    Required whenever the build is more than ONE Spark write job: the
-    first job's ``_SUCCESS`` would otherwise mark a half-built
-    artifact fresh if the process dies before the last job commits.
-
-    This is the LOCAL-FILESYSTEM fast path (directory rename is atomic
-    on POSIX).  Companions that must switch over safely on an
-    S3-class object store — where directory rename is copy+delete and
-    non-atomic — use the manifest-pointer machinery below instead
-    (``publish_generation`` / ``current_generation``).
-    """
+    """Run ``build(tmp_dir)`` then rename it into ``path`` — atomic on
+    a local POSIX filesystem.  On an object store, where directory
+    rename is copy+delete, use :func:`publish_generation` instead."""
     tmp = path + ".build"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
@@ -130,6 +116,154 @@ def build_atomic(path: str, build: Callable[[str], None]) -> None:
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(tmp, path)
+
+
+_locks: dict[str, threading.Lock] = {}
+_locks_guard = threading.Lock()
+
+
+def companion(kind: str, src: str, parts: tuple,
+              build: Callable[[str], None],
+              place: Callable[[str, Callable[[str], None]], object]
+              = build_atomic) -> str:
+    """Path of the ``kind`` companion of ``src`` keyed by ``parts``,
+    first running ``place(path, build)`` unless it is fresh (see the
+    module docstring), then writing the marker last.  ``place`` is a
+    temp dir renamed into place by default, :func:`publish_generation`
+    for a manifest-pointer root (read it through
+    :func:`current_generation`), or a build in place."""
+    path = os.path.join(derived_root(kind), key(*parts))
+    marker = pathlib.Path(path, MARKER)
+    fp = fingerprint(build)
+    with _locks_guard:
+        lock = _locks.setdefault(path, threading.Lock())
+    with lock:
+        if not is_fresh(path, src) or marker.read_text() != fp:
+            place(path, build)
+            marker.write_text(fp)
+    return path
+
+
+# ---------------------------------------------------------------------
+# Builder fingerprint: the AST (docstrings stripped, so comments and
+# docs never count) of the top-level function enclosing ``build`` and
+# of every package function, class or module constant it reaches,
+# resolved statically through module-level and function-local imports.
+
+_PACKAGE = __name__.split(".")[0]
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+# keyed by id(): code objects compare equal by value, so a reloaded
+# module whose builder reads a changed constant would hit the old slot
+_fingerprints: dict[int, tuple[CodeType, str]] = {}
+_modules: dict[tuple[str, int], tuple[dict, dict]] = {}
+
+
+def fingerprint(fn: Callable) -> str:
+    """md5 over the reached definitions of ``fn``, memoized per code
+    object."""
+    code = fn.__code__
+    hit = _fingerprints.get(id(code))
+    if hit is None or hit[0] is not code:
+        seen: dict[tuple[str, str], str] = {}
+        todo = [(fn.__module__, fn.__qualname__.split(".")[0])]
+        while todo:
+            mod, name = ref = todo.pop()
+            if ref in seen:
+                continue
+            node = _module(mod)[0][name]
+            seen[ref] = ast.dump(node)
+            todo += _reached(mod, node)
+        fp = hashlib.md5("\n".join(
+            f"{m}.{n}={d}" for (m, n), d in sorted(seen.items())
+        ).encode()).hexdigest()
+        hit = _fingerprints[id(code)] = (code, fp)
+    return hit[1]
+
+
+def _module(mod: str) -> tuple[dict, dict]:
+    """(top-level definitions by name, import aliases) of module
+    ``mod``, parsed once per source file version."""
+    origin = importlib.util.find_spec(mod).origin
+    slot = (origin, os.stat(origin).st_mtime_ns)
+    if slot not in _modules:
+        with open(origin) as f:
+            tree = ast.parse(f.read())
+        for n in ast.walk(tree):
+            body = getattr(n, "body", None)
+            if (isinstance(n, (ast.Module, *_DEFS)) and body
+                    and isinstance(body[0], ast.Expr)
+                    and isinstance(body[0].value, ast.Constant)
+                    and isinstance(body[0].value.value, str)):
+                n.body = body[1:] or [ast.Pass()]
+        defs: dict[str, ast.AST] = {}
+        for n in tree.body:
+            if isinstance(n, _DEFS):
+                defs[n.name] = n
+            elif isinstance(n, (ast.Assign, ast.AnnAssign)):
+                for t in getattr(n, "targets", None) or [n.target]:
+                    for e in ast.walk(t):
+                        if isinstance(e, ast.Name):
+                            defs[e.id] = n
+        _modules[slot] = (defs, _imports(
+            n for n in tree.body if not isinstance(n, _DEFS)))
+    return _modules[slot]
+
+
+def _imports(stmts) -> dict[str, tuple[str, str | None]]:
+    """alias -> (module, attribute or None) for the import statements
+    in ``stmts``, nested blocks included."""
+    out: dict[str, tuple[str, str | None]] = {}
+    for s in stmts:
+        for n in ast.walk(s):
+            if isinstance(n, ast.Import):
+                for a in n.names:
+                    out[a.asname or a.name.split(".")[0]] = (
+                        a.name if a.asname else a.name.split(".")[0], None)
+            elif isinstance(n, ast.ImportFrom) and n.module:
+                for a in n.names:
+                    out[a.asname or a.name] = (n.module, a.name)
+    return out
+
+
+def _member(mod: str, attr: str | None):
+    """``mod.attr`` as a definition ``(module, name)``, ``mod`` itself
+    (attr None) or a submodule as ``(module, None)``, or None outside
+    the package."""
+    if mod.split(".")[0] != _PACKAGE:
+        return None
+    if attr is None:
+        return (mod, None)
+    defs, imports = _module(mod)
+    if attr in defs:
+        return (mod, attr)
+    if attr in imports:
+        return _member(*imports[attr])
+    sub = f"{mod}.{attr}"
+    return (sub, None) if importlib.util.find_spec(sub) else None
+
+
+def _reached(mod: str, node: ast.AST) -> list[tuple[str, str]]:
+    """Package definitions that names in ``node`` refer to."""
+    defs, imports = _module(mod)
+    scope = {**imports, **_imports([node])}
+
+    def ref(e: ast.AST):
+        if isinstance(e, ast.Name):
+            if e.id in scope:
+                return _member(*scope[e.id])
+            return (mod, e.id) if e.id in defs else None
+        if isinstance(e, ast.Attribute):
+            base = ref(e.value)
+            if base is not None and base[1] is None:
+                return _member(base[0], e.attr)
+        return None
+
+    out = []
+    for e in ast.walk(node):
+        r = ref(e)
+        if r is not None and r[1] is not None:
+            out.append(r)
+    return out
 
 
 def _gen_name(seq: int) -> str:
