@@ -102,50 +102,6 @@ def test_q245_no_python_stage(spark, sf_dir):
     assert "BatchEvalPython" not in inspect.explain_formatted(df)
 
 
-def test_grouped_weighted_percentiles_matches_naive(spark):
-    """The range-bucketed weighted-percentile operator must equal the
-    naive cumulative-window definition (min v with 100*cumw >= p*W)
-    on data with ties, skew, and group-in-one-bucket corners."""
-    import random
-
-    from tidb_gateway_spark.operators.rank import (
-        grouped_weighted_percentiles,
-    )
-
-    rnd = random.Random(42)
-    rows = []
-    for grp in ("a", "b", "c"):
-        for _ in range(500):
-            v = rnd.randint(0, 50) if grp == "b" else rnd.randint(0, 10**6)
-            rows.append((grp, v, rnd.randint(1, 9)))
-    rows.append(("d", 7, 3))  # single-value group
-    df = spark.createDataFrame(rows, "g string, v long, w long")
-    pcts = [1, 50, 90, 99, 100]
-    got = {
-        r["g"]: (r["w_total"], *[r[f"p{p}"] for p in pcts])
-        for r in grouped_weighted_percentiles(df, "g", "v", "w", pcts)
-        .collect()
-    }
-    # naive reference
-    byg: dict[str, list] = {}
-    for grp, v, w in rows:
-        byg.setdefault(grp, []).append((v, w))
-    for grp, vw in byg.items():
-        agg: dict[int, int] = {}
-        for v, w in vw:
-            agg[v] = agg.get(v, 0) + w
-        tot = sum(agg.values())
-        exp = [tot]
-        for p in pcts:
-            cum = 0
-            for v in sorted(agg):
-                cum += agg[v]
-                if 100 * cum >= p * tot:
-                    exp.append(v)
-                    break
-        assert got[grp] == tuple(exp), (grp, got[grp], tuple(exp))
-
-
 def test_q252_gram_partials_are_batch_local(spark, sf_dir):
     """The covariance kernel must shuffle only the long-form partial
     rows (an aggregate above MapInPandas) — never N·D² exploded

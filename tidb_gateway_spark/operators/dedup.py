@@ -16,10 +16,13 @@ Tiers (all pure DataFrame transforms, no driver-side loops):
   :func:`near_dup_pairs` is the whole candidate→verify pipeline.
 
 Determinism: hashes are md5 hex strings (lexicographic min), reproducible
-in any engine.  The ``DDB_*`` strings at the end of this module are the
-DuckDB twins of the shingle, signature, band, verify and SimHash stages,
-built from the same constants; every registry oracle of this family is
-assembled from them.
+in any engine.  The ``DDB_*`` strings and ``ddb_*`` functions at the end
+of this module are the DuckDB twins of every stage — shingles,
+signatures, bands, the band join, the verify (set sizes, intersections,
+Jaccard ratio and JACCARD_MIN), the cluster closure and SimHash — built
+from the same constants.  Every registry oracle of this family is
+assembled from them; only the streaming gate's epoch-ordered band joins
+(q263/q265/q266) keep their own join predicate.
 """
 
 from __future__ import annotations
@@ -46,6 +49,10 @@ ROWS = K // BANDS
 # The one SimHash width: SIMHASH_BITS hex digits of md5(word), one bit
 # each (at most 16, the two conv halves simhash folds them into).
 SIMHASH_BITS = 16
+
+# The near-dup verify threshold: a candidate pair is a near duplicate
+# when the exact Jaccard of its shingle sets is at least JACCARD_MIN.
+JACCARD_MIN = 0.5
 
 
 def _shingle_array_sql(n: int) -> str:
@@ -167,12 +174,12 @@ def minhash_lsh_candidates(documents: DataFrame) -> DataFrame:
 
 def near_dup_pairs(documents: DataFrame) -> DataFrame:
     """Verified near-dup pairs (a, b, jac): the LSH candidates whose
-    exact shingle-set Jaccard is ≥ 0.5 — the candidate→verify pipeline
-    (cost ∝ candidates, never corpus²)."""
+    exact shingle-set Jaccard is ≥ JACCARD_MIN — the candidate→verify
+    pipeline (cost ∝ candidates, never corpus²)."""
     return (
         jaccard_pairs_arrays(minhash_lsh_candidates(documents),
                              doc_shingle_arrays(documents))
-        .filter(F.col("jac") >= 0.5)
+        .filter(F.col("jac") >= JACCARD_MIN)
     )
 
 
@@ -502,8 +509,8 @@ def simhash_multiprobe_pairs(documents: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DuckDB twins, as CTE text over the ``documents`` view.  Table and
 # column names (words/shingles/sigs/bands, h0..h{K-1}, band/bv,
-# cand/sizes/inter, b0..b{SIMHASH_BITS-1}) are part of the contract:
-# oracles join on them.
+# cand/sizes/inter, ver(a, b), (doc_id, cluster_id),
+# b0..b{SIMHASH_BITS-1}) are part of the contract: oracles join on them.
 
 # (doc_id, w) distinct SHINGLE_N-word shingles — doc_shingles
 DDB_SHINGLES = (
@@ -533,16 +540,81 @@ DDB_BANDS = (
     )
     + ")"
 )
-# band_pairs as cand(a, b), then the Jaccard verify's inputs: shingle
-# set sizes and candidate intersections inter(a, b, i)
-DDB_CAND_CHAIN = (
-    "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x JOIN bands y "
-    "ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id), "
-    "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
-    "inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM cand c "
-    "JOIN shingles wa ON wa.doc_id = c.a JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w "
-    "GROUP BY c.a, c.b)"
-)
+
+
+def _cte(name: str, body: str, materialized: bool) -> str:
+    return f"{name} AS {'MATERIALIZED ' if materialized else ''}({body})"
+
+
+def ddb_cand(materialized: bool = False) -> str:
+    """band_pairs over bands as cand(a, b).  ``materialized`` adds
+    DuckDB's AS MATERIALIZED hint, for oracles that read cand more than
+    once (without it DuckDB inlines the MinHash chain into each
+    reference)."""
+    return _cte(
+        "cand",
+        "SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x JOIN bands y "
+        "ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id",
+        materialized)
+
+
+def ddb_sizes_inter(cand: str = "cand") -> str:
+    """The Jaccard verify's inputs over the candidate CTE ``cand(a, b)``:
+    shingle set sizes sizes(doc_id, sz) and intersections inter(a, b, i)."""
+    return (
+        "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
+        f"inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM {cand} c "
+        "JOIN shingles wa ON wa.doc_id = c.a JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w "
+        "GROUP BY c.a, c.b)"
+    )
+
+
+DDB_CAND_CHAIN = f"{ddb_cand()}, {ddb_sizes_inter()}"
+
+
+def ddb_union_size(i: str = "i") -> str:
+    """|A ∪ B| of a pair joined to ``sizes sa`` and ``sizes sb``, given
+    its intersection ``i``."""
+    return f"sa.sz + sb.sz - {i}"
+
+
+def ddb_jaccard(i: str = "i") -> str:
+    """jaccard_pairs_arrays' jac of a pair joined to ``sizes sa`` and
+    ``sizes sb``, given its intersection ``i``."""
+    return f"CAST({i} AS DOUBLE) / CAST({ddb_union_size(i)} AS DOUBLE)"
+
+
+def ddb_near_dup(i: str = "i") -> str:
+    """near_dup_pairs' verify predicate: Jaccard >= JACCARD_MIN."""
+    return f"{ddb_jaccard(i)} >= {JACCARD_MIN}"
+
+
+def ddb_verified(name: str = "ver", materialized: bool = False) -> str:
+    """near_dup_pairs as ``name(a, b)`` over inter and sizes."""
+    return _cte(
+        name,
+        "SELECT t.a, t.b FROM inter t "
+        "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
+        f"WHERE {ddb_near_dup()}",
+        materialized)
+
+
+def ddb_components(pairs_cte: str, name: str) -> str:
+    """connected_components over ``pairs_cte(a, b)`` as
+    ``name(doc_id, cluster_id)``: symmetrize, walk the closure with a
+    recursive CTE, keep the MIN reachable id per node.  Its helper CTEs
+    are prefixed with ``name``, so one oracle may call it twice; the
+    oracle must open with WITH RECURSIVE."""
+    e, w = f"{name}_edges", f"{name}_walk"
+    return (
+        f"{e} AS (SELECT a AS u, b AS v FROM {pairs_cte} "
+        f"UNION SELECT b, a FROM {pairs_cte}), "
+        f"{w}(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM {e}) "
+        f"UNION SELECT e.u, w.m FROM {e} e JOIN {w} w ON w.n = e.v), "
+        f"{name} AS (SELECT n AS doc_id, MIN(m) AS cluster_id FROM {w} GROUP BY n)"
+    )
+
+
 # simhash's per-bit sums b0..b{SIMHASH_BITS-1}, aggregated over words
 DDB_SIMHASH_BITS = ", ".join(
     f"SUM(CASE WHEN substr(md5(w), {j + 1}, 1) IN "

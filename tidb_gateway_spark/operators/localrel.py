@@ -13,8 +13,8 @@ itself so nothing re-executes on reuse.
 Used by every hybrid operator whose driver path returns metadata-sized
 results (union-find labels, PageRank vectors, per-stratum rate
 tables, expectation tables).  Above ``cap`` rows the literal plan
-would bloat codegen, so the RDD-backed form remains the fallback —
-at that size the per-row work amortizes the boundary cost.
+would bloat codegen, so those rows go through pandas and Arrow
+instead.
 """
 
 from __future__ import annotations
@@ -48,27 +48,26 @@ def local_rows_df(spark: SparkSession, rows: list,
 
     Exact-typed: every literal is cast to the declared field type, so
     the result schema matches ``createDataFrame``'s bit for bit (the
-    oracle-hash contract).  Falls back to ``createDataFrame`` above
-    ``cap`` or for empty input (zero-row literal plans need a typed
-    empty relation anyway).
+    oracle-hash contract).  Above ``cap`` rows the pandas/Arrow
+    ``createDataFrame`` builds it; empty input takes the plain
+    ``createDataFrame`` (zero-row literal plans need a typed empty
+    relation anyway).
     """
     st = _schema_of(schema)
-    if not rows or len(rows) > cap:
-        if rows:
-            # Above the literal cap, route through pandas so the
-            # session's Arrow path (arrow.pyspark.enabled) serializes
-            # the rows as JVM-held Arrow batches — still no Python
-            # worker per execution, unlike the plain-rows form whose
-            # plan re-enters applySchemaToPythonRDD every run.
-            try:
-                import pandas as pd
-
-                pdf = pd.DataFrame.from_records(
-                    list(rows), columns=[f.name for f in st.fields])
-                return spark.createDataFrame(pdf, schema=st)
-            except Exception:
-                pass
+    if not rows:
         return spark.createDataFrame(rows, schema=st)
+    if len(rows) > cap:
+        # Above the literal cap, route through pandas so the session's
+        # Arrow path (arrow.pyspark.enabled) serializes the rows as
+        # JVM-held Arrow batches — still no Python worker per
+        # execution, unlike the plain-rows form whose plan re-enters
+        # applySchemaToPythonRDD every run.  An error here is raised,
+        # never answered with that plain-rows form.
+        import pandas as pd
+
+        pdf = pd.DataFrame.from_records(
+            list(rows), columns=[f.name for f in st.fields])
+        return spark.createDataFrame(pdf, schema=st)
     structs = [
         F.struct(*[
             F.lit(v).cast(f.dataType).alias(f.name)

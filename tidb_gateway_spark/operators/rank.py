@@ -384,14 +384,6 @@ def grouped_exact_median(df: DataFrame, group_col: str, value_col: str,
     )
 
 
-# (group, bucket) weight rows the driver will fold into crossing
-# targets; past this the function keeps the fully-distributed form.
-# 256k small rows is driver-trivial; |groups|×|buckets| above it means
-# a high-cardinality group column, where the extra scan the
-# distributed form pays is amortized over real per-group work anyway.
-_GWP_DRIVER_FOLD_CAP = 262144
-
-
 def grouped_weighted_percentiles(df: DataFrame, group_col: str,
                                  value_col: str, weight_col: str,
                                  pcts: list[int],
@@ -419,27 +411,29 @@ def grouped_weighted_percentiles(df: DataFrame, group_col: str,
        integer math): per-group prefix sums give each bucket's weight
        offset, and for each percentile p exactly ONE bucket per group
        contains the crossing (100·off < p·W ≤ 100·(off+wn));
-    3. broadcast the folded target rows as LITERALS — the probe side
-       (scan 2) joins against ~|groups|·|pcts| literal rows, so no
-       lineage re-executes the stats pass (the r13 form re-ran the
-       whole scan+agg+window inside the broadcast build: three full
-       scans per execution, q240 4.1× DuckDB at sf3 isolated);
+    3. turn the folded target rows into LITERAL (group, value-range)
+       filters on the probe side (scan 2), so no lineage re-executes
+       the stats pass (the r13 form re-ran the whole scan+agg+window
+       inside a broadcast build: three full scans per execution, q240
+       4.1× DuckDB at sf3 isolated);
     4. the lower weighted percentile (min v with 100·cumw ≥ p·W, the
        q240/q245 contract) falls out of a bucket-local cumulative
        window over the surviving ~1/|buckets| row fraction.
 
     Returns (group_col, w_total, p<pct>...) with the value column's
-    type preserved.  Builds run one eager metadata-sized job (the
-    (group, bucket) sums — bounded by ``_GWP_DRIVER_FOLD_CAP``; past
-    the cap, a high-cardinality group column, the fully-distributed
-    r13 form runs instead).  100 TB shape: both scans are map-side
-    column-pruned passes; nothing corpus-sized ever shuffles, the
-    driver only ever sees (group, bucket) partials.
+    type preserved; empty, with that schema, when no group has a
+    positive weight.  Builds run one eager metadata-sized job (the
+    (group, bucket) sums, |groups|×|buckets| rows).  The literal
+    filters grow with |groups|·|pcts|, so the group column must be
+    low-cardinality (q240 groups by ``l_returnflag``: 3 values).
+    100 TB shape: both scans are map-side column-pruned passes;
+    nothing corpus-sized ever shuffles, the driver only ever sees
+    (group, bucket) partials.
 
     Reserved names: the plan adds the intermediate columns ``_w``,
-    ``_bucket``, ``_wn``, ``_off``, ``_tot``, ``_wv``, ``_cumw``,
-    ``_tg`` and ``_tb`` beside ``group_col`` and ``value_col``, so
-    neither of those two may carry one of these names.
+    ``_bucket``, ``_wn``, ``_off``, ``_tot``, ``_wv`` and ``_cumw``
+    beside ``group_col`` and ``value_col``, so neither of those two
+    may carry one of these names.
     """
     wtype = dict(df.dtypes)[weight_col]
     if wtype not in ("boolean", "tinyint", "smallint", "int", "bigint"):
@@ -459,17 +453,8 @@ def grouped_weighted_percentiles(df: DataFrame, group_col: str,
     # No LIMIT guard on the collect: CollectLimitExec's incremental
     # partition strategy costs ~0.5 s of sequential stages against this
     # 0.07 s aggregate (measured, sf3).  The plain Arrow collect is
-    # |groups|×|buckets| small rows; spark.driver.maxResultSize is the
-    # backstop for a pathological group column — trip it (or the row
-    # cap) and the fully-distributed form runs instead.
-    try:
-        tbl = cnt.toArrow()
-        fold_ok = tbl.num_rows <= _GWP_DRIVER_FOLD_CAP
-    except Exception:
-        fold_ok = False
-    if not fold_ok:
-        return _gwp_distributed(raw, group_col, value_col, pcts)
-
+    # |groups|×|buckets| small rows.
+    tbl = cnt.toArrow()
     gvals = tbl.column(group_col).to_pylist()
     bvals = tbl.column("_bucket").to_pylist()
     wvals = tbl.column("_wn").to_pylist()
@@ -486,134 +471,15 @@ def grouped_weighted_percentiles(df: DataFrame, group_col: str,
                    for p in pcts):
                 target_rows.append((g, b, off, tot))
             off += wn
-
-    if target_rows and len(target_rows) <= _GWP_RANGE_TARGET_CAP:
-        return _gwp_crossing_ranges(
-            raw0, group_col, value_col, pcts, target_rows, bounds)
-    targets = _gwp_literal_targets(df, group_col, target_rows)
-    return _gwp_crossing(raw, targets, group_col, value_col, pcts)
-
-
-# Above this many folded target rows, build the broadcast side with
-# createDataFrame instead of a literal plan (a literal struct array
-# that large bloats codegen; the Python-worker cost createDataFrame
-# pays at execution is amortized by that much per-group work anyway).
-_GWP_LITERAL_TARGET_CAP = 1024
-
-
-def _gwp_literal_targets(df: DataFrame, group_col: str,
-                         target_rows: list) -> DataFrame:
-    """(group, bucket, off, tot) rows as an all-JVM literal plan.
-
-    ``spark.createDataFrame(rows)`` is RDD-backed
-    (``applySchemaToPythonRDD``): every EXECUTION of the consuming
-    plan round-trips a Python worker just to materialize the handful
-    of broadcast rows — measured ~1-2 s per run inside the q240
-    broadcast build, dwarfing the data pass.  ``explode`` of a literal
-    struct array stays a JVM-local relation: zero Python in the
-    executed plan."""
-    spark = df.sparkSession
-    gtype = df.schema[group_col].dataType
-    if target_rows and len(target_rows) <= _GWP_LITERAL_TARGET_CAP:
-        structs = [
-            F.struct(
-                F.lit(g).cast(gtype).alias(group_col),
-                F.lit(b).cast("int").alias("_bucket"),
-                F.lit(off).cast("bigint").alias("_off"),
-                F.lit(tot).cast("bigint").alias("_tot"),
-            )
-            for (g, b, off, tot) in target_rows
-        ]
-        return (
-            spark.range(1)
-            .select(F.explode(F.array(*structs)).alias("_t"))
-            .select("_t.*")
-        )
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType,
-    )
-    tschema = StructType([
-        StructField(group_col, gtype),
-        StructField("_bucket", IntegerType(), False),
-        StructField("_off", LongType(), False),
-        StructField("_tot", LongType(), False),
-    ])
-    return spark.createDataFrame(target_rows, schema=tschema)
-
-
-def _gwp_tail(flt: DataFrame, group_col: str, value_col: str,
-              pcts: list[int]) -> DataFrame:
-    """Shared tail of all crossing forms: ``flt`` carries the surviving
-    target-bucket rows with ``_bucket``/``_off``/``_tot`` attached.
-    Aggregate to (group, value) weight sums, read each percentile off
-    the bucket-local cumulative window.
-
-    ONE exchange serves both the (…, value) aggregate and the
-    cumulative window: hash-partitioning on (group, _bucket) is a
-    subset of the aggregate's grouping keys (ClusteredDistribution
-    satisfied — no agg exchange) and exactly the window's
-    partitioning (Sort only, no second exchange).  The aggregated
-    form shuffled the same surviving rows anyway — a near-unique
-    value column means map-side partials barely combine — then paid
-    a SECOND full exchange to regroup for the window (guide §2.4:
-    two operations keyed the same way share one exchange).  Per-task
-    bound is unchanged: one (group, bucket) slice ≈ 1/parts of the
-    group either way.
-    """
-    wloc = (
-        Window.partitionBy(group_col, "_bucket").orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    mid = (
-        flt.repartition(
-            session_parallelism(flt.sparkSession), group_col, "_bucket")
-        .groupBy(group_col, "_bucket", "_off", "_tot", value_col)
-        .agg(F.sum("_w").alias("_wv"))
-        .withColumn("_cumw", F.sum("_wv").over(wloc) + F.col("_off"))
-    )
-    aggs = [F.max("_tot").cast("bigint").alias("w_total")]
-    for p in pcts:
-        aggs.append(
-            F.min(
-                F.when(100 * F.col("_cumw") >= p * F.col("_tot"),
-                       F.col(value_col))
-            ).alias(f"p{p}")
-        )
-    return mid.groupBy(group_col).agg(*aggs)
-
-
-def _gwp_crossing(raw: DataFrame, targets: DataFrame, group_col: str,
-                  value_col: str, pcts: list[int]) -> DataFrame:
-    """Crossing pass, broadcast-join form (the distributed fallback and
-    large-target-set path): join the bucketed raw rows against the
-    (group, bucket, off, tot) target table.
-
-    The group condition is null-SAFE (``<=>``): a plain equi-join
-    silently drops NULL group keys, while the literal-range form
-    (eqNullSafe predicates) and GROUP BY semantics keep them — all
-    dispatch paths must agree on NULL groups (r14 ADVICE).  eqNullSafe
-    stays a hash-joinable equi-condition, so the broadcast hash join
-    is unaffected."""
-    t = targets.select(
-        F.col(group_col).alias("_tg"), F.col("_bucket").alias("_tb"),
-        "_off", "_tot")
-    joined = raw.join(
-        F.broadcast(t),
-        F.col(group_col).eqNullSafe(F.col("_tg"))
-        & (F.col("_bucket") == F.col("_tb")),
-    ).drop("_tg", "_tb")
-    return _gwp_tail(joined, group_col, value_col, pcts)
-
-
-# Above this many folded targets the literal when-chains of the range
-# form bloat codegen; the broadcast-join form takes over.
-_GWP_RANGE_TARGET_CAP = 64
+    return _gwp_crossing_ranges(
+        raw0, group_col, value_col, pcts, target_rows, bounds)
 
 
 def _gwp_crossing_ranges(raw0: DataFrame, group_col: str, value_col: str,
                          pcts: list[int], target_rows: list,
                          bounds: list | None) -> DataFrame:
-    """Crossing pass, literal-range form (the driver-fold fast path).
+    """Crossing pass over the folded ``(group, bucket, off, tot)``
+    targets.
 
     Instead of re-deriving every probe row's bucket (a |bounds|-term
     comparison chain over the whole second scan) and broadcast-joining
@@ -622,11 +488,26 @@ def _gwp_crossing_ranges(raw0: DataFrame, group_col: str, value_col: str,
     ``_bucket``/``_off``/``_tot`` attach as literal when-chains over
     the same predicates.  bucket(v) == b is exactly
     ``bounds[b-1] < skey(v) <= bounds[b]`` (asc; NULLs land in bucket
-    0), so the kept row set and attached offsets are identical to the
-    join form's.  On a numeric value column the range bounds are plain
-    comparisons on the scanned column — pushable to parquet row-group
-    stats on clustered layouts (guide §6) — measured 0.24 s vs 1.5 s
-    for the sf3 probe scan.
+    0), and the group match is null-safe, so NULL groups are kept as
+    GROUP BY keeps them.  On a numeric value column the range bounds
+    are plain comparisons on the scanned column — pushable to parquet
+    row-group stats on clustered layouts (guide §6) — measured 0.24 s
+    vs 1.5 s for the sf3 probe scan.  The chains grow with the target
+    count (at most |groups|·|pcts|), so this form suits the
+    low-cardinality group columns the registry uses.  With no target
+    (every weight 0) no row is kept and the result is empty.
+
+    The surviving rows aggregate to (group, value) weight sums and each
+    percentile is read off the bucket-local cumulative window.  ONE
+    exchange serves both the (…, value) aggregate and the cumulative
+    window: hash-partitioning on (group, _bucket) is a subset of the
+    aggregate's grouping keys (ClusteredDistribution satisfied — no agg
+    exchange) and exactly the window's partitioning (Sort only, no
+    second exchange).  A near-unique value column means map-side
+    partials barely combine, so aggregating first would shuffle the
+    same rows and then pay a SECOND full exchange to regroup for the
+    window (guide §2.4: two operations keyed the same way share one
+    exchange).
     """
     dtype = dict(raw0.dtypes)[value_col]
     skey = _order_surrogate(value_col, dtype)
@@ -647,7 +528,7 @@ def _gwp_crossing_ranges(raw0: DataFrame, group_col: str, value_col: str,
     preds = [
         (gc.eqNullSafe(F.lit(g).cast(gtype)) & in_bucket(b), b, off, tot)
         for (g, b, off, tot) in target_rows
-    ]
+    ] or [(F.lit(False), 0, 0, 0)]
     keep = preds[0][0]
     for p, _, _, _ in preds[1:]:
         keep = keep | p
@@ -662,30 +543,23 @@ def _gwp_crossing_ranges(raw0: DataFrame, group_col: str, value_col: str,
         .withColumn("_off", oexpr.cast("bigint"))
         .withColumn("_tot", texpr.cast("bigint"))
     )
-    return _gwp_tail(flt, group_col, value_col, pcts)
-
-
-def _gwp_distributed(raw: DataFrame, group_col: str, value_col: str,
-                     pcts: list[int]) -> DataFrame:
-    """Fully-distributed crossing search (the r13 form) for
-    high-cardinality group columns where the (group, bucket) table
-    exceeds the driver fold cap.  Pays one extra scan of ``raw``
-    (the stats lineage re-executes inside the broadcast build) in
-    exchange for never collecting the per-group table."""
-    cnt = raw.groupBy(group_col, "_bucket").agg(F.sum("_w").alias("_wn"))
-    wg = Window.partitionBy(group_col).orderBy("_bucket")
-    wt = Window.partitionBy(group_col)
-    stats = (
-        cnt.withColumn("_off", F.sum("_wn").over(wg) - F.col("_wn"))
-        .withColumn("_tot", F.sum("_wn").over(wt))
+    wloc = (
+        Window.partitionBy(group_col, "_bucket").orderBy(value_col)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cond = None
+    mid = (
+        flt.repartition(
+            session_parallelism(flt.sparkSession), group_col, "_bucket")
+        .groupBy(group_col, "_bucket", "_off", "_tot", value_col)
+        .agg(F.sum("_w").alias("_wv"))
+        .withColumn("_cumw", F.sum("_wv").over(wloc) + F.col("_off"))
+    )
+    aggs = [F.max("_tot").cast("bigint").alias("w_total")]
     for p in pcts:
-        c = (
-            (100 * F.col("_off") < p * F.col("_tot"))
-            & (p * F.col("_tot") <= 100 * (F.col("_off") + F.col("_wn")))
+        aggs.append(
+            F.min(
+                F.when(100 * F.col("_cumw") >= p * F.col("_tot"),
+                       F.col(value_col))
+            ).alias(f"p{p}")
         )
-        cond = c if cond is None else (cond | c)
-    targets = stats.filter(cond).select(
-        group_col, "_bucket", "_off", "_tot")
-    return _gwp_crossing(raw, targets, group_col, value_col, pcts)
+    return mid.groupBy(group_col).agg(*aggs)

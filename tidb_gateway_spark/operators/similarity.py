@@ -483,8 +483,9 @@ def int8_index(spark: SparkSession, embeddings_path: str,
 # build would k-means-refine them — the index/serving shape (and all
 # the partition-pruning math) is unchanged by better centroids.
 
-# The one IVF operating point of the registry (q94, q254, q257 and their
-# oracles): IVF_CELLS seed-centroid cells, IVF_NPROBE probed per query.
+# The one IVF operating point of the registry (q94, q208, q254, q257,
+# q271 and their oracles): IVF_CELLS seed-centroid cells, IVF_NPROBE
+# probed per query.
 IVF_CELLS, IVF_NPROBE = 8, 2
 
 
@@ -492,7 +493,7 @@ def with_ivf_cell_arrow(df: DataFrame, centroids: list[list[float]],
                         id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
     """Add a ``cell`` int column = argmax_j <v, centroid_j> (ties → the
-    lowest centroid index, matching ROW_NUMBER ORDER BY s DESC, cid).
+    lowest centroid index, as its DuckDB twin :func:`ddb_ivf_assign`).
     One numpy matmul per Arrow batch, like the LSH bucketing."""
     import numpy as np
 
@@ -561,6 +562,49 @@ def ivf_query(index: DataFrame, centroids: list[list[float]],
     probe_cells = top_cells(C @ np.array(qvec, dtype=np.float64), nprobe)
     return topk(index.filter(F.col("cell").isin(probe_cells)), id_col,
                 probe_dot(vec_col, qvec), k, exclude_id)
+
+
+# DuckDB twins of the IVF cell choice.  Centroid tables are
+# ``(cid, ce)``; ties go to the lower cid, as np.argmax and top_cells
+# break them.
+
+
+def ddb_ivf_assign(name: str, vecs: str, cents: str, vec: str = "e") -> str:
+    """with_ivf_cell_arrow as CTE ``name(vec_id, e, cell)``: every row of
+    ``vecs(vec_id, e, <vec>)`` takes the centroid of ``cents(cid, ce)``
+    with the largest inner product against its ``vec`` column."""
+    # the score is a column before the window: DuckDB sorts on a
+    # list_dot_product ORDER BY expression ~1.7x slower (sf0.1, q94)
+    return (
+        f"{name} AS (SELECT vec_id, e, cid AS cell FROM ("
+        "SELECT vec_id, e, cid, ROW_NUMBER() OVER (PARTITION BY vec_id "
+        "ORDER BY s DESC, cid) AS rn FROM ("
+        f"SELECT x.vec_id, x.e, c.cid, list_dot_product(x.{vec}, c.ce) AS s "
+        f"FROM {vecs} x CROSS JOIN {cents} c)) WHERE rn = 1)"
+    )
+
+
+# The seed-centroid IVF over the ``embeddings`` view: v(vec_id, e) the
+# float vectors, c(cid, ce) the IVF_CELLS seed centroids (ivf_centroids)
+# and cells(vec_id, e, cell) every vector's cell (ivf_index).
+DDB_IVF_CELLS = (
+    "v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings), "
+    f"c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < {IVF_CELLS}), "
+    + ddb_ivf_assign("cells", "v", "c")
+)
+
+
+def ddb_top_cells(name: str, probes: str, cents: str = "c",
+                  qvec: str = "qe") -> str:
+    """top_cells as CTE ``name(qid, cid)``: the IVF_NPROBE centroids of
+    ``cents(cid, ce)`` with the largest inner product against each row
+    of ``probes(qid, <qvec>)``."""
+    return (
+        f"{name} AS (SELECT qid, cid FROM (SELECT p.qid, c.cid, ROW_NUMBER() "
+        f"OVER (PARTITION BY p.qid ORDER BY list_dot_product(p.{qvec}, c.ce) "
+        f"DESC, c.cid) AS rn FROM {cents} c CROSS JOIN {probes} p) "
+        f"WHERE rn <= {IVF_NPROBE})"
+    )
 
 
 def ann_query(index: DataFrame, bucket: int, qvec: list[float], k: int = 5,

@@ -39,7 +39,13 @@ from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.functions import stable_round
 from tidb_gateway_spark.operators import dedup
 from tidb_gateway_spark.operators.cache import tracked_persist
-from tidb_gateway_spark.operators.dedup import DDB_BANDS, DDB_SHINGLES, DDB_SIGS
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_CAND_CHAIN,
+    DDB_SHINGLES,
+    DDB_SIGS,
+    ddb_jaccard,
+)
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import (
     ddb_hash_bps,
@@ -236,14 +242,9 @@ _Q229_TAU = 0.6
 
 _Q229_ORACLE = (
     f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-    "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x "
-    "JOIN bands y ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id), "
-    "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
-    "inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM cand c "
-    "JOIN shingles wa ON wa.doc_id = c.a "
-    "JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w GROUP BY c.a, c.b) "
+    f"{DDB_CAND_CHAIN} "
     "SELECT t.a, t.b, "
-    "FLOOR((CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE))*10000 + 0.5)/10000 AS jac, "
+    f"FLOOR(({ddb_jaccard()})*10000 + 0.5)/10000 AS jac, "
     "FLOOR((CAST(i AS DOUBLE) / CAST(LEAST(sa.sz, sb.sz) AS DOUBLE))*10000 + 0.5)/10000 AS containment "
     "FROM inter t JOIN sizes sa ON sa.doc_id = t.a "
     "JOIN sizes sb ON sb.doc_id = t.b "

@@ -33,6 +33,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tidb_gateway_spark.catalog import load_table
+from tidb_gateway_spark.operators.similarity import (
+    DDB_IVF_CELLS,
+    IVF_CELLS,
+    IVF_NPROBE,
+    ddb_top_cells,
+)
 from tidb_gateway_spark.queries.registry import register
 from tidb_gateway_spark.sources import derived
 
@@ -174,17 +180,17 @@ def q269(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q271
-_Q271_CELLS = 8       # coarse cells (centroids = vec_id < 8, q94 rule)
-_Q271_NPROBE = 2
+# coarse cells and probes: the IVF_CELLS seed centroids, IVF_NPROBE cells
+# per probe (q94's rule)
 _Q271_TOPK = 3
 _Q271_PROBES = (40, 50)
 
 
 def _q271_oracle() -> str:
-    n_cells, K, m_sub, d, scale = (_Q271_CELLS, _Q269_K, _Q269_M,
+    n_cells, K, m_sub, d, scale = (IVF_CELLS, _Q269_K, _Q269_M,
                                    _Q269_DSUB, _Q269_SCALE)
     lo, hi = _Q271_PROBES
-    nprobe, topk = _Q271_NPROBE, _Q271_TOPK
+    topk = _Q271_TOPK
 
     def d2(a: str, b: str) -> str:
         return (f"(list_dot_product({a},{a}) "
@@ -192,20 +198,16 @@ def _q271_oracle() -> str:
                 f"+ list_dot_product({b},{b}))")
 
     return (
-        "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS fe, "
-        "list_transform(CAST(embedding AS DOUBLE[]), "
-        f"x -> floor(x*{scale})) AS e FROM embeddings), "
-        f"cent AS (SELECT vec_id AS cid, fe AS cfe, e AS ce FROM v "
-        f"WHERE vec_id < {n_cells}), "
         # coarse assignment: argmax float IP, ties -> lower cid (q94)
-        "asg AS (SELECT vec_id, cid AS cell FROM ("
-        "SELECT v.vec_id, c.cid, ROW_NUMBER() OVER (PARTITION BY "
-        "v.vec_id ORDER BY list_dot_product(v.fe, c.cfe) DESC, c.cid) "
-        "AS rn FROM v CROSS JOIN cent c) WHERE rn = 1), "
+        f"WITH {DDB_IVF_CELLS}, "
+        f"vi AS (SELECT vec_id, list_transform(e, x -> floor(x*{scale})) "
+        "AS ie FROM v), "
+        f"cent AS (SELECT vec_id AS cid, ie AS ce FROM vi "
+        f"WHERE vec_id < {n_cells}), "
         # integer residuals vs the assigned centroid
         "res AS (SELECT v.vec_id, a.cell, list_transform(range(64), "
-        "i -> v.e[CAST(i AS INT)+1] - c.ce[CAST(i AS INT)+1]) AS r "
-        "FROM v JOIN asg a ON a.vec_id = v.vec_id "
+        "i -> v.ie[CAST(i AS INT)+1] - c.ce[CAST(i AS INT)+1]) AS r "
+        "FROM vi v JOIN cells a ON a.vec_id = v.vec_id "
         "JOIN cent c ON c.cid = a.cell), "
         f"ms AS (SELECT CAST(unnest(range({m_sub})) AS INT) AS m), "
         "rsub AS (SELECT vec_id, cell, m, "
@@ -219,13 +221,10 @@ def _q271_oracle() -> str:
         "codes AS (SELECT vec_id, m, k FROM ("
         "SELECT vec_id, m, k, ROW_NUMBER() OVER (PARTITION BY vec_id, m "
         "ORDER BY d2, k) AS rn FROM cd) WHERE rn = 1), "
-        f"p AS (SELECT vec_id AS qid, fe AS qfe, e AS qe FROM v "
-        f"WHERE vec_id >= {lo} AND vec_id < {hi}), "
+        "p AS (SELECT vec_id AS qid, e AS qfe, ie AS qe FROM v "
+        f"JOIN vi USING (vec_id) WHERE vec_id >= {lo} AND vec_id < {hi}), "
         # nprobe best cells per probe (same float-IP rule)
-        "pcell AS (SELECT qid, cid FROM ("
-        "SELECT p.qid, c.cid, ROW_NUMBER() OVER (PARTITION BY p.qid "
-        "ORDER BY list_dot_product(p.qfe, c.cfe) DESC, c.cid) AS rn "
-        f"FROM p CROSS JOIN cent c) WHERE rn <= {nprobe}), "
+        f"{ddb_top_cells('pcell', 'p', qvec='qfe')}, "
         "qres AS (SELECT p.qid, pc.cid, list_transform(range(64), "
         "i -> p.qe[CAST(i AS INT)+1] - c.ce[CAST(i AS INT)+1]) AS qr "
         "FROM p JOIN pcell pc ON pc.qid = p.qid "
@@ -279,12 +278,12 @@ def q271(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = f"{sf_dir}/embeddings.parquet"
-    idx = ivfadc_index(spark, path, n_cells=_Q271_CELLS,
+    idx = ivfadc_index(spark, path, n_cells=IVF_CELLS,
                        n_codes=_Q269_K, n_sub=_Q269_M,
                        scale=_Q269_SCALE)
 
     def meta():
-        cents, W = ivfadc_meta(spark, path, _Q271_CELLS, _Q269_K,
+        cents, W = ivfadc_meta(spark, path, IVF_CELLS, _Q269_K,
                                _Q269_SCALE)
         lo, hi = _Q271_PROBES
         rows = (load_table(spark, sf_dir, "embeddings")
@@ -299,7 +298,7 @@ def q271(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = None
     for qid, qvec in probes:
         one = ivfadc_query(idx, cents, W, qid, qvec, k=_Q271_TOPK,
-                           nprobe=_Q271_NPROBE, n_sub=_Q269_M,
+                           nprobe=IVF_NPROBE, n_sub=_Q269_M,
                            scale=_Q269_SCALE)
         per = one if per is None else per.unionAll(one)
     # |probes| × topk rows from here down — driver-small window

@@ -45,6 +45,8 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_SIGS,
     DDB_SIMHASH_FLIPS,
     DDB_SIMHASH_SIGS,
+    ddb_components,
+    ddb_verified,
 )
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.sampling import (
@@ -1001,15 +1003,8 @@ def _q197_split_sql(key_expr: str) -> str:
 
 _Q197_ORACLE = (
     f"WITH RECURSIVE {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-    f"{DDB_CAND_CHAIN}, "
-    "ver AS (SELECT t.a, t.b FROM inter t "
-    "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-    "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
-    "edges AS (SELECT a AS u, b AS v FROM ver UNION SELECT b, a FROM ver), "
-    "walk(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM edges) "
-    "UNION SELECT e.u, w.m FROM edges e JOIN walk w ON w.n = e.v), "
-    "cc AS (SELECT n AS doc_id, MIN(m) AS cluster FROM walk GROUP BY n), "
-    "cmap AS (SELECT d.doc_id, COALESCE(cc.cluster, d.doc_id) AS cluster "
+    f"{DDB_CAND_CHAIN}, {ddb_verified()}, {ddb_components('ver', 'cc')}, "
+    "cmap AS (SELECT d.doc_id, COALESCE(cc.cluster_id, d.doc_id) AS cluster "
     "FROM documents d LEFT JOIN cc USING (doc_id)), "
     "assigned AS (SELECT doc_id, cluster, "
     + _q197_split_sql("cluster") + " AS cl_split, "

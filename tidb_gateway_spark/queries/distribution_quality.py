@@ -69,6 +69,7 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_CAND_CHAIN,
     DDB_SHINGLES,
     DDB_SIGS,
+    ddb_verified,
 )
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps
@@ -288,10 +289,7 @@ def q247(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q248_ORACLE = (
     f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-    f"{DDB_CAND_CHAIN} , "
-    "ver AS (SELECT t.a, t.b FROM inter t "
-    "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-    "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
+    f"{DDB_CAND_CHAIN} , {ddb_verified()}, "
     "lab AS (SELECT LEAST(da.source, db.source) AS source_a, "
     "GREATEST(da.source, db.source) AS source_b "
     "FROM ver JOIN documents da ON da.doc_id = ver.a "

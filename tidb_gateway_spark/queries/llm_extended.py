@@ -21,15 +21,22 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_SHINGLES,
     DDB_SIGS,
     DDB_SIMHASH_SIGS,
+    ddb_cand,
+    ddb_components,
+    ddb_jaccard,
+    ddb_near_dup,
+    ddb_verified,
 )
 from tidb_gateway_spark.operators.localrel import local_rows_df
 from tidb_gateway_spark.operators.multimodal import ddb_payload_byte
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps
 from tidb_gateway_spark.operators.similarity import (
+    DDB_IVF_CELLS,
     IVF_CELLS,
     IVF_NPROBE,
     cosine_nn_arrow,
+    ddb_top_cells,
     hyperplanes,
 )
 from tidb_gateway_spark.operators.text import DDB_QSCORE
@@ -38,9 +45,8 @@ from tidb_gateway_spark.sources import derived
 
 # ---------------------------------------------------------------- Q72
 _Q72_ORACLE = (
-    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS} "
-    "SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x JOIN bands y "
-    "ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id ORDER BY a, b"
+    f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, {ddb_cand()} "
+    "SELECT a, b FROM cand ORDER BY a, b"
 )
 
 
@@ -87,9 +93,9 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q74
 _Q74_ORACLE = (
     f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, {DDB_CAND_CHAIN} "
-    "SELECT t.a, t.b, FLOOR((CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE))*10000 + 0.5)/10000 AS jac "
+    f"SELECT t.a, t.b, FLOOR(({ddb_jaccard()})*10000 + 0.5)/10000 AS jac "
     "FROM inter t JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-    "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5 ORDER BY a, b"
+    f"WHERE {ddb_near_dup()} ORDER BY a, b"
 )
 
 
@@ -221,17 +227,9 @@ def q76(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- Q94
 _Q94_ORACLE = (
-    "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings), "
-    f"c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < {IVF_CELLS}), "
-    "scored AS (SELECT v.vec_id, v.e, c.cid, list_dot_product(v.e, c.ce) AS s "
-    "FROM v CROSS JOIN c), "
-    "cells AS (SELECT vec_id, e, cid AS cell FROM ("
-    "SELECT vec_id, e, cid, ROW_NUMBER() OVER (PARTITION BY vec_id "
-    "ORDER BY s DESC, cid) AS rn FROM scored) WHERE rn = 1), "
-    "q AS (SELECT e AS qe FROM v WHERE vec_id = 0), "
-    "qcells AS (SELECT cid FROM (SELECT c.cid, ROW_NUMBER() OVER "
-    "(ORDER BY list_dot_product(q.qe, c.ce) DESC, c.cid) AS rn "
-    f"FROM c CROSS JOIN q) WHERE rn <= {IVF_NPROBE}) "
+    f"WITH {DDB_IVF_CELLS}, "
+    "q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id = 0), "
+    f"{ddb_top_cells('qcells', 'q')} "
     "SELECT x.vec_id, FLOOR(list_dot_product(x.e, q.qe)*10000 + 0.5)/10000 AS dp "
     "FROM cells x CROSS JOIN q "
     "WHERE x.cell IN (SELECT cid FROM qcells) AND x.vec_id <> 0 "
@@ -909,15 +907,8 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q101
 _Q101_ORACLE = (
     f"WITH RECURSIVE {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-    f"{DDB_CAND_CHAIN}, "
-    "ver AS (SELECT t.a, t.b FROM inter t "
-    "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-    "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
-    "edges AS (SELECT a AS u, b AS v FROM ver UNION SELECT b, a FROM ver), "
-    "walk(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM edges) "
-    "UNION SELECT e.u, w.m FROM edges e JOIN walk w ON w.n = e.v) "
-    "SELECT n AS doc_id, MIN(m) AS cluster_id FROM walk "
-    "GROUP BY n ORDER BY doc_id"
+    f"{DDB_CAND_CHAIN}, {ddb_verified()}, {ddb_components('ver', 'cl')} "
+    "SELECT doc_id, cluster_id FROM cl ORDER BY doc_id"
 )
 
 
@@ -1195,13 +1186,11 @@ def q155(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- Q208
-_Q208_PROBES = (20, 30)   # probe vec_ids [lo, hi) — disjoint from the
-_Q208_NPROBE = 2          # 8 seed centroids (vec_id < 8)
+# probe vec_ids [lo, hi) — disjoint from the IVF_CELLS seed centroids
+_Q208_PROBES = (20, 30)
 
 _Q208_ORACLE = (
-    "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e "
-    "FROM embeddings), "
-    f"c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < 8), "
+    f"WITH {DDB_IVF_CELLS}, "
     "p AS (SELECT vec_id AS qid, e AS qe FROM v "
     f"WHERE vec_id >= {_Q208_PROBES[0]} AND vec_id < {_Q208_PROBES[1]}), "
     # exact NN per probe (dot product, ties vec-ascending)
@@ -1209,17 +1198,8 @@ _Q208_ORACLE = (
     "SELECT p.qid, v.vec_id, ROW_NUMBER() OVER (PARTITION BY p.qid "
     "ORDER BY list_dot_product(v.e, p.qe) DESC, v.vec_id) AS rn "
     "FROM v CROSS JOIN p WHERE v.vec_id <> p.qid) WHERE rn = 1), "
-    # IVF cell assignment (argmax centroid, as q94)
-    "scored AS (SELECT v.vec_id, v.e, c.cid, list_dot_product(v.e, c.ce) "
-    "AS s FROM v CROSS JOIN c), "
-    "cells AS (SELECT vec_id, e, cid AS cell FROM ("
-    "SELECT vec_id, e, cid, ROW_NUMBER() OVER (PARTITION BY vec_id "
-    "ORDER BY s DESC, cid) AS rn FROM scored) WHERE rn = 1), "
     # per-probe probed cells (top-nprobe centroids)
-    "qc AS (SELECT qid, cid FROM (SELECT p.qid, c.cid, ROW_NUMBER() "
-    "OVER (PARTITION BY p.qid ORDER BY list_dot_product(p.qe, c.ce) "
-    "DESC, c.cid) AS rn FROM c CROSS JOIN p) "
-    f"WHERE rn <= {_Q208_NPROBE}), "
+    f"{ddb_top_cells('qc', 'p')}, "
     # IVF answer: argmax within probed cells only
     "ivf AS (SELECT qid, vec_id AS nn FROM ("
     "SELECT p.qid, x.vec_id, ROW_NUMBER() OVER (PARTITION BY p.qid "
@@ -1265,10 +1245,10 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = f"{sf_dir}/embeddings.parquet"
     e = load_table(spark, sf_dir, "embeddings")
-    idx = ivf_index(spark, path, n_cells=8)
+    idx = ivf_index(spark, path, n_cells=IVF_CELLS)
 
     def probe_meta():
-        cents = ivf_centroids(spark, path, 8)
+        cents = ivf_centroids(spark, path, IVF_CELLS)
         probes = [
             (r["vec_id"], [float(x) for x in r["embedding"]])
             for r in e.filter(
@@ -1280,7 +1260,7 @@ def q208(spark: SparkSession, sf_dir: str) -> DataFrame:
         qcells = []
         for qid, qe in probes:
             s = C @ np.array(qe, dtype=np.float64)
-            for cid in top_cells(s, _Q208_NPROBE):
+            for cid in top_cells(s, IVF_NPROBE):
                 qcells.append((qid, cid))
         return probes, qcells
 
@@ -1344,9 +1324,7 @@ def _q209_oracle() -> str:
         # MinHash pipeline into each reference and spilled >70 GB at
         # sf1 (the engine side needs no hint — each iteration is one
         # stage over the same lineage)
-        "cand AS MATERIALIZED (SELECT DISTINCT x.doc_id AS a, y.doc_id "
-        "AS b FROM bands x JOIN bands y ON x.band = y.band AND "
-        "x.bv = y.bv AND x.doc_id < y.doc_id), "
+        f"{ddb_cand(materialized=True)}, "
         "edges AS MATERIALIZED (SELECT a AS src, b AS dst FROM cand "
         "UNION ALL SELECT b, a FROM cand), "
         "deg AS (SELECT src, CAST(COUNT(*) AS DOUBLE) AS dg "

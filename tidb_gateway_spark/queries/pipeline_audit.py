@@ -52,6 +52,9 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_SIGS,
     DDB_SIMHASH_FLIPS,
     DDB_SIMHASH_SIGS,
+    ddb_components,
+    ddb_union_size,
+    ddb_verified,
 )
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.text import (
@@ -248,20 +251,14 @@ _Q212_MATCHES = " + ".join(
 
 _Q212_ORACLE = (
     f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-    "cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b "
-    "FROM bands x JOIN bands y ON x.band = y.band AND x.bv = y.bv "
-    "AND x.doc_id < y.doc_id), "
-    "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id), "
-    "inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM cand c "
-    "JOIN shingles wa ON wa.doc_id = c.a "
-    "JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w GROUP BY c.a, c.b), "
+    f"{DDB_CAND_CHAIN}, "
     f"m AS (SELECT c.a, c.b, {_Q212_MATCHES} AS matches "
     "FROM cand c JOIN sigs sa ON sa.doc_id = c.a "
     "JOIN sigs sb ON sb.doc_id = c.b), "
     "j AS (SELECT m.matches, "
     f"CAST(FLOOR(m.matches * 10000.0 / {dedup.K}) AS BIGINT) AS est_bps, "
     "CAST(FLOOR(COALESCE(i.i, 0) * 10000.0 / "
-    "(sa.sz + sb.sz - COALESCE(i.i, 0))) AS BIGINT) AS jac_bps "
+    f"({ddb_union_size('COALESCE(i.i, 0)')})) AS BIGINT) AS jac_bps "
     "FROM m LEFT JOIN inter i ON i.a = m.a AND i.b = m.b "
     "JOIN sizes sa ON sa.doc_id = m.a JOIN sizes sb ON sb.doc_id = m.b) "
     "SELECT CAST(matches AS INT) AS matches, est_bps, "
@@ -338,10 +335,7 @@ def q212(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- Q213
 _Q213_ORACLE = (
     f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-    f"{DDB_CAND_CHAIN}, "
-    "ver AS (SELECT t.a, t.b FROM inter t "
-    "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-    "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
+    f"{DDB_CAND_CHAIN}, {ddb_verified()}, "
     "lab AS (SELECT LEAST(da.source, db.source) AS source_lo, "
     "GREATEST(da.source, db.source) AS source_hi "
     "FROM ver JOIN documents da ON da.doc_id = ver.a "
@@ -390,10 +384,7 @@ def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q234_oracle() -> str:
     truth = (
         f"{DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-        f"{DDB_CAND_CHAIN}, "
-        "truth AS (SELECT t.a, t.b FROM inter t "
-        "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-        "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5)"
+        f"{DDB_CAND_CHAIN}, {ddb_verified('truth')}"
     )
     pred = (
         f"{DDB_SIMHASH_SIGS}, "
@@ -467,14 +458,7 @@ def q234(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q235_oracle() -> str:
     near = (
         f"{DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-        f"{DDB_CAND_CHAIN}, "
-        "ver AS (SELECT t.a, t.b FROM inter t "
-        "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-        "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
-        "edges AS (SELECT a AS u, b AS v FROM ver UNION SELECT b, a FROM ver), "
-        "walk(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM edges) "
-        "UNION SELECT e.u, w.m FROM edges e JOIN walk w ON w.n = e.v), "
-        "cl AS (SELECT n AS doc_id, MIN(m) AS cluster_id FROM walk GROUP BY n)"
+        f"{DDB_CAND_CHAIN}, {ddb_verified()}, {ddb_components('ver', 'cl')}"
     )
     return (
         f"WITH RECURSIVE {near}, "

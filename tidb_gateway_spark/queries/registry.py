@@ -10,9 +10,11 @@ the same name in both forms** (FIXTURES.md canonicalization rules).
 An oracle is fixed when its query registers: a ``QuerySpec`` is frozen
 and never replaced afterwards.  Oracles are assembled from the DuckDB
 twins that ``operators/`` exports beside each shared Spark form (salted
-hashes in ``sampling``, MinHash/SimHash in ``dedup``, count-min cells
-in ``sketch``, the quality score in ``text``, payload bytes in
-``multimodal``), never from another query module's private SQL.  Only
+hashes in ``sampling``; MinHash, the band join, the Jaccard verify, the
+cluster closure and SimHash in ``dedup``; IVF cell assignment and probed
+cells in ``similarity``; count-min cells in ``sketch``; the quality
+score in ``text``; payload bytes in ``multimodal``), never from another
+query module's private SQL.  Only
 specs whose semantics are not SQL-expressible (stateful streaming,
 multimodal decode stubs) register ``oracle=None`` and get a rows-only
 check.

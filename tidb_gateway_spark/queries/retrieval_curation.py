@@ -49,6 +49,9 @@ from tidb_gateway_spark.operators.dedup import (
     DDB_CAND_CHAIN,
     DDB_SHINGLES,
     DDB_SIGS,
+    ddb_cand,
+    ddb_components,
+    ddb_verified,
 )
 from tidb_gateway_spark.operators.partitioning import ensure_min_partitions
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps, salted_md5
@@ -444,9 +447,7 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q217_oracle() -> str:
     return (
         f"WITH {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-        "cand AS MATERIALIZED (SELECT DISTINCT x.doc_id AS a, y.doc_id "
-        "AS b FROM bands x JOIN bands y ON x.band = y.band AND "
-        "x.bv = y.bv AND x.doc_id < y.doc_id), "
+        f"{ddb_cand(materialized=True)}, "
         "deg AS (SELECT d, COUNT(*) AS dg FROM "
         "(SELECT a AS d FROM cand UNION ALL SELECT b FROM cand) "
         "GROUP BY d), "
@@ -875,22 +876,14 @@ def _q224_oracle() -> str:
 
     return (
         f"WITH RECURSIVE {DDB_SHINGLES}, {DDB_SIGS}, {DDB_BANDS}, "
-        f"{DDB_CAND_CHAIN}, "
-        "ver AS MATERIALIZED (SELECT t.a, t.b FROM inter t "
-        "JOIN sizes sa ON sa.doc_id = t.a JOIN sizes sb ON sb.doc_id = t.b "
-        "WHERE CAST(i AS DOUBLE) / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5), "
-        "edges AS (SELECT a AS u, b AS v FROM ver UNION SELECT b, a FROM ver), "
-        "walk(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM edges) "
-        "UNION SELECT e.u, w.m FROM edges e JOIN walk w ON w.n = e.v), "
-        "cc_full AS (SELECT n AS doc_id, MIN(m) AS cid FROM walk GROUP BY n), "
-        "bedges AS (SELECT u, v FROM edges WHERE "
-        + base_pred("u") + " AND " + base_pred("v") + "), "
-        "bwalk(n, m) AS (SELECT u, u FROM (SELECT DISTINCT u FROM bedges) "
-        "UNION SELECT e.u, w.m FROM bedges e JOIN bwalk w ON w.n = e.v), "
-        "cc_base AS (SELECT n AS doc_id, MIN(m) AS cid FROM bwalk GROUP BY n), "
-        "per AS (SELECT f.cid, COUNT(*) AS n_docs, "
-        "COUNT(DISTINCT b.cid) AS n_base_clusters FROM cc_full f "
-        "LEFT JOIN cc_base b ON b.doc_id = f.doc_id GROUP BY f.cid) "
+        f"{DDB_CAND_CHAIN}, {ddb_verified(materialized=True)}, "
+        f"{ddb_components('ver', 'cc_full')}, "
+        "bver AS (SELECT a, b FROM ver WHERE "
+        + base_pred("a") + " AND " + base_pred("b") + "), "
+        f"{ddb_components('bver', 'cc_base')}, "
+        "per AS (SELECT f.cluster_id AS cid, COUNT(*) AS n_docs, "
+        "COUNT(DISTINCT b.cluster_id) AS n_base_clusters FROM cc_full f "
+        "LEFT JOIN cc_base b ON b.doc_id = f.doc_id GROUP BY f.cluster_id) "
         "SELECT CAST(n_base_clusters AS BIGINT) AS n_base_clusters, "
         "CAST(COUNT(*) AS BIGINT) AS n_clusters, "
         "CAST(SUM(n_docs) AS BIGINT) AS n_docs "

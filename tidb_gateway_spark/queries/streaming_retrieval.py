@@ -58,13 +58,25 @@ from pyspark.sql import types as T
 
 from tidb_gateway_spark.catalog import load_table
 from tidb_gateway_spark.operators import dedup
-from tidb_gateway_spark.operators.dedup import DDB_BANDS, DDB_SHINGLES, DDB_SIGS
+from tidb_gateway_spark.operators.dedup import (
+    DDB_BANDS,
+    DDB_SHINGLES,
+    DDB_SIGS,
+    ddb_near_dup,
+    ddb_sizes_inter,
+)
 from tidb_gateway_spark.operators.partitioning import (
     build_shuffle_partitions,
     ensure_min_partitions,
 )
 from tidb_gateway_spark.operators.sampling import ddb_hash_bps, hash_bps
-from tidb_gateway_spark.operators.similarity import IVF_CELLS, IVF_NPROBE
+from tidb_gateway_spark.operators.similarity import (
+    DDB_IVF_CELLS,
+    IVF_CELLS,
+    IVF_NPROBE,
+    ddb_ivf_assign,
+    ddb_top_cells,
+)
 from tidb_gateway_spark.operators.text import (
     DDB_GRAMS,
     GRAM_K,
@@ -243,41 +255,28 @@ _Q257_SCALE = 10_000  # embedding quantization grid (FLOOR(x*1e4 + 0.5))
 # float addition is EXACT and order-independent — the cross-engine
 # reproducibility trick q211/q95 use, applied to Lloyd's update.
 _Q257_ORACLE = (
-    "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e "
-    "FROM embeddings), "
-    "c AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < "
-    "{cells}), "
-    "scored AS (SELECT v.vec_id, v.e, c.cid, "
-    "list_dot_product(v.e, c.ce) AS s FROM v CROSS JOIN c), "
-    "cells AS (SELECT vec_id, e, cid AS cell FROM ("
-    "SELECT vec_id, e, cid, ROW_NUMBER() OVER (PARTITION BY vec_id "
-    "ORDER BY s DESC, cid) AS rn FROM scored) WHERE rn = 1), "
+    f"WITH {DDB_IVF_CELLS}, "
     "dsum AS (SELECT cell, t.i AS i, "
-    "SUM(CAST(FLOOR(e[t.i] * {scale} + 0.5) AS BIGINT)) AS s, "
-    "COUNT(*) AS n FROM cells, range(1, {dimp1}) AS t(i) "
+    f"SUM(CAST(FLOOR(e[t.i] * {_Q257_SCALE} + 0.5) AS BIGINT)) AS s, "
+    "COUNT(*) AS n FROM cells, range(1, 65) AS t(i) "
     "GROUP BY cell, t.i), "
-    "m AS (SELECT cell, list(CAST(FLOOR(CAST(s AS DOUBLE) / n) "
-    "AS DOUBLE) ORDER BY i) AS mq FROM dsum GROUP BY cell), "
+    # the refreshed centroids, as (cid, ce) like the seed ones
+    "m AS (SELECT cell AS cid, list(CAST(FLOOR(CAST(s AS DOUBLE) / n) "
+    "AS DOUBLE) ORDER BY i) AS ce FROM dsum GROUP BY cell), "
     "vq AS (SELECT vec_id, e, list_transform(e, x -> "
-    "CAST(CAST(FLOOR(x * {scale} + 0.5) AS BIGINT) AS DOUBLE)) AS q "
+    f"CAST(CAST(FLOOR(x * {_Q257_SCALE} + 0.5) AS BIGINT) AS DOUBLE)) AS q "
     "FROM v), "
-    "rs AS (SELECT vq.vec_id, vq.e, m.cell, "
-    "list_dot_product(vq.q, m.mq) AS s FROM vq CROSS JOIN m), "
-    "r AS (SELECT vec_id, e, cell FROM ("
-    "SELECT vec_id, e, cell, ROW_NUMBER() OVER (PARTITION BY vec_id "
-    "ORDER BY s DESC, cell) AS rn FROM rs) WHERE rn = 1), "
-    "q0 AS (SELECT e AS qe, list_transform(e, x -> "
-    "CAST(CAST(FLOOR(x * {scale} + 0.5) AS BIGINT) AS DOUBLE)) AS qq "
+    f"{ddb_ivf_assign('r', 'vq', 'm', vec='q')}, "
+    "q0 AS (SELECT vec_id AS qid, e AS fe, list_transform(e, x -> "
+    f"CAST(CAST(FLOOR(x * {_Q257_SCALE} + 0.5) AS BIGINT) AS DOUBLE)) AS qe "
     "FROM v WHERE vec_id = 0), "
-    "pc AS (SELECT cell FROM (SELECT m.cell, ROW_NUMBER() OVER "
-    "(ORDER BY list_dot_product(q0.qq, m.mq) DESC, m.cell) AS rn "
-    "FROM m CROSS JOIN q0) WHERE rn <= {nprobe}) "
+    f"{ddb_top_cells('pc', 'q0', cents='m')} "
     "SELECT x.vec_id, "
-    "FLOOR(list_dot_product(x.e, q0.qe) * 10000 + 0.5) / 10000 AS dp "
+    "FLOOR(list_dot_product(x.e, q0.fe) * 10000 + 0.5) / 10000 AS dp "
     "FROM r x CROSS JOIN q0 "
-    "WHERE x.cell IN (SELECT cell FROM pc) AND x.vec_id <> 0 "
+    "WHERE x.cell IN (SELECT cid FROM pc) AND x.vec_id <> 0 "
     "ORDER BY dp DESC, x.vec_id LIMIT 3"
-).format(cells=IVF_CELLS, scale=_Q257_SCALE, dimp1=65, nprobe=IVF_NPROBE)
+)
 
 
 def _quantize_rows(mat):
@@ -1103,8 +1102,8 @@ def _q266_oracle() -> str:
     """q265's unrolled sequential admission + exact shingle-set Jaccard
     verification of every quarantine decision: a quarantined doc is
     VERIFIED when some admitted doc from a strictly earlier epoch that
-    shares a band bucket has exact Jaccard >= 0.5 (the integer form
-    2i >= |a|+|b|-i, bit-identical cross-engine)."""
+    shares a band bucket has exact Jaccard >= dedup.JACCARD_MIN (the
+    q74 verify predicate, dedup.ddb_near_dup)."""
     adm_union = " UNION ALL ".join(
         f"SELECT doc_id FROM a{k}" for k in range(_Q262_SPLITS))
     quar_union = " UNION ALL ".join(
@@ -1120,14 +1119,9 @@ def _q266_oracle() -> str:
         "FROM be x JOIN be y ON x.band = y.band AND x.bv = y.bv "
         "AND x.ep < y.ep AND x.doc_id IN (SELECT doc_id FROM admset) "
         "AND y.doc_id IN (SELECT doc_id FROM quar)), "
-        "sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles "
-        "GROUP BY doc_id), "
-        "inter AS (SELECT c.a, c.b, COUNT(*) AS i FROM candq c "
-        "JOIN shingles wa ON wa.doc_id = c.a "
-        "JOIN shingles wb ON wb.doc_id = c.b AND wb.w = wa.w "
-        "GROUP BY c.a, c.b), "
-        "ver AS (SELECT t.b, MAX(CASE WHEN 2 * t.i >= "
-        "sa.sz + sb.sz - t.i THEN 1 ELSE 0 END) AS v FROM inter t "
+        f"{ddb_sizes_inter('candq')}, "
+        f"ver AS (SELECT t.b, MAX(CASE WHEN {ddb_near_dup('t.i')} "
+        "THEN 1 ELSE 0 END) AS v FROM inter t "
         "JOIN sizes sa ON sa.doc_id = t.a "
         "JOIN sizes sb ON sb.doc_id = t.b GROUP BY t.b), "
         "per AS (SELECT quar.ep, CAST(COUNT(*) AS BIGINT) AS n_q, "
@@ -1149,8 +1143,8 @@ def _q266_oracle() -> str:
     doc="Gate PRECISION audit — the governance closing piece of the "
         "q262/q263/q265 family: every quarantine decision the "
         "streaming gate made is re-examined by EXACT shingle-set "
-        "Jaccard against the admitted docs it band-matched (integer "
-        "predicate 2i >= |a|+|b|-i, bit-identical cross-engine); "
+        "Jaccard against the admitted docs it band-matched (the q74 "
+        "verify predicate); "
         "per-epoch report of quarantined, verified (J >= 0.5), and "
         "precision in integer bps.  This is the measurement that "
         "justifies the gate's (k, bands) operating point before a "
@@ -1202,14 +1196,12 @@ def q266(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharr = dedup.doc_shingle_arrays(d)
     jp = dedup.jaccard_pairs_arrays(cand, sharr)
     # verified flag per quarantined doc: any matched admitted doc with
-    # J >= 0.5.  The double compare is exact here: jac = i/u with
-    # u <= a few hundred, so the only value within an ulp of 0.5 IS
-    # 2i == u, which divides to exactly 0.5 — same predicate as the
-    # oracle's integer 2i >= u.
+    # J >= JACCARD_MIN.  Both engines divide the same two integers in
+    # IEEE doubles, so the compare agrees bit for bit with the oracle.
     ver = (
         jp.select(
             "b",
-            (F.col("jac") >= 0.5).cast("int").alias("v"),
+            (F.col("jac") >= dedup.JACCARD_MIN).cast("int").alias("v"),
         )
         .groupBy("b")
         .agg(F.max("v").alias("v"))
